@@ -205,13 +205,39 @@ def completion_events(events: DataFrame, imported_instances: DataFrame) -> DataF
 
 @dataclass
 class ImportResult:
-    instance_nodes: DataFrame
-    dimension_nodes: DataFrame
-    edges: DataFrame
-    patches: DataFrame
-    completed: DataFrame
+    """One batch's import as two bases plus the sink inputs derived from
+    them. ``new_instances`` (wanted instances past the instance-exists
+    gate) and ``enriched`` (their validated dimensions joined to code
+    orders) are the only plans that fetch; every sink input is a cheap
+    projection or join of one of them, so persisting the two bases makes
+    every sink read the batch once."""
+
+    valid_events: DataFrame
+    new_instances: DataFrame
+    enriched: DataFrame
     rejected_events: DataFrame
     skipped_instances: DataFrame
+    enable_patch_node_id: bool = True
+
+    @property
+    def instance_nodes(self) -> DataFrame:
+        return build_instance_nodes(self.new_instances)
+
+    @property
+    def dimension_nodes(self) -> DataFrame:
+        return build_dimension_nodes(self.enriched)
+
+    @property
+    def edges(self) -> DataFrame:
+        return build_edges(self.enriched)
+
+    @property
+    def patches(self) -> DataFrame:
+        return build_patch_set(self.enriched, self.enable_patch_node_id)
+
+    @property
+    def completed(self) -> DataFrame:
+        return completion_events(self.valid_events, self.new_instances)
 
 
 def run_import(
@@ -230,15 +256,13 @@ def run_import(
     dims = validate_dimensions(dimensions).join(
         new_instances.select("instance_id"), "instance_id", "left_semi"
     )
-    enriched = join_code_orders(dims, code_lists)
     return ImportResult(
-        instance_nodes=build_instance_nodes(new_instances),
-        dimension_nodes=build_dimension_nodes(dims),
-        edges=build_edges(dims),
-        patches=build_patch_set(enriched, enable_patch_node_id),
-        completed=completion_events(valid_events, new_instances),
+        valid_events=valid_events,
+        new_instances=new_instances,
+        enriched=join_code_orders(dims, code_lists),
         rejected_events=rejected,
         skipped_instances=skipped,
+        enable_patch_node_id=enable_patch_node_id,
     )
 
 

@@ -6,22 +6,50 @@ the reference's batch-scoped staging (SURVEY.md §1.4): within a micro-batch
 the sink order is nodes → edges → patches → completion, and a failure
 aborts the batch before later stages run; checkpoint + idempotent writes
 turn redelivery into a no-op (at-least-once + idempotent ≥ the reference's
-at-most-once)."""
+at-most-once).
+
+Each batch does its work once, like the reference's single fetch per
+instance. The instance-exists probe reads only the batch's own partitions
+of the graph store and is collected (at most one row per batch id). After
+the dead-letter sink and before the first graph write, ``import_batch``
+persists and computes the batch's two bases (the new instances and their
+code-ordered dimensions, see ``importer.ImportResult``), so the HTTP fetch
+runs one time and every sink reads the cached rows; a fetch failure
+raises there, after the dead letters and before any graph row. The bases
+are unpersisted when the batch ends, on failure too, so a long stream
+holds no earlier batch's rows."""
 
 from __future__ import annotations
 
 import os
 import tempfile
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from dp_dimension_importer_spark.pipeline import importer, sources
+from dp_dimension_importer_spark.pipeline.models import NODE_SCHEMA
 from dp_dimension_importer_spark.pipeline.sinks import (
     ParquetGraphStore,
     jsonl_event_sink,
     patch_sink,
 )
+
+
+@contextmanager
+def _materialized(*bases: DataFrame) -> Iterator[None]:
+    """Persist and compute ``bases`` for the block, then release them.
+    Plans built on a base read its cached rows."""
+    cached = []
+    try:
+        for df in bases:
+            cached.append(df.persist())
+            df.count()
+        yield
+    finally:
+        for df in cached:
+            df.unpersist()
 
 
 def import_batch(
@@ -39,12 +67,19 @@ def import_batch(
     order (fail-fast between stages — a sink error leaves later stages
     unexecuted, mirroring handler tests :247-304)."""
     events, dead = sources.decode_events(raw_events)
+    # The instance-exists probe: only the partitions of the batch's valid
+    # ids (one per event), collected — at most one instance node per id.
+    # Collecting keeps the store out of the bases persisted below: Spark
+    # re-caches a cached plan that reads a path after each write to that
+    # path, which would re-run the batch's fetch at the next sink.
+    batch_ids = {r[0] for r in events.select("instance_id").collect()} - {None, ""}
+    existing = store.nodes(batch_ids).filter(F.col("node_kind") == "instance")
     result = importer.run_import(
         events,
         instances,
         dimensions,
         code_lists,
-        existing_nodes=store.nodes(),
+        existing_nodes=store.spark.createDataFrame(existing.collect(), NODE_SCHEMA),
         enable_patch_node_id=enable_patch_node_id,
     )
     # Stage order: dead letters first (bad payloads are never lost), then
@@ -68,12 +103,15 @@ def import_batch(
     )
     if dead_all.take(1):
         jsonl_event_sink(dead_all, dead_letter_dir)
-    store.write_nodes(result.dimension_nodes)
-    store.write_edges(result.edges)
-    patch_sink(result.patches, patch_send)
-    if result.completed.take(1):
-        jsonl_event_sink(result.completed, completed_dir)
-    store.write_nodes(result.instance_nodes)
+    # Fetch failures surface here: after the dead letters, before any
+    # graph row.
+    with _materialized(result.new_instances, result.enriched):
+        store.write_nodes(result.dimension_nodes)
+        store.write_edges(result.edges)
+        patch_sink(result.patches, patch_send)
+        if result.completed.take(1):
+            jsonl_event_sink(result.completed, completed_dir)
+        store.write_nodes(result.instance_nodes)
     return result
 
 

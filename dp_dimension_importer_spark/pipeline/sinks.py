@@ -16,10 +16,26 @@ import json
 import os
 from collections.abc import Callable, Iterator
 
-from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from dp_dimension_importer_spark.pipeline.models import EDGE_SCHEMA, NODE_SCHEMA
+
+
+#: Characters Spark percent-escapes in a hive partition directory name
+#: (``ExternalCatalogUtils.escapePathName``): ASCII controls and these.
+_ESCAPED_IN_PATH = frozenset(map(chr, range(1, 32))) | frozenset(
+    "\"#%'*/:=?[\\]^{\x7f"
+)
+#: Directory value Spark writes for a NULL or empty partition value.
+_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def partition_dir(column: str, value: str | None) -> str:
+    """The directory name Spark gives the hive partition ``column=value``."""
+    if value is None or value == "":
+        return f"{column}={_DEFAULT_PARTITION}"
+    escaped = "".join(f"%{ord(c):02X}" if c in _ESCAPED_IN_PATH else c for c in value)
+    return f"{column}={escaped}"
 
 
 class ParquetGraphStore:
@@ -31,48 +47,37 @@ class ParquetGraphStore:
     never match a re-delivered row — eqNullSafe makes the sink idempotent
     standalone, not only behind the importer's upstream gate).
 
-    Scale: a micro-batch carries a bounded set of instance_ids, so the
-    anti-join probe reads ONLY those hive partitions (partition pruning on
-    the isin filter) — per-batch sink work is O(batch instances), not
-    O(accumulated history)."""
+    Scale: a micro-batch carries a bounded set of instance_ids, and both
+    the instance-exists probe (``nodes(ids)``) and the write anti-join read
+    ONLY those ids' partition directories: each id is escaped into the
+    directory name Spark wrote it under (``partition_dir``, NULL and empty
+    ids → the hive default partition) and the read lists just the ones that
+    exist. Nothing lists the table's other partitions, so per-batch sink
+    work is O(batch instances), not O(accumulated history)."""
 
     def __init__(self, spark: SparkSession, base_dir: str):
         self.spark = spark
         self.nodes_dir = os.path.join(base_dir, "nodes")
         self.edges_dir = os.path.join(base_dir, "edges")
 
-    def _read(self, path: str, schema) -> DataFrame:
-        # No pre-walk of the table tree: a directory walk is driver-side
-        # O(files ever written), reintroducing an O(history) component into
-        # a sink whose anti-join is O(batch). Attempt the schema'd read and
-        # treat a missing path as an empty table — an existing-but-empty
-        # dir already yields an empty relation because the schema is
-        # explicit (no file listing needed for inference).
-        try:
-            df = self.spark.read.schema(schema).parquet(path)
-            return df.select([f.name for f in schema.fields])
-        except AnalysisException as e:
-            # ONLY a missing path (no write yet) means "empty store". Any
-            # other analysis failure (corrupt/incompatible files, bad path
-            # type, permissions) must stay loud: swallowing it would make
-            # the dedup anti-join see an empty table and silently
-            # re-append every batch as new.
-            cond = None
-            for attr in ("getCondition", "getErrorClass"):
-                fn = getattr(e, attr, None)
-                if fn is not None:
-                    try:
-                        cond = fn()
-                    except Exception:
-                        cond = None
-                    if cond:
-                        break
-            if (cond or "") != "PATH_NOT_FOUND" and "PATH_NOT_FOUND" not in str(e):
-                raise
+    def _read(self, path: str, schema, instance_ids=None) -> DataFrame:
+        """The table at ``path``, or only the partitions of
+        ``instance_ids`` when given; a table or partition not written yet
+        reads as empty."""
+        if instance_ids is None:
+            paths = [path] if os.path.exists(path) else []
+        else:
+            dirs = {partition_dir("instance_id", i) for i in instance_ids}
+            paths = [os.path.join(path, d) for d in sorted(dirs)]
+            paths = [p for p in paths if os.path.exists(p)]
+        if not paths:
             return self.spark.createDataFrame([], schema)
+        df = self.spark.read.schema(schema).option("basePath", path).parquet(*paths)
+        return df.select([f.name for f in schema.fields])
 
-    def nodes(self) -> DataFrame:
-        return self._read(self.nodes_dir, NODE_SCHEMA)
+    def nodes(self, instance_ids=None) -> DataFrame:
+        """Every node, or only the nodes of ``instance_ids``."""
+        return self._read(self.nodes_dir, NODE_SCHEMA, instance_ids)
 
     def edges(self) -> DataFrame:
         return self._read(self.edges_dir, EDGE_SCHEMA)
@@ -80,14 +85,7 @@ class ParquetGraphStore:
     def _fresh(self, batch: DataFrame, path: str, schema, key: list[str]) -> DataFrame:
         # bounded collect: one row per instance in the micro-batch
         ids = [r[0] for r in batch.select("instance_id").distinct().collect()]
-        # null-safe pruning: isin uses '=' and never matches NULL, so a
-        # NULL-instance row (written under the hive default partition)
-        # would dodge the probe and re-append forever — include the NULL
-        # partition explicitly when the batch carries one.
-        probe = F.col("instance_id").isin([i for i in ids if i is not None])
-        if any(i is None for i in ids):
-            probe = probe | F.col("instance_id").isNull()
-        existing = self._read(path, schema).filter(probe)
+        existing = self._read(path, schema, ids)
         cond = [batch[k].eqNullSafe(existing[k]) for k in key]
         return batch.join(existing, cond, "left_anti")
 

@@ -24,17 +24,11 @@ import re
 
 from pyspark.sql import DataFrame
 
-#: plan nodes that cross the JVM→Python (Arrow) boundary
-_PY_NODES = (
-    "ArrowEvalPython",
-    "BatchEvalPython",
-    "FlatMapGroupsInPandas",
-    "FlatMapCoGroupsInPandas",
-    "MapInPandas",
-    "MapInArrow",
-    "FlatMapGroupsInArrow",
-    "PythonMapInArrow",
-)
+#: plan nodes that cross the JVM→Python boundary, matched by name pattern
+#: so every UDF form counts: ``*InPandas`` / ``*InArrow`` (map, grouped and
+#: cogrouped maps) and ``*Python`` (Arrow/batch eval, Arrow aggregate and
+#: window)
+_PY_NODE = re.compile(r"InPandas|InArrow|Python")
 
 
 def plan_text(df: DataFrame, mode: str = "formatted") -> str:
@@ -106,9 +100,7 @@ def audit(df: DataFrame) -> dict:
         "pushed_filters": [p for p in pushed if p.strip()],
         "scan_read_cols": read_cols,
         "n_codegen_stages": len(set(re.findall(r"codegen id : (\d+)", plan))),
-        "python_nodes": sorted(
-            {n for n in _PY_NODES if n in plan}
-        ),
+        "python_nodes": sorted({n for n in nodes if _PY_NODE.search(n)}),
         "has_nested_loop_join": "NestedLoop" in plan
         or "CartesianProduct" in plan,
         "has_broadcast_join": "BroadcastHashJoin" in plan,

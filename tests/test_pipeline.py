@@ -10,7 +10,10 @@ the FIXTURES.md §B data.
 4. idempotent redelivery — existing instance skipped w/o error (:939-968)
 5. nil-order + empty node_id rows omitted from the patch set (:830-889)
 plus dead-lettering of undecodable payloads
-   (message/kafka_message_receiver_test.go:51-76)
+   (message/kafka_message_receiver_test.go:51-76), and ``import_batch`` as
+the reference runs an instance: one fetch per batch, store reads bounded by
+the batch (not the store's history), escaped partition names, and the
+stage order when a fetch fails.
 """
 
 from __future__ import annotations
@@ -306,3 +309,312 @@ def test_graph_store_idempotent_standalone(spark, tmp_path):
     store.write_nodes(nodes.replace("inst1", "inst2", "instance_id"))
     assert store.nodes().count() == 4
     assert store.nodes().filter("instance_id = 'inst1'").count() == 2
+
+
+# --------------------------------------------------------------------------
+# runner.import_batch: one fetch, batch-scoped store reads, stage order
+# --------------------------------------------------------------------------
+
+
+class _DatasetAPI:
+    """Threaded Dataset API stub serving ``/instances/{id}`` and paged
+    ``/instances/{id}/dimensions``; records every request's path and
+    query. ``fail_dimensions`` answers the dimension endpoint with 500."""
+
+    def __init__(self, instances: dict[str, dict], fail_dimensions: bool = False):
+        import threading
+        from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+        from urllib.parse import parse_qs, unquote, urlparse
+
+        self.requests: list[str] = []
+        lock = threading.Lock()
+        stub = self
+
+        class Handler(BaseHTTPRequestHandler):
+            def log_message(self, *a):
+                pass
+
+            def do_GET(self):
+                with lock:
+                    stub.requests.append(self.path)
+                u = urlparse(self.path)
+                parts = [unquote(p) for p in u.path.strip("/").split("/")]
+                inst = instances.get(parts[1]) if len(parts) > 1 else None
+                if inst is None:
+                    self.send_error(404)
+                    return
+                if len(parts) == 3:
+                    if fail_dimensions:
+                        self.send_error(500)
+                        return
+                    q = {k: int(v[0]) for k, v in parse_qs(u.query).items()}
+                    items = inst["dimensions"]
+                    body = {
+                        "items": items[q["offset"] : q["offset"] + q["limit"]],
+                        "total_count": len(items),
+                    }
+                else:
+                    body = {"id": parts[1], "headers": inst["headers"]}
+                payload = json.dumps(body).encode()
+                self.send_response(200)
+                self.send_header("Content-Type", "application/json")
+                self.send_header("Content-Length", str(len(payload)))
+                self.end_headers()
+                self.wfile.write(payload)
+
+        self.server = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+        self.server.daemon_threads = True
+        self.url = f"http://127.0.0.1:{self.server.server_port}"
+        self._thread = threading.Thread(target=self.server.serve_forever, daemon=True)
+        self._thread.start()
+
+    def close(self):
+        self.server.shutdown()
+        self.server.server_close()
+
+
+def _api_instance(iid: str, n_dims: int) -> dict:
+    return {
+        "headers": ["V4_0", "Geography"],
+        "dimensions": [
+            {
+                "dimension_id": f"{iid}_Geography",
+                "option": f"G{i:02d}",
+                "node_id": f"n{i}",
+                "links": {"code_list": {"id": "geo"}},
+            }
+            for i in range(n_dims)
+        ],
+    }
+
+
+class _Batch:
+    """Output locations of ``runner.import_batch`` under one directory."""
+
+    def __init__(self, spark, base):
+        from dp_dimension_importer_spark.pipeline.sinks import (
+            ParquetGraphStore,
+            RecordingPatchSender,
+        )
+
+        self.base = str(base)
+        self.store = ParquetGraphStore(spark, f"{base}/graph")
+        self.sender = RecordingPatchSender(f"{base}/patches.jsonl")
+        self.completed_dir = f"{base}/completed"
+        self.dead_dir = f"{base}/dead_letter"
+
+    def run(self, raw, instances, dimensions, code_lists):
+        from dp_dimension_importer_spark.pipeline.runner import import_batch
+
+        return import_batch(
+            raw, instances, dimensions, code_lists, self.store, self.sender,
+            self.completed_dir, self.dead_dir,
+        )
+
+    def jsonl(self, sub: str) -> list[dict]:
+        import glob
+
+        rows = []
+        for f in sorted(glob.glob(f"{self.base}/{sub}/*.json")):
+            with open(f, encoding="utf-8") as fh:
+                rows.extend(json.loads(line) for line in fh if line.strip())
+        return rows
+
+
+def _events(spark, ids, extra=()):
+    payloads = [json.dumps({"file_url": f"/{i}.csv", "instance_id": i}) for i in ids]
+    return sources.read_event_batch(spark, payloads + list(extra))
+
+
+def _http_frames(spark, url, ids, page_size=2):
+    from dp_dimension_importer_spark.pipeline.http_client import (
+        fetch_dimensions_http,
+        fetch_instances_http,
+    )
+
+    id_df = spark.createDataFrame([(i,) for i in ids], "instance_id string").coalesce(1)
+    return (
+        fetch_instances_http(id_df, url, max_workers=2),
+        fetch_dimensions_http(id_df, url, page_size=page_size, max_workers=2),
+    )
+
+
+def _geo_code_lists(spark):
+    return spark.createDataFrame(
+        [("geo", f"G{i:02d}", i if i % 3 else None) for i in range(8)],
+        CODE_LIST_SCHEMA,
+    )
+
+
+def _persistent_rdds(spark) -> set[int]:
+    # ids, not the map's size: the context cleaner may drop an earlier
+    # test's cached RDD at any time
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_import_batch_serves_each_get_once_and_releases(spark, tmp_path):
+    """One ``import_batch`` over HTTP-fetched frames issues every needed GET
+    exactly once (one per instance, one per dimension page), however many
+    sinks read the batch, and leaves no batch materialization behind."""
+    from collections import Counter
+
+    api = _DatasetAPI({"i1": _api_instance("i1", 5), "i2": _api_instance("i2", 2)})
+    try:
+        instances, dimensions = _http_frames(spark, api.url, ["i1", "i2"])
+        out = _Batch(spark, tmp_path)
+        before = _persistent_rdds(spark)
+        out.run(_events(spark, ["i1", "i2"]), instances, dimensions,
+                _geo_code_lists(spark))
+        assert not _persistent_rdds(spark) - before
+    finally:
+        api.close()
+    counts = Counter(api.requests)
+    assert set(counts.values()) == {1}, counts
+    # i1: entity + pages at offsets 0, 2, 4; i2: entity + one page
+    assert len(counts) == 2 + 3 + 1
+    assert out.store.nodes().count() == 2 + 5 + 2
+    assert out.store.edges().count() == 5 + 2
+    assert sorted(c["instance_id"] for c in out.sender.calls()) == ["i1", "i2"]
+    assert sorted(r["instance_id"] for r in out.jsonl("completed")) == ["i1", "i2"]
+
+
+def _seed_history(path: str, n: int) -> None:
+    """``n`` imported instances in the store's layout, written with pyarrow
+    (no Spark job): one instance node and one dimension node each, and one
+    edge."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from dp_dimension_importer_spark.pipeline.models import EDGE_SCHEMA
+
+    ids = [f"hist-{k:02d}" for k in range(n)]
+    nodes = [("instance", i, None, None, ["h"]) for i in ids]
+    nodes += [("dimension", i, "Geography", "G00", None) for i in ids]
+    edges = [(i, "geo", "G00") for i in ids]
+    for sub, rows, schema in (("nodes", nodes, NODE_SCHEMA),
+                              ("edges", edges, EDGE_SCHEMA)):
+        names = schema.fieldNames()
+        table = pa.table({c: [r[k] for r in rows] for k, c in enumerate(names)},
+                         schema=to_arrow_schema(schema))
+        pq.write_to_dataset(table, f"{path}/{sub}", partition_cols=["instance_id"])
+
+
+def test_import_batch_job_count_independent_of_history(spark, tmp_path):
+    """The same batch costs the same number of Spark jobs into a store
+    holding 8 instance partitions as into one holding 40: the store reads
+    list only the batch's own partitions (past 32 paths, listing the whole
+    table would be a Spark job of its own on every read)."""
+    sc = spark.sparkContext
+    ids = ["new-1", "new-2", "hist-03"]  # two new, one redelivery
+    instances = spark.createDataFrame([(i, ["h"]) for i in ids], INSTANCE_SCHEMA)
+    dimensions = spark.createDataFrame(
+        [(i, f"{i}_Geography", f"G{k:02d}", f"n{k}", "geo")
+         for i in ids for k in range(3)],
+        DIMENSION_SCHEMA,
+    )
+    jobs = {}
+    # AQE submits query stages as jobs of their own, concurrently, so with
+    # it on the count moves by a job or two with timing; off, it is exact.
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    for n in (8, 40):
+        out = _Batch(spark, tmp_path / f"h{n}")
+        _seed_history(f"{out.base}/graph", n)
+        raw = _events(spark, ids)
+        group = f"import-batch-history-{n}"
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            out.run(raw, instances, dimensions, _geo_code_lists(spark))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        jobs[n] = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert out.store.nodes().count() == 2 * n + 2 * (1 + 3)
+        assert sorted(r["instance_id"] for r in out.jsonl("completed")) == [
+            "new-1", "new-2"
+        ]
+    assert jobs[8] == jobs[40], jobs
+
+
+def test_partition_dir_matches_spark_escaping(spark):
+    """``partition_dir`` names a partition exactly as Spark's writer does,
+    for every ASCII character, non-ASCII text, NULL and the empty string."""
+    from dp_dimension_importer_spark.pipeline.sinks import partition_dir
+
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    values = [chr(c) for c in range(1, 128)] + ["a/b=c%d:e#f", "é €", None, ""]
+    for v in values:
+        assert partition_dir("instance_id", v) == utils.getPartitionPathString(
+            "instance_id", v
+        ), repr(v)
+
+
+def test_redelivery_with_escaped_partition_names_is_a_noop(spark, tmp_path):
+    """Instance ids with characters Spark escapes in partition directory
+    names still hit their own partitions: redelivering the batch adds no
+    node, edge, patch or completion (the instance-exists gate skips every
+    instance), and a NULL-instance row written straight through the sinks
+    lands once."""
+    from pyspark.sql import functions as F
+
+    from dp_dimension_importer_spark.pipeline.models import EDGE_SCHEMA
+
+    ids = ["a/b", "x=y", "p%20q", "c:d", "h#1"]
+    instances = spark.createDataFrame([(i, ["h"]) for i in ids], INSTANCE_SCHEMA)
+    dimensions = spark.createDataFrame(
+        [(i, f"{i}_Geography", f"G{k:02d}", f"n{k}", "geo")
+         for i in ids for k in range(2)],
+        DIMENSION_SCHEMA,
+    )
+    out = _Batch(spark, tmp_path)
+    for _ in range(2):
+        r = out.run(_events(spark, ids), instances, dimensions,
+                    _geo_code_lists(spark))
+    assert sorted(x.instance_id for x in r.skipped_instances.collect()) == sorted(ids)
+    nodes = out.store.nodes()
+    assert nodes.count() == len(ids) * 3
+    assert sorted(
+        x.instance_id for x in nodes.filter(F.col("node_kind") == "instance").collect()
+    ) == sorted(ids)
+    assert out.store.edges().count() == len(ids) * 2
+    assert len(out.sender.calls()) == len(ids)
+    assert sorted(x["instance_id"] for x in out.jsonl("completed")) == sorted(ids)
+
+    # the schemas declare instance_id non-nullable; the sink must not rely on it
+    null_nodes = spark.createDataFrame(
+        [("dimension", None, "Geography", "G00", None)], NODE_SCHEMA.simpleString()
+    )
+    null_edges = spark.createDataFrame(
+        [(None, "geo", "G00")], EDGE_SCHEMA.simpleString()
+    )
+    for _ in range(2):
+        out.store.write_nodes(null_nodes)
+        out.store.write_edges(null_edges)
+    assert out.store.nodes().filter(F.col("instance_id").isNull()).count() == 1
+    assert out.store.edges().filter(F.col("instance_id").isNull()).count() == 1
+    assert out.store.nodes().count() == len(ids) * 3 + 1
+
+
+def test_import_batch_fetch_failure_after_dead_letters_before_graph(spark, tmp_path):
+    """A failing dimension fetch raises after the batch's dead letters are
+    written and before any graph row, patch or completion (fail-fast, sink
+    order unchanged), and releases whatever the batch had materialized."""
+    import os
+
+    api = _DatasetAPI({"i1": _api_instance("i1", 3)}, fail_dimensions=True)
+    try:
+        instances, dimensions = _http_frames(spark, api.url, ["i1"])
+        out = _Batch(spark, tmp_path)
+        before = _persistent_rdds(spark)
+        with pytest.raises(Exception):
+            out.run(_events(spark, ["i1"], extra=["not json"]), instances,
+                    dimensions, _geo_code_lists(spark))
+        assert not _persistent_rdds(spark) - before
+    finally:
+        api.close()
+    assert [d["payload"] for d in out.jsonl("dead_letter")] == ["not json"]
+    assert not os.path.exists(f"{out.base}/graph")
+    assert out.sender.calls() == []
+    assert out.jsonl("completed") == []

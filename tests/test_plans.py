@@ -19,6 +19,7 @@ from __future__ import annotations
 import os
 import tempfile
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -1142,6 +1143,51 @@ def test_planaudit_utility_reports_known_plans(spark):
         planaudit.assert_scales(cg, max_exchanges=2)
     c = planaudit.assert_scales(cg, max_exchanges=3)
     assert "FlatMapCoGroupsInPandas" in c["python_nodes"]
+
+
+# pandas UDFs read their kind from type hints, which resolve in module scope
+def _inc(s: pd.Series) -> pd.Series:
+    return s + 1
+
+
+def _mean(s: pd.Series) -> float:
+    return s.mean()
+
+
+def _udf_forms(spark) -> dict:
+    """One plan per Python UDF form, keyed by the node it must report.
+    The plans are audited, never run."""
+    from pyspark.sql import Window
+
+    df = spark.range(8).selectExpr("id % 2 AS k", "CAST(id AS DOUBLE) AS v")
+    plus, avg = F.pandas_udf(_inc, "double"), F.pandas_udf(_mean, "double")
+    g, schema = df.groupBy("k"), df.schema
+    return {
+        "ArrowEvalPython": df.select(plus("v")),
+        "BatchEvalPython": df.select(F.udf(lambda x: x, "double")("v")),
+        "FlatMapGroupsInPandas": g.applyInPandas(lambda p: p, schema),
+        "FlatMapGroupsInArrow": g.applyInArrow(lambda t: t, schema),
+        "FlatMapCoGroupsInPandas": g.cogroup(g).applyInPandas(lambda a, b: a, schema),
+        "FlatMapCoGroupsInArrow": g.cogroup(g).applyInArrow(lambda a, b: a, schema),
+        "MapInPandas": df.mapInPandas(lambda it: it, schema),
+        "MapInArrow": df.mapInArrow(lambda it: it, schema),
+        "ArrowAggregatePython": g.agg(avg("v")),
+        "ArrowWindowPython": df.select(avg("v").over(Window.partitionBy("k"))),
+    }
+
+
+def test_planaudit_reports_every_python_udf_form(spark):
+    """``python_nodes`` names the boundary node of every UDF form (scalar,
+    grouped, cogrouped and map, over pandas and Arrow; aggregate and window
+    pandas UDFs), so ``allow_python=False`` rejects each of them."""
+    import pytest as _pytest
+
+    from dp_dimension_importer_spark import planaudit
+
+    for node, df in _udf_forms(spark).items():
+        assert planaudit.audit(df)["python_nodes"] == [node]
+        with _pytest.raises(AssertionError):
+            planaudit.assert_scales(df, max_exchanges=9, allow_python=False)
 
 
 def test_optimize_snapshot_reclusters_without_breaking_isolation(spark):
