@@ -86,34 +86,35 @@ def fetch_dimensions_http(
     path) — dead-lettering stays the caller's decision upstream.
     """
 
+    def page(instance_id: str, offset: int) -> dict:
+        return _get_json(
+            base_url,
+            f"/instances/{quote(str(instance_id), safe='')}/dimensions"
+            f"?offset={offset}&limit={page_size}",
+            auth_token,
+            timeout,
+        )
+
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # one pool per partition = the per-partition "session"
+        # one pool per partition = the per-partition "session". Every GET
+        # runs in the pool, in two waves: all first pages (each discovers
+        # its instance's total), then all later pages. Only this thread
+        # waits on futures, so no pool worker blocks on another.
         with ThreadPoolExecutor(max_workers=max_workers) as pool:
             for pdf in batches:
-                for instance_id in pdf["instance_id"].dropna():
-                    first = _get_json(
-                        base_url,
-                        f"/instances/{quote(str(instance_id), safe='')}/dimensions"
-                        f"?offset=0&limit={page_size}",
-                        auth_token,
-                        timeout,
-                    )
+                ids = list(pdf["instance_id"].dropna())
+                firsts = list(pool.map(lambda i: page(i, 0), ids))
+                later = []
+                for i, first in zip(ids, firsts):
                     total = int(first.get("total_count", len(first.get("items", []))))
-                    rows = _dim_rows(instance_id, first.get("items", []))
                     offsets = range(page_size, total, page_size)
-                    pages = pool.map(
-                        lambda off: _get_json(
-                            base_url,
-                            f"/instances/{quote(str(instance_id), safe='')}/dimensions"
-                            f"?offset={off}&limit={page_size}",
-                            auth_token,
-                            timeout,
-                        ),
-                        offsets,
-                    )
-                    for page in pages:
-                        rows.extend(_dim_rows(instance_id, page.get("items", [])))
-                    yield pd.DataFrame(rows, columns=_DIM_COLS)
+                    later.append([pool.submit(page, i, off) for off in offsets])
+                rows = []
+                for i, first, pages in zip(ids, firsts, later):
+                    rows.extend(_dim_rows(i, first.get("items", [])))
+                    for f in pages:
+                        rows.extend(_dim_rows(i, f.result().get("items", [])))
+                yield pd.DataFrame(rows, columns=_DIM_COLS)
 
     return instance_ids.select("instance_id").mapInPandas(
         scan,

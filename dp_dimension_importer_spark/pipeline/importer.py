@@ -2,11 +2,16 @@
 
 Two execution shapes, same semantics:
 
-* **Set-based (the scale path)** — every step is a DataFrame transform:
-  validation filters, anti-join idempotency, node/edge derivation,
-  broadcast code-order join, null-aware patch filter. This is what runs at
-  100 TB: no per-instance loops, no driver-side state; one shuffle for the
-  existing-instance anti-join, zero shuffles for code orders (broadcast).
+* **Set-based (the scale path)** — the reference decides each instance in
+  plain control flow (fetch it, skip it if its node exists, then write its
+  dimensions); only the dimension options are bulk data. ``run_import``
+  keeps that split: the per-instance facts of a batch (its valid ids, which
+  of them already exist, the new instances' rows) are bounded by the batch
+  and resolved on the driver as set operations, and every dimension-row
+  step is a DataFrame transform: a literal ``isin`` filter to the new
+  instances, validation filters, node/edge derivation, broadcast code-order
+  join, null-aware patch filter. No shuffle decides an instance, and code
+  orders cost zero shuffles (broadcast).
 
 * **Batched per-instance (`process_instance_batched`)** — faithful port of
   the reference's chunk loop (handler/incoming_instance_handler.go:140-212):
@@ -24,7 +29,13 @@ from __future__ import annotations
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, functions as F
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+
+from dp_dimension_importer_spark.pipeline.models import (
+    INSTANCE_COMPLETED_SCHEMA,
+    INSTANCE_SCHEMA,
+)
 
 
 class ImportError_(Exception):
@@ -53,25 +64,6 @@ def validate_dimensions(dimensions: DataFrame) -> DataFrame:
     return dimensions.filter(
         F.col("dimension_id").isNotNull() & (F.col("dimension_id") != "")
     )
-
-
-# --------------------------------------------------------------------------
-# idempotency gate (R9 — handler:305-320)
-# --------------------------------------------------------------------------
-
-def split_new_instances(
-    instances: DataFrame, existing_nodes: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """(new, skipped): left-anti join against existing instance nodes —
-    the InstanceExists → skip-without-error contract (test :939-968).
-    At scale both sides hash-partition on instance_id; with a small
-    existing set Catalyst/AQE turns this into a broadcast anti join."""
-    existing_ids = existing_nodes.filter(F.col("node_kind") == "instance").select(
-        "instance_id"
-    )
-    new = instances.join(existing_ids, "instance_id", "left_anti")
-    skipped = instances.join(existing_ids, "instance_id", "left_semi")
-    return new, skipped
 
 
 # --------------------------------------------------------------------------
@@ -191,33 +183,43 @@ def build_patch_set(enriched: DataFrame, enable_patch_node_id: bool = True) -> D
     )
 
 
-def completion_events(events: DataFrame, imported_instances: DataFrame) -> DataFrame:
-    """InstanceCompleted per successfully imported instance (R19) — the
-    event echoes the NewInstance fields (event/events.go:10-13)."""
-    return events.join(
-        imported_instances.select("instance_id"), "instance_id", "left_semi"
-    ).select("file_url", "instance_id")
-
-
 # --------------------------------------------------------------------------
 # set-based end-to-end batch
 # --------------------------------------------------------------------------
 
+def local_frame(spark: SparkSession, rows: Sequence, schema: T.StructType) -> DataFrame:
+    """A DataFrame of rows already on the driver. Built through pandas and
+    Arrow it is a ``LocalRelation``, which the JVM reads by itself; a frame
+    of a Python list is an RDD whose every read runs Python workers."""
+    frame = pd.DataFrame(list(rows), columns=schema.fieldNames())
+    return spark.createDataFrame(frame, schema)
+
 @dataclass
 class ImportResult:
-    """One batch's import as two bases plus the sink inputs derived from
-    them. ``new_instances`` (wanted instances past the instance-exists
-    gate) and ``enriched`` (their validated dimensions joined to code
-    orders) are the only plans that fetch; every sink input is a cheap
-    projection or join of one of them, so persisting the two bases makes
-    every sink read the batch once."""
+    """One batch's import: the instance-level facts, resolved on the driver,
+    and one base. ``enriched`` (the new instances' validated dimensions
+    joined to code orders) is the only plan that fetches dimensions, and
+    every dimension-row sink input is a cheap projection of it, so
+    persisting it makes every sink read the batch's dimensions once.
+    ``new_instances`` and ``completed`` are local frames of rows already
+    on the driver (``local_frame``)."""
 
-    valid_events: DataFrame
+    decoded: int  # decoded events, at most one per message
+    new_ids: list[str]
+    skipped_ids: list[str]
     new_instances: DataFrame
+    completed: DataFrame  # InstanceCompleted per new instance (R19)
     enriched: DataFrame
     rejected_events: DataFrame
-    skipped_instances: DataFrame
     enable_patch_node_id: bool = True
+
+    @property
+    def skipped_instances(self) -> DataFrame:
+        return local_frame(
+            self.enriched.sparkSession,
+            [(i,) for i in self.skipped_ids],
+            T.StructType([T.StructField("instance_id", T.StringType())]),
+        )
 
     @property
     def instance_nodes(self) -> DataFrame:
@@ -235,9 +237,6 @@ class ImportResult:
     def patches(self) -> DataFrame:
         return build_patch_set(self.enriched, self.enable_patch_node_id)
 
-    @property
-    def completed(self) -> DataFrame:
-        return completion_events(self.valid_events, self.new_instances)
 
 
 def run_import(
@@ -245,23 +244,67 @@ def run_import(
     instances: DataFrame,
     dimensions: DataFrame,
     code_lists: DataFrame,
-    existing_nodes: DataFrame,
+    existing_nodes: DataFrame | Callable[[list[str]], DataFrame],
     enable_patch_node_id: bool = True,
 ) -> ImportResult:
-    """The whole reference handler as one declarative plan. Every output is
-    a lazy DataFrame; sinks decide materialization order."""
-    valid_events, rejected = validate_events(events)
-    wanted = instances.join(valid_events.select("instance_id"), "instance_id", "left_semi")
-    new_instances, skipped = split_new_instances(wanted, existing_nodes)
-    dims = validate_dimensions(dimensions).join(
-        new_instances.select("instance_id"), "instance_id", "left_semi"
+    """The reference handler for one batch. Its instance gate runs on the
+    driver over three bounded collects, in this order:
+
+    1. the decoded events (at most one per message);
+    2. the existing instance nodes among the valid ids. ``existing_nodes``
+       is the graph's nodes, or a function from instance ids to their
+       nodes (``ParquetGraphStore.nodes``) so that only the batch's
+       partitions are read;
+    3. the fetched rows of the other valid ids. This is the instance
+       fetch: a failing instance endpoint raises here.
+
+    Valid ids with an instance node are skipped without error (R9,
+    handler test :939-968); the fetched ones are new, and each of their
+    events is echoed as an InstanceCompleted event (R19,
+    event/events.go:10-13). The dimension rows stay lazy: ``enriched``
+    filters the validated dimensions to the new ids with a literal
+    ``isin`` and joins code orders, and its fetch runs when a sink first
+    reads it."""
+    spark = events.sparkSession
+    decoded = events.select("file_url", "instance_id").collect()
+    valid_ids = sorted({r.instance_id for r in decoded if r.instance_id})
+    existing: set[str] = set()
+    if valid_ids:
+        nodes = (
+            existing_nodes
+            if isinstance(existing_nodes, DataFrame)
+            else existing_nodes(valid_ids)
+        )
+        is_instance = (F.col("node_kind") == "instance") & F.col("instance_id").isin(
+            valid_ids
+        )
+        existing = {
+            r.instance_id
+            for r in nodes.filter(is_instance).select("instance_id").collect()
+        }
+    wanted = [i for i in valid_ids if i not in existing]
+    rows = (
+        instances.select("instance_id", "csv_header")
+        .filter(F.col("instance_id").isin(wanted))
+        .collect()
+        if wanted
+        else []
     )
+    new = {r.instance_id for r in rows}
+    new_ids = sorted(new)
+    dims = validate_dimensions(dimensions).filter(F.col("instance_id").isin(new_ids))
     return ImportResult(
-        valid_events=valid_events,
-        new_instances=new_instances,
+        decoded=len(decoded),
+        new_ids=new_ids,
+        skipped_ids=sorted(existing),
+        new_instances=local_frame(spark, rows, INSTANCE_SCHEMA),
+        completed=local_frame(
+            spark,
+            [r for r in decoded if r.instance_id in new],
+            INSTANCE_COMPLETED_SCHEMA,
+        ),
         enriched=join_code_orders(dims, code_lists),
-        rejected_events=rejected,
-        skipped_instances=skipped,
+        rejected_events=validate_events(events)[1],
         enable_patch_node_id=enable_patch_node_id,
     )
 

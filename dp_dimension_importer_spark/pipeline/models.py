@@ -20,6 +20,14 @@ NEW_INSTANCE_SCHEMA = T.StructType(
 #: InstanceCompleted event (event/events.go:10-13, schema/schema.go:28-47)
 INSTANCE_COMPLETED_SCHEMA = NEW_INSTANCE_SCHEMA
 
+#: Dead letter: an undecodable payload or an invalid event, with the reason
+DEAD_LETTER_SCHEMA = T.StructType(
+    [
+        T.StructField("payload", T.StringType(), True),
+        T.StructField("reason", T.StringType(), True),
+    ]
+)
+
 #: Instance entity (model/models.go:72-97)
 INSTANCE_SCHEMA = T.StructType(
     [

@@ -9,47 +9,39 @@ turn redelivery into a no-op (at-least-once + idempotent ≥ the reference's
 at-most-once).
 
 Each batch does its work once, like the reference's single fetch per
-instance. The instance-exists probe reads only the batch's own partitions
-of the graph store and is collected (at most one row per batch id). After
-the dead-letter sink and before the first graph write, ``import_batch``
-persists and computes the batch's two bases (the new instances and their
-code-ordered dimensions, see ``importer.ImportResult``), so the HTTP fetch
-runs one time and every sink reads the cached rows; a fetch failure
-raises there, after the dead letters and before any graph row. The bases
-are unpersisted when the batch ends, on failure too, so a long stream
-holds no earlier batch's rows."""
+instance, and decides its instances on the driver: ``importer.run_import``
+collects the batch's instance ids, the existing instance nodes among them
+(read from only the batch's own partitions of the graph store) and the
+new instances' fetched rows, so the instance gate and the completion
+events are set operations and literal filters, not Spark joins. Only the
+dimension rows stay in Spark: their one base (``ImportResult.enriched``)
+is persisted and computed after the instance fetch and before the first
+graph write, so the dimension fetch runs one time and every sink reads the
+cached rows. A failing fetch raises after the dead letters and before any
+graph row, and the base is unpersisted when the batch ends, on failure
+too, so a long stream holds no earlier batch's rows. Each batch logs one
+JSON progress record (``import_batch``)."""
 
 from __future__ import annotations
 
+import json
+import logging
 import os
 import tempfile
-from collections.abc import Callable, Iterator
-from contextlib import contextmanager
+import time
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from dp_dimension_importer_spark.pipeline import importer, sources
-from dp_dimension_importer_spark.pipeline.models import NODE_SCHEMA
+from dp_dimension_importer_spark.pipeline.models import DEAD_LETTER_SCHEMA
 from dp_dimension_importer_spark.pipeline.sinks import (
     ParquetGraphStore,
     jsonl_event_sink,
     patch_sink,
 )
 
-
-@contextmanager
-def _materialized(*bases: DataFrame) -> Iterator[None]:
-    """Persist and compute ``bases`` for the block, then release them.
-    Plans built on a base read its cached rows."""
-    cached = []
-    try:
-        for df in bases:
-            cached.append(df.persist())
-            df.count()
-        yield
-    finally:
-        for df in cached:
-            df.unpersist()
+log = logging.getLogger(__name__)
 
 
 def import_batch(
@@ -65,53 +57,75 @@ def import_batch(
 ) -> importer.ImportResult:
     """One micro-batch end to end, sinks applied in the reference's stage
     order (fail-fast between stages — a sink error leaves later stages
-    unexecuted, mirroring handler tests :247-304)."""
+    unexecuted, mirroring handler tests :247-304).
+
+    Logs one progress record per batch at INFO, a JSON object with
+    ``events`` (decoded events), ``dead_letters`` (undecodable payloads and
+    events without an instance id), ``new_instances``,
+    ``skipped_instances``, ``dimension_rows`` (the new instances'
+    code-ordered dimensions) and ``latency_ms``. Every count comes from a
+    collect or count the batch runs anyway."""
+    start = time.perf_counter()
     events, dead = sources.decode_events(raw_events)
-    # The instance-exists probe: only the partitions of the batch's valid
-    # ids (one per event), collected — at most one instance node per id.
-    # Collecting keeps the store out of the bases persisted below: Spark
-    # re-caches a cached plan that reads a path after each write to that
-    # path, which would re-run the batch's fetch at the next sink.
-    batch_ids = {r[0] for r in events.select("instance_id").collect()} - {None, ""}
-    existing = store.nodes(batch_ids).filter(F.col("node_kind") == "instance")
+    # Stage order: dead letters first (bad payloads are never lost), then
+    # the instance fetch (in run_import), the dimension fetch (the
+    # materialization), dimension nodes → edges → patches → completed,
+    # and the INSTANCE node LAST — it is the batch's COMMIT RECORD. The
+    # instance-exists skip (R9, handler test :939-968) keys on that node,
+    # so writing it first (the reference's call order) would turn a crash
+    # between it and the later sinks into a permanently half-imported
+    # instance that every redelivery then skips. Writing it last makes
+    # redelivery semantics exact: node absent → reprocess (row-idempotent
+    # sinks swallow any partial writes); node present → every prior stage
+    # provably ran, so the skip is safe. Net guarantee: graph store
+    # exactly-once OBSERVABLE, completion events at-least-once (only a
+    # crash inside the completed→instance-node window can duplicate one —
+    # the same contract a Kafka producer gives). Fail-fast between stages
+    # is unchanged (handler tests :247-304).
+    _, rejected = importer.validate_events(events)
+    dead_all = dead.unionByName(
+        rejected.select(rejected.instance_id.alias("payload"), "reason")
+    )
+    # one job, no shuffle; at most one row per message
+    dead_rows = dead_all.collect()
+    if dead_rows:
+        jsonl_event_sink(
+            importer.local_frame(events.sparkSession, dead_rows, DEAD_LETTER_SCHEMA),
+            dead_letter_dir,
+        )
     result = importer.run_import(
         events,
         instances,
         dimensions,
         code_lists,
-        existing_nodes=store.spark.createDataFrame(existing.collect(), NODE_SCHEMA),
+        existing_nodes=store.nodes,
         enable_patch_node_id=enable_patch_node_id,
     )
-    # Stage order: dead letters first (bad payloads are never lost), then
-    # dimension nodes → edges → patches → completed, and the INSTANCE node
-    # LAST — it is the batch's COMMIT RECORD. The instance-exists skip
-    # (R9, handler test :939-968) keys on that node, so writing it first
-    # (the reference's call order) would turn a crash between it and the
-    # later sinks into a permanently half-imported instance that every
-    # redelivery then skips. Writing it last makes redelivery semantics
-    # exact: node absent → reprocess (row-idempotent sinks swallow any
-    # partial writes); node present → every prior stage provably ran, so
-    # the skip is safe. Net guarantee: graph store exactly-once
-    # OBSERVABLE, completion events at-least-once (only a crash inside
-    # the completed→instance-node window can duplicate one — the same
-    # contract a Kafka producer gives). Fail-fast between stages is
-    # unchanged (handler tests :247-304).
-    dead_all = dead.unionByName(
-        result.rejected_events.select(
-            result.rejected_events.instance_id.alias("payload"), "reason"
+    dimension_rows = 0
+    if result.new_ids:
+        ids = result.new_ids
+        enriched = result.enriched.persist()
+        try:
+            dimension_rows = enriched.count()
+            store.write_nodes(result.dimension_nodes, ids)
+            store.write_edges(result.edges, ids)
+            patch_sink(result.patches, patch_send)
+            jsonl_event_sink(result.completed, completed_dir)
+            store.write_nodes(result.instance_nodes, ids)
+        finally:
+            enriched.unpersist()
+    log.info(
+        json.dumps(
+            {
+                "events": result.decoded,
+                "dead_letters": len(dead_rows),
+                "new_instances": len(result.new_ids),
+                "skipped_instances": len(result.skipped_ids),
+                "dimension_rows": dimension_rows,
+                "latency_ms": round((time.perf_counter() - start) * 1000),
+            }
         )
     )
-    if dead_all.take(1):
-        jsonl_event_sink(dead_all, dead_letter_dir)
-    # Fetch failures surface here: after the dead letters, before any
-    # graph row.
-    with _materialized(result.new_instances, result.enriched):
-        store.write_nodes(result.dimension_nodes)
-        store.write_edges(result.edges)
-        patch_sink(result.patches, patch_send)
-        if result.completed.take(1):
-            jsonl_event_sink(result.completed, completed_dir)
-        store.write_nodes(result.instance_nodes)
     return result
 
 

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import json
 import os
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -52,24 +52,31 @@ class ParquetGraphStore:
     ONLY those ids' partition directories: each id is escaped into the
     directory name Spark wrote it under (``partition_dir``, NULL and empty
     ids → the hive default partition) and the read lists just the ones that
-    exist. Nothing lists the table's other partitions, so per-batch sink
-    work is O(batch instances), not O(accumulated history)."""
+    exist. The writers take those ids from the caller, and skip the
+    anti-join when none of their directories exists yet (a new instance's
+    first write). Nothing lists the table's other partitions, so per-batch
+    sink work is O(batch instances), not O(accumulated history)."""
 
     def __init__(self, spark: SparkSession, base_dir: str):
         self.spark = spark
         self.nodes_dir = os.path.join(base_dir, "nodes")
         self.edges_dir = os.path.join(base_dir, "edges")
 
-    def _read(self, path: str, schema, instance_ids=None) -> DataFrame:
-        """The table at ``path``, or only the partitions of
-        ``instance_ids`` when given; a table or partition not written yet
-        reads as empty."""
+    @staticmethod
+    def _paths(
+        path: str, instance_ids: Iterable[str | None] | None = None
+    ) -> list[str]:
+        """The directories to read that exist: the table at ``path``, or
+        only the partitions of ``instance_ids`` when given."""
         if instance_ids is None:
-            paths = [path] if os.path.exists(path) else []
+            paths = [path]
         else:
             dirs = {partition_dir("instance_id", i) for i in instance_ids}
             paths = [os.path.join(path, d) for d in sorted(dirs)]
-            paths = [p for p in paths if os.path.exists(p)]
+        return [p for p in paths if os.path.exists(p)]
+
+    def _read(self, path: str, schema, paths: list[str]) -> DataFrame:
+        """``paths`` of the table at ``path``; no path reads as empty."""
         if not paths:
             return self.spark.createDataFrame([], schema)
         df = self.spark.read.schema(schema).option("basePath", path).parquet(*paths)
@@ -77,28 +84,37 @@ class ParquetGraphStore:
 
     def nodes(self, instance_ids=None) -> DataFrame:
         """Every node, or only the nodes of ``instance_ids``."""
-        return self._read(self.nodes_dir, NODE_SCHEMA, instance_ids)
+        return self._read(
+            self.nodes_dir, NODE_SCHEMA, self._paths(self.nodes_dir, instance_ids)
+        )
 
     def edges(self) -> DataFrame:
-        return self._read(self.edges_dir, EDGE_SCHEMA)
+        return self._read(self.edges_dir, EDGE_SCHEMA, self._paths(self.edges_dir))
 
-    def _fresh(self, batch: DataFrame, path: str, schema, key: list[str]) -> DataFrame:
-        # bounded collect: one row per instance in the micro-batch
-        ids = [r[0] for r in batch.select("instance_id").distinct().collect()]
-        existing = self._read(path, schema, ids)
-        cond = [batch[k].eqNullSafe(existing[k]) for k in key]
-        return batch.join(existing, cond, "left_anti")
+    def _append(
+        self, rows: DataFrame, instance_ids, path: str, schema, key: list[str]
+    ) -> None:
+        paths = self._paths(path, instance_ids)
+        if paths:
+            existing = self._read(path, schema, paths)
+            cond = [rows[k].eqNullSafe(existing[k]) for k in key]
+            rows = rows.join(existing, cond, "left_anti")
+        rows.write.mode("append").partitionBy("instance_id").parquet(path)
 
-    def write_nodes(self, nodes: DataFrame) -> None:
+    def write_nodes(self, nodes: DataFrame, instance_ids: Iterable[str | None]) -> None:
+        """Append the ``nodes`` not stored yet. ``instance_ids`` must
+        cover every ``instance_id`` in ``nodes``: the anti-join reads only
+        their partitions, so a row of any other instance would escape it.
+        The import runner builds every frame it writes from its batch's new
+        ids, so those ids cover the frame by construction."""
         key = ["node_kind", "instance_id", "dimension_name", "option"]
-        fresh = self._fresh(nodes, self.nodes_dir, NODE_SCHEMA, key)
-        fresh.write.mode("append").partitionBy("instance_id").parquet(self.nodes_dir)
+        self._append(nodes, instance_ids, self.nodes_dir, NODE_SCHEMA, key)
 
-    def write_edges(self, edges: DataFrame) -> None:
-        fresh = self._fresh(
-            edges, self.edges_dir, EDGE_SCHEMA, list(edges.columns)
-        )
-        fresh.write.mode("append").partitionBy("instance_id").parquet(self.edges_dir)
+    def write_edges(self, edges: DataFrame, instance_ids: Iterable[str | None]) -> None:
+        """Append the ``edges`` not stored yet; ``instance_ids`` as for
+        ``write_nodes``."""
+        key = list(edges.columns)
+        self._append(edges, instance_ids, self.edges_dir, EDGE_SCHEMA, key)
 
 
 def patch_sink(

@@ -130,6 +130,18 @@ def stub_slow():
     s.close()
 
 
+@pytest.fixture()
+def stub_slow_dims():
+    ids = [f"inst-{i}" for i in range(6)]
+    s = _StubDatasetAPI(
+        {i: [_dim(1, f"{i}_Geography", "England", "cl")] for i in ids},
+        {i: ["h"] for i in ids},
+        delay=0.25,
+    )
+    yield s
+    s.close()
+
+
 def test_pagination_params_and_auth(spark, stub):
     """5 dimensions at page_size=2 → offsets exactly {0,2,4}, constant
     limit, Bearer token on every request — the paginated-batch contract of
@@ -161,6 +173,24 @@ def test_instance_fetch_concurrent_gets(spark, stub_slow):
     assert {r.instance_id for r in rows} == {f"inst-{i}" for i in range(6)}
     assert all(r.csv_header == ["h"] for r in rows)
     assert stub_slow.max_in_flight > 1
+
+
+def test_dimension_fetch_concurrent_first_pages(spark, stub_slow_dims):
+    """Every instance's first dimension page is fetched in the pool too, so
+    one partition of N single-page instances costs about one round-trip,
+    not N: 6 instances behind a 0.25 s-per-request stub must show >1
+    request in flight at once, each GET issued once."""
+    ids = spark.createDataFrame(
+        [(f"inst-{i}",) for i in range(6)], "instance_id string"
+    ).coalesce(1)  # single partition → overlap can only come from the pool
+    out = fetch_dimensions_http(ids, stub_slow_dims.url, page_size=10, max_workers=6)
+    rows = out.collect()
+    assert {r.instance_id for r in rows} == {f"inst-{i}" for i in range(6)}
+    assert stub_slow_dims.max_in_flight > 1
+    gets = [(r["path"], r["query"]["offset"]) for r in stub_slow_dims.requests]
+    assert sorted(gets) == sorted(
+        (f"/instances/inst-{i}/dimensions", "0") for i in range(6)
+    )
 
 
 def test_import_pipeline_with_http_dimensions(spark, stub):

@@ -301,12 +301,12 @@ def test_graph_store_idempotent_standalone(spark, tmp_path):
         [("inst1", None, "England"), ("inst1", "cl1", None)], EDGE_SCHEMA
     )
     for _ in range(2):  # second delivery must be a no-op
-        store.write_nodes(nodes)
-        store.write_edges(edges)
+        store.write_nodes(nodes, ["inst1"])
+        store.write_edges(edges, ["inst1"])
     assert store.nodes().count() == 2
     assert store.edges().count() == 2
     # second instance appends without touching inst1's partition
-    store.write_nodes(nodes.replace("inst1", "inst2", "instance_id"))
+    store.write_nodes(nodes.replace("inst1", "inst2", "instance_id"), ["inst2"])
     assert store.nodes().count() == 4
     assert store.nodes().filter("instance_id = 'inst1'").count() == 2
 
@@ -319,9 +319,15 @@ def test_graph_store_idempotent_standalone(spark, tmp_path):
 class _DatasetAPI:
     """Threaded Dataset API stub serving ``/instances/{id}`` and paged
     ``/instances/{id}/dimensions``; records every request's path and
-    query. ``fail_dimensions`` answers the dimension endpoint with 500."""
+    query. ``fail_dimensions`` answers the dimension endpoint with 500,
+    ``fail_instances`` the instance endpoint."""
 
-    def __init__(self, instances: dict[str, dict], fail_dimensions: bool = False):
+    def __init__(
+        self,
+        instances: dict[str, dict],
+        fail_dimensions: bool = False,
+        fail_instances: bool = False,
+    ):
         import threading
         from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
         from urllib.parse import parse_qs, unquote, urlparse
@@ -354,6 +360,9 @@ class _DatasetAPI:
                         "total_count": len(items),
                     }
                 else:
+                    if fail_instances:
+                        self.send_error(500)
+                        return
                     body = {"id": parts[1], "headers": inst["headers"]}
                 payload = json.dumps(body).encode()
                 self.send_response(200)
@@ -536,6 +545,9 @@ def test_import_batch_job_count_independent_of_history(spark, tmp_path):
             "new-1", "new-2"
         ]
     assert jobs[8] == jobs[40], jobs
+    # the instance gate and the completion events are driver-side set
+    # operations, not Spark joins over batch-sized frames
+    assert jobs[8] <= 12, jobs
 
 
 def test_partition_dir_matches_spark_escaping(spark):
@@ -590,20 +602,20 @@ def test_redelivery_with_escaped_partition_names_is_a_noop(spark, tmp_path):
         [(None, "geo", "G00")], EDGE_SCHEMA.simpleString()
     )
     for _ in range(2):
-        out.store.write_nodes(null_nodes)
-        out.store.write_edges(null_edges)
+        out.store.write_nodes(null_nodes, [None])
+        out.store.write_edges(null_edges, [None])
     assert out.store.nodes().filter(F.col("instance_id").isNull()).count() == 1
     assert out.store.edges().filter(F.col("instance_id").isNull()).count() == 1
     assert out.store.nodes().count() == len(ids) * 3 + 1
 
 
-def test_import_batch_fetch_failure_after_dead_letters_before_graph(spark, tmp_path):
-    """A failing dimension fetch raises after the batch's dead letters are
-    written and before any graph row, patch or completion (fail-fast, sink
-    order unchanged), and releases whatever the batch had materialized."""
+def _fails_after_dead_letters_before_graph(spark, tmp_path, **failing) -> None:
+    """A batch whose fetch fails (``failing``: a ``_DatasetAPI`` flag)
+    raises after its dead letters are written and before any graph row,
+    patch or completion, and leaves no persisted RDD behind."""
     import os
 
-    api = _DatasetAPI({"i1": _api_instance("i1", 3)}, fail_dimensions=True)
+    api = _DatasetAPI({"i1": _api_instance("i1", 3)}, **failing)
     try:
         instances, dimensions = _http_frames(spark, api.url, ["i1"])
         out = _Batch(spark, tmp_path)
@@ -618,3 +630,51 @@ def test_import_batch_fetch_failure_after_dead_letters_before_graph(spark, tmp_p
     assert not os.path.exists(f"{out.base}/graph")
     assert out.sender.calls() == []
     assert out.jsonl("completed") == []
+
+
+def test_import_batch_fetch_failure_after_dead_letters_before_graph(spark, tmp_path):
+    """A failing dimension fetch raises after the batch's dead letters are
+    written and before any graph row, patch or completion (fail-fast, sink
+    order unchanged), and releases whatever the batch had materialized."""
+    _fails_after_dead_letters_before_graph(spark, tmp_path, fail_dimensions=True)
+
+
+def test_import_batch_instance_fetch_failure_keeps_stage_order(spark, tmp_path):
+    """The instance fetch, a driver-side collect, keeps the same stage
+    order: a failing instance endpoint raises after the dead letters and
+    before any graph row, patch or completion."""
+    _fails_after_dead_letters_before_graph(spark, tmp_path, fail_instances=True)
+
+
+def test_import_batch_logs_one_progress_record(spark, tmp_path, caplog):
+    """Each batch logs one JSON progress record at INFO, counting its
+    decoded events, dead letters, new and skipped instances and dimension
+    rows."""
+    import logging
+
+    ids = ["p1", "p2"]
+    instances = spark.createDataFrame([(i, ["h"]) for i in ids], INSTANCE_SCHEMA)
+    dimensions = spark.createDataFrame(
+        [(i, f"{i}_Geography", f"G{k:02d}", f"n{k}", "geo")
+         for i in ids for k in range(3)],
+        DIMENSION_SCHEMA,
+    )
+    out = _Batch(spark, tmp_path)
+    out.run(_events(spark, ["p1"]), instances, dimensions, _geo_code_lists(spark))
+    caplog.clear()
+    with caplog.at_level(logging.INFO, logger="dp_dimension_importer_spark"):
+        out.run(_events(spark, ids, extra=["not json"]), instances, dimensions,
+                _geo_code_lists(spark))
+    records = [r for r in caplog.records
+               if r.name == "dp_dimension_importer_spark.pipeline.runner"]
+    assert len(records) == 1
+    assert records[0].levelno == logging.INFO
+    progress = json.loads(records[0].getMessage())
+    assert progress.pop("latency_ms") >= 0
+    assert progress == {
+        "events": 2,
+        "dead_letters": 1,
+        "new_instances": 1,
+        "skipped_instances": 1,
+        "dimension_rows": 3,
+    }

@@ -104,8 +104,9 @@ keys = st.lists(st.integers(0, 20), min_size=0, max_size=30)
 @given(keys, keys)
 @settings(max_examples=8, deadline=None)
 def test_semi_anti_partition(spark, left_keys, right_keys):
-    """semi(L, R) ⊎ anti(L, R) == L for any L, R (the idempotency-gate
-    identity behind split_new_instances)."""
+    """semi(L, R) ⊎ anti(L, R) == L for any L, R (the identity behind the
+    graph sink's idempotent append: every batch row is either already
+    stored or written)."""
     L = spark.createDataFrame([(k,) for k in left_keys] or [(None,)], "k int").filter(
         "k is not null"
     )

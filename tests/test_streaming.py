@@ -352,7 +352,7 @@ def test_checkpoint_restart_recovers_exactly_once(spark):
             events, instances, dimensions, code_lists,
             existing_nodes=store.nodes(),
         )
-        store.write_nodes(result.dimension_nodes)  # partial sink write...
+        store.write_nodes(result.dimension_nodes, result.new_ids)  # partial sink write...
         raise RuntimeError("simulated crash mid-batch")  # ...then die
 
     with pytest.raises(StreamingQueryException):
