@@ -383,33 +383,11 @@ def optimize_snapshot_incremental(
         os.path.relpath(p, path)
         for p in glob.glob(os.path.join(data_dir, "*.parquet"))
     )
-    manifest = {"files": kept + new_files, "schema": man["schema"]}
-    if mapping:
-        manifest["column_mapping"] = mapping
-    _carry_partition(man, manifest, new_files)
-    kept_dv = {rel: dv_map[rel] for rel in kept if rel in dv_map}
-    if kept_dv:
-        manifest["dv"] = kept_dv
-    if "txn" in man:
-        manifest["txn"] = man["txn"]
-    stats_cols = sorted(
-        set(cols)
-        | {c for per_file in man.get("stats", {}).values() for c in per_file}
-    )
-    stats = {
-        rel: man["stats"][rel]
-        for rel in kept
-        if rel in man.get("stats", {})
-    }
-    stats.update(_stats_logical(new_files, path, stats_cols, mapping))
-    manifest["stats"] = stats
-    version = _commit_manifest(
-        path, manifest, token,
-        rebase=_make_dml_rebase(
-            man, removed=new_rels, new_files=new_files,
-            new_stats=_new_stats_of(manifest, new_files),
-            mapping=mapping,
-        ),
+    # the clustering columns join the stats even on a stats-less table:
+    # per-file bounds are what read-side pruning consumes
+    version = _commit_replace(
+        path, man, token, removed=new_rels, new_files=new_files,
+        stats_cols=cols,
     )
     return {
         "version": version,
@@ -455,7 +433,7 @@ def compact_small_files_snapshot(
     # column-mapped tables compact as-is: the raw concat reads and writes
     # PHYSICAL names end-to-end, so the one-physical-schema invariant
     # holds by construction; only the manifest's mapping must carry
-    mapping = man.get("column_mapping") or {}
+    # (_commit_replace carries it)
     sizes = {
         rel: os.path.getsize(os.path.join(path, rel))
         for rel in man["files"]
@@ -467,7 +445,6 @@ def compact_small_files_snapshot(
         rel for rel, n in sizes.items()
         if n < min_file_bytes and rel not in dv_map
     ]
-    kept = [rel for rel in man["files"] if rel not in set(small)]
     # size the output fan-out against the TARGET (not the threshold), and
     # compact only when that actually REDUCES the file count — otherwise
     # overhead-dominated tiny outputs would re-qualify as "small" and a
@@ -505,37 +482,16 @@ def compact_small_files_snapshot(
         os.path.relpath(p, path)
         for p in glob.glob(os.path.join(data_dir, "*.parquet"))
     )
-    manifest = {"files": kept + new_files, "schema": man["schema"]}
-    if mapping:
-        manifest["column_mapping"] = mapping
-    _carry_partition(man, manifest, new_files)
-    if dv_map:  # every DV-carrying file is in kept (excluded from small)
-        manifest["dv"] = dv_map
-    if "mor" in man:
-        # base-file compaction is resolution-neutral (deltas live in the
-        # mor chain, never in "files") — carry the chain verbatim
-        manifest["mor"] = man["mor"]
-    if "txn" in man:
-        manifest["txn"] = man["txn"]
-    if "stats" in man:
-        stats_cols = sorted(
-            {c for per_file in man["stats"].values() for c in per_file}
-        )
-        stats = {rel: man["stats"][rel] for rel in kept if rel in man["stats"]}
-        stats.update(_stats_logical(new_files, path, stats_cols, mapping))
-        manifest["stats"] = stats
-    version = _commit_manifest(
-        path, manifest, token,
-        rebase=_make_dml_rebase(
-            man, removed=small, new_files=new_files,
-            new_stats=_new_stats_of(manifest, new_files),
-            mapping=mapping,
-        ),
+    # base-file compaction is resolution-neutral (deltas live in the mor
+    # chain, never in "files"): the chain and every DV (no DV-carrying
+    # file is small) carry verbatim
+    version = _commit_replace(
+        path, man, token, removed=small, new_files=new_files
     )
     return {
         "version": version,
         "files_compacted": len(small),
-        "files_kept": len(kept),
+        "files_kept": len(man["files"]) - len(small),
         "files_written": len(new_files),
     }
 
@@ -929,10 +885,11 @@ def write_snapshot(
         _carry_partition(prev, manifest, new_files)
     if mapping:
         manifest["column_mapping"] = mapping
+    carried_set = set(carried)
     carried_dv = {
         rel: dv
         for rel, dv in (prev.get("dv") or {}).items()
-        if rel in set(carried)
+        if rel in carried_set
     }
     if carried_dv:  # appended-to tables keep their deletion vectors
         manifest["dv"] = carried_dv
@@ -2004,53 +1961,113 @@ def _scan_with_pos(
     return data, cols
 
 
-
-def _new_stats_of(manifest: dict, new_files) -> dict | None:
-    if "stats" not in manifest:
-        return None
-    return {
-        rel: manifest["stats"][rel]
-        for rel in new_files
-        if rel in manifest["stats"]
-    }
-
-def _make_dml_rebase(
-    base_man: dict,
+def _replace_files(
+    man: dict,
     removed=(),
     dv_set: dict | None = None,
     new_files=(),
     new_values: dict | None = None,
     new_stats: dict | None = None,
     mapping: dict | None = None,
-):
-    """Optimistic-concurrency rebase for SUBSET-REPLACING commits (r12 —
-    Iceberg's snapshot-isolation validation for row-level DML): a COW
-    delete/update, DV delete/update, purge, compaction or incremental/
-    partition-scoped optimize replaces ``removed`` files (and/or
-    attaches ``dv_set`` sidecars) with ``new_files``. If a racing commit
-    did NOT touch exactly those files — they are still referenced by the
-    new head with unchanged DV state — and no table contract moved, the
-    two commits are disjoint and BOTH succeed: the loser rebuilds its
+) -> dict:
+    """The manifest of a FILE-REPLACING commit built on ``man``: its
+    files minus ``removed``, plus ``new_files``. Surviving files keep
+    their deletion vectors (``dv_set`` attaches new ones), partition
+    tuples (:func:`_carry_partition`; ``new_values`` tuples the new
+    files) and stats (``new_stats`` adds the new files'); the txn
+    watermarks and the MOR chain carry over. Shared by the first claim
+    and the rebase of :func:`_commit_replace`, and by MERGE's first
+    claim."""
+    rm = set(removed)
+    files = [f for f in man.get("files") or [] if f not in rm]
+    files += list(new_files)
+    m2 = {"files": files, "schema": man.get("schema")}
+    if mapping:
+        m2["column_mapping"] = mapping
+    dv = {rel: d for rel, d in (man.get("dv") or {}).items() if rel not in rm}
+    dv.update(dv_set or {})
+    if dv:
+        m2["dv"] = dv
+    _carry_partition(man, m2, new_files, new_values)
+    if man.get("stats") or new_stats:
+        keep = set(files)
+        m2["stats"] = {
+            rel: v for rel, v in (man.get("stats") or {}).items()
+            if rel in keep
+        }
+        m2["stats"].update(new_stats or {})
+    for carry in ("txn", "mor"):
+        if man.get(carry):
+            m2[carry] = man[carry]
+    return m2
+
+
+def _new_file_stats(
+    path: str, man: dict, new_files, mapping: dict | None, stats_cols=()
+) -> dict | None:
+    """Footer stats of a rewrite's new files over the table's stats
+    columns plus ``stats_cols``; None when neither asks for any."""
+    if "stats" not in man and not stats_cols:
+        return None
+    cols = set(stats_cols)
+    cols.update(c for per in (man.get("stats") or {}).values() for c in per)
+    return _stats_logical(new_files, path, sorted(cols), mapping)
+
+
+def _commit_replace(
+    path: str,
+    man: dict,
+    token: str,
+    removed=(),
+    dv_set: dict | None = None,
+    new_files=(),
+    new_values: dict | None = None,
+    stats_cols=(),
+    branch: str | None = None,
+    expect_bv: int | None = None,
+) -> int:
+    """Commit a FILE-REPLACING change to ``man``: a COW delete/update, DV
+    delete/update, purge, compaction or incremental/partition-scoped
+    optimize replaces ``removed`` files (and/or attaches ``dv_set``
+    sidecars) with ``new_files``. The new files' stats are harvested
+    once; both the first claim and the rebase build their manifest with
+    :func:`_replace_files`. ``branch`` commits a single claim (no
+    rebase — see :func:`_commit_dml_manifest`).
+
+    Optimistic-concurrency rebase (r12 — Iceberg's snapshot-isolation
+    validation for row-level DML): if a racing commit did NOT touch
+    exactly those files — they are still referenced by the new head
+    with unchanged DV state — and no table contract moved, the two
+    commits are disjoint and BOTH succeed: the loser rebuilds its
     manifest on the head (racing append+delete, or two deletes on
     different files, no longer hard-fail). A shared file, a DV added by
     the competitor on a file we rewrote/masked, a schema/constraint/
-    mapping/spec-relevant change, or a vanished file refuses with
-    :class:`ConcurrentCommitError` — the verb re-runs against the new
-    head. MERGE deliberately has NO rebase: its NOT-MATCHED inserts
-    assumed keys absent from the WHOLE table, and a concurrent append
-    could invalidate that (the write-skew serializable-vs-snapshot
-    distinction)."""
+    mapping/spec-relevant change, a vanished file, or a MOR head
+    refuses with :class:`ConcurrentCommitError` — the verb re-runs
+    against the new head. MERGE deliberately does not commit through
+    here: its NOT-MATCHED inserts assumed keys absent from the WHOLE
+    table, so its rebase must prove a concurrent append key-disjoint
+    (the write-skew serializable-vs-snapshot distinction)."""
+    mapping = man.get("column_mapping") or {}
+    new_stats = _new_file_stats(path, man, new_files, mapping, stats_cols)
     touched = set(removed) | set(dv_set or {})
-    base_dv = base_man.get("dv") or {}
+    base_dv = man.get("dv") or {}
+
+    def _build(on: dict) -> dict:
+        return _replace_files(
+            on, removed, dv_set, new_files, new_values, new_stats, mapping
+        )
 
     def _rebase(head: dict) -> dict:
         if head.get("mor"):
             raise ConcurrentCommitError(
-                "table became MOR concurrently — re-run the verb"
+                "the MOR chain moved concurrently — re-run the verb"
+                if man.get("mor")
+                else "table became MOR concurrently — re-run the verb"
             )
         for key in ("constraints", "generated", "column_mapping",
                     "widened", "dropped", "schema"):
-            if (head.get(key) or None) != (base_man.get(key) or None):
+            if (head.get(key) or None) != (man.get(key) or None):
                 raise ConcurrentCommitError(
                     f"table {key} changed concurrently — this commit "
                     "was derived under the old contract; re-run"
@@ -2069,33 +2086,11 @@ def _make_dml_rebase(
                     "vector — masking/rewriting it now would drop those "
                     "deletes; re-run the verb"
                 )
-        rm = set(removed)
-        files = [f for f in (head.get("files") or []) if f not in rm]
-        files += list(new_files)
-        m2 = {"files": files, "schema": head.get("schema")
-              or base_man.get("schema")}
-        if mapping:
-            m2["column_mapping"] = mapping
-        dv = {
-            rel: d for rel, d in head_dv.items() if rel not in rm
-        }
-        dv.update(dv_set or {})
-        if dv:
-            m2["dv"] = dv
-        _carry_partition(head, m2, list(new_files), new_values)
-        keep = set(files)
-        if head.get("stats") or new_stats:
-            m2["stats"] = {
-                rel: v
-                for rel, v in (head.get("stats") or {}).items()
-                if rel in keep
-            }
-            m2["stats"].update(new_stats or {})
-        if head.get("txn"):
-            m2["txn"] = head["txn"]
-        return m2
+        return _build(head)
 
-    return _rebase
+    return _commit_dml_manifest(
+        path, _build(man), token, branch, expect_bv, rebase=_rebase
+    )
 
 
 def _write_dv_sidecars(
@@ -2334,37 +2329,16 @@ def delete_where_snapshot(
                 "dv_files_written": 0,
             }
         rel_of_fname = {os.path.basename(rel): rel for rel in man["files"]}
-        new_dv = dict(dv_map)
-        rows_deleted = 0
-        for r in summary:
-            new_dv[rel_of_fname[r["fname"]]] = r["dv_rel"]
-            rows_deleted += r["n_new"]
-        manifest = {
-            "files": man["files"],
-            "schema": man["schema"],
-            "dv": new_dv,
-        }
-        if mapping:
-            manifest["column_mapping"] = mapping
-        _carry_partition(man, manifest, new_files=())
-        if "txn" in man:
-            manifest["txn"] = man["txn"]
-        if "stats" in man:
-            manifest["stats"] = man["stats"]  # now upper bounds: still
-            # conservative-correct for pruning
-        version = _commit_dml_manifest(
-            path, manifest, token, branch, expect_bv,
-            rebase=_make_dml_rebase(
-                man,
-                dv_set={
-                    rel_of_fname[r["fname"]]: r["dv_rel"] for r in summary
-                },
-                mapping=mapping,
-            ),
+        # masked files keep their stats: now upper bounds, still
+        # conservative-correct for pruning
+        version = _commit_replace(
+            path, man, token,
+            dv_set={rel_of_fname[r["fname"]]: r["dv_rel"] for r in summary},
+            branch=branch, expect_bv=expect_bv,
         )
         return {
             "version": version,
-            "rows_deleted": rows_deleted,
+            "rows_deleted": sum(r["n_new"] for r in summary),
             "files_rewritten": 0,
             "files_kept": len(man["files"]),
             "files_probed": len(probe_rels),
@@ -2388,9 +2362,6 @@ def delete_where_snapshot(
             "files_probed": len(probe_rels),
             "dv_files_written": 0,
         }
-    kept = [
-        rel for rel in man["files"] if os.path.basename(rel) not in touched
-    ]
     doomed_rels = [
         rel for rel in probe_rels if os.path.basename(rel) in touched
     ]
@@ -2407,35 +2378,15 @@ def delete_where_snapshot(
     new_files, new_values = _route_rewrite(
         survivors, path, man, token, compression, mapping
     )
-    manifest = {"files": kept + new_files, "schema": man["schema"]}
-    if mapping:
-        manifest["column_mapping"] = mapping
-    _carry_partition(man, manifest, new_files, new_values)
-    kept_dv = {rel: dv_map[rel] for rel in kept if rel in dv_map}
-    if kept_dv:
-        manifest["dv"] = kept_dv
-    if "txn" in man:
-        manifest["txn"] = man["txn"]  # idempotence watermarks never regress
-    if "stats" in man:
-        stats_cols = sorted(
-            {c for per_file in man["stats"].values() for c in per_file}
-        )
-        stats = {rel: man["stats"][rel] for rel in kept if rel in man["stats"]}
-        stats.update(_stats_logical(new_files, path, stats_cols, mapping))
-        manifest["stats"] = stats
-    version = _commit_dml_manifest(
-        path, manifest, token, branch, expect_bv,
-        rebase=_make_dml_rebase(
-            man, removed=doomed_rels, new_files=new_files,
-            new_values=new_values, new_stats=_new_stats_of(manifest, new_files),
-            mapping=mapping,
-        ),
+    version = _commit_replace(
+        path, man, token, removed=doomed_rels, new_files=new_files,
+        new_values=new_values, branch=branch, expect_bv=expect_bv,
     )
     return {
         "version": version,
         "rows_deleted": rows_deleted,
         "files_rewritten": len(doomed_rels),
-        "files_kept": len(kept),
+        "files_kept": len(man["files"]) - len(doomed_rels),
         "files_probed": len(probe_rels),
         "dv_files_written": 0,
     }
@@ -2715,7 +2666,6 @@ def merge_into_snapshot(
     touched = [
         rel for rel in man["files"] if os.path.basename(rel) in hit
     ]
-    kept = [rel for rel in man["files"] if os.path.basename(rel) not in hit]
     if not touched and not insert:
         return head_id  # nothing matched, nothing to insert: no-op
     if not touched and n_src == 0:
@@ -2793,24 +2743,17 @@ def merge_into_snapshot(
     new_files, new_values = _route_rewrite(
         out, path, man, token, compression, mapping
     )
-    manifest = {"files": kept + new_files, "schema": schema}
-    if mapping:
-        manifest["column_mapping"] = mapping
-    _carry_partition(man, manifest, new_files, new_values)
-    kept_dv = {rel: dv_map[rel] for rel in kept if rel in dv_map}
-    if kept_dv:
-        manifest["dv"] = kept_dv
-    if prev_txn or txn is not None:
-        manifest["txn"] = dict(prev_txn)
-        if txn is not None:
-            manifest["txn"][txn[0]] = txn[1]
-    if "stats" in man:
-        stats_cols = sorted(
-            {c for per_file in man["stats"].values() for c in per_file}
-        )
-        stats = {rel: man["stats"][rel] for rel in kept if rel in man["stats"]}
-        stats.update(_stats_logical(new_files, path, stats_cols, mapping))
-        manifest["stats"] = stats
+    merged_txn = dict(prev_txn)
+    if txn is not None:
+        merged_txn[txn[0]] = txn[1]
+    # the EVOLVED schema commits; the key-range rebase below stays
+    # MERGE's own (an append must be proven key-disjoint)
+    manifest = _replace_files(
+        {**man, "schema": schema, "txn": merged_txn},
+        removed=touched, new_files=new_files, new_values=new_values,
+        new_stats=_new_file_stats(path, man, new_files, mapping),
+        mapping=mapping,
+    )
 
     def _rebase(head: dict) -> dict:
         """Key-range-validated MERGE rebase (r13, r12 verdict #4): a
@@ -3110,47 +3053,17 @@ def update_where_snapshot(
         rel_of_fname = {
             os.path.basename(rel): rel for rel in man["files"]
         }
-        new_dv = dict(dv_map)
-        rows_updated = 0
-        for r in summary:
-            new_dv[rel_of_fname[r["fname"]]] = r["dv_rel"]
-            rows_updated += r["n_new"]
-        manifest = {
-            "files": man["files"] + new_files,
-            "schema": schema,
-            "dv": new_dv,
-        }
-        if mapping:
-            manifest["column_mapping"] = mapping
-        _carry_partition(man, manifest, new_files, new_values)
-        if "txn" in man:
-            manifest["txn"] = man["txn"]
-        if "stats" in man:
-            stats_cols = sorted(
-                {c for per in man["stats"].values() for c in per}
-            )
-            # old files' stats become upper bounds under their DVs —
-            # still conservative-correct for pruning
-            st = dict(man["stats"])
-            st.update(
-                _stats_logical(new_files, path, stats_cols, mapping)
-            )
-            manifest["stats"] = st
-        version = _commit_dml_manifest(
-            path, manifest, token, branch, expect_bv,
-            rebase=_make_dml_rebase(
-                man,
-                dv_set={
-                    rel_of_fname[r["fname"]]: r["dv_rel"] for r in summary
-                },
-                new_files=new_files, new_values=new_values,
-                new_stats=_new_stats_of(manifest, new_files),
-                mapping=mapping,
-            ),
+        # old files' stats become upper bounds under their DVs — still
+        # conservative-correct for pruning
+        version = _commit_replace(
+            path, man, token,
+            dv_set={rel_of_fname[r["fname"]]: r["dv_rel"] for r in summary},
+            new_files=new_files, new_values=new_values,
+            branch=branch, expect_bv=expect_bv,
         )
         return {
             "version": version,
-            "rows_updated": rows_updated,
+            "rows_updated": sum(r["n_new"] for r in summary),
             "files_rewritten": 0,
             "files_kept": len(man["files"]),
             "files_probed": len(probe_rels),
@@ -3167,9 +3080,6 @@ def update_where_snapshot(
     if not touched:
         return no_op
     rows_updated = sum(touched.values())
-    kept = [
-        rel for rel in man["files"] if os.path.basename(rel) not in touched
-    ]
     touched_rels = [
         rel for rel in probe_rels if os.path.basename(rel) in touched
     ]
@@ -3200,36 +3110,15 @@ def update_where_snapshot(
     new_files, new_values = _route_rewrite(
         updated, path, man, token, compression, mapping
     )
-    manifest = {"files": kept + new_files, "schema": schema}
-    if mapping:
-        manifest["column_mapping"] = mapping
-    _carry_partition(man, manifest, new_files, new_values)
-    kept_dv = {rel: dv_map[rel] for rel in kept if rel in dv_map}
-    if kept_dv:
-        manifest["dv"] = kept_dv
-    if "txn" in man:
-        manifest["txn"] = man["txn"]  # idempotence watermarks never regress
-    if "stats" in man:
-        stats_cols = sorted(
-            {c for per_file in man["stats"].values() for c in per_file}
-        )
-        stats = {rel: man["stats"][rel] for rel in kept if rel in man["stats"]}
-        stats.update(_stats_logical(new_files, path, stats_cols, mapping))
-        manifest["stats"] = stats
-    version = _commit_dml_manifest(
-        path, manifest, token, branch, expect_bv,
-        rebase=_make_dml_rebase(
-            man, removed=touched_rels, new_files=new_files,
-            new_values=new_values,
-            new_stats=_new_stats_of(manifest, new_files),
-            mapping=mapping,
-        ),
+    version = _commit_replace(
+        path, man, token, removed=touched_rels, new_files=new_files,
+        new_values=new_values, branch=branch, expect_bv=expect_bv,
     )
     return {
         "version": version,
         "rows_updated": rows_updated,
         "files_rewritten": len(touched_rels),
-        "files_kept": len(kept),
+        "files_kept": len(man["files"]) - len(touched_rels),
         "files_probed": len(probe_rels),
     }
 
@@ -3320,37 +3209,16 @@ def purge_deletion_vectors(
     new_files, new_values = _route_rewrite(
         sdata.select(*scols), path, man, token, compression, mapping
     )
-    kept = [rel for rel in man["files"] if rel not in set(victims)]
-    manifest = {"files": kept + new_files, "schema": man["schema"]}
-    if mapping:
-        manifest["column_mapping"] = mapping
-    _carry_partition(man, manifest, new_files, new_values)
-    kept_dv = {rel: dv_map[rel] for rel in kept if rel in dv_map}
-    if kept_dv:
-        manifest["dv"] = kept_dv
-    if "txn" in man:
-        manifest["txn"] = man["txn"]
-    if "stats" in man:
-        stats_cols = sorted(
-            {c for per_file in man["stats"].values() for c in per_file}
-        )
-        stats = {rel: man["stats"][rel] for rel in kept if rel in man["stats"]}
-        stats.update(_stats_logical(new_files, path, stats_cols, mapping))
-        manifest["stats"] = stats
-    version = _commit_manifest(
-        path, manifest, token,
-        rebase=_make_dml_rebase(
-            man, removed=victims, new_files=new_files,
-            new_values=new_values,
-            new_stats=_new_stats_of(manifest, new_files),
-            mapping=mapping,
-        ),
+    version = _commit_replace(
+        path, man, token, removed=victims, new_files=new_files,
+        new_values=new_values,
     )
     return {
         "version": version,
         "files_purged": len(victims),
-        "files_kept": len(kept),
-        "dvs_kept": len(kept_dv),
+        # every victim is a live, DV-carrying file
+        "files_kept": len(man["files"]) - len(victims),
+        "dvs_kept": len(dv_map) - len(victims),
         "rows_materialized": rows_materialized,
     }
 
@@ -4240,13 +4108,14 @@ def _carry_partition_mor(
         return
     vals = dict(part.get("values") or {})
     nv = new_values or {}
+    new = set(new_files)
     live = list(manifest.get("files") or [])
     for grp in (manifest.get("mor") or {}).get("deltas", []):
         live.extend(grp)
     manifest["partition"] = {
         **{k: part[k] for k in part if k != "values"},
         "values": {
-            rel: (nv.get(rel) if rel in set(new_files) else vals.get(rel))
+            rel: (nv.get(rel) if rel in new else vals.get(rel))
             for rel in live
         },
     }
@@ -6055,11 +5924,11 @@ def vacuum_snapshots(
         # files under _p<i>=... subdirs — a one-level glob saw such a
         # token dir as empty and rmtree'd it with live data inside.
         tmps = glob.glob(os.path.join(d, "**", "*.tmp"), recursive=True)
-        fresh_tmps = [p for p in tmps if not _stale_tmp(p)]
+        fresh_tmps = {p for p in tmps if not _stale_tmp(p)}
         files = (
             glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True)
             + glob.glob(os.path.join(d, "**", "*.dv"), recursive=True)
-            + [p for p in tmps if p not in set(fresh_tmps)]
+            + [p for p in tmps if p not in fresh_tmps]
         )
         live = [p for p in files if os.path.relpath(p, path) in referenced]
         if not live and not fresh_tmps:
@@ -7382,10 +7251,11 @@ def write_snapshot_partitioned(
         manifest["widened"], manifest["dropped"] = {}, []
     if mapping:
         manifest["column_mapping"] = mapping
+    carried_set = set(carried)
     carried_dv = {
         rel: dv
         for rel, dv in (prev.get("dv") or {}).items()
-        if rel in set(carried)
+        if rel in carried_set
     }
     if carried_dv:
         manifest["dv"] = carried_dv
@@ -7705,6 +7575,7 @@ def read_snapshot_partitioned(
         return _manifest_df(
             spark, path, {"files": [], "schema": manifest.get("schema")}
         ).filter(F.lit(False))
+    keep_set = set(keep)
     pruned = {
         "files": keep,
         "schema": manifest.get("schema"),
@@ -7714,7 +7585,7 @@ def read_snapshot_partitioned(
         "dv": {
             rel: dv
             for rel, dv in (manifest.get("dv") or {}).items()
-            if rel in set(keep)
+            if rel in keep_set
         },
     }
     return _manifest_df(spark, path, pruned).filter(_where_expr(where))
@@ -7841,9 +7712,12 @@ def _carry_partition(
     from ``new_values`` (``{rel: [sid, tuple]}`` — the DML rewrite
     routed through the hive writer, r11 verdict #2) or map to None
     (= never pruned) when the rewrite didn't partition-cluster — pruning
-    degrades on that fraction, never lies. Called by the DV / COW
-    delete, UPDATE and MERGE verbs; full-rewrite verbs (optimize,
-    compaction) on unpartitioned tables drop the block instead."""
+    degrades on that fraction, never lies. Called by
+    :func:`_replace_files` (every file-replacing commit: DML, purge,
+    small-file compaction, incremental and partition-scoped optimize)
+    and by the flat appends of :func:`write_snapshot` and
+    :func:`write_snapshot_to_branch`; a full overwrite (e.g.
+    :func:`optimize_snapshot`) writes no block."""
     part = man.get("partition")
     if not part:
         return
@@ -8515,7 +8389,6 @@ def optimize_partitions(
             "files_kept": total,
             "partitions_matched": 0,
         }
-    kept = [rel for rel in man["files"] if rel not in set(matched)]
     dv_map = man.get("dv") or {}
     # DV-aware scan of the matched files: existing deletes materialize
     # with the rewrite (the vector dies with the file it describes)
@@ -8553,49 +8426,16 @@ def optimize_partitions(
         sdata.select(*scols), path, spec, part["current"], dtypes,
         compression, mapping, max_records_per_file=max_records,
     )
-    values = {
-        rel: v
-        for rel, v in (part.get("values") or {}).items()
-        if rel in set(kept)
-    }
-    values.update(new_values)
-    manifest = {
-        "files": kept + new_files,
-        "schema": man["schema"],
-        "partition": {**{k: part[k] for k in part if k != "values"},
-                      "values": values},
-    }
-    if mapping:
-        manifest["column_mapping"] = mapping
-    kept_dv = {rel: dv_map[rel] for rel in kept if rel in dv_map}
-    if kept_dv:
-        manifest["dv"] = kept_dv
-    if "txn" in man:
-        manifest["txn"] = man["txn"]
-    if "stats" in man:
-        stats_cols = sorted(
-            {c for per in man["stats"].values() for c in per}
-        )
-        stats = {
-            rel: man["stats"][rel] for rel in kept if rel in man["stats"]
-        }
-        stats.update(_stats_logical(new_files, path, stats_cols, mapping))
-        manifest["stats"] = stats
     import uuid
 
-    version = _commit_manifest(
-        path, manifest, uuid.uuid4().hex[:12],
-        rebase=_make_dml_rebase(
-            man, removed=matched, new_files=new_files,
-            new_values=new_values,
-            new_stats=_new_stats_of(manifest, new_files),
-            mapping=mapping,
-        ),
+    version = _commit_replace(
+        path, man, uuid.uuid4().hex[:12], removed=matched,
+        new_files=new_files, new_values=new_values,
     )
     return {
         "version": version,
         "files_rewritten": len(matched),
-        "files_kept": len(kept),
+        "files_kept": len(man["files"]) - len(matched),
         "partitions_matched": len(
             {tuple(v[1]) for v in new_values.values()}
         ),

@@ -768,3 +768,149 @@ def test_merge_racing_dv_on_disjoint_kept_file_both_succeed(
         assert len(got) == 30  # 10 + insert + 10 - dv + 10
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
+
+
+def _maintenance_table(spark, path, verb):
+    """A table ``verb`` has work on, plus the verb call and a disjoint
+    appender: returns ``(keys the latest read must hold, run, append)``."""
+    if verb == "optimize_partitions":
+        spec = [("identity", "g")]
+
+        def pdf(keys):
+            return spark.createDataFrame(
+                [Row(k=k, g="a" if k < 10 else "b", v=float(k))
+                 for k in keys],
+                "k bigint, g string, v double",
+            )
+
+        storage.write_snapshot_partitioned(spark, pdf([0, 1, 2]), path, spec)
+        storage.write_snapshot_partitioned(
+            spark, pdf([3, 4]), path, spec, mode="append"
+        )
+        return (
+            [0, 1, 2, 3, 4],
+            lambda: storage.optimize_partitions(
+                spark, path, {"g": ("=", "a")}
+            ),
+            lambda: storage.write_snapshot_partitioned(
+                spark, pdf([100]), path, spec, mode="append"
+            ),
+        )
+    keys = list(range(6))
+    for i in range(0, 6, 2):
+        storage.write_snapshot(
+            spark, _df(spark, [(k, float(k)) for k in (i, i + 1)])
+            .coalesce(1), path, mode="append" if i else "overwrite",
+            stats_cols=["k"],
+        )
+    if verb == "purge_deletion_vectors":
+        storage.delete_where_snapshot(spark, path, "k = 1", mode="dv")
+        keys.remove(1)
+    run = {
+        "compact_small_files_snapshot":
+            lambda: storage.compact_small_files_snapshot(spark, path),
+        "optimize_snapshot_incremental":
+            lambda: storage.optimize_snapshot_incremental(
+                spark, path, ["k"], since_version=1
+            ),
+        "purge_deletion_vectors":
+            lambda: storage.purge_deletion_vectors(spark, path),
+    }[verb]
+    return (
+        keys,
+        run,
+        lambda: storage.write_snapshot(
+            spark, _df(spark, [(100, 100.0)]), path, mode="append",
+            stats_cols=["k"],
+        ),
+    )
+
+
+@pytest.mark.parametrize("verb", [
+    "compact_small_files_snapshot",
+    "optimize_snapshot_incremental",
+    "purge_deletion_vectors",
+    "optimize_partitions",
+])
+def test_maintenance_verb_racing_disjoint_append_both_succeed(
+    spark, monkeypatch, verb
+):
+    """The file-replacing maintenance verbs rebase onto a racing append
+    that touched none of their files: the verb commits at head+2, the
+    appended file stays live, and the verb's new files keep their stats
+    (or real partition tuples)."""
+    scratch, path = _mkpath()
+    try:
+        keys, run, append = _maintenance_table(spark, path, verb)
+        head = storage.snapshot_versions(path)[-1]
+        _RaceOnce(monkeypatch, f"v{head + 1}.json", append)
+        r = run()
+        assert r["version"] == head + 2
+        got = sorted(
+            r["k"] for r in storage.read_snapshot(spark, path).collect()
+        )
+        assert got == keys + [100]
+        man = storage._load_manifest(path, head + 2)
+        base = set(storage._load_manifest(path, head)["files"])
+        appended = set(storage._load_manifest(path, head + 1)["files"]) - base
+        assert appended and appended <= set(man["files"])
+        new = set(man["files"]) - base - appended
+        assert new
+        if verb == "optimize_partitions":
+            vals = man["partition"]["values"]
+            assert all(vals[rel] is not None for rel in new)
+        else:
+            assert all("k" in man["stats"][rel] for rel in new)
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+
+
+def test_mor_base_compaction_racing_delta_refuses(spark, monkeypatch):
+    """Small-file compaction of a MOR table's BASE files carries the
+    delta chain verbatim, so a racing delta group cannot be rebased
+    onto: the compaction refuses, no group is lost, and the retry keeps
+    both groups in the chain."""
+    scratch, path = _mkpath()
+    try:
+        def mdf(rows):
+            return spark.createDataFrame(
+                [Row(k=k, v=v, seq=s) for k, v, s in rows],
+                "k bigint, v double, seq bigint",
+            )
+
+        for i in range(3):
+            storage.write_snapshot(
+                spark, mdf([(i, float(i), 0)]).coalesce(1), path,
+                mode="append" if i else "overwrite",
+            )
+        storage.upsert_delta_snapshot(
+            spark, path, mdf([(1, 11.0, 1)]), key_cols=["k"], seq_col="seq"
+        )
+        head = storage.snapshot_versions(path)[-1]
+
+        def competitor():
+            storage.upsert_delta_snapshot(
+                spark, path, mdf([(5, 5.0, 2)]),
+                key_cols=["k"], seq_col="seq",
+            )
+
+        _RaceOnce(monkeypatch, f"v{head + 1}.json", competitor)
+        with pytest.raises(storage.ConcurrentCommitError, match="MOR"):
+            storage.compact_small_files_snapshot(spark, path)
+        expect = {0: 0.0, 1: 11.0, 2: 2.0, 5: 5.0}
+        got = {
+            r["k"]: r["v"]
+            for r in storage.read_snapshot(spark, path).collect()
+        }
+        assert got == expect
+        r = storage.compact_small_files_snapshot(spark, path)
+        assert r["files_compacted"] == 3
+        man = storage._load_manifest(path, r["version"])
+        assert len(man["mor"]["deltas"]) == 2
+        got = {
+            r["k"]: r["v"]
+            for r in storage.read_snapshot(spark, path).collect()
+        }
+        assert got == expect
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)

@@ -510,3 +510,41 @@ def test_merge_evolution_on_mor_table(spark):
         assert "tag" in storage.read_snapshot(spark, path).columns
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
+
+
+def test_merge_evolution_on_cow_table(spark):
+    """The copy-on-write twin: the MERGE commit records the EVOLVED
+    schema (not the pre-merge one), the rewritten file carries the new
+    column, and untouched files resolve it as typed NULL."""
+    scratch, path = _mkpath()
+    try:
+        ddl = "k bigint, v double"
+        storage.write_snapshot(
+            spark, _kv(spark, [(1, 1.0)], ddl).coalesce(1), path,
+            stats_cols=["k"],
+        )
+        storage.write_snapshot(
+            spark, _kv(spark, [(2, 2.0)], ddl).coalesce(1), path,
+            mode="append", stats_cols=["k"],
+        )
+        src = _kv(
+            spark, [(2, 222.0, "t2"), (5, 5.0, "t5")],
+            "k bigint, v double, tag string",
+        )
+        v = storage.merge_into_snapshot(
+            spark, path, src, ["k"],
+            update_set={"v": "src_v", "tag": "src_tag"},
+            insert=True, schema_evolution=True,
+        )
+        man = storage._load_manifest(path, v)
+        assert "mor" not in man
+        assert man["schema"].get("tag") == "string"
+        got = {
+            r["k"]: (r["v"], r["tag"])
+            for r in storage.read_snapshot(spark, path).collect()
+        }
+        assert got == {
+            1: (1.0, None), 2: (222.0, "t2"), 5: (5.0, "t5")
+        }
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
