@@ -623,3 +623,38 @@ class TestStreamingBranchStaging:
                 )
         finally:
             shutil.rmtree(scratch, ignore_errors=True)
+
+
+def test_racing_branch_appends_refuse_not_renumber(spark, monkeypatch):
+    """Two appends racing for one branch commit number: the loser
+    refuses instead of re-claiming its stale manifest under the next
+    number (which dropped the winner's rows), and its retry keeps
+    both."""
+    from test_concurrency import _RaceOnce
+
+    scratch, path = _mkpath()
+    try:
+        storage.write_snapshot(spark, _df(spark, [(1, "a")]), path)
+        storage.create_branch(path, "audit")
+
+        def append(k, val):
+            return storage.write_snapshot_to_branch(
+                spark, _df(spark, [(k, val)]), path, "audit",
+                mode="append",
+            )
+
+        _RaceOnce(monkeypatch, "b1.json", lambda: append(2, "b"))
+        with pytest.raises(
+            storage.ConcurrentCommitError, match="advanced concurrently"
+        ):
+            append(3, "c")
+        assert storage.branch_versions(path, "audit") == [1]
+        assert _world(spark, storage.read_branch(spark, path, "audit")) == [
+            (1, "a"), (2, "b"),
+        ]
+        assert append(3, "c") == 2
+        assert _world(spark, storage.read_branch(spark, path, "audit")) == [
+            (1, "a"), (2, "b"), (3, "c"),
+        ]
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)

@@ -914,3 +914,166 @@ def test_mor_base_compaction_racing_delta_refuses(spark, monkeypatch):
         assert got == expect
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
+
+
+def _mor_rows(spark, rows):
+    return spark.createDataFrame(
+        [Row(k=k, v=v, seq=s) for k, v, s in rows],
+        "k bigint, v double, seq bigint",
+    )
+
+
+def _mor_world(spark, path):
+    return {
+        r["k"]: r["v"] for r in storage.read_snapshot(spark, path).collect()
+    }
+
+
+def _mor_table(spark, path, upserts):
+    """Base keys 0-2, then one delta group per ``(k, v, seq)`` upsert;
+    returns the head version."""
+    storage.write_snapshot(
+        spark, _mor_rows(spark, [(i, float(i), 0) for i in range(3)]), path
+    )
+    for row in upserts:
+        storage.upsert_delta_snapshot(
+            spark, path, _mor_rows(spark, [row]),
+            key_cols=["k"], seq_col="seq",
+        )
+    return storage.snapshot_versions(path)[-1]
+
+
+def _upsert_key_5(spark, path):
+    return lambda: storage.upsert_delta_snapshot(
+        spark, path, _mor_rows(spark, [(5, 5.0, 9)]),
+        key_cols=["k"], seq_col="seq",
+    )
+
+
+@pytest.mark.parametrize("verb", ["delete", "update"])
+def test_mor_dml_racing_upsert_refuses(spark, monkeypatch, verb):
+    """A MOR DELETE/UPDATE group is derived from the resolved view, so a
+    racing upsert invalidates it: the verb refuses, the competitor's
+    group stays in the chain, and the retry lands on top of it."""
+    scratch, path = _mkpath()
+    try:
+        head = _mor_table(spark, path, [(1, 11.0, 1)])
+
+        def run():
+            if verb == "delete":
+                return storage.delete_where_snapshot(spark, path, "k = 1")
+            return storage.update_where_snapshot(
+                spark, path, {"v": F.lit(0.0)}, "k = 1"
+            )
+
+        _RaceOnce(
+            monkeypatch, f"v{head + 1}.json", _upsert_key_5(spark, path)
+        )
+        with pytest.raises(storage.ConcurrentCommitError):
+            run()
+        assert storage.snapshot_versions(path)[-1] == head + 1
+        want = {0: 0.0, 1: 11.0, 2: 2.0, 5: 5.0}
+        assert _mor_world(spark, path) == want
+        assert run()["version"] == head + 2
+        man = storage._load_manifest(path, head + 2)
+        assert len(man["mor"]["deltas"]) == 3
+        if verb == "delete":
+            del want[1]
+        else:
+            want[1] = 0.0
+        assert _mor_world(spark, path) == want
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+
+
+def test_mor_minor_compaction_racing_upsert_refuses(spark, monkeypatch):
+    """A minor compaction folds the chain it read; a racing upsert's
+    group is not in that fold, so the compaction refuses and the group
+    survives; the retry folds all three groups into one."""
+    scratch, path = _mkpath()
+    try:
+        head = _mor_table(spark, path, [(1, 11.0, 1), (2, 22.0, 2)])
+        _RaceOnce(
+            monkeypatch, f"v{head + 1}.json", _upsert_key_5(spark, path)
+        )
+        with pytest.raises(storage.ConcurrentCommitError):
+            storage.compact_mor(spark, path, minor=True)
+        want = {0: 0.0, 1: 11.0, 2: 22.0, 5: 5.0}
+        man = storage._load_manifest(path, head + 1)
+        assert len(man["mor"]["deltas"]) == 3
+        assert _mor_world(spark, path) == want
+        assert storage.compact_mor(spark, path, minor=True) == head + 2
+        man = storage._load_manifest(path, head + 2)
+        assert len(man["mor"]["deltas"]) == 1
+        assert _mor_world(spark, path) == want
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+
+
+def test_racing_mor_upserts_carry_stats_tuples_and_txn(spark, monkeypatch):
+    """The rebased delta commit on a stats-carrying, partitioned table
+    keeps both racing groups' key stats, their real partition tuples and
+    both writers' txn watermarks."""
+    scratch, path = _mkpath()
+    try:
+        def pdf(rows):
+            return spark.createDataFrame(
+                [Row(k=k, g=g, v=float(k), seq=s) for k, g, s in rows],
+                "k bigint, g string, v double, seq bigint",
+            )
+
+        storage.write_snapshot_partitioned(
+            spark, pdf([(0, "a", 0), (1, "b", 0)]), path,
+            [("identity", "g")], stats_cols=["k"],
+        )
+
+        def upsert(rows, app):
+            return storage.upsert_delta_snapshot(
+                spark, path, pdf(rows), key_cols=["g", "k"],
+                seq_col="seq", txn=(app, 1),
+            )
+
+        _RaceOnce(
+            monkeypatch, "v2.json", lambda: upsert([(2, "b", 1)], "w1")
+        )
+        assert upsert([(3, "a", 1), (4, "c", 1)], "w2") == 3
+        man = storage._load_manifest(path, 3)
+        groups = man["mor"]["deltas"]
+        assert len(groups) == 2 and all(groups)
+        assert groups[0] == storage._load_manifest(path, 2)["mor"]["deltas"][0]
+        vals = man["partition"]["values"]
+        for rel in [rel for grp in groups for rel in grp]:
+            assert "k" in man["stats"][rel]
+            assert vals[rel] is not None
+        assert man["txn"] == {"w1": 1, "w2": 1}
+        got = sorted(
+            r["k"] for r in storage.read_snapshot(spark, path).collect()
+        )
+        assert got == [0, 1, 2, 3, 4]
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+
+
+def test_racing_first_upserts_with_different_merge_modes_refuse(
+    spark, monkeypatch
+):
+    """Two first upserts fix the merge mode independently: a partial
+    delta losing to a latest-wins one refuses instead of landing under
+    the winner's mode, where its "keep" NULLs would overwrite values."""
+    scratch, path = _mkpath()
+    try:
+        storage.write_snapshot(
+            spark, _mor_rows(spark, [(1, 1.0, 0)]), path
+        )
+        _RaceOnce(
+            monkeypatch, "v2.json", _upsert_key_5(spark, path)
+        )
+        with pytest.raises(storage.ConcurrentCommitError, match="mode"):
+            storage.upsert_delta_snapshot(
+                spark, path, _mor_rows(spark, [(1, None, 1)]),
+                key_cols=["k"], seq_col="seq", merge_mode="partial",
+            )
+        assert storage.snapshot_versions(path) == [1, 2]
+        assert _mor_world(spark, path) == {1: 1.0, 5: 5.0}
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)

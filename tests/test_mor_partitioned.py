@@ -383,3 +383,33 @@ def test_stream_mor_upsert_into_partitioned_table(spark):
         )
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
+
+
+def test_empty_mor_commits_leave_no_data_dirs(spark):
+    """Empty upserts, an empty MERGE and a DELETE matching nothing on a
+    partitioned MOR table commit nothing and leave no directory under
+    ``data/`` (the hive writer mints its own directory per write)."""
+    scratch, path = _mkpath()
+    try:
+        _base(spark, path)
+        keys = ["region", "k"]
+        storage.upsert_delta_snapshot(
+            spark, path, _rows(spark, [(1, "r1", 100.0, 1)]), keys, "seq"
+        )
+        data = os.path.join(path, "data")
+        before = sorted(os.listdir(data))
+        head = storage.snapshot_versions(path)[-1]
+        empty = _rows(spark, [])
+        for _ in range(3):
+            assert storage.upsert_delta_snapshot(
+                spark, path, empty, keys, "seq"
+            ) == head
+        assert storage.merge_into_snapshot(
+            spark, path, empty, keys, update_set={"val": "src_val"},
+        ) == head
+        r = storage.delete_where_snapshot(spark, path, "k < 0")
+        assert r["version"] == head and r["delta_files_written"] == 0
+        assert storage.snapshot_versions(path)[-1] == head
+        assert sorted(os.listdir(data)) == before
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
