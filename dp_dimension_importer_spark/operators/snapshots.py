@@ -2334,8 +2334,8 @@ def q95_check_constraint(spark, sf_dir):
     CONSTRAINT shape): named SQL predicates recorded in the manifest,
     validated against EXISTING data at add time (one aggregate; a
     violated add refuses), enforced on every row-writing verb before
-    any file lands, inherited through rewrite commits by
-    ``_commit_manifest``, droppable by a metadata-only commit. The
+    any file lands, carried through rewrite commits by every manifest
+    builder, droppable by a metadata-only commit. The
     fixture drives the full lifecycle on an orders slice: add
     ``price_pos`` (passes), append the next slice (valid), attempt an
     append and an UPDATE that would violate (both REFUSED with the

@@ -797,7 +797,6 @@ def write_snapshot(
     import os
     import uuid
 
-    new_schema = {f.name: f.dataType.simpleString() for f in df.schema}
     versions = snapshot_versions(path)
     prev: dict = {}
     if versions:
@@ -805,17 +804,23 @@ def write_snapshot(
             os.path.join(_manifest_dir(path), f"v{versions[-1]}.json")
         ) as f:
             prev = json.load(f)
-    prev_txn = prev.get("txn") or {}
     if txn is not None:
         app_id, batch_id = txn
-        if batch_id <= prev_txn.get(app_id, -1):
+        if batch_id <= (prev.get("txn") or {}).get(app_id, -1):
             return versions[-1]  # already committed: idempotent skip
-    if prev.get("generated"):
-        df = _apply_generated(
-            df, prev["generated"], prev.get("schema") or {},
-            "write_snapshot",
+    if mode not in ("overwrite", "append"):
+        raise ValueError(f"unknown snapshot write mode {mode!r}")
+    if mode == "append" and prev.get("mor"):
+        # a raw append would outrank nothing and dodge resolution — on a
+        # MOR table new rows go through upsert_delta_snapshot (or
+        # compact_mor first); silently dropping the delta chain here
+        # would be data loss
+        raise ValueError(
+            "append into a MOR table: use upsert_delta_snapshot, or "
+            "compact_mor before appending"
         )
-        new_schema = {f.name: f.dataType.simpleString() for f in df.schema}
+    df = _admit(df, prev, "write_snapshot")
+    new_schema = {f.name: f.dataType.simpleString() for f in df.schema}
     if enforce_schema and prev:
         for col_name, col_type in (prev.get("schema") or {}).items():
             if new_schema.get(col_name) != col_type:
@@ -837,19 +842,6 @@ def write_snapshot(
                 "resurrect stale values; rewrite the table (overwrite) "
                 "before reusing the name"
             )
-    if prev.get("constraints"):
-        _enforce_constraints(df, prev["constraints"], "write_snapshot")
-    if mode not in ("overwrite", "append"):
-        raise ValueError(f"unknown snapshot write mode {mode!r}")
-    if mode == "append" and prev.get("mor"):
-        # a raw append would outrank nothing and dodge resolution — on a
-        # MOR table new rows go through upsert_delta_snapshot (or
-        # compact_mor first); silently dropping the delta chain here
-        # would be data loss
-        raise ValueError(
-            "append into a MOR table: use upsert_delta_snapshot, or "
-            "compact_mor before appending"
-        )
 
     mapping = (
         (prev.get("column_mapping") or {}) if mode == "append" else {}
@@ -868,78 +860,81 @@ def write_snapshot(
         os.path.relpath(p, path)
         for p in glob.glob(os.path.join(data_dir, "*.parquet"))
     )
-    carried = prev.get("files", []) if mode == "append" else []
-    manifest = {"files": carried + new_files, "schema": new_schema}
-    if mode == "overwrite":
-        # a full rewrite sheds narrow/tombstoned file bytes: clear the
-        # markers explicitly (empty overrides _commit_manifest's inherit)
-        manifest["widened"], manifest["dropped"] = {}, []
-    if mode == "append":
-        # ADVICE r11 (medium): a plain append onto a hidden-partitioned
-        # table must carry the partition block (carried files keep their
-        # tuples and keep pruning; this commit's flat files map to None —
-        # degrade, never lie). Dropping it silently zeroed pruning AND
-        # made the next write_snapshot_partitioned append treat the
-        # table as unpartitioned — the branch twin was fixed in r11, the
-        # main path wasn't.
-        _carry_partition(prev, manifest, new_files)
-    if mapping:
-        manifest["column_mapping"] = mapping
-    carried_set = set(carried)
-    carried_dv = {
-        rel: dv
-        for rel, dv in (prev.get("dv") or {}).items()
-        if rel in carried_set
-    }
-    if carried_dv:  # appended-to tables keep their deletion vectors
-        manifest["dv"] = carried_dv
-    if stats_cols is not None or (carried and "stats" in prev):
-        stats = {
-            rel: prev["stats"][rel]
-            for rel in carried
-            if rel in prev.get("stats", {})
-        }
-        if stats_cols is not None:
-            if mapping:
-                # footers speak physical names; the manifest speaks
-                # logical — harvest physical, store logical
-                inv = {p: l for l, p in mapping.items()}
-                harvested = collect_file_stats(
-                    new_files, path, [mapping.get(c, c) for c in stats_cols]
-                )
-                stats.update({
-                    rel: {inv.get(c, c): v for c, v in per.items()}
-                    for rel, per in harvested.items()
-                })
-            else:
-                stats.update(
-                    collect_file_stats(new_files, path, stats_cols)
-                )
-        manifest["stats"] = stats
-    if prev_txn or txn is not None:
-        manifest["txn"] = dict(prev_txn)
+    return _commit_write(
+        path, prev, token, mode == "append", new_schema, new_files,
+        stats_cols, txn,
+    )
+
+
+def _commit_write(
+    path: str,
+    prev: dict,
+    token: str,
+    append: bool,
+    new_schema: dict,
+    new_files: list,
+    stats_cols: list[str] | None = None,
+    txn: tuple | None = None,
+    fresh: dict | None = None,
+    new_values: dict | None = None,
+) -> int:
+    """Commit a write's ``new_files`` on the table head ``prev`` — the
+    commit shared by :func:`write_snapshot` and
+    :func:`write_snapshot_partitioned`. An append adds them to the
+    head's files (carried files keep their tuples, DVs and stats; on a
+    hidden-partitioned table, new files without ``new_values`` tuples
+    map to None — pruning degrades, never lies); an overwrite replaces
+    them under the rewrite's policies. ``fresh`` is a partitioned
+    write's own block (``{"specs", "current", "values"}``): an overwrite
+    writes it with ``new_values``, an append uses it when the head has
+    none. ``stats_cols`` harvests the new files' stats (footers speak
+    the physical names an append wrote); ``txn`` advances the watermark
+    map.
+
+    Racing-writer rebase (r11 verdict #3): the files are already on disk
+    and disjoint from the competing commit's, so the manifest is rebuilt
+    on the new head unless the head turned MOR, committed this ``txn``
+    batch, or moved a policy (:func:`_require_policies`; a racing table
+    creation must have created exactly this commit's table)."""
+    new_stats = None
+    if stats_cols is not None:
+        mapping = (prev.get("column_mapping") or {}) if append else {}
+        new_stats = _stats_logical(new_files, path, stats_cols, mapping)
+
+    def _build(on: dict) -> dict:
+        marks = dict(on.get("txn") or {})
         if txn is not None:
-            manifest["txn"][txn[0]] = txn[1]
+            marks[txn[0]] = txn[1]
+        if append:
+            base = {**on, "schema": new_schema, "txn": marks}
+            if fresh:
+                base["partition"] = on.get("partition") or fresh
+            return _replace_files(
+                base, new_files=new_files, new_values=new_values,
+                new_stats=new_stats,
+            )
+        m = {
+            "files": new_files, "schema": new_schema,
+            **_policies(on, rewrite=True),
+        }
+        if fresh:
+            m["partition"] = {**fresh, "values": new_values}
+        if new_stats is not None:
+            m["stats"] = new_stats
+        if marks:
+            m["txn"] = marks
+        return m
 
     def _rebase(head: dict) -> dict:
-        """Racing-writer rebase (r11 verdict #3): this commit's files are
-        already on disk and disjoint from the competing commit's — rebuild
-        the manifest on the new head unless a CONTRACT moved under us."""
         if head.get("mor"):
             raise ConcurrentCommitError(
-                "concurrent commit made the table MOR — append would "
+                "concurrent commit made the table MOR — a write would "
                 "dodge delta resolution; use upsert_delta_snapshot"
             )
-        if (head.get("constraints") or {}) != (prev.get("constraints") or {}):
-            raise ConcurrentCommitError(
-                "CHECK constraints changed concurrently — this commit's "
-                "rows were not validated against them; re-run the write"
-            )
-        if (head.get("generated") or {}) != (prev.get("generated") or {}):
-            raise ConcurrentCommitError(
-                "generated-column contracts changed concurrently — "
-                "re-run the write"
-            )
+        created = {"schema": new_schema}
+        if fresh:
+            created["partition"] = fresh
+        _require_policies(head, prev or created)
         if txn is not None and txn[1] <= (head.get("txn") or {}).get(
             txn[0], -1
         ):
@@ -947,68 +942,9 @@ def write_snapshot(
                 f"txn batch {txn} already committed by a concurrent "
                 "writer — re-run the verb for the idempotent skip"
             )
-        if enforce_schema:
-            for col_name, col_type in (head.get("schema") or {}).items():
-                if new_schema.get(col_name) != col_type:
-                    raise ConcurrentCommitError(
-                        f"concurrent schema evolution: column {col_name!r}"
-                        f" is now {col_type}, this commit has "
-                        f"{new_schema.get(col_name)!r}"
-                    )
-        head_txn = dict(head.get("txn") or {})
-        if txn is not None:
-            head_txn[txn[0]] = txn[1]
-        if mode == "overwrite":
-            # an overwrite replaces WHATEVER is latest — content stands,
-            # only the watermark map re-merges
-            m2 = dict(manifest)
-            if head_txn:
-                m2["txn"] = head_txn
-            return m2
-        if (head.get("column_mapping") or {}) != mapping:
-            raise ConcurrentCommitError(
-                "column mapping changed concurrently — this commit's "
-                "files carry the old physical schema; re-run the write"
-            )
-        if (
-            sorted(head.get("dropped") or [])
-            != sorted(prev.get("dropped") or [])
-            or (head.get("widened") or {}) != (prev.get("widened") or {})
-        ):
-            # ADVICE r12: the schema loop above iterates HEAD's schema,
-            # so a column concurrently removed by drop_column (absent
-            # from head, tombstoned in head['dropped']) slips through —
-            # the rebased manifest would re-add the column next to the
-            # inherited tombstone and the forced scan would resurrect
-            # stale bytes from old files (the reborn-column hazard the
-            # non-race check refuses). Widening likewise moves the
-            # forced-read type contract under this commit's files.
-            raise ConcurrentCommitError(
-                "columns were dropped/widened concurrently — this "
-                "commit's schema predates the evolution; re-run the "
-                "write against the new head"
-            )
-        m2 = {
-            "files": list(head.get("files") or []) + new_files,
-            "schema": new_schema,
-        }
-        _carry_partition(head, m2, new_files)
-        if mapping:
-            m2["column_mapping"] = mapping
-        if head.get("dv"):
-            m2["dv"] = dict(head["dv"])
-        our_stats = {
-            rel: manifest["stats"][rel]
-            for rel in new_files
-            if rel in manifest.get("stats", {})
-        } if "stats" in manifest else {}
-        if head.get("stats") or our_stats:
-            m2["stats"] = {**(head.get("stats") or {}), **our_stats}
-        if head_txn:
-            m2["txn"] = head_txn
-        return m2
+        return _build(head)
 
-    return _commit_manifest(path, manifest, token, rebase=_rebase)
+    return _commit_manifest(path, _build(prev), token, rebase=_rebase)
 
 
 def _require_key_disjoint(rels, stats, key_cols, src_bounds, what, path):
@@ -1135,7 +1071,10 @@ def _commit_dml_manifest(
 def _commit_manifest(path, manifest, token, rebase=None) -> int:
     """Claim the next version number optimistically and publish
     ``manifest`` under it (hard-link = the atomic commit). Shared by
-    every snapshot-mutating verb — write, merge, optimize, delete.
+    every snapshot-mutating verb — write, merge, optimize, delete. The
+    manifest is published exactly as built: table policies are the
+    builders' business (:func:`_policies`), so main and branch commits
+    declare the same policies by construction.
 
     EEXIST on the hard-link means another writer committed first. The
     pre-r12 behavior — silently retry the SAME manifest under the next
@@ -1205,24 +1144,6 @@ def _commit_manifest(path, manifest, token, rebase=None) -> int:
                 if k not in ("version", "committed_at")
             }
             pending_rebase = False
-        # CHECK constraints ride every commit: a verb that rebuilt the
-        # manifest without thinking about them (optimize, compaction,
-        # restore) INHERITS the previous version's map; only an explicit
-        # "constraints" key (add/drop) replaces it. Rows those verbs
-        # write are rearrangements of already-validated data.
-        if "constraints" not in manifest and prev_man.get("constraints"):
-            manifest = {
-                **manifest, "constraints": prev_man["constraints"]
-            }
-        if "generated" not in manifest and prev_man.get("generated"):
-            manifest = {**manifest, "generated": prev_man["generated"]}
-        # widened/dropped describe FILE reality (narrow/extra bytes still
-        # on disk): rewrite commits that didn't think about them must
-        # keep forcing the read schema; overwrite-shaped verbs clear
-        # them EXPLICITLY (empty overrides inherit)
-        for carry in ("widened", "dropped"):
-            if carry not in manifest and prev_man.get(carry):
-                manifest = {**manifest, carry: prev_man[carry]}
         with open(tmp, "w") as f:
             json.dump(
                 {
@@ -1430,18 +1351,11 @@ def stage_snapshot(
     import os
     import uuid
 
-    gen = list_generated_columns(path)
-    if gen:
-        vs = snapshot_versions(path)
-        df = _apply_generated(
-            df, gen,
-            _load_manifest(path, vs[-1]).get("schema") or {},
-            "stage_snapshot",
-        )
-    cons = list_check_constraints(path)
-    if cons:  # WAP stages are writes: the audit step must never be the
-        # only thing standing between a violating row and publish
-        _enforce_constraints(df, cons, "stage_snapshot")
+    vs = snapshot_versions(path)
+    prev = _load_manifest(path, vs[-1]) if vs else {}
+    # WAP stages are writes: the audit step must never be the only thing
+    # standing between a violating row and publish
+    df = _admit(df, prev, "stage_snapshot")
     token = uuid.uuid4().hex[:12]
     data_dir = os.path.join(path, "data", token)
     (df.write.mode("error").option("compression", compression)
@@ -1456,13 +1370,11 @@ def stage_snapshot(
         # record the maps the stage validated against (empty included) so
         # publish can detect a table that grew constraints/generated
         # contracts INSIDE the stage->audit->publish window and
-        # re-validate instead of inheriting unvalidated maps
-        "constraints": cons,
-        "generated": gen,
-        # a published candidate fully replaces the table's files: the
-        # widened/dropped markers must not inherit onto fresh files
-        "widened": {},
-        "dropped": [],
+        # re-validate; a published candidate fully replaces the table's
+        # files, so it carries the rewrite's policies
+        "constraints": {},
+        "generated": {},
+        **_policies(prev, rewrite=True),
     }
     if stats_cols is not None:
         manifest["stats"] = collect_file_stats(files, path, stats_cols)
@@ -1559,16 +1471,15 @@ def publish_snapshot(
                 )
             ) if manifest["files"] else None
             if audit_df is not None:
-                if drifted_gen:
-                    _apply_generated(
-                        audit_df, drifted_gen, new_schema,
-                        "publish_snapshot (contract added after stage)",
-                    )
-                if drifted_cons:
-                    _enforce_constraints(
-                        audit_df, drifted_cons,
-                        "publish_snapshot (constraint added after stage)",
-                    )
+                _admit(
+                    audit_df,
+                    {
+                        "constraints": drifted_cons,
+                        "generated": drifted_gen,
+                        "schema": new_schema,
+                    },
+                    "publish_snapshot (contract added after stage)",
+                )
         # re-validated (or only drops drifted): publish under the maps
         # the table evolved into
         manifest["constraints"] = latest_cons
@@ -1963,6 +1874,135 @@ def _scan_with_pos(
     return data, cols
 
 
+# ---------------------------------------------------------------------------
+# Table policies: the rules a manifest declares about its rows and files —
+# CHECK constraints and generated columns (every written row must satisfy
+# them), and column mapping, widened and dropped columns (how the files on
+# disk map to the committed schema) — plus the partition spec. Every
+# manifest builder carries them from the manifest it builds on
+# (_policies; partition tuples through _carry_partition /
+# _carry_partition_mor), every optimistic rebase refuses when one moved
+# (_require_policies), and every verb admits the rows it writes against
+# them (_admit). The commit itself (_commit_manifest and the branch claim)
+# knows nothing of policies, so no commit path can skip one.
+# ---------------------------------------------------------------------------
+
+_POLICY_KEYS = (
+    "constraints", "generated", "column_mapping", "widened", "dropped",
+)
+
+
+def _policies(man: dict, rewrite: bool = False) -> dict:
+    """The policy keys a manifest built on ``man`` carries. ``rewrite``:
+    a full rewrite (overwrite, WAP stage) keeps only the row contracts —
+    its fresh files carry logical names at the committed types, so the
+    column mapping is materialized and the widened/dropped markers are
+    recorded as cleared."""
+    pol = {k: man[k] for k in _POLICY_KEYS if man.get(k)}
+    if rewrite:
+        pol.pop("column_mapping", None)
+        pol["widened"], pol["dropped"] = {}, []
+    return pol
+
+
+def _require_policies(head: dict, man: dict, schema: bool = True) -> None:
+    """The rebase check every optimistic commit shares: this commit was
+    derived from ``man`` and lost its claim to ``head``. Its rows were
+    admitted, and its files written, under ``man``'s policies, schema
+    and partition spec, so a competitor that moved any of them makes
+    the commit refuse with :class:`ConcurrentCommitError`. ``schema``
+    False: a delta-group commit merges schemas additively (the verb
+    checks the shared columns' types). Each verb adds its own checks
+    (MOR refusal, txn, key-disjointness, touched files)."""
+    for key in _POLICY_KEYS + (("schema",) if schema else ()):
+        if (head.get(key) or None) != (man.get(key) or None):
+            what = (
+                "dropped/widened columns" if key in ("dropped", "widened")
+                else key
+            )
+            raise ConcurrentCommitError(
+                f"table {what} changed concurrently — this commit was "
+                "derived under the old contract; re-run the verb against "
+                "the new head"
+            )
+    hpart, mpart = head.get("partition") or {}, man.get("partition") or {}
+    if (
+        hpart.get("specs") != mpart.get("specs")
+        or hpart.get("current") != mpart.get("current")
+    ):
+        raise ConcurrentCommitError(
+            "partition spec evolved concurrently — this commit's tuples "
+            "were computed under the old spec; re-run the verb"
+        )
+
+
+def _admit(df: DataFrame, man: dict, verb: str) -> DataFrame:
+    """Admit the rows a verb is about to write under ``man``'s row
+    policies, before any file lands, and return the frame to write.
+    Omitted generated columns are computed (cast to the committed
+    type); supplied generated values (null-safe equality) and every
+    CHECK constraint are checked in ONE aggregate pass. SQL CHECK
+    semantics: a row violates only when the expression is FALSE — NULL
+    passes. A violation raises ValueError naming the contract; a
+    violated constraint pays a second pass for sample rows."""
+    from pyspark.sql import functions as F
+
+    gen = man.get("generated") or {}
+    cons = man.get("constraints") or {}
+    schema = man.get("schema") or {}
+    present = set(df.columns)
+    mismatch = {}
+    for col, expr in sorted(gen.items()):
+        val = F.expr(expr)
+        if schema.get(col):
+            val = val.cast(schema[col])
+        if col in present:
+            mismatch[f"generated column {col!r} ({expr})"] = (
+                ~F.col(col).eqNullSafe(val)
+            )
+        else:
+            df = df.withColumn(col, val)
+    violates = {
+        n: ~F.coalesce(F.expr(cons[n]), F.lit(True)) for n in sorted(cons)
+    }
+    checks = list(mismatch.values()) + list(violates.values())
+    if not checks:
+        return df
+    try:
+        counts = df.agg(*(
+            F.sum(F.when(c, 1).otherwise(0)).alias(f"c{i}")
+            for i, c in enumerate(checks)
+        )).first()
+    except Exception as e:  # noqa: BLE001 — surface WHICH contract broke
+        raise ValueError(
+            f"{verb}: CHECK constraint or generated-column expression "
+            f"failed to evaluate against the written schema {df.columns} "
+            f"(constraints {dict(cons)}, generated {dict(gen)}): {e}"
+        ) from e
+    n_bad = [counts[i] or 0 for i in range(len(checks))]
+    bad_gen = [name for name, n in zip(mismatch, n_bad) if n]
+    if bad_gen:
+        raise ValueError(
+            f"{verb}: supplied values disagree with " + "; ".join(bad_gen)
+            + " — omit the column to have it computed"
+        )
+    bad = {
+        name: n for name, n in zip(violates, n_bad[len(mismatch):]) if n
+    }
+    if bad:
+        worst = min(bad)
+        sample = df.filter(violates[worst]).limit(3).collect()
+        raise ValueError(
+            f"{verb}: CHECK constraint violated — "
+            + "; ".join(
+                f"{n!r} ({cons[n]}): {c} row(s)"
+                for n, c in sorted(bad.items())
+            )
+            + f"; sample for {worst!r}: {[tuple(r) for r in sample]}"
+        )
+    return df
+
+
 def _replace_files(
     man: dict,
     removed=(),
@@ -1970,22 +2010,21 @@ def _replace_files(
     new_files=(),
     new_values: dict | None = None,
     new_stats: dict | None = None,
-    mapping: dict | None = None,
 ) -> dict:
     """The manifest of a FILE-REPLACING commit built on ``man``: its
-    files minus ``removed``, plus ``new_files``. Surviving files keep
-    their deletion vectors (``dv_set`` attaches new ones), partition
-    tuples (:func:`_carry_partition`; ``new_values`` tuples the new
-    files) and stats (``new_stats`` adds the new files'); the txn
-    watermarks and the MOR chain carry over. Shared by the first claim
-    and the rebase of :func:`_commit_replace`, and by MERGE's first
-    claim."""
+    files minus ``removed``, plus ``new_files``, under ``man``'s schema
+    and policies. Surviving files keep their deletion vectors
+    (``dv_set`` attaches new ones), partition tuples
+    (:func:`_carry_partition`; ``new_values`` tuples the new files) and
+    stats (``new_stats`` adds the new files'); the txn watermarks and
+    the MOR chain carry over. Shared by the first claim and the rebase
+    of :func:`_commit_replace`, MERGE's first claim and the appends of
+    :func:`write_snapshot`, :func:`write_snapshot_partitioned` and
+    :func:`write_snapshot_to_branch`."""
     rm = set(removed)
     files = [f for f in man.get("files") or [] if f not in rm]
     files += list(new_files)
-    m2 = {"files": files, "schema": man.get("schema")}
-    if mapping:
-        m2["column_mapping"] = mapping
+    m2 = {"files": files, "schema": man.get("schema"), **_policies(man)}
     dv = {rel: d for rel, d in (man.get("dv") or {}).items() if rel not in rm}
     dv.update(dv_set or {})
     if dv:
@@ -2050,14 +2089,15 @@ def _commit_replace(
     here: its NOT-MATCHED inserts assumed keys absent from the WHOLE
     table, so its rebase must prove a concurrent append key-disjoint
     (the write-skew serializable-vs-snapshot distinction)."""
-    mapping = man.get("column_mapping") or {}
-    new_stats = _new_file_stats(path, man, new_files, mapping, stats_cols)
+    new_stats = _new_file_stats(
+        path, man, new_files, man.get("column_mapping"), stats_cols
+    )
     touched = set(removed) | set(dv_set or {})
     base_dv = man.get("dv") or {}
 
     def _build(on: dict) -> dict:
         return _replace_files(
-            on, removed, dv_set, new_files, new_values, new_stats, mapping
+            on, removed, dv_set, new_files, new_values, new_stats
         )
 
     def _rebase(head: dict) -> dict:
@@ -2067,13 +2107,7 @@ def _commit_replace(
                 if man.get("mor")
                 else "table became MOR concurrently — re-run the verb"
             )
-        for key in ("constraints", "generated", "column_mapping",
-                    "widened", "dropped", "schema"):
-            if (head.get(key) or None) != (man.get(key) or None):
-                raise ConcurrentCommitError(
-                    f"table {key} changed concurrently — this commit "
-                    "was derived under the old contract; re-run"
-                )
+        _require_policies(head, man)
         head_files = set(head.get("files") or [])
         head_dv = head.get("dv") or {}
         for rel in touched:
@@ -2734,13 +2768,10 @@ def merge_into_snapshot(
                 ins = F.lit(None).cast(t)
             val = F.when(s_only, ins).otherwise(val)
         out_cols.append(val.alias(c))
-    out = j.select(*out_cols)
-    if man.get("generated"):
-        out = _apply_generated(
-            out, man["generated"], schema, "merge_into_snapshot"
-        )
-    if man.get("constraints"):
-        _enforce_constraints(out, man["constraints"], "merge_into_snapshot")
+    out = _admit(
+        j.select(*out_cols), {**man, "schema": schema},
+        "merge_into_snapshot",
+    )
     token = uuid.uuid4().hex[:12]
     new_files, new_values = _route_rewrite(
         out, path, man, token, compression, mapping
@@ -2754,7 +2785,6 @@ def merge_into_snapshot(
         {**man, "schema": schema, "txn": merged_txn},
         removed=touched, new_files=new_files, new_values=new_values,
         new_stats=_new_file_stats(path, man, new_files, mapping),
-        mapping=mapping,
     )
 
     def _rebase(head: dict) -> dict:
@@ -2769,22 +2799,7 @@ def merge_into_snapshot(
             raise ConcurrentCommitError(
                 "table became MOR concurrently — re-run the merge"
             )
-        for key in ("constraints", "generated", "column_mapping",
-                    "widened", "dropped", "schema"):
-            if (head.get(key) or None) != (man.get(key) or None):
-                raise ConcurrentCommitError(
-                    f"table {key} changed concurrently — the merge was "
-                    "derived under the old contract; re-run"
-                )
-        hpart = head.get("partition") or {}
-        mpart = man.get("partition") or {}
-        if (
-            hpart.get("specs") != mpart.get("specs")
-            or hpart.get("current") != mpart.get("current")
-        ):
-            raise ConcurrentCommitError(
-                "partition spec evolved concurrently — re-run the merge"
-            )
+        _require_policies(head, man)
         man_files = set(man["files"])
         head_files = list(head.get("files") or [])
         head_set = set(head_files)
@@ -2856,7 +2871,7 @@ def merge_into_snapshot(
         else:
             m2.pop("dv", None)
         if manifest.get("partition"):
-            hvals = hpart.get("values") or {}
+            hvals = (head.get("partition") or {}).get("values") or {}
             vals = dict(manifest["partition"]["values"])
             for rel in added:
                 vals[rel] = hvals.get(rel)
@@ -3039,16 +3054,9 @@ def update_where_snapshot(
                 proj_dv.append(v.cast(schema[c]).alias(c))
             else:
                 proj_dv.append(F.col(c))
-        updated_rows = matched.select(*proj_dv)
-        if man.get("generated"):
-            updated_rows = _apply_generated(
-                updated_rows, man["generated"], schema,
-                "update_where_snapshot",
-            )
-        if man.get("constraints"):
-            _enforce_constraints(
-                updated_rows, man["constraints"], "update_where_snapshot"
-            )
+        updated_rows = _admit(
+            matched.select(*proj_dv), man, "update_where_snapshot"
+        )
         new_files, new_values = _route_rewrite(
             updated_rows, path, man, token + "u", compression, mapping
         )
@@ -3100,15 +3108,7 @@ def update_where_snapshot(
             )
         else:
             proj.append(F.col(c))
-    updated = sdata.select(*proj)
-    if man.get("generated"):
-        updated = _apply_generated(
-            updated, man["generated"], schema, "update_where_snapshot"
-        )
-    if man.get("constraints"):
-        _enforce_constraints(
-            updated, man["constraints"], "update_where_snapshot"
-        )
+    updated = _admit(sdata.select(*proj), man, "update_where_snapshot")
     new_files, new_values = _route_rewrite(
         updated, path, man, token, compression, mapping
     )
@@ -3314,14 +3314,10 @@ def upsert_delta_snapshot(
     # committed (wide) type, so narrow old files and wide new deltas
     # coexist without forced schemas.
     mapping = dict(man.get("column_mapping") or {})
-    if man.get("generated"):
-        changes = _apply_generated(
-            changes, man["generated"], man.get("schema") or {},
-            "upsert_delta_snapshot",
-        )
     prev_txn = man.get("txn") or {}
     if txn is not None and txn[1] <= prev_txn.get(txn[0], -1):
         return head_id  # redelivered batch: idempotent skip
+    changes = _admit(changes, man, "upsert_delta_snapshot")
     new_schema = {f.name: f.dataType.simpleString() for f in changes.schema}
     _check_reserved(new_schema, ("_ci", "_rn", MOR_OP_COL))
     old_schema = man["schema"]
@@ -3417,10 +3413,6 @@ def upsert_delta_snapshot(
             f"delta columns {reborn} reuse DROPPED column names whose "
             "bytes still live in old files — rewrite the table "
             "(compact_mor) before reusing the name"
-        )
-    if man.get("constraints"):
-        _enforce_constraints(
-            changes, man["constraints"], "upsert_delta_snapshot"
         )
     token = uuid.uuid4().hex[:12]
     part = man.get("partition")
@@ -3733,17 +3725,8 @@ def compact_mor(spark: SparkSession, path: str,
         # keep_tombstones: a winning op='D' row must SURVIVE the fold —
         # it still masks base rows the minor compaction never reads
         # (dropping it would resurrect the deleted key).
-        mapping = man.get("column_mapping") or {}
         folded = _resolve_mor(
-            spark, path,
-            {
-                "files": deltas[0],
-                "schema": man["schema"],
-                "mor": {**man["mor"], "deltas": deltas[1:]},
-                **(
-                    {"column_mapping": mapping} if mapping else {}
-                ),
-            },
+            spark, path, _chain_manifest(man, deltas[0], deltas[1:]),
             keep_tombstones=bool(man["mor"].get("op_col")),
         )
         token = uuid.uuid4().hex[:12]
@@ -3755,7 +3738,7 @@ def compact_mor(spark: SparkSession, path: str,
         manifest = _chain_manifest(
             man, man["files"],  # base untouched, byte for byte
             [new_files] if new_files else [], new_files, new_values,
-            _new_file_stats(path, man, new_files, mapping),
+            _new_file_stats(path, man, new_files, man.get("column_mapping")),
         )
         return _commit_manifest(path, manifest, token)
     stats_cols = None
@@ -3811,17 +3794,8 @@ def _mor_tuple_pruned_manifest(
         _partition_keep(part, grp, partition_where, spark)
         for grp in mor["deltas"]
     ]
-    pruned = {
-        "files": keep_base,
-        "schema": man["schema"],
-        "mor": {**mor, "deltas": keep_groups},
-    }
-    for carry in ("column_mapping", "widened", "dropped", "stats",
-                  "partition"):
-        if man.get(carry):
-            pruned[carry] = man[carry]
     n_keep = len(keep_base) + sum(len(g) for g in keep_groups)
-    return pruned, n_keep, len(all_rels)
+    return _chain_manifest(man, keep_base, keep_groups), n_keep, len(all_rels)
 
 
 def _mor_pruned_manifest(man: dict, bounds: dict):
@@ -3849,22 +3823,10 @@ def _mor_pruned_manifest(man: dict, bounds: dict):
             if (s_ := stats.get(rel, {}).get(kc)) is None
             or not (s_[1] < elo or s_[0] > ehi)
         }
-    pruned = {
-        "files": [rel for rel in man["files"] if rel in keep],
-        "schema": man["schema"],
-        "mor": {
-            **mor,
-            "deltas": [
-                [rel for rel in grp if rel in keep]
-                for grp in mor["deltas"]
-            ],
-        },
-    }
-    # hand-built sub-manifests must copy the read-contract keys (the
-    # r12 rule): mapping translates, widened/dropped force projection
-    for carry in ("column_mapping", "widened", "dropped"):
-        if man.get(carry):
-            pruned[carry] = man[carry]
+    pruned = _chain_manifest(
+        man, [rel for rel in man["files"] if rel in keep],
+        [[rel for rel in grp if rel in keep] for grp in mor["deltas"]],
+    )
     return pruned, len(keep), len(all_rels)
 
 
@@ -3897,7 +3859,7 @@ def _write_delta_group(
 
 def _write_delta_group_routed(
     df_logical: DataFrame, path: str, man: dict, token: str,
-    compression: str,
+    compression: str, max_records_per_file: int | None = None,
 ) -> tuple[list, dict | None]:
     """Land one MOR delta group and return ``(relpaths, {rel: [sid,
     tuple]} | None)`` — the delta-chain twin of :func:`_route_rewrite`
@@ -3912,7 +3874,9 @@ def _write_delta_group_routed(
     or tombstone — transforms to a real tuple. Defensive fallback: a
     spec column absent from the frame (a legacy non-key spec) degrades
     to the plain untupled write — pruning degrades, never lies. A group
-    with no surviving file leaves no directory behind."""
+    with no surviving file leaves no directory behind.
+    ``max_records_per_file`` caps the hive writer's files (the
+    partition-scoped chain fold's target size)."""
     import os
 
     import pyarrow.parquet as _pq
@@ -3929,7 +3893,7 @@ def _write_delta_group_routed(
             }
             files, values = _write_partitioned_files(
                 df_logical, path, spec, part["current"], dtypes,
-                compression, mapping or None,
+                compression, mapping or None, max_records_per_file,
             )
             keep = [
                 r for r in files
@@ -3980,21 +3944,21 @@ def _chain_manifest(
     txn: tuple | None = None,
 ) -> dict:
     """The manifest of a MOR CHAIN commit built on ``man``: base
-    ``files`` and delta chain ``deltas``, under ``man``'s schema, column
-    mapping and ``mor`` block. Partition tuples carry through
+    ``files`` and delta chain ``deltas``, under ``man``'s schema,
+    policies and ``mor`` block. Partition tuples carry through
     :func:`_carry_partition_mor` (``new_values`` tuples ``new_files``),
     stats survive for live files only (``new_stats`` adds the new
     files'), and the txn watermarks carry over with ``txn`` advanced.
-    Shared by the first claim and the rebase of :func:`_commit_group`
-    and by the chain folds (minor :func:`compact_mor`,
-    :func:`_optimize_partitions_mor`)."""
+    Shared by the first claim and the rebase of :func:`_commit_group`,
+    by the chain folds (minor :func:`compact_mor`,
+    :func:`_optimize_partitions_mor`), and by every read of a pruned or
+    re-ranked chain (the sub-manifest a resolve reads)."""
     m2 = {
         "files": list(files),
         "schema": man["schema"],
         "mor": {**man["mor"], "deltas": list(deltas)},
+        **_policies(man),
     }
-    if man.get("column_mapping"):
-        m2["column_mapping"] = man["column_mapping"]
     _carry_partition_mor(man, m2, new_files, new_values)
     marks = dict(man.get("txn") or {})
     if txn is not None:
@@ -4015,9 +3979,9 @@ def _require_chain_head(head: dict, man: dict, txn: tuple | None) -> None:
     """The rebase check every racing delta-group commit shares: one
     more group appends disjointly onto ``head`` only if the competitor
     kept the MOR block, its key/seq columns, its merge mode and the
-    base files of ``man``, moved no table contract (column mapping, CHECK
-    constraints, generated columns, dropped/widened columns, partition
-    spec) and did not already commit this ``txn`` batch. Raises
+    base files of ``man``, moved no table policy or partition spec
+    (:func:`_require_policies`; schemas merge additively) and did not
+    already commit this ``txn`` batch. Raises
     :class:`ConcurrentCommitError` otherwise."""
     hmor, mor = head.get("mor"), man["mor"]
     if not hmor:
@@ -4040,38 +4004,13 @@ def _require_chain_head(head: dict, man: dict, txn: tuple | None) -> None:
             "base files changed concurrently (compaction/DML) — "
             "re-run the verb against the new head"
         )
-    for key in ("column_mapping", "constraints", "generated"):
-        if (head.get(key) or None) != (man.get(key) or None):
-            raise ConcurrentCommitError(
-                f"table {key} changed concurrently — this group was "
-                "derived under the old contract; re-run"
-            )
-    if (
-        sorted(head.get("dropped") or [])
-        != sorted(man.get("dropped") or [])
-        or (head.get("widened") or {}) != (man.get("widened") or {})
-    ):
-        # a column concurrently dropped/widened: a group written under
-        # the old contract would resurrect/narrow it
-        raise ConcurrentCommitError(
-            "columns were dropped/widened concurrently — this group "
-            "predates the evolution; re-run the verb"
-        )
+    _require_policies(head, man, schema=False)
     if txn is not None and txn[1] <= (head.get("txn") or {}).get(
         txn[0], -1
     ):
         raise ConcurrentCommitError(
             f"txn batch {txn} already committed by a concurrent "
             "writer — re-run the verb for the idempotent skip"
-        )
-    hpart, mpart = head.get("partition") or {}, man.get("partition") or {}
-    if (
-        hpart.get("specs") != mpart.get("specs")
-        or hpart.get("current") != mpart.get("current")
-    ):
-        raise ConcurrentCommitError(
-            "partition spec evolved concurrently — this group's "
-            "tuples were computed under the old spec; re-run"
         )
 
 
@@ -4315,15 +4254,7 @@ def _update_where_mor(
             proj.append(v.cast(t).alias(c))
         else:
             proj.append(F.col(c))
-    images = matched.select(*proj)
-    if man.get("generated"):
-        images = _apply_generated(
-            images, man["generated"], schema, "update_where_snapshot"
-        )
-    if man.get("constraints"):
-        _enforce_constraints(
-            images, man["constraints"], "update_where_snapshot"
-        )
+    images = _admit(matched.select(*proj), man, "update_where_snapshot")
     token = uuid.uuid4().hex[:12]
     new_files, new_values = _write_delta_group_routed(
         images, path, man, token, compression
@@ -4543,16 +4474,11 @@ def _merge_into_mor(
         .alias(MOR_OP_COL),
     )
     if man.get("generated") or man.get("constraints"):
-        live = out.filter(F.col(MOR_OP_COL).isNull())
-        if man.get("generated"):
-            live = _apply_generated(
-                live.drop(MOR_OP_COL), man["generated"], schema,
-                "merge_into_snapshot",
-            ).withColumn(MOR_OP_COL, F.lit(None).cast("string"))
-        if man.get("constraints"):
-            _enforce_constraints(
-                live, man["constraints"], "merge_into_snapshot"
-            )
+        # only images are admitted: tombstones carry keys + seq only
+        live = _admit(
+            out.filter(F.col(MOR_OP_COL).isNull()).drop(MOR_OP_COL),
+            {**man, "schema": schema}, "merge_into_snapshot",
+        ).withColumn(MOR_OP_COL, F.lit(None).cast("string"))
         out = live.unionByName(
             out.filter(F.col(MOR_OP_COL) == MOR_DELETE_OP)
         )
@@ -5186,16 +5112,15 @@ def restore_snapshot(path: str, version: int) -> int:
     with open(os.path.join(_manifest_dir(path), f"v{version}.json")) as f:
         man = json.load(f)
     man.pop("version", None)
-    # ADVICE r11 (low): pass the restored manifest's OWN constraint /
-    # generated maps explicitly (empty included) — _commit_manifest's
-    # inherit-when-absent would otherwise attach the NEWEST maps to data
-    # that was never validated against them (restoring a pre-constraint
-    # version must restore the pre-constraint contract too; the
-    # constraint can be re-added, which re-validates).
+    # ADVICE r11 (low): the restored version's OWN policies stand, never
+    # the newest version's — its rows were never validated against newer
+    # constraint/generated maps (restoring a pre-constraint version
+    # restores the pre-constraint contract; re-adding the constraint
+    # re-validates), and its widened/dropped markers describe its own
+    # files. The maps are recorded explicitly (empty included), so the
+    # restore visibly clears what the newest version declared.
     man["constraints"] = man.get("constraints") or {}
     man["generated"] = man.get("generated") or {}
-    # same for the schema-evolution markers: the restored version's own
-    # reality (its files/schema pairing), never the newest version's
     man["widened"] = man.get("widened") or {}
     man["dropped"] = man.get("dropped") or []
     with open(os.path.join(_manifest_dir(path), f"v{versions[-1]}.json")) as f:
@@ -5549,6 +5474,8 @@ def write_snapshot_to_branch(
     import uuid
 
     prev, _, bv = _dml_head(path, name)  # also validates the branch
+    if mode not in ("overwrite", "append"):
+        raise ValueError(f"unknown branch write mode {mode!r}")
     if (prev.get("mor") or prev.get("dv")) and mode == "append":
         # r13: an OVERWRITE branch commit replaces the fork point's
         # content wholesale, so a MOR/DV fork is fine (same rule as
@@ -5558,6 +5485,10 @@ def write_snapshot_to_branch(
             "branch append onto a MOR/DV fork point would dodge delta "
             "resolution: compact/purge on main first, or overwrite"
         )
+    # a branch write that dodged admission would land on main via
+    # fast_forward's metadata-only publish: admit against the branch
+    # head's policies, which every branch commit carries
+    df = _admit(df, prev, "write_snapshot_to_branch")
     new_schema = {f.name: f.dataType.simpleString() for f in df.schema}
     if enforce_schema:
         for col_name, col_type in (prev.get("schema") or {}).items():
@@ -5567,21 +5498,6 @@ def write_snapshot_to_branch(
                     f"{col_name!r} was {col_type}, new commit has "
                     f"{new_schema.get(col_name)!r}"
                 )
-    if mode not in ("overwrite", "append"):
-        raise ValueError(f"unknown branch write mode {mode!r}")
-    if prev.get("generated"):
-        df = _apply_generated(
-            df, prev["generated"], prev.get("schema") or {},
-            "write_snapshot_to_branch",
-        )
-        new_schema = {f.name: f.dataType.simpleString() for f in df.schema}
-    if prev.get("constraints"):
-        # a branch write that dodged CHECK enforcement would land on main
-        # via fast_forward's metadata-only publish — enforce here, and
-        # carry the map so the published manifest still declares it
-        _enforce_constraints(
-            df, prev["constraints"], "write_snapshot_to_branch"
-        )
     mapping = (
         (prev.get("column_mapping") or {}) if mode == "append" else {}
     )
@@ -5597,30 +5513,17 @@ def write_snapshot_to_branch(
         os.path.relpath(p, path)
         for p in glob.glob(os.path.join(data_dir, "*.parquet"))
     )
-    carried = prev.get("files", []) if mode == "append" else []
-    manifest = {"files": carried + new_files, "schema": new_schema}
-    if mode == "overwrite":
-        # fresh files shed narrow/tombstoned bytes — clear the markers
-        # explicitly so fast_forward's publish cannot inherit main's
-        # (the write_snapshot overwrite discipline)
-        manifest["widened"], manifest["dropped"] = {}, []
     if mode == "append":
         # pruning survives the branch detour: carried files keep their
         # tuples, this commit's flat files map to None (never pruned)
-        _carry_partition(prev, manifest, new_files)
-    if mapping:
-        manifest["column_mapping"] = mapping
-    if prev.get("constraints"):
-        manifest["constraints"] = prev["constraints"]
-    if prev.get("generated"):
-        manifest["generated"] = prev["generated"]
-    if mode == "append":
-        # appended-to branches keep forcing the read schema over the
-        # carried narrow/tombstoned files (branch commits bypass
-        # _commit_manifest's inherit, so carry explicitly here)
-        for carry in ("widened", "dropped"):
-            if prev.get(carry):
-                manifest[carry] = prev[carry]
+        manifest = _replace_files(
+            {**prev, "schema": new_schema}, new_files=new_files
+        )
+    else:
+        manifest = {
+            "files": new_files, "schema": new_schema,
+            **_policies(prev, rewrite=True),
+        }
     return _commit_branch_manifest(path, name, manifest, token, bv)
 
 
@@ -5629,9 +5532,13 @@ def fast_forward(path: str, name: str, drop: bool = True) -> int:
     (the restore_snapshot shape: re-commit a manifest, zero data
     movement). REFUSES if main moved past the branch's fork point
     (Iceberg fast-forward semantics: a diverged main needs an explicit
-    rebase, and silently overwriting its commits would be data loss).
-    Main's txn watermark map carries forward (never regresses). Drops
-    the branch afterwards by default. Returns main's new version."""
+    rebase, and silently overwriting its commits would be data loss),
+    and if the branch head's row contracts (CHECK constraints, generated
+    columns) differ from main's: no branch verb changes them, so a
+    mismatch is a branch written without them, whose publish would strip
+    main's contract from rows never admitted under it. Main's txn
+    watermark map carries forward (never regresses). Drops the branch
+    afterwards by default. Returns main's new version."""
     import json
     import os
     import uuid
@@ -5651,12 +5558,22 @@ def fast_forward(path: str, name: str, drop: bool = True) -> int:
             drop_branch(path, name)
         return head  # nothing to publish: ff of an empty branch is a no-op
     manifest = dict(_branch_head_manifest(path, name))
+    main = _load_manifest(path, head)
+    ours, theirs = (
+        _policies(m, rewrite=True) for m in (manifest, main)
+    )
+    if ours != theirs:
+        raise ValueError(
+            f"fast_forward refused: branch {name!r} head declares {ours} "
+            f"but main declares {theirs} — the branch was written without "
+            "main's table policies; re-fork and re-apply its writes"
+        )
     # watermarks never regress — and a branch that STAGED idempotent
     # CDC commits (r14: upsert_delta_snapshot/DML with txn= on a
     # branch) carries its own watermarks, which must survive the
     # publish or a redelivered batch would re-land on main. Per-app
     # max of both maps.
-    merged_txn = dict(_load_manifest(path, head).get("txn") or {})
+    merged_txn = dict(main.get("txn") or {})
     for app, batch in (manifest.get("txn") or {}).items():
         merged_txn[app] = max(batch, merged_txn.get(app, batch))
     if merged_txn:
@@ -5970,16 +5887,9 @@ def read_snapshot_pruned(
         keep_groups = [_survivors(grp) for grp in mor["deltas"]]
         if not keep_base and not any(keep_groups):
             return read_snapshot(spark, path, version).filter(F.lit(False))
-        pruned = {
-            "files": keep_base,
-            "schema": manifest["schema"],
-            # empty groups stay in place: _resolve_mor keeps commit rank
-            # aligned by position
-            "mor": {**mor, "deltas": keep_groups},
-        }
-        for carry in ("column_mapping", "widened", "dropped"):
-            if manifest.get(carry):
-                pruned[carry] = manifest[carry]
+        # empty groups stay in place: _resolve_mor keeps commit rank
+        # aligned by position
+        pruned = _chain_manifest(manifest, keep_base, keep_groups)
         return _resolve_mor(spark, path, pruned).filter(
             F.col(col).between(F.lit(lo), F.lit(hi))
         )
@@ -6606,20 +6516,10 @@ def _mor_bloom_point_pruned(
     total). Empty groups stay positionally (commit rank alignment)."""
     rels = _bloom_live_rels(man, col)
     keep = set(_bloom_point_keep(spark, path, man, col, values, rels))
-    pruned = {
-        "files": [rel for rel in man["files"] if rel in keep],
-        "schema": man["schema"],
-        "mor": {
-            **man["mor"],
-            "deltas": [
-                [rel for rel in grp if rel in keep]
-                for grp in man["mor"]["deltas"]
-            ],
-        },
-    }
-    for carry in ("column_mapping", "widened", "dropped"):
-        if man.get(carry):
-            pruned[carry] = man[carry]
+    pruned = _chain_manifest(
+        man, [rel for rel in man["files"] if rel in keep],
+        [[rel for rel in grp if rel in keep] for grp in man["mor"]["deltas"]],
+    )
     return pruned, len(keep), len(rels)
 
 
@@ -6667,6 +6567,7 @@ def read_snapshot_point(
     pruned = {
         "files": [rel for rel in man["files"] if rel in keep],
         "schema": man["schema"],
+        **_policies(man),
     }
     if man.get("mor"):
         pruned["mor"] = {
@@ -6680,9 +6581,6 @@ def read_snapshot_point(
         pruned["dv"] = {
             rel: dv for rel, dv in man["dv"].items() if rel in keep
         }
-    for carry in ("column_mapping", "widened", "dropped"):
-        if man.get(carry):
-            pruned[carry] = man[carry]
     if not pruned["files"] and not any(
         (pruned.get("mor") or {}).get("deltas") or []
     ):
@@ -7021,38 +6919,20 @@ def write_snapshot_partitioned(
     silently mixing layouts would poison pruning) and carries the prior
     files' tuples forward untouched. ``txn`` has write_snapshot's
     idempotent-skip semantics."""
-    import glob
-    import json
-    import os
-    import urllib.parse
     import uuid
 
     spec = _normalize_spec(spec)
-    dtypes = {f.name: f.dataType.simpleString() for f in df.schema}
     for t in spec:
-        if t["col"] not in dtypes:
+        if t["col"] not in df.columns:
             raise ValueError(f"partition column {t['col']!r} not in frame")
-    new_schema = dict(dtypes)
     versions = snapshot_versions(path)
     prev: dict = {}
     if versions:
         prev = _load_manifest(path, versions[-1])
-    prev_txn = prev.get("txn") or {}
-    if txn is not None and txn[1] <= prev_txn.get(txn[0], -1):
+    if txn is not None and txn[1] <= (prev.get("txn") or {}).get(txn[0], -1):
         return versions[-1]
     if mode not in ("overwrite", "append"):
         raise ValueError(f"unknown snapshot write mode {mode!r}")
-    if prev.get("generated"):
-        df = _apply_generated(
-            df, prev["generated"], prev.get("schema") or {},
-            "write_snapshot_partitioned",
-        )
-        dtypes = {f.name: f.dataType.simpleString() for f in df.schema}
-        new_schema = dict(dtypes)
-    if prev.get("constraints"):
-        _enforce_constraints(
-            df, prev["constraints"], "write_snapshot_partitioned"
-        )
     if prev.get("mor") and mode == "append":
         # r13: an OVERWRITE replaces the MOR table's content wholesale
         # (the write_snapshot-on-MOR rule — the fresh manifest carries
@@ -7062,29 +6942,22 @@ def write_snapshot_partitioned(
             "partitioned append into a MOR table: use "
             "upsert_delta_snapshot, or compact_mor before appending"
         )
-    specs, cur = [spec], 0
-    # append keeps a mapped table's ONE physical schema (write with
-    # physical names, manifest speaks logical); overwrite materializes
-    mapping = (
-        (prev.get("column_mapping") or {})
-        if (mode == "append" and prev) else {}
-    )
-    if mode == "append" and prev:
-        prev_part = prev.get("partition") or {}
-        prev_specs = prev_part.get("specs")
-        if prev_specs is not None:
-            cur = prev_part["current"]
-            if prev_specs[cur] != spec:
-                raise ValueError(
-                    f"append spec {spec} != current committed spec "
-                    f"{prev_specs[cur]} — evolve_partition_spec first "
-                    "(old files keep their old tuples)"
-                )
-            specs = prev_specs
-        elif prev.get("files"):
-            # appending a partitioned layout onto an unpartitioned table:
-            # the existing files simply have no tuples (never pruned)
-            pass
+    df = _admit(df, prev, "write_snapshot_partitioned")
+    dtypes = {f.name: f.dataType.simpleString() for f in df.schema}
+    new_schema = dict(dtypes)
+    append = mode == "append"
+    # the block this commit writes under: an append keeps the table's
+    # (appending a layout onto an unpartitioned table leaves the existing
+    # files without tuples — never pruned); an overwrite starts afresh
+    fresh = {"specs": [spec], "current": 0, "values": {}}
+    part = (prev.get("partition") or fresh) if append else fresh
+    if append:
+        if part["specs"][part["current"]] != spec:
+            raise ValueError(
+                f"append spec {spec} != current committed spec "
+                f"{part['specs'][part['current']]} — evolve_partition_spec "
+                "first (old files keep their old tuples)"
+            )
         for col_name, col_type in (prev.get("schema") or {}).items():
             if new_schema.get(col_name) != col_type:
                 raise ValueError(
@@ -7092,163 +6965,25 @@ def write_snapshot_partitioned(
                     f"{col_name!r} was {col_type}, new commit has "
                     f"{new_schema.get(col_name)!r}"
                 )
-        if prev.get("dropped"):
-            reborn = sorted(
-                c for c in new_schema
-                if c not in (prev.get("schema") or {})
-                and c in prev["dropped"]
+        reborn = sorted(
+            c for c in new_schema
+            if c not in (prev.get("schema") or {})
+            and c in (prev.get("dropped") or [])
+        )
+        if reborn:
+            raise ValueError(
+                f"columns {reborn} reuse DROPPED column names still "
+                "present in old files — rewrite before reusing"
             )
-            if reborn:
-                raise ValueError(
-                    f"columns {reborn} reuse DROPPED column names still "
-                    "present in old files — rewrite before reusing"
-                )
-
+    # append keeps a mapped table's ONE physical schema (write with
+    # physical names, manifest speaks logical); overwrite materializes
+    mapping = (prev.get("column_mapping") or {}) if append else {}
     new_files, values = _write_partitioned_files(
-        df, path, spec, cur, dtypes, compression, mapping
+        df, path, spec, part["current"], dtypes, compression, mapping
     )
-
-    carried = prev.get("files", []) if (mode == "append" and prev) else []
-    if carried:
-        prev_vals = (prev.get("partition") or {}).get("values") or {}
-        for rel in carried:
-            values[rel] = prev_vals.get(rel)
-    manifest = {
-        "files": carried + new_files,
-        "schema": new_schema,
-        "partition": {"specs": specs, "current": cur, "values": values},
-    }
-    if mode == "overwrite":
-        # fresh files: shed the widened/dropped markers explicitly
-        manifest["widened"], manifest["dropped"] = {}, []
-    if mapping:
-        manifest["column_mapping"] = mapping
-    carried_set = set(carried)
-    carried_dv = {
-        rel: dv
-        for rel, dv in (prev.get("dv") or {}).items()
-        if rel in carried_set
-    }
-    if carried_dv:
-        manifest["dv"] = carried_dv
-    if stats_cols is not None or (carried and "stats" in prev):
-        stats = {
-            rel: prev["stats"][rel]
-            for rel in carried
-            if rel in prev.get("stats", {})
-        }
-        if stats_cols is not None:
-            stats.update(
-                _stats_logical(new_files, path, stats_cols, mapping)
-            )
-        manifest["stats"] = stats
-    if prev_txn or txn is not None:
-        manifest["txn"] = dict(prev_txn)
-        if txn is not None:
-            manifest["txn"][txn[0]] = txn[1]
-
-    def _rebase(head: dict) -> dict:
-        """Racing-writer rebase, partitioned flavor: additionally refuses
-        a concurrent partition-spec evolution (this commit's tuples were
-        computed under the old current spec)."""
-        if head.get("mor"):
-            raise ConcurrentCommitError(
-                "concurrent commit made the table MOR — partitioned "
-                "write refuses"
-            )
-        if (head.get("column_mapping") or {}) != mapping:
-            raise ConcurrentCommitError(
-                "column mapping changed concurrently — this commit's "
-                "files carry the old physical schema; re-run the write"
-            )
-        if (head.get("constraints") or {}) != (prev.get("constraints") or {}):
-            raise ConcurrentCommitError(
-                "CHECK constraints changed concurrently — re-run the write"
-            )
-        if (head.get("generated") or {}) != (prev.get("generated") or {}):
-            raise ConcurrentCommitError(
-                "generated-column contracts changed concurrently — "
-                "re-run the write"
-            )
-        if txn is not None and txn[1] <= (head.get("txn") or {}).get(
-            txn[0], -1
-        ):
-            raise ConcurrentCommitError(
-                f"txn batch {txn} already committed by a concurrent "
-                "writer — re-run the verb for the idempotent skip"
-            )
-        for col_name, col_type in (head.get("schema") or {}).items():
-            if new_schema.get(col_name) != col_type:
-                raise ConcurrentCommitError(
-                    f"concurrent schema evolution: column {col_name!r} "
-                    f"is now {col_type}, this commit has "
-                    f"{new_schema.get(col_name)!r}"
-                )
-        if (
-            sorted(head.get("dropped") or [])
-            != sorted(prev.get("dropped") or [])
-            or (head.get("widened") or {}) != (prev.get("widened") or {})
-        ):
-            # ADVICE r12 (same asymmetry as write_snapshot's rebase): a
-            # concurrent drop_column leaves the column absent from head's
-            # schema but present in ours — rebasing would re-add it next
-            # to the inherited tombstone and resurrect stale bytes.
-            raise ConcurrentCommitError(
-                "columns were dropped/widened concurrently — this "
-                "commit's schema predates the evolution; re-run the "
-                "write against the new head"
-            )
-        head_txn = dict(head.get("txn") or {})
-        if txn is not None:
-            head_txn[txn[0]] = txn[1]
-        if mode == "overwrite":
-            m2 = dict(manifest)
-            if head_txn:
-                m2["txn"] = head_txn
-            return m2
-        head_part = head.get("partition") or {}
-        head_specs = head_part.get("specs")
-        r_specs, r_cur = [spec], 0
-        if head_specs is not None:
-            r_cur = head_part["current"]
-            if head_specs[r_cur] != spec:
-                raise ConcurrentCommitError(
-                    "partition spec evolved concurrently — this commit's "
-                    "tuples were computed under the old spec; re-run"
-                )
-            r_specs = head_specs
-        r_values = dict(head_part.get("values") or {})
-        for rel in head.get("files") or []:
-            r_values.setdefault(rel, None)
-        for rel in new_files:
-            r_values[rel] = [r_cur, values[rel][1]]
-        m2 = {
-            "files": list(head.get("files") or []) + new_files,
-            "schema": new_schema,
-            "partition": {
-                "specs": r_specs, "current": r_cur, "values": {
-                    rel: r_values.get(rel)
-                    for rel in (head.get("files") or []) + new_files
-                },
-            },
-        }
-        if mapping:
-            m2["column_mapping"] = mapping
-        if head.get("dv"):
-            m2["dv"] = dict(head["dv"])
-        our_stats = {
-            rel: manifest["stats"][rel]
-            for rel in new_files
-            if rel in manifest.get("stats", {})
-        } if "stats" in manifest else {}
-        if head.get("stats") or our_stats:
-            m2["stats"] = {**(head.get("stats") or {}), **our_stats}
-        if head_txn:
-            m2["txn"] = head_txn
-        return m2
-
-    return _commit_manifest(
-        path, manifest, uuid.uuid4().hex[:12], rebase=_rebase
+    return _commit_write(
+        path, prev, uuid.uuid4().hex[:12], append, new_schema, new_files,
+        stats_cols, txn, fresh, values,
     )
 
 
@@ -7431,17 +7166,9 @@ def read_snapshot_partitioned(
                 spark, path,
                 {"files": [], "schema": manifest.get("schema")},
             ).filter(F.lit(False))
-        pruned = {
-            "files": keep_base,
-            "schema": manifest["schema"],
-            "mor": {**mor, "deltas": keep_groups},
-        }
-        for carry in ("column_mapping", "widened", "dropped"):
-            if manifest.get(carry):
-                pruned[carry] = manifest[carry]
-        return _resolve_mor(spark, path, pruned).filter(
-            _where_expr(where)
-        )
+        return _resolve_mor(
+            spark, path, _chain_manifest(manifest, keep_base, keep_groups)
+        ).filter(_where_expr(where))
     keep, _total = partition_pruned_files(path, where, version, spark)
     if not keep:
         return _manifest_df(
@@ -7451,9 +7178,7 @@ def read_snapshot_partitioned(
     pruned = {
         "files": keep,
         "schema": manifest.get("schema"),
-        "column_mapping": manifest.get("column_mapping"),
-        "widened": manifest.get("widened"),
-        "dropped": manifest.get("dropped"),
+        **_policies(manifest),
         "dv": {
             rel: dv
             for rel, dv in (manifest.get("dv") or {}).items()
@@ -7585,10 +7310,12 @@ def _carry_partition(
     routed through the hive writer, r11 verdict #2) or map to None
     (= never pruned) when the rewrite didn't partition-cluster — pruning
     degrades on that fraction, never lies. Called by
-    :func:`_replace_files` (every file-replacing commit: DML, purge,
+    :func:`_replace_files` for every file-replacing commit (DML, purge,
     small-file compaction, incremental and partition-scoped optimize)
-    and by the flat appends of :func:`write_snapshot` and
-    :func:`write_snapshot_to_branch`; a full overwrite (e.g.
+    and every append (:func:`write_snapshot`,
+    :func:`write_snapshot_partitioned`, :func:`write_snapshot_to_branch`);
+    the partition block is the one policy carried this way, because its
+    tuples follow the files. A full overwrite (e.g.
     :func:`optimize_snapshot`) writes no block."""
     part = man.get("partition")
     if not part:
@@ -7658,52 +7385,10 @@ def _route_rewrite(
 # "all committed data satisfies all committed constraints": adding a
 # constraint validates the existing table first (one aggregate), and
 # rewrite verbs need only check the rows they WRITE (surviving files were
-# valid when committed). _commit_manifest inherits the constraint map, so
-# optimize/compact/restore can never silently shed it.
+# valid when committed). The map is a table policy: every manifest
+# builder carries it (_policies), so optimize/compact can never silently
+# shed it, and _admit checks it together with the generated columns.
 # ---------------------------------------------------------------------------
-
-
-def _enforce_constraints(df: DataFrame, constraints: dict, verb: str) -> None:
-    """Raise if any row of ``df`` violates any constraint — ONE aggregate
-    pass counting all constraints at once; the failure path pays a second
-    pass for sample rows. Called with the rows a verb is about to write,
-    before any file lands."""
-    from pyspark.sql import functions as F
-
-    if not constraints:
-        return
-    names = sorted(constraints)
-    aggs = [
-        F.sum(
-            F.when(~F.coalesce(F.expr(constraints[n]), F.lit(True)), 1)
-            .otherwise(0)
-        ).alias(n)
-        for n in names
-    ]
-    try:
-        counts = df.agg(*aggs).first()
-    except Exception as e:  # noqa: BLE001 — surface WHICH constraint broke
-        raise ValueError(
-            f"{verb}: CHECK constraint expression failed to evaluate "
-            f"against the written schema {df.columns} "
-            f"({dict(constraints)}): {e}"
-        ) from e
-    bad = {n: counts[n] for n in names if counts[n]}
-    if bad:
-        worst = min(bad)
-        sample = (
-            df.filter(~F.coalesce(F.expr(constraints[worst]), F.lit(True)))
-            .limit(3)
-            .collect()
-        )
-        raise ValueError(
-            f"{verb}: CHECK constraint violated — "
-            + "; ".join(
-                f"{n!r} ({constraints[n]}): {c} row(s)"
-                for n, c in sorted(bad.items())
-            )
-            + f"; sample for {worst!r}: {[tuple(r) for r in sample]}"
-        )
 
 
 def list_check_constraints(path: str) -> dict[str, str]:
@@ -7734,8 +7419,8 @@ def add_check_constraint(
             f"constraint {name!r} already exists ({cons[name]!r}) — "
             "drop_check_constraint first"
         )
-    _enforce_constraints(
-        _manifest_df(spark, path, man), {name: expr_sql},
+    _admit(
+        _manifest_df(spark, path, man), {"constraints": {name: expr_sql}},
         f"add_check_constraint({name!r}) on existing data",
     )
     import uuid
@@ -7747,9 +7432,9 @@ def add_check_constraint(
 
 
 def drop_check_constraint(path: str, name: str) -> int:
-    """Remove constraint ``name`` with a metadata-only commit (the map is
-    passed EXPLICITLY so _commit_manifest's inherit-when-absent carry
-    cannot resurrect it). Returns the new version."""
+    """Remove constraint ``name`` with a metadata-only commit; the map
+    is recorded explicitly (empty included). Returns the new
+    version."""
     versions = snapshot_versions(path)
     if not versions:
         raise FileNotFoundError(f"no committed snapshots under {path!r}")
@@ -8421,42 +8106,18 @@ def _optimize_partitions_mor(
             max_records = max(
                 1, int(target_file_bytes * tot_rows // tot_bytes)
             )
-    mapping = man.get("column_mapping") or {}
-    carry_keys = ("column_mapping", "widened", "dropped")
-
-    def _hive_out(df_logical):
-        dtypes = {
-            f.name: f.dataType.simpleString() for f in df_logical.schema
-        }
-        files, values = _write_partitioned_files(
-            df_logical, path, spec, part["current"], dtypes, compression,
-            mapping or None, max_records_per_file=max_records,
-        )
-        keep = [
-            r for r in files
-            if _pq.ParquetFile(
-                os.path.join(path, r)
-            ).metadata.num_rows > 0
-        ]
-        return keep, {r: values[r] for r in keep}
-
+    token = uuid.uuid4().hex[:12]
     if minor:
         # fold matched DELTA files only, tombstones kept (they mask
         # base rows this fold never reads)
         groups_m = [sorted(g) for g in matched_groups]
-        synth = {
-            "files": groups_m[0],
-            "schema": man["schema"],
-            "mor": {**mor, "deltas": groups_m[1:]},
-        }
-        for k in carry_keys:
-            if man.get(k):
-                synth[k] = man[k]
         folded = _resolve_mor(
-            spark, path, synth,
+            spark, path, _chain_manifest(man, groups_m[0], groups_m[1:]),
             keep_tombstones=bool(mor.get("op_col")),
         )
-        new_files, new_values = _hive_out(folded)
+        new_files, new_values = _write_delta_group_routed(
+            folded, path, man, token, compression, max_records
+        )
         new_deltas = [
             [rel for rel in grp if rel not in mset]
             for grp, mset in zip(mor["deltas"], matched_groups)
@@ -8464,16 +8125,13 @@ def _optimize_partitions_mor(
         base = man["files"]  # untouched, byte for byte
         n_rewritten = n_delta_matched
     else:
-        sub = {
-            "files": sorted(matched_base),
-            "schema": man["schema"],
-            "mor": {**mor, "deltas": [sorted(g) for g in matched_groups]},
-        }
-        for k in carry_keys:
-            if man.get(k):
-                sub[k] = man[k]
+        sub = _chain_manifest(
+            man, sorted(matched_base), [sorted(g) for g in matched_groups]
+        )
         folded = _resolve_mor(spark, path, sub)  # tombstones shed
-        new_files, new_values = _hive_out(folded)
+        new_files, new_values = _write_delta_group_routed(
+            folded, path, man, token, compression, max_records
+        )
         # emptied groups stay positionally: they hold commit ranks
         new_deltas = [
             [rel for rel in grp if rel not in mset]
@@ -8485,10 +8143,10 @@ def _optimize_partitions_mor(
         n_rewritten = len(matched)
     manifest = _chain_manifest(
         man, base, new_deltas, new_files, new_values,
-        _new_file_stats(path, man, new_files, mapping),
+        _new_file_stats(path, man, new_files, man.get("column_mapping")),
     )
     # read-modify-write: a concurrent commit invalidates the fold
-    version = _commit_manifest(path, manifest, uuid.uuid4().hex[:12])
+    version = _commit_manifest(path, manifest, token)
     return {
         "version": version,
         "files_rewritten": n_rewritten,
@@ -8504,57 +8162,10 @@ def _optimize_partitions_mor(
 # declared equal to an expression over the row's other columns. Writers
 # may OMIT the column — every row-writing verb computes it — or supply
 # it, in which case the verb validates value-equality (null-safe) in the
-# same single aggregate pass as CHECK constraints and refuses a
-# mismatch. The map rides manifests exactly like constraints
-# (_commit_manifest inherits it through rewrite commits).
+# same single aggregate pass as CHECK constraints (_admit) and refuses a
+# mismatch. The map is a table policy, carried by every manifest builder
+# exactly like constraints (_policies).
 # ---------------------------------------------------------------------------
-
-
-def _apply_generated(df: DataFrame, gen: dict, schema: dict, verb: str):
-    """Compute absent generated columns / validate present ones; returns
-    the (possibly widened) frame. ``schema`` = committed {col: type} for
-    the cast that keeps generated types stable across writers."""
-    from pyspark.sql import functions as F
-
-    if not gen:
-        return df
-    present = set(df.columns)
-    checks = {}
-    for col, expr in sorted(gen.items()):
-        target = schema.get(col)
-        val = F.expr(expr)
-        if target:
-            val = val.cast(target)
-        if col in present:
-            checks[f"generated column {col!r} ({expr})"] = (
-                F.col(col).eqNullSafe(val)
-            )
-        else:
-            df = df.withColumn(col, val)
-    if checks:
-        aggs = [
-            F.sum(F.when(~ok, 1).otherwise(0)).alias(str(i))
-            for i, ok in enumerate(checks.values())
-        ]
-        try:
-            counts = df.agg(*aggs).first()
-        except Exception as e:  # noqa: BLE001
-            raise ValueError(
-                f"{verb}: generated-column expression failed to evaluate "
-                f"against the written schema {df.columns}: {e}"
-            ) from e
-        bad = [
-            name
-            for i, name in enumerate(checks)
-            if counts[str(i)]
-        ]
-        if bad:
-            raise ValueError(
-                f"{verb}: supplied values disagree with "
-                + "; ".join(bad)
-                + " — omit the column to have it computed"
-            )
-    return df
 
 
 def list_generated_columns(path: str) -> dict[str, str]:
@@ -8595,8 +8206,9 @@ def add_generated_column(
         raise ValueError(
             f"generated column {col!r} cannot reference itself"
         )
-    _apply_generated(
-        _manifest_df(spark, path, man), {col: expr_sql}, schema,
+    _admit(
+        _manifest_df(spark, path, man),
+        {"generated": {col: expr_sql}, "schema": schema},
         f"add_generated_column({col!r}) on existing data",
     )
     gen[col] = expr_sql
@@ -8609,8 +8221,8 @@ def add_generated_column(
 
 def drop_generated_column(path: str, col: str) -> int:
     """Remove the generated contract on ``col`` (the column stays) with
-    a metadata-only commit; passed explicitly so the inherit carry
-    cannot resurrect it."""
+    a metadata-only commit; the map is recorded explicitly (empty
+    included)."""
     versions = snapshot_versions(path)
     if not versions:
         raise FileNotFoundError(f"no committed snapshots under {path!r}")

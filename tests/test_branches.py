@@ -658,3 +658,128 @@ def test_racing_branch_appends_refuse_not_renumber(spark, monkeypatch):
         ]
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
+
+
+# ---------------------------------------------------------------------------
+# Table policies on branches: every branch commit carries the CHECK
+# constraints and generated columns it was built on, every branch write is
+# admitted against them, and fast_forward refuses a head that lost them.
+# ---------------------------------------------------------------------------
+
+_POL_DDL = "k bigint, v double, v2 double, seq bigint"
+_CONS = {"pos": "v > 0"}
+_GEN = {"v2": "v * 2"}
+
+
+def _pol_rows(spark, rows):
+    """Rows of (k, v, seq); the generated column v2 is omitted."""
+    return spark.createDataFrame(
+        [Row(k=k, v=v, seq=s) for k, v, s in rows],
+        "k bigint, v double, seq bigint",
+    )
+
+
+def _pol_table(spark, path):
+    storage.write_snapshot(
+        spark,
+        spark.createDataFrame(
+            [Row(k=k, v=float(k), v2=2.0 * k, seq=0) for k in (1, 2, 3)],
+            _POL_DDL,
+        ),
+        path,
+    )
+    storage.add_check_constraint(spark, path, "pos", _CONS["pos"])
+    storage.add_generated_column(spark, path, "v2", _GEN["v2"])
+    storage.create_branch(path, "audit")
+
+
+def _pol_write(spark, path, family, v):
+    """One branch write of the verb family; it writes a row with value
+    ``v`` (new key 9 for the inserting verbs, key 2 for the updating
+    ones, which assign the generated column too)."""
+    from pyspark.sql import functions as F
+
+    if family == "append":
+        storage.write_snapshot_to_branch(
+            spark, _pol_rows(spark, [(9, v, 0)]), path, "audit",
+            mode="append",
+        )
+    elif family == "mor_upsert":
+        storage.upsert_delta_snapshot(
+            spark, path, _pol_rows(spark, [(9, v, 1)]), ["k"], "seq",
+            branch="audit",
+        )
+    elif family == "cow_delete":
+        if v > 0:
+            storage.delete_where_snapshot(
+                spark, path, F.col("k") == 1, branch="audit"
+            )
+        else:  # a delete writes no new row: follow with an append
+            storage.write_snapshot_to_branch(
+                spark, _pol_rows(spark, [(9, v, 0)]), path, "audit",
+                mode="append",
+            )
+    elif family == "dv_update":
+        storage.update_where_snapshot(
+            spark, path, {"v": F.lit(v), "v2": F.lit(2 * v)},
+            F.col("k") == 2, mode="dv", branch="audit",
+        )
+    else:  # merge
+        storage.merge_into_snapshot(
+            spark, path, _pol_rows(spark, [(2, v, 1)]), ["k"],
+            update_set={"v": "src_v", "v2": "src_v * 2"}, branch="audit",
+        )
+
+
+@pytest.mark.parametrize(
+    "family", ["append", "mor_upsert", "cow_delete", "dv_update", "merge"]
+)
+def test_branch_commits_keep_policies(spark, family):
+    """A branch commit of every verb family declares the constraint and
+    the generated column of the head it was built on, so the next
+    violating branch write is refused, and fast_forward publishes only
+    admitted rows under main's contract."""
+    scratch, path = _mkpath()
+    try:
+        _pol_table(spark, path)
+        main_v = storage.snapshot_versions(path)[-1]
+        _pol_write(spark, path, family, 5.0)
+        head = storage._branch_head_manifest(path, "audit")
+        assert head.get("constraints") == _CONS
+        assert head.get("generated") == _GEN
+        with pytest.raises(ValueError, match="pos"):
+            _pol_write(spark, path, family, -5.0)
+        assert storage.snapshot_versions(path)[-1] == main_v
+        storage.fast_forward(path, "audit")
+        assert storage.list_check_constraints(path) == _CONS
+        assert storage.list_generated_columns(path) == _GEN
+        rows = storage.read_snapshot(spark, path).collect()
+        assert rows and all(r["v"] > 0 for r in rows)
+        assert all(r["v2"] == 2 * r["v"] for r in rows)
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+
+
+def test_fast_forward_refuses_branch_without_main_policies(spark):
+    """A branch head that does not declare main's constraint (written
+    before branch commits carried policies) is refused: publishing it
+    would strip the constraint from main."""
+    import json
+
+    scratch, path = _mkpath()
+    try:
+        _pol_table(spark, path)
+        before = storage.snapshot_versions(path)
+        legacy = {
+            k: v for k, v in storage._load_manifest(path, before[-1]).items()
+            if k not in ("version", "committed_at", "constraints")
+        }
+        bdir = os.path.join(storage._branches_dir(path), "audit")
+        with open(os.path.join(bdir, "b1.json"), "w") as f:
+            json.dump(legacy, f)
+        with pytest.raises(ValueError, match="fast_forward refused"):
+            storage.fast_forward(path, "audit")
+        assert storage.snapshot_versions(path) == before
+        assert storage.list_check_constraints(path) == _CONS
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
