@@ -2018,7 +2018,7 @@ def _replace_files(
     (:func:`_carry_partition`; ``new_values`` tuples the new files) and
     stats (``new_stats`` adds the new files'); the txn watermarks and
     the MOR chain carry over. Shared by the first claim and the rebase
-    of :func:`_commit_replace`, MERGE's first claim and the appends of
+    of :func:`_commit_replace` and of COW MERGE, and the appends of
     :func:`write_snapshot`, :func:`write_snapshot_partitioned` and
     :func:`write_snapshot_to_branch`."""
     rm = set(removed)
@@ -2206,226 +2206,343 @@ def delete_where_snapshot(
     point: tuple | None = None,
     branch: str | None = None,
 ) -> dict:
-    """Copy-on-write DELETE — the table-format verb the layer was missing
-    (write/merge/optimize/changes/vacuum exist): remove every row where
-    ``predicate`` is TRUE (string or Column; NULL predicate rows are KEPT,
-    SQL DELETE semantics) and commit the result as a new version.
+    """DELETE every row where ``predicate`` is TRUE (SQL string or
+    Column; rows where it is NULL are KEPT, SQL DELETE semantics) and
+    commit the result as a new version. A delete that matches nothing
+    commits nothing; readers of prior versions are unaffected and
+    superseded files are reclaimed by :func:`vacuum_snapshots`.
 
-    The scale property is FILE SKIPPING on the write side: one pass scans
-    the current snapshot with the predicate pushed into the parquet scan
-    and aggregates matching rows to their ``_metadata.file_path`` — at
-    most |files| (path, match-count) rows reach the driver. Files with no
-    match are carried into the new manifest UNTOUCHED (no read of their
-    data pages beyond footer-level row-group pruning, no rewrite, no
-    shuffle); only files that actually contain doomed rows are rewritten
-    without them. A delete matching nothing commits nothing. Readers of
-    prior versions are unaffected; superseded files are reclaimed by
-    :func:`vacuum_snapshots`; per-file stats, when the table carries
-    them, follow the files — kept files keep their recorded min/max,
-    rewritten files get fresh footer-harvested stats.
+    DELETE and :func:`update_where_snapshot` run one pipeline: resolve
+    the head (main, or ``branch``), scope the files, derive the row
+    change (the only verb-specific step), admit it, and materialize it
+    by table mode.
 
-    ``prune=(col, lo, hi)``: when the table carries manifest stats for
-    ``col`` and the caller guarantees the predicate can only be TRUE for
-    rows with ``col`` in [lo, hi] (the same caller contract as
-    ``read_snapshot_pruned``), files whose recorded [min, max] cannot
-    intersect the range are carried WITHOUT ENTERING THE PROBE SCAN at
-    all — zero footer reads for them, the delete-side twin of read-side
-    file skipping. Files lacking stats for ``col`` are always probed.
-    ``partition_where`` (r13) is the partition-tuple twin on
-    hidden-partitioned tables: the caller guarantees the predicate is
-    FALSE outside the matching partitions, and only their files enter
-    the probe (no-tuple files always probe) — a one-day delete probes
-    one day's files, not the table.
+    Scoping is write-side FILE SKIPPING: files outside the scope are
+    carried into the new version without being read. Each option is a
+    caller contract, the read-side twin of :func:`read_snapshot_pruned`:
+    ``prune=(col, lo, hi)`` — the predicate can only be TRUE for rows
+    with ``col`` in [lo, hi], so files whose recorded [min, max] cannot
+    intersect are skipped; ``partition_where`` — the predicate is FALSE
+    outside the matching partitions of a hidden-partitioned table (a
+    one-day delete reads one day's files); ``point=(col, values)`` — the
+    predicate can only be TRUE for ``col IN values``, so files whose
+    bloom sidecar (:func:`index_bloom_snapshot`) rejects every value are
+    skipped. Files lacking stats, a tuple or an index entry are always
+    read. On a MOR table ``prune`` and ``point`` must name a MOR key
+    column (a non-key value can move between commits of one key, so
+    skipping on it would resurrect a superseded row).
 
-    ``mode="dv"``: MERGE-ON-READ delete via deletion vectors (Delta DV /
-    Iceberg v2 position deletes): NO data file is touched at all —
-    matched rows' positions are written to per-file ``.dv`` sidecars
-    (gap-varint bitmaps, built DISTRIBUTED: one ``applyInPandas`` task
-    per touched file unions the file's existing vector and writes the
-    new sidecar to the shared filesystem; the driver sees a
-    |touched-files|-row summary) and the new manifest maps data files to
-    their vectors. Every snapshot reader (``read_snapshot``,
-    ``read_snapshot_pruned``, and the verbs built on them) anti-joins
-    the vectors at read time; OPTIMIZE and any copy-on-write rewrite
-    MATERIALIZE the deletes and drop the vectors. The probe scan is
-    DV-aware in both modes, so re-deleting already-deleted rows is a
-    no-op and counts are exact. The trade is the table-format classic:
-    COW pays at delete time and reads clean files; DV deletes in
-    O(matched rows) regardless of file sizes and pays a (usually
-    broadcast) anti-join per read. Manifest stats become upper bounds
-    under DVs — pruning stays conservative-correct.
+    Materialization by table mode:
 
-    ``branch`` (r14 — DML-complete write-audit-publish): run the SAME
-    delete against a branch head instead of main; the result lands as
-    the next branch commit (``version`` is then the branch-local
-    number), main is untouched until :func:`fast_forward`, and a racing
-    branch writer refuses (single-claim). MOR tables refuse on a
-    branch (delta-chain commits are main-only).
+    * copy-on-write (``mode="cow"``): one probe scan aggregates matched
+      rows to their files (at most |files| rows reach the driver); it is
+      DV-aware in both modes, so rows already deleted never match again
+      and counts are exact. Files without a match carry untouched —
+      stats, partition tuples and deletion vectors kept; files with one
+      are rewritten without the doomed rows, through the hive writer on
+      a partitioned table (real tuples) and under physical names on a
+      column-mapped one, with fresh footer stats. A rewrite materializes
+      the file's existing deletion vector.
+    * deletion vectors (``mode="dv"``, Delta DV / Iceberg position
+      deletes): no data file is touched. Matched positions land in
+      per-file ``.dv`` sidecars, written distributed (one
+      ``applyInPandas`` task per touched file unions its old vector);
+      every snapshot reader anti-joins them, and OPTIMIZE, purge or any
+      copy-on-write rewrite materializes them. Stats of masked files
+      become upper bounds — pruning stays conservative-correct.
+    * MOR tables (either ``mode``): the predicate is judged against the
+      resolved latest-wins view, and the change lands as ONE delta group
+      — tombstones (key, seq, op='D') for DELETE — with zero base files
+      rewritten. Minor compaction folds tombstones forward still
+      masking; major compaction sheds them.
+
+    ``branch`` runs the same verb against a branch head in every mode:
+    the result is the next branch commit (``version`` is then the
+    branch-local number), main is untouched until :func:`fast_forward`,
+    and a racing branch writer refuses. On main a racing commit on other
+    files rebases (:func:`_commit_replace`); a MOR delta group derived
+    from the resolved view never rebases.
 
     Returns ``{"version", "rows_deleted", "files_rewritten",
-    "files_kept", "files_probed", "dv_files_written"}`` (``version`` is
-    the pre-existing latest when the delete was a no-op;
-    ``files_probed`` counts the files the match scan actually read)."""
-    import glob
-    import json
-    import os
-    import uuid
+    "files_kept", "files_probed"}`` plus ``"dv_files_written"`` on a
+    COW/DV table or ``"delta_files_written"`` on a MOR table.
+    ``version`` is the unchanged head on a no-op; ``files_probed``
+    counts the files in scope (base and delta files on MOR)."""
+    return _where_dml(
+        spark, path, predicate, None, compression, prune, mode,
+        partition_where, point, branch,
+    )
 
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
-    if mode not in ("cow", "dv"):
-        raise ValueError(f"unknown delete mode {mode!r}")
-    man, head_id, expect_bv = _dml_head(path, branch)
-    # column-mapped tables: scan logical (predicate speaks logical
-    # names), write physical — rename stays metadata-only through DML
-    # (r11 verdict #1, Delta column-mapping parity)
-    mapping = man.get("column_mapping") or {}
-    if man.get("mor"):
-        # MOR tables take the delta-tombstone path regardless of mode
-        # (r13): file-level COW probes would see superseded base rows,
-        # and DVs can't mix with a delta chain — tombstones are the
-        # merge-on-read-native delete (zero base files touched).
-        # r14: ``branch`` stages the tombstone group as the next BRANCH
-        # commit — the chain grows on the branch manifest only
-        return _delete_where_mor(
-            spark, path, man, predicate, compression, prune,
-            partition_where, point, branch, head_id, expect_bv,
-        )
-    dv_map = man.get("dv") or {}
-    probe_rels = list(man["files"])
-    if partition_where is not None:
-        # r13: partition-tuple probe pruning — on a hidden-partitioned
-        # table a DML whose predicate is confined to some partitions
-        # (caller contract, same as `prune`) probes ONLY their files;
-        # no-tuple files are always probed (conservative). At 100 TB a
-        # one-day delete probes one day, not the table.
-        keep = (
-            _partition_keep(
-                man["partition"], man["files"], partition_where, spark
-            )
-            if man.get("partition") else list(man["files"])
-        )
-        ks = set(keep)
-        probe_rels = [rel for rel in probe_rels if rel in ks]
+def update_where_snapshot(
+    spark: SparkSession,
+    path: str,
+    assignments: dict,
+    predicate,
+    compression: str = PARQUET_CODEC,
+    prune: tuple | None = None,
+    mode: str = "cow",
+    partition_where: dict | None = None,
+    point: tuple | None = None,
+    branch: str | None = None,
+) -> dict:
+    """UPDATE: set ``assignments`` (``{col: new-value Column or SQL
+    string}``) on every row where ``predicate`` is TRUE and commit the
+    result as a new version. SQL UPDATE semantics: rows where the
+    predicate is NULL are untouched, and every right-hand side sees the
+    PRE-update values (one projection over the original columns, so
+    ``{"a": "b", "b": "a"}`` swaps). An assigned column must already
+    exist (new columns arrive by a write commit) and keeps its committed
+    type (the value is cast); the updated rows are admitted against the
+    table's generated columns and CHECK constraints before any file
+    lands. Partial/aggregate-merge MOR tables refuse: a full image whose
+    NULL means NULL would read back as "keep the prior value".
+
+    Scoping, branches and races follow :func:`delete_where_snapshot`.
+    Materialization: copy-on-write rewrites the matching files; DV mode
+    masks the matched rows' positions and APPENDS their updated images
+    as new files, so no existing file is rewritten and the write costs
+    O(matched rows); a MOR table appends the images as one delta group
+    that outranks the old rows by commit order.
+
+    Returns ``{"version", "rows_updated", "files_rewritten",
+    "files_kept", "files_probed"}`` plus ``"dv_files_written"`` in DV
+    mode or ``"delta_files_written"`` on a MOR table."""
+    return _where_dml(
+        spark, path, predicate, assignments, compression, prune, mode,
+        partition_where, point, branch,
+    )
+
+
+def _dml_scope(
+    spark: SparkSession,
+    path: str,
+    man: dict,
+    verb: str,
+    partition_where: dict | None = None,
+    prune: tuple | None = None,
+    point: tuple | None = None,
+):
+    """The files a DML verb must read under ``man`` — the scoping step
+    of DELETE/UPDATE (see :func:`delete_where_snapshot` for the
+    ``partition_where``/``prune``/``point`` contracts) and of MERGE's
+    ``partition_where``. A file without a partition tuple, stats or an
+    index entry always stays in scope. On a MOR table base files and
+    every delta group are scoped alike: sound because each filter is on
+    a key column (partition spec sources are MOR keys; ``prune`` and
+    ``point`` are checked here), so all rows of an in-scope key live in
+    kept files and the latest-wins winner over them is the true one.
+    Returns ``(scope, n)``: the probe rels of a COW/DV table, or the
+    pruned read manifest of a MOR table (empty groups keep their commit
+    rank), and the number of files kept."""
+    mor = man.get("mor")
+    rels = list(man["files"]) + [
+        rel for grp in (mor or {}).get("deltas", []) for rel in grp
+    ]
+    if partition_where is not None and man.get("partition"):
+        rels = _partition_keep(man["partition"], rels, partition_where, spark)
     if prune is not None:
         col, lo, hi = prune
-        stats = man.get("stats", {})
+        if mor and col not in mor["key_cols"]:
+            raise ValueError(
+                f"MOR {verb} prune column {col!r} must be a MOR key "
+                f"column {mor['key_cols']} — non-key stats can't prune a "
+                "chain soundly (a superseded row would resurrect as winner)"
+            )
+        stats = man.get("stats") or {}
         elo, ehi = _stat_encode(lo), _stat_encode(hi)
-        probe_rels = [
-            rel for rel in probe_rels
+        rels = [
+            rel for rel in rels
             if (s_ := stats.get(rel, {}).get(col)) is None
             or not (s_[1] < elo or s_[0] > ehi)
         ]
     if point is not None:
-        # r14: bloom point prune — `prune`'s membership twin for keys
-        # where range stats prune nothing (hash-ordered ids). Caller
-        # contract mirrors `prune`: the predicate can only be TRUE for
-        # rows with ``col IN values``; indexed files whose filter
-        # rejects every value carry without entering the probe scan,
-        # unindexed files always probe (index_bloom_snapshot refreshes).
-        probe_rels = _bloom_point_keep(
-            spark, path, man, point[0], list(point[1]), probe_rels
+        _bloom_live_rels(man, point[0])  # refuses a non-key column on MOR
+        rels = _bloom_point_keep(
+            spark, path, man, point[0], list(point[1]), rels
         )
-    if (
-        prune is not None
-        or partition_where is not None
-        or point is not None
-    ):
-        if not probe_rels:  # pruning proves no file can hold a doomed row
-            return {
-                "version": head_id,
-                "rows_deleted": 0,
-                "files_rewritten": 0,
-                "files_kept": len(man["files"]),
-                "files_probed": 0,
-                "dv_files_written": 0,
-            }
-    data, _cols = _scan_with_pos(
-        spark, path, probe_rels, dv_map, mapping, _phys_schema(man)
+    if not mor:
+        return rels, len(rels)
+    keep = set(rels)
+    scoped = _chain_manifest(
+        man, [rel for rel in man["files"] if rel in keep],
+        [[rel for rel in grp if rel in keep] for grp in mor["deltas"]],
     )
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
+    return scoped, len(rels)
 
-    if mode == "dv":
-        token = uuid.uuid4().hex[:12]
-        summary = _write_dv_sidecars(
-            data.filter(pred).select("_fname", "_pos"),
-            path, token, probe_rels, dv_map,
+
+def _where_dml(
+    spark: SparkSession, path: str, predicate, assignments: dict | None,
+    compression: str, prune: tuple | None, mode: str,
+    partition_where: dict | None, point: tuple | None, branch: str | None,
+) -> dict:
+    """The one pipeline of :func:`delete_where_snapshot` (``assignments``
+    None) and :func:`update_where_snapshot`: (1) resolve the head and
+    check the verb against it, (2) scope the files (:func:`_dml_scope`),
+    (3) derive the row change — DELETE drops the matched rows or
+    tombstones them, UPDATE projects the assignments over the pre-update
+    values and admits the images (:func:`_admit`) — and (4) materialize
+    it by table mode: a COW rewrite (:func:`_route_rewrite` +
+    :func:`_commit_replace`), DV sidecars (:func:`_write_dv_sidecars`,
+    plus UPDATE's appended images), or one MOR delta group
+    (:func:`_write_delta_group_routed` + :func:`_commit_group`). Every
+    no-op returns the same result shape as a commit."""
+    import os
+    import shutil
+    import uuid
+
+    import pyarrow.parquet as _pq
+    from pyspark.sql import functions as F
+
+    verb = "delete" if assignments is None else "update"
+    if mode not in ("cow", "dv"):
+        raise ValueError(f"unknown {verb} mode {mode!r}")
+    man, head_id, expect_bv = _dml_head(path, branch)
+    mor = man.get("mor")
+    schema = man["schema"]
+    if mor:
+        if assignments is not None and mor.get("merge") in (
+            "partial", "aggregate"
+        ):
+            raise ValueError(
+                "UPDATE on a partial/aggregate-merge MOR table is not "
+                "supported: a full image whose NULL genuinely means NULL "
+                "would read back as 'keep prior value' and resurrect "
+                "older data — send partial upserts (and tombstone "
+                "deletes), or compact_mor (major) to materialize first"
+            )
+        _check_reserved(schema, (MOR_OP_COL,))
+    missing = [c for c in assignments or () if c not in schema]
+    if missing:
+        raise ValueError(
+            f"UPDATE cannot assign non-existent columns {missing} — new "
+            "columns arrive via a write commit (schema evolution), not "
+            "UPDATE"
         )
-        if not summary:
-            data_dir = os.path.join(path, "data", token)
-            os.rmdir(data_dir)
-            return {
-                "version": head_id,
-                "rows_deleted": 0,
-                "files_rewritten": 0,
-                "files_kept": len(man["files"]),
-                "files_probed": len(probe_rels),
-                "dv_files_written": 0,
-            }
-        rel_of_fname = {os.path.basename(rel): rel for rel in man["files"]}
-        # masked files keep their stats: now upper bounds, still
-        # conservative-correct for pruning
-        version = _commit_replace(
-            path, man, token,
-            dv_set={rel_of_fname[r["fname"]]: r["dv_rel"] for r in summary},
-            branch=branch, expect_bv=expect_bv,
-        )
-        return {
+    scope, n_probed = _dml_scope(
+        spark, path, man, verb, partition_where, prune, point
+    )
+    written_key = (
+        "delta_files_written" if mor
+        else "dv_files_written" if mode == "dv" or assignments is None
+        else None
+    )
+
+    def _result(version, rows=0, rewritten=0, written=0) -> dict:
+        out = {
             "version": version,
-            "rows_deleted": sum(r["n_new"] for r in summary),
-            "files_rewritten": 0,
-            "files_kept": len(man["files"]),
-            "files_probed": len(probe_rels),
-            "dv_files_written": len(summary),
+            f"rows_{verb}d": rows,
+            "files_rewritten": rewritten,
+            "files_kept": len(man["files"]) - rewritten,
+            "files_probed": n_probed,
         }
+        if written_key:
+            out[written_key] = written
+        return out
 
-    hits = (
-        data.filter(pred)
-        .groupBy("_fname")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    touched = {r["_fname"]: r["n"] for r in hits}
-    rows_deleted = sum(touched.values())
-    if not touched:
-        return {
-            "version": head_id,
-            "rows_deleted": 0,
-            "files_rewritten": 0,
-            "files_kept": len(man["files"]),
-            "files_probed": len(probe_rels),
-            "dv_files_written": 0,
-        }
-    doomed_rels = [
-        rel for rel in probe_rels if os.path.basename(rel) in touched
-    ]
+    if not n_probed:  # scoping proves no file can hold a matched row
+        return _result(head_id)
+    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
+    hit = F.coalesce(pred, F.lit(False))  # a NULL predicate leaves the row
+
+    def _images(rows: DataFrame) -> DataFrame:
+        # all right-hand sides over the PRE-update columns, cast to the
+        # committed types
+        return _admit(rows.select(*(
+            F.when(hit, (
+                F.expr(assignments[c]) if isinstance(assignments[c], str)
+                else assignments[c]
+            ).cast(t)).otherwise(F.col(c)).alias(c)
+            if c in assignments else F.col(c)
+            for c, t in schema.items()
+        )), man, "update_where_snapshot")
 
     token = uuid.uuid4().hex[:12]
-    data_dir = os.path.join(path, "data", token)
-    # survivors through the DV-aware scan: a COW rewrite of a DV-carrying
-    # file MATERIALIZES its existing deletes too (the vector dies with
-    # the file it describes)
-    sdata, scols = _scan_with_pos(
-        spark, path, doomed_rels, dv_map, mapping, _phys_schema(man)
+    if mor:
+        matched = _resolve_mor(spark, path, scope).filter(hit)
+        rows = (
+            _images(matched) if assignments is not None
+            else matched.select(
+                *mor["key_cols"], F.col(mor["seq_col"]),
+                F.lit(MOR_DELETE_OP).alias(MOR_OP_COL),
+            )
+        )
+        new_files, new_values = _write_delta_group_routed(
+            rows, path, man, token, compression
+        )
+        if not new_files:
+            return _result(head_id)
+        n_rows = sum(
+            _pq.ParquetFile(os.path.join(path, rel)).metadata.num_rows
+            for rel in new_files
+        )
+        version = _commit_group(
+            path, {**man, "mor": {**mor, "op_col": MOR_OP_COL}}, token,
+            new_files, new_values, branch=branch, expect_bv=expect_bv,
+        )
+        return _result(version, n_rows, written=len(new_files))
+    # column-mapped tables scan logical (predicates speak logical names)
+    # and write physical: a rename stays metadata-only through DML
+    dv_map = man.get("dv") or {}
+    mapping = man.get("column_mapping") or {}
+    data, _ = _scan_with_pos(
+        spark, path, scope, dv_map, mapping, _phys_schema(man)
     )
-    survivors = sdata.filter(~F.coalesce(pred, F.lit(False))).select(*scols)
+    if mode == "dv":
+        matched = data.filter(hit)
+        summary = _write_dv_sidecars(
+            matched.select("_fname", "_pos"), path, token, scope, dv_map
+        )
+        if not summary:
+            shutil.rmtree(
+                os.path.join(path, "data", token), ignore_errors=True
+            )
+            return _result(head_id)
+        new_files, new_values = (), None
+        if assignments is not None:
+            new_files, new_values = _route_rewrite(
+                _images(matched), path, man, token + "u", compression,
+                mapping,
+            )
+        rel_of = {os.path.basename(rel): rel for rel in man["files"]}
+        version = _commit_replace(
+            path, man, token,
+            dv_set={rel_of[r["fname"]]: r["dv_rel"] for r in summary},
+            new_files=new_files, new_values=new_values,
+            branch=branch, expect_bv=expect_bv,
+        )
+        return _result(
+            version, sum(r["n_new"] for r in summary), written=len(summary)
+        )
+    touched = {
+        r["_fname"]: r["n"]
+        for r in data.filter(hit).groupBy("_fname")
+        .agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    if not touched:
+        return _result(head_id)
+    touched_rels = [
+        rel for rel in scope if os.path.basename(rel) in touched
+    ]
+    # the rewrite reads through the DV-aware scan: a rewritten file's
+    # deletion vector is materialized and dies with it
+    rows, _ = _scan_with_pos(
+        spark, path, touched_rels, dv_map, mapping, _phys_schema(man)
+    )
+    rows = (
+        _images(rows) if assignments is not None
+        else rows.filter(~hit).select(*schema)
+    )
     new_files, new_values = _route_rewrite(
-        survivors, path, man, token, compression, mapping
+        rows, path, man, token, compression, mapping
     )
     version = _commit_replace(
-        path, man, token, removed=doomed_rels, new_files=new_files,
+        path, man, token, removed=touched_rels, new_files=new_files,
         new_values=new_values, branch=branch, expect_bv=expect_bv,
     )
-    return {
-        "version": version,
-        "rows_deleted": rows_deleted,
-        "files_rewritten": len(doomed_rels),
-        "files_kept": len(man["files"]) - len(doomed_rels),
-        "files_probed": len(probe_rels),
-        "dv_files_written": 0,
-    }
+    return _result(
+        version, sum(touched.values()), rewritten=len(touched_rels)
+    )
 
 
 def _source_key_profile(
@@ -2500,6 +2617,24 @@ def _merge_evolution_cols(
     return new_cols
 
 
+def _insert_generated(
+    out: DataFrame, gen: dict, schema: dict, cols: list[str]
+) -> DataFrame:
+    """MERGE's NOT-MATCHED inserts get the generated ``cols`` (``gen``:
+    the table's ``{col: expr}``) that neither the source nor
+    ``insert_values`` supplied computed from the inserted row's values,
+    the rule an append follows. Matched rows keep their values, so an
+    update that leaves one stale still refuses in :func:`_admit`.
+    ``out`` flags inserted rows in ``_s``, dropped here."""
+    from pyspark.sql import functions as F
+
+    return out.withColumns({
+        c: F.when(F.col("_s"), F.expr(gen[c]).cast(schema[c]))
+        .otherwise(F.col(c))
+        for c in cols
+    }).drop("_s")
+
+
 def merge_into_snapshot(
     spark: SparkSession,
     path: str,
@@ -2526,7 +2661,8 @@ def merge_into_snapshot(
       expr}``, same name scoping; omitted target columns carry);
     * WHEN NOT MATCHED THEN INSERT (``insert=True``; values from the
       source's same-named columns, overridable per column via
-      ``insert_values``, absent columns NULL).
+      ``insert_values``; absent columns NULL, absent generated columns
+      computed from the inserted row).
 
     Clause order matches the SQL standard: a matched row tests DELETE
     first, then UPDATE. Source rows must be key-unique — duplicate
@@ -2565,8 +2701,8 @@ def merge_into_snapshot(
     manifest idempotence watermark. ``branch`` (r14) stages the merge
     as the next commit of a branch instead of main — the
     write-audit-publish flow for the flagship CDC verb; returns the
-    branch-local commit number, racing branch writers refuse, MOR
-    refuses. Returns the new version."""
+    branch-local commit number and racing branch writers refuse, on
+    COW and MOR tables alike. Returns the new version."""
     from pyspark.sql import functions as F
 
     import json
@@ -2618,27 +2754,17 @@ def merge_into_snapshot(
     dv_map = man.get("dv") or {}
     force = _phys_schema(man)
 
+    # partition_where's caller contract is STRONGER than
+    # delete/update's: every source KEY must be confined to the matching
+    # partitions (a source key living in an excluded file would re-insert
+    # as a duplicate under NOT-MATCHED) — the natural fit is a
+    # partition-aligned merge key (region/day CDC batches).
+    probe_rels, _ = _dml_scope(spark, path, man, "merge", partition_where)
     # stats-prune the PROBE itself (the delete/update `prune` discipline,
     # derived automatically): a file whose recorded [min, max] on a key
     # column cannot intersect the source's key range PROVABLY contains no
     # matched key — skipped before any footer read. On a key-clustered
     # 100 TB table a narrow CDC batch probes O(its key range's files).
-    probe_rels = list(man["files"])
-    if partition_where is not None:
-        # r13: partition-tuple probe pruning. Caller contract is
-        # STRONGER than delete/update's: every source KEY must be
-        # confined to the matching partitions (a source key living in
-        # an excluded file would re-insert as a duplicate under
-        # NOT-MATCHED) — the natural fit is a partition-aligned merge
-        # key (region/day CDC batches into their own partitions).
-        keep_pw = (
-            _partition_keep(
-                man["partition"], man["files"], partition_where, spark
-            )
-            if man.get("partition") else list(man["files"])
-        )
-        ks = set(keep_pw)
-        probe_rels = [rel for rel in probe_rels if rel in ks]
     stats = man.get("stats") or {}
     # source key bounds per key column — shared by the probe prune here
     # and the key-range-validated rebase below (r13), so they are
@@ -2737,8 +2863,9 @@ def merge_into_snapshot(
         j = j.filter(~doomed)
     if not insert:
         j = j.filter(~s_only)
-    out_cols = []
+    out_cols, derive = [], []
     src_names = set(src.columns)
+    gen = man.get("generated") or {}
     for c, t in schema.items():
         # cast EVERYTHING to the committed type — including key columns:
         # the full-outer join coerces a key to the WIDER of target/source
@@ -2766,26 +2893,31 @@ def merge_into_snapshot(
                 ins = F.col(f"src_{c}").cast(t)
             else:
                 ins = F.lit(None).cast(t)
+                if c in gen:
+                    derive.append(c)
             val = F.when(s_only, ins).otherwise(val)
         out_cols.append(val.alias(c))
     out = _admit(
-        j.select(*out_cols), {**man, "schema": schema},
-        "merge_into_snapshot",
+        _insert_generated(
+            j.select(*out_cols, s_only.alias("_s")), gen, schema, derive
+        ),
+        {**man, "schema": schema}, "merge_into_snapshot",
     )
     token = uuid.uuid4().hex[:12]
     new_files, new_values = _route_rewrite(
         out, path, man, token, compression, mapping
     )
-    merged_txn = dict(prev_txn)
-    if txn is not None:
-        merged_txn[txn[0]] = txn[1]
-    # the EVOLVED schema commits; the key-range rebase below stays
-    # MERGE's own (an append must be proven key-disjoint)
-    manifest = _replace_files(
-        {**man, "schema": schema, "txn": merged_txn},
-        removed=touched, new_files=new_files, new_values=new_values,
-        new_stats=_new_file_stats(path, man, new_files, mapping),
-    )
+    new_stats = _new_file_stats(path, man, new_files, mapping)
+
+    def _build(on: dict) -> dict:
+        # the EVOLVED schema commits, with this batch's txn watermark
+        marks = dict(on.get("txn") or {})
+        if txn is not None:
+            marks[txn[0]] = txn[1]
+        return _replace_files(
+            {**on, "schema": schema, "txn": marks}, removed=touched,
+            new_files=new_files, new_values=new_values, new_stats=new_stats,
+        )
 
     def _rebase(head: dict) -> dict:
         """Key-range-validated MERGE rebase (r13, r12 verdict #4): a
@@ -2857,272 +2989,12 @@ def merge_into_snapshot(
             added, head.get("stats") or {}, key_cols, src_bounds,
             "MERGE rebase", path,
         )
-        m2 = dict(manifest)
-        removed_set = set(removed)
-        m2["files"] = [
-            f for f in manifest["files"] if f not in removed_set
-        ] + added
-        live = set(m2["files"])
-        # kept files take the HEAD's DV state (growth admitted above);
-        # removed files' entries die with them
-        m2_dv = {rel: dv for rel, dv in hdv.items() if rel in live}
-        if m2_dv:
-            m2["dv"] = m2_dv
-        else:
-            m2.pop("dv", None)
-        if manifest.get("partition"):
-            hvals = (head.get("partition") or {}).get("values") or {}
-            vals = dict(manifest["partition"]["values"])
-            for rel in added:
-                vals[rel] = hvals.get(rel)
-            m2["partition"] = {
-                **manifest["partition"],
-                "values": {
-                    rel: v for rel, v in vals.items() if rel in live
-                },
-            }
-        hstats = head.get("stats") or {}
-        add_stats = {rel: hstats[rel] for rel in added if rel in hstats}
-        if "stats" in manifest or add_stats:
-            m2["stats"] = {
-                rel: v
-                for rel, v in {
-                    **(manifest.get("stats") or {}), **add_stats
-                }.items()
-                if rel in live
-            }
-        head_txn = dict(head.get("txn") or {})
-        if txn is not None:
-            head_txn[txn[0]] = txn[1]
-        if head_txn:
-            m2["txn"] = head_txn
-        return m2
+        # the gates admitted the head's file set and DV state: build on it
+        return _build(head)
 
     return _commit_dml_manifest(
-        path, manifest, token, branch, expect_bv, rebase=_rebase
+        path, _build(man), token, branch, expect_bv, rebase=_rebase
     )
-
-
-def update_where_snapshot(
-    spark: SparkSession,
-    path: str,
-    assignments: dict,
-    predicate,
-    compression: str = PARQUET_CODEC,
-    prune: tuple | None = None,
-    mode: str = "cow",
-    partition_where: dict | None = None,
-    point: tuple | None = None,
-    branch: str | None = None,
-) -> dict:
-    """Copy-on-write UPDATE — the last member of the DML triad
-    (:func:`write_snapshot` append / :func:`delete_where_snapshot` /
-    :func:`merge_apply_changes`): set ``assignments`` (``{col: new-value
-    Column or SQL string}``) on every row where ``predicate`` is TRUE
-    and commit the result as a new version. SQL UPDATE semantics
-    throughout: NULL-predicate rows are untouched, and every
-    right-hand side sees the PRE-update values (all assignments are
-    computed in one projection over the original columns, so
-    ``{"a": "b", "b": "a"}`` swaps).
-
-    Same write-side FILE SKIPPING as the COW delete: one DV-aware probe
-    scan aggregates matching rows to their files (at most |files|
-    summary rows reach the driver); files with no match carry into the
-    new manifest untouched — data pages unread, stats kept — and only
-    matching files rewrite. A rewrite of a DV-carrying file materializes
-    its deletes (the vector dies with the file it describes). An update
-    matching nothing commits nothing. ``prune=(col, lo, hi)`` skips the
-    probe itself for files whose recorded stats can't intersect — the
-    same caller contract as ``read_snapshot_pruned``.
-
-    ``mode="dv"`` (r12 — Delta's DV-backed UPDATE): matched rows'
-    positions land in per-file deletion vectors and their UPDATED images
-    APPEND as new files — NO existing file rewrites, so the write costs
-    O(matched rows) regardless of how big the touched files are (the
-    UPDATE-side twin of the DV delete; a wide-file table with pinpoint
-    updates pays for the pinpoints, not the files). Readers resolve via
-    the usual DV anti-join; OPTIMIZE / purge materialize. Same
-    trade as DV deletes: cheap writes, a (usually broadcast) anti-join
-    tax per read, stats on DV-carrying files become upper bounds.
-
-    ``partition_where`` (r13): partition-tuple probe pruning, the
-    delete verb's contract — only matching partitions' files enter the
-    probe scan.
-
-    Guard rails: an assigned column must already exist (UPDATE never
-    adds columns — that's schema evolution via a write), its committed
-    type is preserved by casting the new value to it, and MOR tables
-    refuse (compact first) for the same probe-soundness reason as
-    DELETE. ``branch`` (r14): stage the update on a branch head (the
-    delete verb's write-audit-publish contract — branch-local commit
-    number returned, main untouched until fast_forward). Returns
-    ``{"version", "rows_updated", "files_rewritten",
-    "files_kept", "files_probed"}`` (plus ``"dv_files_written"`` in DV
-    mode)."""
-    import glob
-    import json
-    import os
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    if mode not in ("cow", "dv"):
-        raise ValueError(f"unknown update mode {mode!r}")
-    man, head_id, expect_bv = _dml_head(path, branch)
-    mapping = man.get("column_mapping") or {}  # scan logical, write physical
-    if man.get("mor"):
-        # r13: updated images land as one plain upsert delta group —
-        # zero base rewrites, the merge-on-read-native UPDATE
-        # (r14: ``branch`` stages the group on the branch chain)
-        return _update_where_mor(
-            spark, path, man, assignments, predicate, compression, prune,
-            partition_where, point, branch, head_id, expect_bv,
-        )
-    schema = man["schema"]
-    missing = [c for c in assignments if c not in schema]
-    if missing:
-        raise ValueError(
-            f"UPDATE cannot assign non-existent columns {missing} — new "
-            "columns arrive via a write commit (schema evolution), not "
-            "UPDATE"
-        )
-    dv_map = man.get("dv") or {}
-    probe_rels = list(man["files"])
-    if partition_where is not None:
-        # r13: partition-tuple probe pruning (see delete's note) — the
-        # caller guarantees the predicate is FALSE outside the matching
-        # partitions; their files carry without entering the probe scan
-        keep = (
-            _partition_keep(
-                man["partition"], man["files"], partition_where, spark
-            )
-            if man.get("partition") else list(man["files"])
-        )
-        ks = set(keep)
-        probe_rels = [rel for rel in probe_rels if rel in ks]
-    if prune is not None:
-        col, lo, hi = prune
-        stats = man.get("stats", {})
-        elo, ehi = _stat_encode(lo), _stat_encode(hi)
-        probe_rels = [
-            rel for rel in probe_rels
-            if (s_ := stats.get(rel, {}).get(col)) is None
-            or not (s_[1] < elo or s_[0] > ehi)
-        ]
-    if point is not None:
-        # r14: bloom point prune (see delete's note — same caller
-        # contract: the predicate is FALSE outside ``col IN values``)
-        probe_rels = _bloom_point_keep(
-            spark, path, man, point[0], list(point[1]), probe_rels
-        )
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    no_op = {
-        "version": head_id,
-        "rows_updated": 0,
-        "files_rewritten": 0,
-        "files_kept": len(man["files"]),
-        "files_probed": len(probe_rels),
-    }
-    if not probe_rels:  # stats prove no file can hold a matching row
-        return no_op
-    data, _cols = _scan_with_pos(
-        spark, path, probe_rels, dv_map, mapping, _phys_schema(man)
-    )
-
-    if mode == "dv":
-        import shutil as _sh
-
-        token = uuid.uuid4().hex[:12]
-        matched = data.filter(F.coalesce(pred, F.lit(False)))
-        summary = _write_dv_sidecars(
-            matched.select("_fname", "_pos"),
-            path, token, probe_rels, dv_map,
-        )
-        if not summary:
-            _sh.rmtree(os.path.join(path, "data", token),
-                       ignore_errors=True)
-            return {**no_op, "dv_files_written": 0}
-        # the matched rows' UPDATED images append as new files (one
-        # hive-routed write — real tuples on partitioned tables); the
-        # RHS sees pre-update values as in COW mode
-        dcols = [c for c in data.columns if c not in ("_fname", "_pos")]
-        proj_dv = []
-        for c in dcols:
-            if c in assignments:
-                v = assignments[c]
-                v = F.expr(v) if isinstance(v, str) else v
-                proj_dv.append(v.cast(schema[c]).alias(c))
-            else:
-                proj_dv.append(F.col(c))
-        updated_rows = _admit(
-            matched.select(*proj_dv), man, "update_where_snapshot"
-        )
-        new_files, new_values = _route_rewrite(
-            updated_rows, path, man, token + "u", compression, mapping
-        )
-        rel_of_fname = {
-            os.path.basename(rel): rel for rel in man["files"]
-        }
-        # old files' stats become upper bounds under their DVs — still
-        # conservative-correct for pruning
-        version = _commit_replace(
-            path, man, token,
-            dv_set={rel_of_fname[r["fname"]]: r["dv_rel"] for r in summary},
-            new_files=new_files, new_values=new_values,
-            branch=branch, expect_bv=expect_bv,
-        )
-        return {
-            "version": version,
-            "rows_updated": sum(r["n_new"] for r in summary),
-            "files_rewritten": 0,
-            "files_kept": len(man["files"]),
-            "files_probed": len(probe_rels),
-            "dv_files_written": len(summary),
-        }
-
-    hits = (
-        data.filter(pred)
-        .groupBy("_fname")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    touched = {r["_fname"]: r["n"] for r in hits}
-    if not touched:
-        return no_op
-    rows_updated = sum(touched.values())
-    touched_rels = [
-        rel for rel in probe_rels if os.path.basename(rel) in touched
-    ]
-    token = uuid.uuid4().hex[:12]
-    sdata, scols = _scan_with_pos(
-        spark, path, touched_rels, dv_map, mapping, _phys_schema(man)
-    )
-    hit = F.coalesce(pred, F.lit(False))  # NULL predicate = not updated
-    proj = []
-    for c in scols:
-        if c in assignments:
-            v = assignments[c]
-            v = F.expr(v) if isinstance(v, str) else v
-            proj.append(
-                F.when(hit, v.cast(schema[c])).otherwise(F.col(c)).alias(c)
-            )
-        else:
-            proj.append(F.col(c))
-    updated = _admit(sdata.select(*proj), man, "update_where_snapshot")
-    new_files, new_values = _route_rewrite(
-        updated, path, man, token, compression, mapping
-    )
-    version = _commit_replace(
-        path, man, token, removed=touched_rels, new_files=new_files,
-        new_values=new_values, branch=branch, expect_bv=expect_bv,
-    )
-    return {
-        "version": version,
-        "rows_updated": rows_updated,
-        "files_rewritten": len(touched_rels),
-        "files_kept": len(man["files"]) - len(touched_rels),
-        "files_probed": len(probe_rels),
-    }
 
 
 def _dv_count(dv_abs: str) -> int:
@@ -3768,40 +3640,10 @@ def compact_mor(spark: SparkSession, path: str,
     )
 
 
-def _mor_tuple_pruned_manifest(
-    man: dict, partition_where: dict, spark=None
-):
-    """Partition-tuple twin of :func:`_mor_pruned_manifest` (r14):
-    prune a partitioned MOR manifest's base files AND delta groups to
-    the files whose tuples can satisfy ``partition_where``. Sound for
-    the same reason the partitioned MOR read is: spec sources are key
-    columns, so tuple-matched sets are key-closed and the latest-wins
-    winner over the survivors is the true winner for the matching
-    partitions' keys. No-tuple files always survive. Returns (pruned
-    manifest, files surviving, files total); a table without a
-    partition block passes through unpruned."""
-    mor = man["mor"]
-    all_rels = list(man["files"]) + [
-        rel for grp in mor["deltas"] for rel in grp
-    ]
-    part = man.get("partition")
-    if not part or not part.get("specs"):
-        return man, len(all_rels), len(all_rels)
-    keep_base = _partition_keep(
-        part, man["files"], partition_where, spark
-    )
-    keep_groups = [
-        _partition_keep(part, grp, partition_where, spark)
-        for grp in mor["deltas"]
-    ]
-    n_keep = len(keep_base) + sum(len(g) for g in keep_groups)
-    return _chain_manifest(man, keep_base, keep_groups), n_keep, len(all_rels)
-
-
 def _mor_pruned_manifest(man: dict, bounds: dict):
     """Stats-prune a MOR manifest's base files AND delta groups to the
     files whose recorded [min, max] can intersect ``bounds`` (``{key
-    col: (lo, hi)}``) — the read-side half of the MOR DML verbs. Sound
+    col: (lo, hi)}``) — MOR MERGE's probe prune by source key range. Sound
     exactly like :func:`read_snapshot_pruned`'s MOR rule: a key column
     is constant across every commit of a key, so all rows of an
     in-range key live in range-intersecting files and the latest-wins
@@ -4067,219 +3909,6 @@ def _commit_group(
     )
 
 
-def _delete_where_mor(
-    spark: SparkSession, path: str, man: dict, predicate,
-    compression: str, prune: tuple | None,
-    partition_where: dict | None = None,
-    point: tuple | None = None,
-    branch: str | None = None, head_id: int | None = None,
-    expect_bv: int | None = None,
-) -> dict:
-    """MOR DELETE as a DELTA-GROUP commit (r12 verdict #1 — the largest
-    interop wall: every DML verb refused on the streaming-CDC substrate,
-    so at 100 TB a delete on a live MOR table meant a full-table
-    compaction first). Tombstone rows (key, seq, op='D') land as one
-    delta group — ZERO base files are rewritten; the resolved read,
-    the change feed and :func:`version_delta` mask/emit them, minor
-    compaction folds them forward still masking, major compaction sheds
-    them. Hudi delete-markers / Delta CDF 'D' semantics; reference: the
-    importer's long-lived upsert loop
-    (handler/incoming_instance_handler.go:285-303) must accept deletes.
-
-    Predicate semantics match the COW delete exactly (NULL = keep);
-    the predicate is evaluated against the RESOLVED view, so a value
-    rewritten by a later delta is judged by its LATEST value.
-    ``prune=(col, lo, hi)`` skips resolving files whose key-column
-    stats can't intersect — sound only when ``col`` is a MOR key column
-    (enforced), the :func:`read_snapshot_pruned` rule. Costs one
-    (pruned) resolve read + O(matched keys) write."""
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    mor = man["mor"]
-    schema = man["schema"]
-    _check_reserved(schema, (MOR_OP_COL,))
-    key_cols, seq_col = mor["key_cols"], mor["seq_col"]
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-
-    n_all = len(man["files"]) + sum(len(g) for g in mor["deltas"])
-    read_man, n_kept = man, n_all
-    if partition_where is not None:
-        # r14: partition-tuple probe pruning on a partitioned MOR table
-        # (caller contract: the predicate is FALSE outside the matching
-        # partitions — the COW partition_where contract)
-        read_man, n_kept, _ = _mor_tuple_pruned_manifest(
-            read_man, partition_where, spark
-        )
-    if prune is not None:
-        col, lo, hi = prune
-        if col not in key_cols:
-            raise ValueError(
-                f"MOR delete prune column {col!r} must be a MOR key "
-                f"column {key_cols} — non-key stats can't prune a chain "
-                "soundly (a superseded row would resurrect as winner)"
-            )
-        read_man, n_kept, _ = _mor_pruned_manifest(
-            read_man, {col: (lo, hi)}
-        )
-    if point is not None:
-        # r14: bloom point prune on the chain — key-column-only (the
-        # _bloom_live_rels soundness rule); same caller contract as
-        # the COW point prune (predicate FALSE outside col IN values)
-        read_man, n_kept, _ = _mor_bloom_point_pruned(
-            spark, path, read_man, point[0], list(point[1])
-        )
-    if not read_man["files"] and not any(read_man["mor"]["deltas"]):
-        return {
-            "version": head_id, "rows_deleted": 0,
-            "files_rewritten": 0, "files_kept": len(man["files"]),
-            "files_probed": 0, "delta_files_written": 0,
-        }
-    resolved = _resolve_mor(spark, path, read_man)
-    doomed = resolved.filter(F.coalesce(pred, F.lit(False)))
-    tomb = doomed.select(
-        *key_cols, F.col(seq_col),
-        F.lit(MOR_DELETE_OP).alias(MOR_OP_COL),
-    )
-    token = uuid.uuid4().hex[:12]
-    # routed write: tombstones get real partition tuples on a hidden-
-    # partitioned MOR table (mapping applied physically inside)
-    new_files, new_values = _write_delta_group_routed(
-        tomb, path, man, token, compression
-    )
-    if not new_files:
-        return {
-            "version": head_id, "rows_deleted": 0,
-            "files_rewritten": 0, "files_kept": len(man["files"]),
-            "files_probed": n_kept, "delta_files_written": 0,
-        }
-    import os as _os
-
-    import pyarrow.parquet as _pq
-
-    n_rows = sum(
-        _pq.ParquetFile(_os.path.join(path, rel)).metadata.num_rows
-        for rel in new_files
-    )
-    version = _commit_group(
-        path, {**man, "mor": {**mor, "op_col": MOR_OP_COL}}, token,
-        new_files, new_values, branch=branch, expect_bv=expect_bv,
-    )
-    return {
-        "version": version, "rows_deleted": n_rows,
-        "files_rewritten": 0, "files_kept": len(man["files"]),
-        "files_probed": n_kept, "delta_files_written": len(new_files),
-    }
-
-
-def _update_where_mor(
-    spark: SparkSession, path: str, man: dict, assignments: dict,
-    predicate, compression: str, prune: tuple | None,
-    partition_where: dict | None = None,
-    point: tuple | None = None,
-    branch: str | None = None, head_id: int | None = None,
-    expect_bv: int | None = None,
-) -> dict:
-    """MOR UPDATE as a DELTA-GROUP commit (r13, completing the DML triad
-    on the streaming-CDC substrate): matched rows' UPDATED images land
-    as one plain upsert group — they outrank their old rows by commit
-    order, zero base files rewritten. SQL UPDATE semantics match the
-    COW verb (NULL predicate = untouched; every RHS sees PRE-update
-    values). ``prune=(col, lo, hi)`` follows the MOR-delete rule (key
-    columns only). Costs one (pruned) resolve read + O(matched rows)
-    write."""
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    mor = man["mor"]
-    if mor.get("merge") in ("partial", "aggregate"):
-        raise ValueError(
-            "UPDATE on a partial/aggregate-merge MOR table is not "
-            "supported: a "
-            "full image whose NULL genuinely means NULL would read "
-            "back as 'keep prior value' and resurrect older data — "
-            "send partial upserts (and tombstone deletes), or "
-            "compact_mor (major) to materialize first"
-        )
-    schema = man["schema"]
-    _check_reserved(schema, (MOR_OP_COL,))
-    key_cols, seq_col = mor["key_cols"], mor["seq_col"]
-    bad = [c for c in assignments if c not in schema]
-    if bad:
-        raise ValueError(
-            f"UPDATE assigns non-existent column(s) {bad} — schema "
-            "evolution happens via a write, never an UPDATE"
-        )
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    n_all = len(man["files"]) + sum(len(g) for g in mor["deltas"])
-    read_man, n_kept = man, n_all
-    if partition_where is not None:
-        # r14: partition-tuple probe pruning (see the MOR delete note)
-        read_man, n_kept, _ = _mor_tuple_pruned_manifest(
-            read_man, partition_where, spark
-        )
-    if prune is not None:
-        col, lo, hi = prune
-        if col not in key_cols:
-            raise ValueError(
-                f"MOR update prune column {col!r} must be a MOR key "
-                f"column {key_cols} — non-key stats can't prune a chain "
-                "soundly (a superseded row would resurrect as winner)"
-            )
-        read_man, n_kept, _ = _mor_pruned_manifest(
-            read_man, {col: (lo, hi)}
-        )
-    if point is not None:
-        # r14: bloom point prune on the chain (key-column-only; see the
-        # MOR delete note)
-        read_man, n_kept, _ = _mor_bloom_point_pruned(
-            spark, path, read_man, point[0], list(point[1])
-        )
-    no_op = {
-        "version": head_id, "rows_updated": 0,
-        "files_rewritten": 0, "files_kept": len(man["files"]),
-        "files_probed": n_kept, "delta_files_written": 0,
-    }
-    if not read_man["files"] and not any(read_man["mor"]["deltas"]):
-        return no_op
-    resolved = _resolve_mor(spark, path, read_man)
-    matched = resolved.filter(F.coalesce(pred, F.lit(False)))
-    proj = []
-    for c, t in schema.items():
-        if c in assignments:
-            v = assignments[c]
-            v = F.expr(v) if isinstance(v, str) else v
-            proj.append(v.cast(t).alias(c))
-        else:
-            proj.append(F.col(c))
-    images = _admit(matched.select(*proj), man, "update_where_snapshot")
-    token = uuid.uuid4().hex[:12]
-    new_files, new_values = _write_delta_group_routed(
-        images, path, man, token, compression
-    )
-    if not new_files:
-        return no_op
-    import os as _os
-
-    import pyarrow.parquet as _pq
-
-    n_rows = sum(
-        _pq.ParquetFile(_os.path.join(path, rel)).metadata.num_rows
-        for rel in new_files
-    )
-    version = _commit_group(
-        path, {**man, "mor": {**mor, "op_col": MOR_OP_COL}}, token,
-        new_files, new_values, branch=branch, expect_bv=expect_bv,
-    )
-    return {
-        "version": version, "rows_updated": n_rows,
-        "files_rewritten": 0, "files_kept": len(man["files"]),
-        "files_probed": n_kept, "delta_files_written": len(new_files),
-    }
-
-
 def _merge_into_mor(
     spark: SparkSession, path: str, man: dict, source: DataFrame,
     key_cols: list[str], update_set, delete_condition, insert: bool,
@@ -4365,14 +3994,10 @@ def _merge_into_mor(
         kc: (_stat_encode(lo), _stat_encode(hi))
         for kc, (lo, hi) in bounds.items()
     }
-    probe_man = man
-    if partition_where is not None:
-        # r14: partition-tuple probe pruning (caller contract is the
-        # COW merge's STRONGER one — every source key confined to the
-        # matching partitions, else NOT-MATCHED would re-insert)
-        probe_man, _, _ = _mor_tuple_pruned_manifest(
-            probe_man, partition_where, spark
-        )
+    # partition_where's caller contract is the COW merge's STRONGER one
+    # — every source key confined to the matching partitions, else
+    # NOT-MATCHED would re-insert
+    probe_man, _ = _dml_scope(spark, path, man, "merge", partition_where)
     read_man, _, _ = _mor_pruned_manifest(probe_man, bounds)
     # r14: bloom-probe pruning, the COW merge's high-cardinality
     # complement on the chain — sound without any caller contract
@@ -4441,7 +4066,8 @@ def _merge_into_mor(
         emit = emit | matched
     j = j.filter(emit)
     src_names = set(src.columns)
-    out_cols = []
+    out_cols, derive = [], []
+    gen = man.get("generated") or {}
     for c, t in schema.items():
         if c in new_cols:
             # schema-evolution column: typed NULL unless update_set
@@ -4462,18 +4088,21 @@ def _merge_into_mor(
                 ins = F.col(f"src_{c}").cast(t)
             else:
                 ins = F.lit(None).cast(t)
+                if c in gen:
+                    derive.append(c)
             val = F.when(s_only, ins).otherwise(val)
         if c not in key_cols and c != seq_col:
             # tombstones carry keys + seq only; masked columns NULL
             val = F.when(doomed, F.lit(None).cast(t)).otherwise(val)
         out_cols.append(val.alias(c))
-    out = j.select(
+    out = _insert_generated(j.select(
         *out_cols,
         F.when(doomed, F.lit(MOR_DELETE_OP))
         .otherwise(F.lit(None).cast("string"))
         .alias(MOR_OP_COL),
-    )
-    if man.get("generated") or man.get("constraints"):
+        s_only.alias("_s"),
+    ), gen, schema, derive)
+    if gen or man.get("constraints"):
         # only images are admitted: tombstones carry keys + seq only
         live = _admit(
             out.filter(F.col(MOR_OP_COL).isNull()).drop(MOR_OP_COL),
@@ -6504,23 +6133,6 @@ def _bloom_point_keep(
         spark, path, col, meta, keys, pin_masks=False
     )
     return [rel for rel in rels if rel not in meta["files"] or rel in adm]
-
-
-def _mor_bloom_point_pruned(
-    spark, path: str, man: dict, col: str, values: list
-):
-    """Bloom-point-prune a MOR manifest's base files AND delta chain
-    (the :func:`_mor_pruned_manifest` shape, membership form): ``col``
-    must be a MOR key column (:func:`_bloom_live_rels` raises
-    otherwise). Returns (pruned manifest, files surviving, files
-    total). Empty groups stay positionally (commit rank alignment)."""
-    rels = _bloom_live_rels(man, col)
-    keep = set(_bloom_point_keep(spark, path, man, col, values, rels))
-    pruned = _chain_manifest(
-        man, [rel for rel in man["files"] if rel in keep],
-        [[rel for rel in grp if rel in keep] for grp in man["mor"]["deltas"]],
-    )
-    return pruned, len(keep), len(rels)
 
 
 def read_snapshot_point(

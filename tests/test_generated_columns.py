@@ -163,3 +163,41 @@ def test_partitioned_write_computes_generated(spark):
         assert row["v2"] == 100.0
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
+
+
+@pytest.mark.parametrize("mor", [False, True], ids=["cow", "mor"])
+def test_merge_insert_computes_omitted_generated(spark, mor):
+    """A NOT-MATCHED insert whose source omits a generated column gets it
+    computed from the inserted row, as an append does; a matched update
+    that leaves it stale still refuses."""
+    scratch, path = _mkpath()
+    try:
+        base = spark.createDataFrame(
+            [Row(k=1, v=1.0, v2=2.0, seq=0)],
+            "k bigint, v double, v2 double, seq bigint",
+        )
+        storage.write_snapshot(spark, base, path)
+        storage.add_generated_column(spark, path, "v2", "v * 2")
+        if mor:
+            storage.upsert_delta_snapshot(
+                spark, path, base.drop("v2"), key_cols=["k"], seq_col="seq",
+            )
+        src = spark.createDataFrame(
+            [Row(k=1, v=1.0, seq=1), Row(k=2, v=5.0, seq=1)],
+            "k bigint, v double, seq bigint",
+        )
+        storage.merge_into_snapshot(
+            spark, path, src, ["k"], update_set={"v": "src_v"}, insert=True,
+        )
+        got = {
+            r["k"]: (r["v"], r["v2"])
+            for r in storage.read_snapshot(spark, path).collect()
+        }
+        assert got == {1: (1.0, 2.0), 2: (5.0, 10.0)}
+        with pytest.raises(ValueError, match="disagree"):
+            storage.merge_into_snapshot(
+                spark, path, src.withColumn("v", F.lit(7.0)), ["k"],
+                update_set={"v": "src_v"}, insert=True,
+            )
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)

@@ -8,10 +8,11 @@ group per verb, read after the listener bus drains. They count jobs, not
 tasks, so they do not depend on the core count.
 
 The verbs follow the ``table`` benchmark workload's cycle (a bloom-indexed,
-stats-carrying table turned MOR by its first upsert), plus a branch append
-and a write that supplies a generated column on a constrained table: that
-write's admission checks both contracts in one aggregate job. Lower a
-budget in the change that earns the lower count."""
+stats-carrying table turned MOR by its first upsert), the same DELETE and
+UPDATE on a plain stats-carrying table in copy-on-write and DV mode, a
+branch append, and a write that supplies a generated column on a
+constrained table: that write's admission checks both contracts in one
+aggregate job. Lower a budget in the change that earns the lower count."""
 
 from __future__ import annotations
 
@@ -33,6 +34,12 @@ BUDGETS = {
     "merge_into": 7,
     "delete": 1,
     "update": 1,
+    # the same DML on a plain stats-carrying table: a copy-on-write
+    # rewrite, then deletion vectors
+    "delete_cow": 2,
+    "update_cow": 2,
+    "delete_dv": 1,
+    "update_dv": 4,
     "version_delta": 4,
     "compact_mor": 1,
     "branch_append": 1,
@@ -68,6 +75,7 @@ def test_storage_verb_job_budgets(spark):
     scratch = tempfile.mkdtemp(prefix="budget_test_")
     path = os.path.join(scratch, "t")
     gpath = os.path.join(scratch, "g")
+    cpath = os.path.join(scratch, "c")
     measured = {}
     try:
         storage.write_snapshot(
@@ -104,6 +112,21 @@ def test_storage_verb_job_budgets(spark):
                 mode="append",
             ),
         )
+        storage.write_snapshot(
+            spark, _rows(spark, range(40), "c", 0), cpath, stats_cols=["k"]
+        )
+        measured["delete_cow"] = _jobs(spark, lambda: storage.delete_where_snapshot(
+            spark, cpath, F.col("k") < 5,
+        ))
+        measured["update_cow"] = _jobs(spark, lambda: storage.update_where_snapshot(
+            spark, cpath, {"val": F.lit("x")}, F.col("k") == 7,
+        ))
+        measured["delete_dv"] = _jobs(spark, lambda: storage.delete_where_snapshot(
+            spark, cpath, F.col("k") == 9, mode="dv",
+        ))
+        measured["update_dv"] = _jobs(spark, lambda: storage.update_where_snapshot(
+            spark, cpath, {"val": F.lit("y")}, F.col("k") == 11, mode="dv",
+        ))
         storage.write_snapshot(
             spark,
             spark.createDataFrame(

@@ -511,3 +511,51 @@ def test_merge_probe_stats_pruning(spark):
         assert (101, 7, 0) in got and len(got) == 12
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
+
+
+@pytest.mark.parametrize("table", ["cow", "dv", "mor"])
+def test_noop_results_keep_their_keys(spark, table):
+    """Every no-op DELETE/UPDATE — scoped to zero files by ``prune`` or
+    matching no row — returns the same keys as a committing call of that
+    verb and mode, and commits nothing."""
+    scratch, path = _mkpath()
+    try:
+        storage.write_snapshot(
+            spark, _df(spark, [(k, k, k) for k in range(6)]), path,
+            stats_cols=["k"],
+        )
+        if table == "mor":
+            storage.upsert_delta_snapshot(
+                spark, path,
+                spark.createDataFrame(
+                    [Row(k=5, a=50, b=5, s=1)],
+                    "k bigint, a bigint, b bigint, s bigint",
+                ),
+                ["k"], "s",
+            )
+        mode = "dv" if table == "dv" else "cow"
+        head = storage.snapshot_versions(path)[-1]
+        base = {"version", "files_rewritten", "files_kept", "files_probed"}
+        written = {
+            "cow": "dv_files_written", "dv": "dv_files_written",
+            "mor": "delta_files_written",
+        }[table]
+        expect = {
+            "delete": base | {"rows_deleted", written},
+            "update": base | {"rows_updated"}
+            | ({written} if table != "cow" else set()),
+        }
+        for scope in ({"prune": ("k", 100, 100)}, {}):
+            got = storage.delete_where_snapshot(
+                spark, path, "k = 100", mode=mode, **scope
+            )
+            assert set(got) == expect["delete"], (scope, got)
+            assert got["version"] == head and got["rows_deleted"] == 0
+            got = storage.update_where_snapshot(
+                spark, path, {"a": F.lit(0)}, "k = 100", mode=mode, **scope
+            )
+            assert set(got) == expect["update"], (scope, got)
+            assert got["version"] == head and got["rows_updated"] == 0
+        assert storage.snapshot_versions(path)[-1] == head
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
