@@ -2415,9 +2415,11 @@ def _where_dml(
     missing = [c for c in assignments or () if c not in schema]
     if missing:
         raise ValueError(
-            f"UPDATE cannot assign non-existent columns {missing} — new "
-            "columns arrive via a write commit (schema evolution), not "
-            "UPDATE"
+            f"UPDATE assigns non-existent column(s) {missing} — schema "
+            "evolution happens via a write, never an UPDATE" if mor
+            else f"UPDATE cannot assign non-existent columns {missing} — "
+            "new columns arrive via a write commit (schema evolution), "
+            "not UPDATE"
         )
     scope, n_probed = _dml_scope(
         spark, path, man, verb, partition_where, prune, point
