@@ -3160,9 +3160,9 @@ def q86e_mor_merge(spark, sf_dir):
     (k%20=7 — tp overwritten from the source), deletes (k%20=3 — a
     subset of keys whose LATEST row is a delta upsert, so the tombstone
     must outrank the chain) and inserts (new keys k+30000000), applied
-    as ONE delta group by :func:`storage._merge_into_mor` via
-    ``merge_into_snapshot`` — zero base rewrites, untouched keys never
-    re-materialized. Phase 1 reads post-merge, phase 2 after minor
+    as ONE delta group by :func:`storage.merge_into_snapshot` — zero
+    base rewrites, untouched keys never re-materialized. Phase 1 reads
+    post-merge, phase 2 after minor
     compaction (fold keeps the tombstones masking). Structural asserts:
     base file list byte-identical, exactly one group added."""
     import json

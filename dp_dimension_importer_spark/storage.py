@@ -2320,47 +2320,51 @@ def _dml_scope(
     man: dict,
     verb: str,
     partition_where: dict | None = None,
-    prune: tuple | None = None,
-    point: tuple | None = None,
+    ranges=(),
+    points=(),
 ):
-    """The files a DML verb must read under ``man`` — the scoping step
-    of DELETE/UPDATE (see :func:`delete_where_snapshot` for the
-    ``partition_where``/``prune``/``point`` contracts) and of MERGE's
-    ``partition_where``. A file without a partition tuple, stats or an
-    index entry always stays in scope. On a MOR table base files and
-    every delta group are scoped alike: sound because each filter is on
-    a key column (partition spec sources are MOR keys; ``prune`` and
-    ``point`` are checked here), so all rows of an in-scope key live in
-    kept files and the latest-wins winner over them is the true one.
-    Returns ``(scope, n)``: the probe rels of a COW/DV table, or the
-    pruned read manifest of a MOR table (empty groups keep their commit
-    rank), and the number of files kept."""
+    """The files a verb must read under ``man`` — the scoping step of
+    DELETE/UPDATE, MERGE and the pruned reads. ``partition_where`` keeps
+    the matching partitions; each ``(col, lo, hi)`` of ``ranges`` skips
+    the files whose recorded [min, max] on ``col`` cannot meet [lo, hi];
+    each ``(col, values)`` of ``points`` skips the files whose bloom
+    sidecar rejects every value (:func:`_bloom_point_keep`: literal
+    values, or a frame holding ``col``). DELETE/UPDATE pass their
+    ``prune`` and ``point``, MERGE its source's key bounds and its
+    pinned source keys. A file without a partition tuple, stats or an
+    index entry always stays in scope, and an empty scope probes no
+    bloom. On a MOR table base files and every delta group are scoped
+    alike: sound because each filter is on a key column (partition spec
+    sources are MOR keys; range and point columns are checked here), so
+    all rows of an in-scope key live in kept files and the latest-wins
+    winner over them is the true one. Returns ``(scope, n)``: the probe
+    rels of a COW/DV table, or the pruned read manifest of a MOR table
+    (empty groups keep their commit rank), and the number of files
+    kept."""
     mor = man.get("mor")
     rels = list(man["files"]) + [
         rel for grp in (mor or {}).get("deltas", []) for rel in grp
     ]
     if partition_where is not None and man.get("partition"):
         rels = _partition_keep(man["partition"], rels, partition_where, spark)
-    if prune is not None:
-        col, lo, hi = prune
+    stats = man.get("stats") or {}
+    for col, lo, hi in ranges:
         if mor and col not in mor["key_cols"]:
             raise ValueError(
                 f"MOR {verb} prune column {col!r} must be a MOR key "
                 f"column {mor['key_cols']} — non-key stats can't prune a "
                 "chain soundly (a superseded row would resurrect as winner)"
             )
-        stats = man.get("stats") or {}
         elo, ehi = _stat_encode(lo), _stat_encode(hi)
         rels = [
             rel for rel in rels
             if (s_ := stats.get(rel, {}).get(col)) is None
             or not (s_[1] < elo or s_[0] > ehi)
         ]
-    if point is not None:
-        _bloom_live_rels(man, point[0])  # refuses a non-key column on MOR
-        rels = _bloom_point_keep(
-            spark, path, man, point[0], list(point[1]), rels
-        )
+    for col, values in points:
+        _bloom_live_rels(man, col)  # refuses a non-key column on MOR
+        if rels:
+            rels = _bloom_point_keep(spark, path, man, col, values, rels)
     if not mor:
         return rels, len(rels)
     keep = set(rels)
@@ -2422,7 +2426,8 @@ def _where_dml(
             "not UPDATE"
         )
     scope, n_probed = _dml_scope(
-        spark, path, man, verb, partition_where, prune, point
+        spark, path, man, verb, partition_where,
+        [prune] if prune else (), [point] if point else (),
     )
     written_key = (
         "delta_files_written" if mor
@@ -2670,66 +2675,81 @@ def merge_into_snapshot(
     first, then UPDATE. Source rows must be key-unique — duplicate
     source keys make MERGE ambiguous and raise up front (the classic
     "multiple source rows matched" error), costing one aggregate over
-    the SOURCE only.
+    the SOURCE only. Every assignment and insert is cast to the
+    committed column type, and clauses speak logical names on a
+    column-mapped table. ``schema_evolution=True`` adds the source-only
+    columns to the schema in the same commit
+    (:func:`_merge_evolution_cols`): inserts carry their values,
+    existing rows read them as NULL.
 
-    Scale shape (r12 — write-side FILE SKIPPING, the delete/update
-    discipline extended to the flagship DML verb; pre-r12 this was a
-    full-table rewrite per merge): one DV-aware probe scan joins the
-    target's keys against the compacted source and aggregates hits to
-    their files — only files that actually CONTAIN a matched key are
-    rewritten (one key-partitioned full-outer join of the touched
-    files × source; AQE broadcasts the source when it is a sliver —
-    the nightly-CDC case); NOT-MATCHED inserts ride the same output
-    (a source key matching nothing in the whole table matches nothing
-    in the touched files either, by probe construction). Every other
-    file carries into the new version untouched — data pages unread,
-    stats/partition tuples/DVs intact — so cost is O(table key scan +
-    touched data + |source|), never a table rewrite.
-    ``partition_where`` (r13) prunes the probe by partition tuples —
-    contract STRONGER than delete/update's: every source KEY must be
-    confined to the matching partitions (else a NOT-MATCHED insert
-    could duplicate a key living in an excluded file); the fit is a
-    partition-aligned merge key (per-region/per-day CDC batches). On a
-    hidden-partitioned table the rewrite routes through the hive
-    writer (real tuples — pruning holds immediately after MERGE); on a
-    column-mapped table clauses speak logical names and files keep the
-    one physical schema. Committed column types are preserved by
-    casting every assignment/insert to the target type; the result
-    lands as a new snapshot version (snapshot isolation, prior
-    versions readable). A merge that matches nothing and inserts
-    nothing commits nothing. On a MOR table (r13) the merge lands as
-    ONE delta group — tombstones + images, zero base rewrites (see
-    :func:`_merge_into_mor`). ``txn`` gives at-least-once writers the
-    manifest idempotence watermark. ``branch`` (r14) stages the merge
-    as the next commit of a branch instead of main — the
-    write-audit-publish flow for the flagship CDC verb; returns the
-    branch-local commit number and racing branch writers refuse, on
-    COW and MOR tables alike. Returns the new version."""
-    from pyspark.sql import functions as F
+    MERGE runs the pipeline of :func:`delete_where_snapshot`: resolve
+    the head (main, or ``branch``), scope the files, derive the row
+    change, admit it, and materialize it by table mode. The source is
+    pinned once; its per-key-column [min, max] and its keys scope the
+    files (:func:`_dml_scope`): a file whose key stats cannot meet the
+    source's key range, or whose bloom sidecar
+    (:func:`index_bloom_snapshot`) rejects every source key, holds no
+    matched key and is never read. ``partition_where`` scopes too,
+    under a STRONGER contract than DELETE's: every source KEY must lie
+    in the matching partitions, else a NOT-MATCHED insert could
+    duplicate a key living in an excluded file (the fit is a
+    partition-aligned merge key: per-region or per-day CDC batches).
 
-    import json
+    * copy-on-write: one DV-aware probe joins the scoped files' keys
+      with the source's and rewrites only the files holding a matched
+      key, in one full-outer join of the touched files with the source
+      that also yields the NOT-MATCHED inserts. Every other file carries
+      untouched (stats, partition tuples and DVs intact), so the cost is
+      O(scoped key scan + touched data + |source|). Rewrites route
+      through the hive writer on a partitioned table and write physical
+      names on a column-mapped one.
+    * MOR tables: the source joins the latest-wins view of the scoped
+      files, and only rows a clause rewrites land, as ONE delta group
+      of images and delete tombstones: no base file is rewritten and
+      untouched keys keep winning from older commits. The merge must
+      key on the MOR key columns; partial/aggregate-merge tables refuse
+      (a full image's NULL would read back as "keep the prior value").
+
+    A merge that matches nothing and inserts nothing commits nothing.
+    ``txn`` gives at-least-once writers the manifest idempotence
+    watermark: a redelivered batch returns the head. On main a racing
+    commit rebases only when it provably holds no source key (key-range
+    stats of the files it added, removed or masked; a racing MOR
+    upsert's new groups), else :class:`ConcurrentCommitError`;
+    ``branch`` stages the merge as the next branch commit, and a racing
+    branch writer refuses. Returns the new version (the branch-local
+    number on a branch)."""
     import os
     import uuid
 
+    from pyspark.sql import functions as F
+
     man, head_id, expect_bv = _dml_head(path, branch)
-    if man.get("mor"):
-        # r13: lands as ONE delta group (tombstones + images), zero
-        # base rewrites — see _merge_into_mor (r14: ``branch`` stages
-        # the group as the next branch commit)
-        return _merge_into_mor(
-            spark, path, man, source, key_cols, update_set,
-            delete_condition, insert, insert_values, compression, txn,
-            partition_where, schema_evolution, branch, head_id,
-            expect_bv,
-        )
+    mor = man.get("mor")
+    if mor:
+        if mor.get("merge") in ("partial", "aggregate"):
+            raise ValueError(
+                "MERGE INTO on a partial/aggregate-merge MOR table is not "
+                "supported: a "
+                "full image whose NULL genuinely means NULL would read "
+                "back as 'keep prior value' and resurrect older data — "
+                "send partial upserts (and tombstone deletes), or "
+                "compact_mor (major) to materialize first"
+            )
+        _check_reserved(man["schema"], (MOR_OP_COL,))
+        if mor["key_cols"] != list(key_cols):
+            raise ValueError(
+                f"MERGE INTO a MOR table must merge on its MOR key columns "
+                f"{mor['key_cols']} (got {list(key_cols)}) — tombstones and "
+                "images resolve per MOR key"
+            )
     if update_set is None and delete_condition is None and not insert:
         raise ValueError("MERGE INTO with no clauses is a no-op — pass "
                          "update_set, delete_condition, and/or insert")
-    schema = man["schema"]
     new_cols = _merge_evolution_cols(
         man, source, key_cols, schema_evolution
     )
-    schema = {**schema, **new_cols}
+    schema = {**man["schema"], **new_cols}
     bad = [c for c in (update_set or {}) if c not in schema]
     if bad:
         raise ValueError(
@@ -2738,116 +2758,67 @@ def merge_into_snapshot(
     missing_keys = [c for c in key_cols if c not in source.columns]
     if missing_keys:
         raise ValueError(f"source lacks merge key columns {missing_keys}")
-    prev_txn = man.get("txn") or {}
-    if txn is not None and txn[1] <= prev_txn.get(txn[0], -1):
+    if txn is not None and txn[1] <= (man.get("txn") or {}).get(txn[0], -1):
         return head_id  # redelivered batch: idempotent skip
     # pin the (possibly non-deterministic) source FIRST: the duplicate
-    # check, key bounds, probe and rewrite must all see the SAME rows —
-    # and pinning before the checks means the source's lineage (an
-    # arbitrary caller query) is computed once, not once per check
+    # check, key bounds, scope, join and write must all see the SAME
+    # rows, and the source's lineage (an arbitrary caller query) is
+    # computed once, not once per check
     source = source.localCheckpoint(eager=True)
-    n_src, n_src_keys, raw_bounds = _source_key_profile(source, key_cols)
+    n_src, n_src_keys, bounds = _source_key_profile(source, key_cols)
     if n_src > n_src_keys:
         raise ValueError(
             "MERGE INTO source has duplicate keys — multiple source rows "
             "would match one target row (compact the source per key first)"
         )
+    # bounds for EVERY key column: the scope uses the stats-carrying
+    # ones, the key-range rebase below validates with all of them
+    src_bounds = {
+        kc: (_stat_encode(lo), _stat_encode(hi))
+        for kc, (lo, hi) in bounds.items()
+    }
+    scope, n_probed = _dml_scope(
+        spark, path, man, "merge", partition_where,
+        [(kc, lo, hi) for kc, (lo, hi) in bounds.items()],
+        [(kc, source) for kc in key_cols],
+    )
+    keys = source.select(*key_cols).distinct()
     mapping = man.get("column_mapping") or {}
     dv_map = man.get("dv") or {}
-    force = _phys_schema(man)
-
-    # partition_where's caller contract is STRONGER than
-    # delete/update's: every source KEY must be confined to the matching
-    # partitions (a source key living in an excluded file would re-insert
-    # as a duplicate under NOT-MATCHED) — the natural fit is a
-    # partition-aligned merge key (region/day CDC batches).
-    probe_rels, _ = _dml_scope(spark, path, man, "merge", partition_where)
-    # stats-prune the PROBE itself (the delete/update `prune` discipline,
-    # derived automatically): a file whose recorded [min, max] on a key
-    # column cannot intersect the source's key range PROVABLY contains no
-    # matched key — skipped before any footer read. On a key-clustered
-    # 100 TB table a narrow CDC batch probes O(its key range's files).
-    stats = man.get("stats") or {}
-    # source key bounds per key column — shared by the probe prune here
-    # and the key-range-validated rebase below (r13), so they are
-    # computed for EVERY key column, not just the stats-carrying ones
-    # (one agg with the dup check above, r14: _source_key_profile)
-    src_bounds: dict = {
-        kc: (_stat_encode(lo), _stat_encode(hi))
-        for kc, (lo, hi) in raw_bounds.items()
-    }
-    for kc, (elo, ehi) in src_bounds.items():
-        if not any(kc in per for per in stats.values()):
-            continue
-        probe_rels = [
-            rel for rel in probe_rels
-            if (s_ := stats.get(rel, {}).get(kc)) is None
-            or not (s_[1] < elo or s_[0] > ehi)
-        ]
-    # r14: BLOOM-probe pruning — the high-cardinality complement of the
-    # range prune above. On a hash-ordered key (UUIDs) every file spans
-    # the whole key range and stats prune NOTHING; a per-file bloom
-    # sidecar (index_bloom_snapshot) instead proves "contains no source
-    # key" file by file, fully distributed (_bloom_admitted_files —
-    # source keys never reach the driver). Indexed files the filter
-    # rejects for EVERY source key skip the probe scan outright — no
-    # false negatives, so they provably carry unchanged; unindexed
-    # files (appends since the last refresh) always probe. NULL source
-    # keys match no target row (equi-join semantics) and probe nothing.
-    for kc in key_cols:
-        if not probe_rels:
-            break
-        bmeta = _snap_bloom_meta(path, kc, man)
-        if bmeta is None:
-            continue
-        keys = (
-            source.select(F.col(kc).cast(bmeta["type"]).alias("_v"))
-            .where(F.col("_v").isNotNull())
-            .distinct()
+    touched = []
+    if not mor and scope:
+        # PROBE: which scoped files hold a source key — at most |files|
+        # rows reach the driver
+        data, _ = _scan_with_pos(
+            spark, path, scope, dv_map, mapping, _phys_schema(man)
         )
-        adm = _bloom_admitted_files(spark, path, kc, bmeta, keys)
-        probe_rels = [
-            rel for rel in probe_rels
-            if rel not in bmeta["files"] or rel in adm
+        hit = {
+            r["_fname"] for r in data.select("_fname", *key_cols)
+            .join(keys, key_cols).select("_fname").distinct().collect()
+        }
+        touched = [
+            rel for rel in man["files"] if os.path.basename(rel) in hit
         ]
-
-    # PROBE: which files contain a source key — at most |files| rows
-    # reach the driver, data pages of key-free files never rewrite
-    data, _cols = _scan_with_pos(
-        spark, path, probe_rels, dv_map, mapping, force
-    ) if probe_rels else (None, None)
-    if data is not None:
-        hit_rows = (
-            data.select("_fname", *key_cols)
-            .join(source.select(*key_cols).distinct(), key_cols)
-            .select("_fname")
-            .distinct()
-            .collect()
-        )
-        hit = {r["_fname"] for r in hit_rows}
-    else:
-        hit = set()
-    touched = [
-        rel for rel in man["files"] if os.path.basename(rel) in hit
-    ]
-    if not touched and not insert:
+    if not mor and not touched and (not insert or n_src == 0):
         return head_id  # nothing matched, nothing to insert: no-op
-    if not touched and n_src == 0:
-        return head_id
-
-    src = source
-    for c in source.columns:
-        if c not in key_cols:
-            src = src.withColumnRenamed(c, f"src_{c}")
-    if touched:
+    if mor and n_probed:
+        # only matched keys can contribute delta rows: shrink the
+        # resolved view to the source's keys before the clause join
+        tgt = _resolve_mor(spark, path, scope).join(
+            keys, key_cols, "left_semi"
+        )
+    elif touched:
         tdata, tcols = _scan_with_pos(
-            spark, path, touched, dv_map, mapping, force
+            spark, path, touched, dv_map, mapping, _phys_schema(man)
         )
         tgt = tdata.select(*tcols)
-    else:
+    else:  # no file can hold a matched key
         tgt = spark.createDataFrame(
             [], ", ".join(f"`{c}` {t}" for c, t in schema.items())
         )
+    src = source.withColumnsRenamed(
+        {c: f"src_{c}" for c in source.columns if c not in key_cols}
+    )
     j = (
         tgt.withColumn("_t", F.lit(True))
         .join(src.withColumn("_s", F.lit(True)), key_cols, "full_outer")
@@ -2858,34 +2829,35 @@ def merge_into_snapshot(
     def _expr(v):
         return F.expr(v) if isinstance(v, str) else v
 
+    doomed = F.lit(False)
     if delete_condition is not None:
-        doomed = matched & F.coalesce(
-            _expr(delete_condition), F.lit(False)
-        )
-        j = j.filter(~doomed)
-    if not insert:
-        j = j.filter(~s_only)
-    out_cols, derive = [], []
+        doomed = matched & F.coalesce(_expr(delete_condition), F.lit(False))
+    if mor:
+        # a row lands only when a clause REWRITES it (doomed rows as
+        # tombstones): untouched keys ride the older commits for free
+        emit = doomed
+        if insert:
+            emit = emit | s_only
+        if update_set:
+            emit = emit | matched
+        j = j.filter(emit)
+    else:  # the touched files' other rows carry, doomed rows go
+        j = j.filter(~doomed if insert else ~doomed & ~s_only)
     src_names = set(src.columns)
+    out_cols, derive = [], []
     gen = man.get("generated") or {}
     for c, t in schema.items():
-        # cast EVERYTHING to the committed type — including key columns:
-        # the full-outer join coerces a key to the WIDER of target/source
-        # types, and writing that uncast would land files whose physical
-        # type contradicts the manifest schema (caught by the mapped-DML
-        # hypothesis model; the pre-r12 merge refused such sources via
-        # write_snapshot's additive check, the file-skipping merge must
-        # coerce instead). A lossy source key is the caller's contract
-        # breach, same as every other cast here.
-        if c in new_cols:
-            # schema-evolution column: absent from every target row —
-            # typed NULL unless update_set assigns or an insert's
-            # src_<c> supplies it below
-            val = F.lit(None).cast(t)
-        else:
-            val = F.col(c).cast(t)
+        # cast EVERYTHING to the committed type — key columns included:
+        # the full-outer join coerces a key to the WIDER of target and
+        # source types, and an uncast write would land files whose
+        # physical type contradicts the manifest schema (a lossy source
+        # key is the caller's contract breach, like every cast here).
+        # A schema-evolution column is absent from every target row.
+        val = F.lit(None).cast(t) if c in new_cols else F.col(c).cast(t)
         if update_set and c in update_set:
-            val = F.when(matched, _expr(update_set[c]).cast(t)).otherwise(val)
+            val = F.when(
+                matched & ~doomed, _expr(update_set[c]).cast(t)
+            ).otherwise(val)
         if insert:
             if insert_values and c in insert_values:
                 ins = _expr(insert_values[c]).cast(t)
@@ -2898,14 +2870,71 @@ def merge_into_snapshot(
                 if c in gen:
                     derive.append(c)
             val = F.when(s_only, ins).otherwise(val)
+        if mor and c not in key_cols and c != mor["seq_col"]:
+            # tombstones carry keys + seq only; masked columns NULL
+            val = F.when(doomed, F.lit(None).cast(t)).otherwise(val)
         out_cols.append(val.alias(c))
-    out = _admit(
-        _insert_generated(
-            j.select(*out_cols, s_only.alias("_s")), gen, schema, derive
-        ),
-        {**man, "schema": schema}, "merge_into_snapshot",
+    op = [
+        F.when(doomed, F.lit(MOR_DELETE_OP))
+        .otherwise(F.lit(None).cast("string")).alias(MOR_OP_COL)
+    ] if mor else []
+    out = _insert_generated(
+        j.select(*out_cols, *op, s_only.alias("_s")), gen, schema, derive
     )
+    evolved = {**man, "schema": schema}
+    if not mor:
+        out = _admit(out, evolved, "merge_into_snapshot")
+    elif gen or man.get("constraints"):
+        # only images are admitted: tombstones carry keys + seq only
+        out = _admit(
+            out.filter(F.col(MOR_OP_COL).isNull()).drop(MOR_OP_COL),
+            evolved, "merge_into_snapshot",
+        ).withColumn(MOR_OP_COL, F.lit(None).cast("string")).unionByName(
+            out.filter(F.col(MOR_OP_COL) == MOR_DELETE_OP)
+        )
     token = uuid.uuid4().hex[:12]
+    if mor:
+        new_files, new_values = _write_delta_group_routed(
+            out, path, man, token, compression
+        )
+        if not new_files:
+            return head_id  # matched nothing, inserted nothing
+
+        def _key_disjoint(head: dict) -> None:
+            """Key-range-validated MOR rebase: a racing delta UPSERT
+            whose groups' key stats provably cannot contain any source
+            key leaves this merge's matched set and images intact — the
+            group re-appends onto the winner's chain and both succeed
+            (N streaming CDC writers stop serializing by retry).
+            Anything else refuses."""
+            if head.get("dv"):
+                raise ConcurrentCommitError(
+                    "deletion vectors appeared concurrently — re-run"
+                )
+            if (head.get("schema") or None) != (man.get("schema") or None):
+                raise ConcurrentCommitError(
+                    "table schema changed concurrently — re-run the merge"
+                )
+            prefix = mor["deltas"]
+            if head["mor"]["deltas"][: len(prefix)] != prefix:
+                raise ConcurrentCommitError(
+                    "delta chain was rewritten concurrently (minor "
+                    "compaction?) — re-run the merge"
+                )
+            racing = [
+                rel for grp in head["mor"]["deltas"][len(prefix):]
+                for rel in grp
+            ]
+            _require_key_disjoint(
+                racing, head.get("stats") or {}, mor["key_cols"],
+                src_bounds, "MOR MERGE rebase", path,
+            )
+
+        return _commit_group(
+            path, {**evolved, "mor": {**mor, "op_col": MOR_OP_COL}},
+            token, new_files, new_values, txn=txn, on_race=_key_disjoint,
+            branch=branch, expect_bv=expect_bv,
+        )
     new_files, new_values = _route_rewrite(
         out, path, man, token, compression, mapping
     )
@@ -2922,13 +2951,14 @@ def merge_into_snapshot(
         )
 
     def _rebase(head: dict) -> dict:
-        """Key-range-validated MERGE rebase (r13, r12 verdict #4): a
-        competing APPEND whose added files provably cannot contain any
+        """Key-range-validated COW rebase (Iceberg's validation admits
+        concurrent appends and deletes): a competing commit whose
+        added, removed or DV-masked files provably cannot contain any
         source key leaves the matched set, the touched/kept split and
-        the NOT-MATCHED decisions all intact — carry its files into the
-        merged manifest and both commits succeed. Anything else (files
-        removed/rewritten, DV movement, contract drift, spec evolution,
-        overlapping or stats-less added files) refuses as before."""
+        the NOT-MATCHED decisions intact — build on its head and both
+        commits succeed. Anything else (a probed file removed or
+        masked, a vanished DV, policy or spec drift, overlapping or
+        stats-less files) refuses."""
         if head.get("mor"):
             raise ConcurrentCommitError(
                 "table became MOR concurrently — re-run the merge"
@@ -2938,11 +2968,6 @@ def merge_into_snapshot(
         head_files = list(head.get("files") or [])
         head_set = set(head_files)
         touched_set = set(touched)
-        # r14 (r13 verdict #6 — Iceberg's validation also admits
-        # concurrent DELETES): a competing commit that REMOVED files or
-        # grew DVs rebases when the affected rows provably contain no
-        # source key — N CDC writers mixing merges with deletes stop
-        # serializing by retry. Three gates:
         removed = [f for f in man["files"] if f not in head_set]
         if any(f in touched_set for f in removed):
             # (1) a probed file was removed/rewritten: this merge's
@@ -2963,9 +2988,8 @@ def merge_into_snapshot(
                 "MERGE rebase (concurrently removed files)", path,
             )
         hdv = head.get("dv") or {}
-        mdv = dv_map or {}
-        for rel in sorted(set(hdv) | set(mdv)):
-            if hdv.get(rel) == mdv.get(rel):
+        for rel in sorted(set(hdv) | set(dv_map)):
+            if hdv.get(rel) == dv_map.get(rel):
                 continue
             if rel in touched_set:
                 raise ConcurrentCommitError(
@@ -2975,7 +2999,7 @@ def merge_into_snapshot(
                 )
             if rel not in head_set:
                 continue  # file itself removed: judged by gate (2)
-            if rel in mdv and rel not in hdv:
+            if rel in dv_map and rel not in hdv:
                 raise ConcurrentCommitError(
                     "a deletion vector vanished concurrently (restore/"
                     "purge) — re-run the merge against the new head"
@@ -3642,38 +3666,6 @@ def compact_mor(spark: SparkSession, path: str,
     )
 
 
-def _mor_pruned_manifest(man: dict, bounds: dict):
-    """Stats-prune a MOR manifest's base files AND delta groups to the
-    files whose recorded [min, max] can intersect ``bounds`` (``{key
-    col: (lo, hi)}``) — MOR MERGE's probe prune by source key range. Sound
-    exactly like :func:`read_snapshot_pruned`'s MOR rule: a key column
-    is constant across every commit of a key, so all rows of an
-    in-range key live in range-intersecting files and the latest-wins
-    winner computed over the survivors is the true winner for those
-    keys. Empty groups stay positionally (commit rank alignment).
-    Returns (pruned manifest, files surviving, files total)."""
-    stats = man.get("stats") or {}
-    mor = man["mor"]
-    all_rels = list(man["files"]) + [
-        rel for grp in mor["deltas"] for rel in grp
-    ]
-    keep = set(all_rels)
-    for kc, (lo, hi) in bounds.items():
-        if lo is None:
-            continue
-        elo, ehi = _stat_encode(lo), _stat_encode(hi)
-        keep = {
-            rel for rel in keep
-            if (s_ := stats.get(rel, {}).get(kc)) is None
-            or not (s_[1] < elo or s_[0] > ehi)
-        }
-    pruned = _chain_manifest(
-        man, [rel for rel in man["files"] if rel in keep],
-        [[rel for rel in grp if rel in keep] for grp in mor["deltas"]],
-    )
-    return pruned, len(keep), len(all_rels)
-
-
 def _write_delta_group(
     df: DataFrame, path: str, token: str, compression: str
 ) -> list:
@@ -3908,253 +3900,6 @@ def _commit_group(
     return _commit_dml_manifest(
         path, _build(man), token, branch, expect_bv,
         rebase=_rebase if on_race else None,
-    )
-
-
-def _merge_into_mor(
-    spark: SparkSession, path: str, man: dict, source: DataFrame,
-    key_cols: list[str], update_set, delete_condition, insert: bool,
-    insert_values, compression: str, txn: tuple | None,
-    partition_where: dict | None = None,
-    schema_evolution: bool = False,
-    branch: str | None = None, head_id: int | None = None,
-    expect_bv: int | None = None,
-) -> int:
-    """MERGE INTO a MOR table as ONE delta-group commit (r12 verdict
-    #1): the source compacts against the RESOLVED view and lands a
-    single delta group holding updated images (op NULL), inserted
-    images (op NULL) and delete tombstones (op='D') — zero base files
-    rewritten, untouched keys never re-materialized (they simply keep
-    winning from older commits, the property a COW merge cannot have).
-    Clause semantics, name scoping (target columns by name, source as
-    ``src_<col>``), type preservation and the duplicate-source-key
-    refusal mirror :func:`merge_into_snapshot` exactly.
-
-    Scale shape: the probe side stats-prunes base AND delta files to
-    the source's key range before the one latest-wins window
-    (:func:`_mor_pruned_manifest` — sound on key columns), then a
-    left-semi join shrinks the target side to the matched sliver, so
-    cost is O(key-range files read + |source|) with an O(|delta|)
-    write — the nightly-CDC merge on a 100 TB live table touches its
-    keys' files, never the table."""
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    mor = man["mor"]
-    if mor.get("merge") in ("partial", "aggregate"):
-        raise ValueError(
-            "MERGE INTO on a partial/aggregate-merge MOR table is not "
-            "supported: a "
-            "full image whose NULL genuinely means NULL would read "
-            "back as 'keep prior value' and resurrect older data — "
-            "send partial upserts (and tombstone deletes), or "
-            "compact_mor (major) to materialize first"
-        )
-    schema = man["schema"]
-    _check_reserved(schema, (MOR_OP_COL,))
-    if mor["key_cols"] != list(key_cols):
-        raise ValueError(
-            f"MERGE INTO a MOR table must merge on its MOR key columns "
-            f"{mor['key_cols']} (got {list(key_cols)}) — tombstones and "
-            "images resolve per MOR key"
-        )
-    seq_col = mor["seq_col"]
-    if update_set is None and delete_condition is None and not insert:
-        raise ValueError("MERGE INTO with no clauses is a no-op — pass "
-                         "update_set, delete_condition, and/or insert")
-    new_cols = _merge_evolution_cols(
-        man, source, key_cols, schema_evolution
-    )
-    schema = {**schema, **new_cols}
-    bad = [c for c in (update_set or {}) if c not in schema]
-    if bad:
-        raise ValueError(
-            f"UPDATE SET assigns non-existent target columns {bad}"
-        )
-    missing_keys = [c for c in key_cols if c not in source.columns]
-    if missing_keys:
-        raise ValueError(f"source lacks merge key columns {missing_keys}")
-    prev_txn = man.get("txn") or {}
-    if txn is not None and txn[1] <= prev_txn.get(txn[0], -1):
-        return head_id  # redelivered batch: idempotent skip
-    # pin the (possibly non-deterministic) source FIRST: the duplicate
-    # check, key bounds, prune, join and write must all see the SAME
-    # rows — and pinning before the checks means the source's lineage
-    # (an arbitrary caller query, often a full MOR resolve) is computed
-    # once, not once per check. Bounds for EVERY key column: the pruner
-    # uses the stats-carrying ones, the key-range rebase below
-    # validates with all of them (one agg job: _source_key_profile).
-    source = source.localCheckpoint(eager=True)
-    n_src, n_src_keys, bounds = _source_key_profile(source, key_cols)
-    if n_src > n_src_keys:
-        raise ValueError(
-            "MERGE INTO source has duplicate keys — multiple source rows "
-            "would match one target row (compact the source per key first)"
-        )
-    src_bounds = {
-        kc: (_stat_encode(lo), _stat_encode(hi))
-        for kc, (lo, hi) in bounds.items()
-    }
-    # partition_where's caller contract is the COW merge's STRONGER one
-    # — every source key confined to the matching partitions, else
-    # NOT-MATCHED would re-insert
-    probe_man, _ = _dml_scope(spark, path, man, "merge", partition_where)
-    read_man, _, _ = _mor_pruned_manifest(probe_man, bounds)
-    # r14: bloom-probe pruning, the COW merge's high-cardinality
-    # complement on the chain — sound without any caller contract
-    # (key columns only, exact per construction: a rejected file
-    # contains NO source key, so it can't change any matched key's
-    # winner; the left-semi below already restricts to source keys)
-    for kc in key_cols:
-        bmeta = _snap_bloom_meta(path, kc, man)
-        if bmeta is None:
-            continue
-        keys = (
-            source.select(F.col(kc).cast(bmeta["type"]).alias("_v"))
-            .where(F.col("_v").isNotNull())
-            .distinct()
-        )
-        adm = _bloom_admitted_files(spark, path, kc, bmeta, keys)
-        adm |= {
-            rel for rel in _bloom_live_rels(read_man, kc)
-            if rel not in bmeta["files"]
-        }
-        read_man = {
-            **read_man,
-            "files": [r for r in read_man["files"] if r in adm],
-            "mor": {
-                **read_man["mor"],
-                "deltas": [
-                    [r for r in grp if r in adm]
-                    for grp in read_man["mor"]["deltas"]
-                ],
-            },
-        }
-    if read_man["files"] or any(read_man["mor"]["deltas"]):
-        resolved = _resolve_mor(spark, path, read_man)
-    else:  # every file provably key-disjoint from the source
-        resolved = spark.createDataFrame(
-            [], ", ".join(f"`{c}` {t}" for c, t in schema.items())
-        )
-    # only matched keys can contribute delta rows: shrink the target
-    # side to the source's keys before the clause join
-    tgt = resolved.join(
-        source.select(*key_cols).distinct(), key_cols, "left_semi"
-    )
-    src = source
-    for c in source.columns:
-        if c not in key_cols:
-            src = src.withColumnRenamed(c, f"src_{c}")
-    j = (
-        tgt.withColumn("_t", F.lit(True))
-        .join(src.withColumn("_s", F.lit(True)), key_cols, "full_outer")
-    )
-    matched = F.col("_t").isNotNull() & F.col("_s").isNotNull()
-    s_only = F.col("_t").isNull() & F.col("_s").isNotNull()
-
-    def _expr(v):
-        return F.expr(v) if isinstance(v, str) else v
-
-    doomed = F.lit(False)
-    if delete_condition is not None:
-        doomed = matched & F.coalesce(_expr(delete_condition), F.lit(False))
-    # a matched row becomes a delta row only when a clause REWRITES it —
-    # untouched keys ride the older commits for free (the MOR property)
-    emit = doomed
-    if insert:
-        emit = emit | s_only
-    if update_set:
-        emit = emit | matched
-    j = j.filter(emit)
-    src_names = set(src.columns)
-    out_cols, derive = [], []
-    gen = man.get("generated") or {}
-    for c, t in schema.items():
-        if c in new_cols:
-            # schema-evolution column: typed NULL unless update_set
-            # assigns or an insert's src_<c> supplies it below
-            val = F.lit(None).cast(t)
-        else:
-            val = F.col(c).cast(t)
-        if update_set and c in update_set:
-            val = F.when(
-                matched & ~doomed, _expr(update_set[c]).cast(t)
-            ).otherwise(val)
-        if insert:
-            if insert_values and c in insert_values:
-                ins = _expr(insert_values[c]).cast(t)
-            elif c in key_cols:
-                ins = F.col(c).cast(t)
-            elif f"src_{c}" in src_names:
-                ins = F.col(f"src_{c}").cast(t)
-            else:
-                ins = F.lit(None).cast(t)
-                if c in gen:
-                    derive.append(c)
-            val = F.when(s_only, ins).otherwise(val)
-        if c not in key_cols and c != seq_col:
-            # tombstones carry keys + seq only; masked columns NULL
-            val = F.when(doomed, F.lit(None).cast(t)).otherwise(val)
-        out_cols.append(val.alias(c))
-    out = _insert_generated(j.select(
-        *out_cols,
-        F.when(doomed, F.lit(MOR_DELETE_OP))
-        .otherwise(F.lit(None).cast("string"))
-        .alias(MOR_OP_COL),
-        s_only.alias("_s"),
-    ), gen, schema, derive)
-    if gen or man.get("constraints"):
-        # only images are admitted: tombstones carry keys + seq only
-        live = _admit(
-            out.filter(F.col(MOR_OP_COL).isNull()).drop(MOR_OP_COL),
-            {**man, "schema": schema}, "merge_into_snapshot",
-        ).withColumn(MOR_OP_COL, F.lit(None).cast("string"))
-        out = live.unionByName(
-            out.filter(F.col(MOR_OP_COL) == MOR_DELETE_OP)
-        )
-    token = uuid.uuid4().hex[:12]
-    new_files, new_values = _write_delta_group_routed(
-        out, path, man, token, compression
-    )
-    if not new_files:
-        return head_id  # matched nothing, inserted nothing
-
-    def _key_disjoint(head: dict) -> None:
-        """Key-range-validated MOR MERGE rebase (r13): a racing delta
-        UPSERT whose groups' key stats provably cannot contain any
-        source key leaves this merge's matched set and images intact —
-        the merge's group re-appends onto the winner's chain and both
-        succeed (N streaming CDC writers merging into one table no
-        longer serialize by failure/retry). Anything else refuses."""
-        if head.get("dv"):
-            raise ConcurrentCommitError(
-                "deletion vectors appeared concurrently — re-run"
-            )
-        if (head.get("schema") or None) != (man.get("schema") or None):
-            raise ConcurrentCommitError(
-                "table schema changed concurrently — re-run the merge"
-            )
-        prefix = mor["deltas"]
-        if head["mor"]["deltas"][: len(prefix)] != prefix:
-            raise ConcurrentCommitError(
-                "delta chain was rewritten concurrently (minor "
-                "compaction?) — re-run the merge"
-            )
-        racing = [
-            rel for grp in head["mor"]["deltas"][len(prefix):]
-            for rel in grp
-        ]
-        _require_key_disjoint(
-            racing, head.get("stats") or {}, mor["key_cols"],
-            src_bounds, "MOR MERGE rebase", path,
-        )
-
-    return _commit_group(
-        path,
-        {**man, "schema": schema, "mor": {**mor, "op_col": MOR_OP_COL}},
-        token, new_files, new_values, txn=txn, on_race=_key_disjoint,
-        branch=branch, expect_bv=expect_bv,
     )
 
 
@@ -5466,7 +5211,7 @@ def read_snapshot_pruned(
     MOR tables (r9): when ``col`` is one of the table's MOR KEY columns,
     base files and every delta group are pruned INDEPENDENTLY before
     latest-wins resolution — sound because a key column is constant
-    across all commits of a key (see the inline soundness note). On a
+    across all commits of a key (see :func:`_dml_scope`). On a
     non-key column the read falls back to resolve-then-filter.
 
     ``tag`` / ``asof`` select the version by name or commit instant,
@@ -5488,51 +5233,25 @@ def read_snapshot_pruned(
         )
     with open(os.path.join(_manifest_dir(path), f"v{version}.json")) as f:
         manifest = json.load(f)
-    stats = manifest.get("stats", {})
-    elo, ehi = _stat_encode(lo), _stat_encode(hi)
-    if manifest.get("mor"):
-        # MOR file skipping is SOUND only on a KEY column: a key's value
-        # in a key column is identical across every commit of that key,
-        # so all rows of an in-range key live in range-intersecting files
-        # (the winner is computed from the full row set) and pruned files
-        # hold only out-of-range keys, whose winner the row filter drops
-        # regardless. A NON-key column's value can change between commits
-        # of one key — skipping an old commit's file would resurrect a
-        # superseded row as the apparent winner — so those fall back to
-        # the resolved read + row filter (the contract's definition).
-        mor = manifest["mor"]
-        if col not in mor["key_cols"] or not stats:
-            return read_snapshot(spark, path, version).filter(
-                F.col(col).between(lo, hi)
-            )
-
-        def _survivors(rels):
-            return [
-                rel
-                for rel in rels
-                if (s := stats.get(rel, {}).get(col)) is None
-                or not (s[1] < elo or s[0] > ehi)
-            ]
-
-        keep_base = _survivors(manifest["files"])
-        keep_groups = [_survivors(grp) for grp in mor["deltas"]]
-        if not keep_base and not any(keep_groups):
-            return read_snapshot(spark, path, version).filter(F.lit(False))
-        # empty groups stay in place: _resolve_mor keeps commit rank
-        # aligned by position
-        pruned = _chain_manifest(manifest, keep_base, keep_groups)
-        return _resolve_mor(spark, path, pruned).filter(
-            F.col(col).between(F.lit(lo), F.lit(hi))
+    mor = manifest.get("mor")
+    if mor and (col not in mor["key_cols"] or not manifest.get("stats")):
+        # MOR file skipping is SOUND only on a KEY column (see
+        # _dml_scope): a NON-key column's value can change between
+        # commits of one key — skipping an old commit's file would
+        # resurrect a superseded row as the apparent winner — so those
+        # fall back to the resolved read + row filter (the contract's
+        # definition)
+        return read_snapshot(spark, path, version).filter(
+            F.col(col).between(lo, hi)
         )
-    keep = []
-    for rel in manifest["files"]:
-        s = stats.get(rel, {}).get(col)
-        if s is None or not (s[1] < elo or s[0] > ehi):
-            keep.append(rel)
-    if not keep:  # nothing can match; keep the schema without touching IO
-        return (
-            read_snapshot(spark, path, version)
-            .filter(F.lit(False))
+    keep, n_kept = _dml_scope(
+        spark, path, manifest, "read", ranges=[(col, lo, hi)]
+    )
+    if not n_kept:  # nothing can match; keep the schema without touching IO
+        return read_snapshot(spark, path, version).filter(F.lit(False))
+    if mor:
+        return _resolve_mor(spark, path, keep).filter(
+            F.col(col).between(F.lit(lo), F.lit(hi))
         )
     # DV-aware over the surviving files (stats of a DV-carrying file are
     # upper bounds, so the manifest pruning above stays conservative)
@@ -5752,10 +5471,13 @@ def _file_uri_to_path(uri: str) -> str:
 def _snap_bloom_meta(path: str, col: str, man: dict) -> dict | None:
     """Load the snapshot bloom sidecar's META for ``col`` if it is
     USABLE under ``man``: present, parseable, and built under the
-    manifest's current committed type for the column. Anything else
-    returns None — the caller plans as if no sidecar existed
-    (conservative). ``meta["files"]`` is returned as a SET of indexed
-    rel paths."""
+    manifest's current committed type for the column and from the
+    physical column ``col`` maps to now (a drop and a rename can give
+    the logical name to another column's bytes; a sidecar that records
+    no physical column is never trusted). Anything else returns None —
+    the caller plans as if no sidecar existed (conservative), and the
+    next :func:`index_bloom_snapshot` rebuilds it. ``meta["files"]`` is
+    returned as a SET of indexed rel paths."""
     import json
     import os
 
@@ -5769,6 +5491,8 @@ def _snap_bloom_meta(path: str, col: str, man: dict) -> dict | None:
         return None
     if meta.get("type") != (man.get("schema") or {}).get(col):
         return None  # widened/retyped since the build: hashes diverge
+    if meta.get("phys") != (man.get("column_mapping") or {}).get(col, col):
+        return None  # hashed another column's bytes
     meta["files"] = set(meta.get("files") or [])
     return meta
 
@@ -5892,8 +5616,10 @@ def index_bloom_snapshot(
     Values are read under the FORCED committed physical schema (narrow
     old files upcast in the vectorized scan, column-mapped tables
     harvested by physical name) and hashed at the committed logical
-    type — meta records that type and :func:`_snap_bloom_meta` refuses
-    to use the sidecar after a widening until this verb rebuilds.
+    type — meta records that type and the physical column, and
+    :func:`_snap_bloom_meta` refuses to use the sidecar after a
+    widening, or once the name maps to another physical column, until
+    this verb rebuilds.
     Returns ``{"indexed", "carried", "dropped", "files", "version"}``."""
     import glob
     import json
@@ -5969,6 +5695,7 @@ def index_bloom_snapshot(
     meta = {
         "col": col,
         "type": schema[col],
+        "phys": (man.get("column_mapping") or {}).get(col, col),
         "m_bits": m_bits,
         "k": k,
         "version": versions[-1],
@@ -6112,28 +5839,36 @@ def _bloom_admitted_files(
 
 
 def _bloom_point_keep(
-    spark, path: str, man: dict, col: str, values: list, rels: list[str]
+    spark, path: str, man: dict, col: str, values, rels: list[str]
 ) -> list[str]:
     """Filter ``rels`` to the files that can contain ``col IN values``
     per the snapshot bloom sidecar: indexed files must be admitted,
     unindexed files always survive (advice, not truth). No usable
-    sidecar → ``rels`` unchanged."""
+    sidecar → ``rels`` unchanged. ``values`` is a list of literals or a
+    frame holding ``col`` (MERGE's pinned source): a frame's keys feed
+    the probe as they are, with the masks pinned (a CDC batch may hold
+    millions); literals become a local relation whose tiny plan is free
+    to recompute, so they skip the pin's extra driver-blocking job."""
     from pyspark.sql import functions as F
 
     meta = _snap_bloom_meta(path, col, man)
     if meta is None:
         return list(rels)
-    vals = [v for v in values if v is not None]
-    if not vals:
-        return [rel for rel in rels if rel not in meta["files"]]
-    keys = spark.createDataFrame([(v,) for v in vals]).toDF("_v").select(
-        F.col("_v").cast(meta["type"]).alias("_v")
-    )
-    # literal point values = a local relation: recomputation is free,
-    # skip the masks pin's extra driver-blocking job
-    adm = _bloom_admitted_files(
-        spark, path, col, meta, keys, pin_masks=False
-    )
+    pin = isinstance(values, DataFrame)
+    if pin:
+        keys = (
+            values.select(F.col(col).cast(meta["type"]).alias("_v"))
+            .where(F.col("_v").isNotNull())
+            .distinct()
+        )
+    else:
+        vals = [v for v in values if v is not None]
+        if not vals:
+            return [rel for rel in rels if rel not in meta["files"]]
+        keys = spark.createDataFrame([(v,) for v in vals]).toDF("_v").select(
+            F.col("_v").cast(meta["type"]).alias("_v")
+        )
+    adm = _bloom_admitted_files(spark, path, col, meta, keys, pin_masks=pin)
     return [rel for rel in rels if rel not in meta["files"] or rel in adm]
 
 
@@ -6172,36 +5907,18 @@ def read_snapshot_point(
         )
     with open(os.path.join(_manifest_dir(path), f"v{v}.json")) as f:
         man = json.load(f)
-    if man.get("mor"):
-        _bloom_live_rels(man, col)  # raises on non-key col
-    all_rels = _bloom_live_rels(man, col) if man.get("mor") else list(
-        man["files"]
+    scope, n_kept = _dml_scope(
+        spark, path, man, "read", points=[(col, values)]
     )
-    keep = set(_bloom_point_keep(spark, path, man, col, values, all_rels))
-    pruned = {
-        "files": [rel for rel in man["files"] if rel in keep],
-        "schema": man["schema"],
-        **_policies(man),
-    }
-    if man.get("mor"):
-        pruned["mor"] = {
-            **man["mor"],
-            "deltas": [
-                [rel for rel in grp if rel in keep]
-                for grp in man["mor"]["deltas"]
-            ],
-        }
-    if man.get("dv"):
-        pruned["dv"] = {
-            rel: dv for rel, dv in man["dv"].items() if rel in keep
-        }
-    if not pruned["files"] and not any(
-        (pruned.get("mor") or {}).get("deltas") or []
-    ):
-        # every file provably key-free: typed empty frame, zero IO
-        # (_manifest_df's empty branch can't take a fully-pruned MOR
-        # manifest — _resolve_mor has no zero-path mode)
-        pruned.pop("mor", None)
+    if not n_kept:  # every file provably key-free: typed empty frame
+        pruned = {"files": [], "schema": man["schema"]}
+    elif man.get("mor"):
+        pruned = scope
+    else:
+        keep = set(scope)
+        pruned = _replace_files(
+            man, removed=[rel for rel in man["files"] if rel not in keep]
+        )
     return _manifest_df(spark, path, pruned).filter(F.col(col).isin(values))
 
 
@@ -6755,8 +6472,7 @@ def read_snapshot_partitioned(
         # satisfying key lives in tuple-matching or no-tuple files, so
         # the winner over the survivors is the true winner; extraneous
         # surviving keys fall to the row filter. Empty groups stay
-        # positionally (commit rank alignment, the _mor_pruned_manifest
-        # rule).
+        # positionally (commit rank alignment, the _dml_scope rule).
         part = manifest.get("partition")
         mor = manifest["mor"]
         spec_cols = {

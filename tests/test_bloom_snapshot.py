@@ -459,6 +459,51 @@ class TestColumnMappedBloom:
         finally:
             shutil.rmtree(scratch, ignore_errors=True)
 
+    def test_drop_then_rename_distrusts_stale_sidecar(self, spark):
+        """A sidecar hashed ``a``'s bytes; after ``drop_column("a")`` and
+        ``rename_column("b", "a")`` the name ``a`` means ``b``'s bytes,
+        so the point read, DML ``point``, MERGE and the refresh must all
+        stop trusting the old words."""
+        scratch, path = _mkpath()
+        try:
+            storage.write_snapshot(
+                spark,
+                spark.range(40).select(
+                    F.col("id").alias("k"),
+                    (F.col("id") + 1000).alias("a"),
+                    (F.col("id") + 2000).alias("b"),
+                ).repartition(4, "k"),
+                path,
+            )
+            storage.index_bloom_snapshot(spark, path, "a")
+            storage.drop_column(path, "a")
+            storage.rename_column(path, "b", "a")
+            got = storage.read_snapshot_point(spark, path, "a", [2003, 2017])
+            assert sorted(r["k"] for r in got.collect()) == [3, 17]
+            storage.merge_into_snapshot(
+                spark, path,
+                spark.createDataFrame([Row(k=3, a=2003)], "k bigint, a bigint"),
+                ["a"], insert=True,
+            )
+            def n_2003():
+                return storage.read_snapshot(spark, path).filter(
+                    "a = 2003"
+                ).count()
+
+            assert n_2003() == 1  # matched, not inserted twice
+            res = storage.delete_where_snapshot(
+                spark, path, F.col("a") == 2003, point=("a", [2003])
+            )
+            assert res["rows_deleted"] == 1
+            assert n_2003() == 0
+            _, rels = _live_rels(path)
+            ref = storage.index_bloom_snapshot(spark, path, "a")
+            assert (ref["indexed"], ref["carried"]) == (len(rels), 0)
+            got = storage.read_snapshot_point(spark, path, "a", [2017])
+            assert [r["k"] for r in got.collect()] == [17]
+        finally:
+            shutil.rmtree(scratch, ignore_errors=True)
+
 
 class TestAdmissionExactness:
     def test_admitted_is_superset_of_containing_files(self, spark):

@@ -10,9 +10,9 @@ tasks, so they do not depend on the core count.
 The verbs follow the ``table`` benchmark workload's cycle (a bloom-indexed,
 stats-carrying table turned MOR by its first upsert), the same DELETE and
 UPDATE on a plain stats-carrying table in copy-on-write and DV mode, a
-branch append, and a write that supplies a generated column on a
-constrained table: that write's admission checks both contracts in one
-aggregate job. Lower a budget in the change that earns the lower count."""
+MERGE on a bloom-indexed copy-on-write table, a branch append, and a
+write that supplies a generated column on a constrained table: that
+write's admission checks both contracts in one aggregate job. Lower a budget in the change that earns the lower count."""
 
 from __future__ import annotations
 
@@ -40,6 +40,9 @@ BUDGETS = {
     "update_cow": 2,
     "delete_dv": 1,
     "update_dv": 4,
+    # MERGE on a bloom-indexed copy-on-write table: source pin and
+    # profile, the bloom probe, the file probe, the rewrite
+    "merge_cow": 8,
     "version_delta": 4,
     "compact_mor": 1,
     "branch_append": 1,
@@ -76,6 +79,7 @@ def test_storage_verb_job_budgets(spark):
     path = os.path.join(scratch, "t")
     gpath = os.path.join(scratch, "g")
     cpath = os.path.join(scratch, "c")
+    mpath = os.path.join(scratch, "m")
     measured = {}
     try:
         storage.write_snapshot(
@@ -126,6 +130,14 @@ def test_storage_verb_job_budgets(spark):
         ))
         measured["update_dv"] = _jobs(spark, lambda: storage.update_where_snapshot(
             spark, cpath, {"val": F.lit("y")}, F.col("k") == 11, mode="dv",
+        ))
+        storage.write_snapshot(
+            spark, _rows(spark, range(40), "c", 0), mpath, stats_cols=["k"]
+        )
+        storage.index_bloom_snapshot(spark, mpath, "k")
+        measured["merge_cow"] = _jobs(spark, lambda: storage.merge_into_snapshot(
+            spark, mpath, _rows(spark, range(35, 45), "m", 2), ["k"],
+            update_set={"val": "src_val", "seq": "src_seq"}, insert=True,
         ))
         storage.write_snapshot(
             spark,
