@@ -217,11 +217,12 @@ def write_clustered(
 
 def zorder_layout(df: DataFrame, cols: list[str], n_shards: int) -> DataFrame:
     """The clustering transform behind :func:`write_clustered`, factored
-    so any writer can adopt it (``optimize_snapshot`` feeds it to the
-    snapshot commit): rank-quantize each column, interleave the bucket
-    bits into a Morton code, range-repartition into ``n_shards`` and sort
-    within each — the returned frame's partitions ARE the to-be-written
-    files, each covering a compact region of the joint rank space."""
+    so any writer can adopt it (the maintenance rewrites of
+    :func:`_maintain` cluster with it): rank-quantize each column,
+    interleave the bucket bits into a Morton code, range-repartition
+    into ``n_shards`` and sort within each — the returned frame's
+    partitions ARE the to-be-written files, each covering a compact
+    region of the joint rank space."""
     from pyspark.sql import functions as F
 
     if not cols or n_shards < 1:
@@ -257,35 +258,185 @@ def zorder_layout(df: DataFrame, cols: list[str], n_shards: int) -> DataFrame:
     )
 
 
+def _maintain(
+    spark: SparkSession,
+    path: str,
+    man: dict,
+    head: int,
+    base,
+    names: tuple = ("files_rewritten", None),
+    groups=None,
+    minor: bool = False,
+    compression: str = PARQUET_CODEC,
+    cluster: tuple | None = None,
+    n_out: int | None = None,
+    target_bytes: int | None = None,
+    stats_cols=(),
+    extra=None,
+) -> dict:
+    """The one pipeline of the maintenance verbs (:func:`optimize_snapshot`,
+    :func:`optimize_snapshot_incremental`,
+    :func:`compact_small_files_snapshot`,
+    :func:`purge_deletion_vectors`, :func:`optimize_partitions` and
+    :func:`compact_mor`). The verb resolves the head ``man`` (version
+    ``head``, :func:`_dml_head`) and picks ``base`` files and, for a
+    chain fold, ``groups`` (the picked files of each delta group) — the
+    only verb-specific step. Then:
+
+    1. **Read**: base files through the DV-aware scan under the forced
+       physical schema (:func:`_scan_with_pos`); a chain fold through
+       one latest-wins resolve of ``_chain_manifest(man, base,
+       groups)``. ``minor`` keeps the tombstones: they still mask base
+       rows the fold never reads.
+    2. **Layout**: Z-order on ``cluster`` (``(cols, n_shards)``; an
+       empty frame stays unclustered), a round-robin fan-out to
+       ``n_out`` files, and a row cap derived from the picked files' own
+       bytes per row when ``target_bytes`` is set.
+    3. **Write**: base rewrites through :func:`_route_rewrite`, a chain
+       fold through :func:`_write_delta_group_routed`; both give a
+       partitioned table real tuples and keep a mapped table's physical
+       names.
+    4. **Commit**: a base rewrite replaces the picked files
+       (:func:`_commit_replace`: it rebases onto a disjoint commit and
+       refuses one that touched a picked file or moved the MOR chain).
+       A chain fold commits the re-built chain (:func:`_chain_manifest`)
+       and refuses every race, since the chain it resolved moved: a
+       minor fold appends one group after the groups it left, a major
+       one adds base files; a major fold that picked every file of the
+       table commits a plain manifest.
+
+    Nothing picked commits nothing. Returns ``{"version", names[0]:
+    files rewritten, "files_kept", names[1]: files written}`` (a None
+    name leaves its key out) plus ``extra(files rewritten, new
+    tuples)``, no-ops included."""
+    import os
+    import uuid
+
+    import pyarrow.parquet as _pq
+
+    mor = man.get("mor")
+    chain = mor["deltas"] if groups is not None else []
+    picked = list(base) + [rel for grp in groups or () for rel in grp]
+    pool = len(man["files"]) + sum(len(grp) for grp in chain)
+
+    def _result(version, n=0, written=(), values=None) -> dict:
+        out = {"version": version, names[0]: n, "files_kept": pool - n}
+        if names[1]:
+            out[names[1]] = len(written)
+        out.update(extra(n, values or {}) if extra else {})
+        return out
+
+    if not picked:
+        return _result(head)
+    mapping = man.get("column_mapping") or {}
+    if groups is None:
+        df, cols = _scan_with_pos(
+            spark, path, picked, man.get("dv") or {}, mapping,
+            _phys_schema(man),
+        )
+        df = df.select(*cols)
+    else:
+        df = _resolve_mor(
+            spark, path, _chain_manifest(man, base, groups),
+            keep_tombstones=minor and bool(mor.get("op_col")),
+        )
+    if cluster and not df.isEmpty():
+        df = zorder_layout(df, *cluster)
+    if n_out:
+        df = df.repartition(n_out)
+    cap = None
+    if target_bytes is not None:
+        # compressed bytes in approximate compressed bytes out: the
+        # picked files' own bytes per row size the rewrite's files
+        n_bytes = n_rows = 0
+        for rel in picked:
+            fp = os.path.join(path, rel)
+            try:
+                n_bytes += os.path.getsize(fp)
+                n_rows += _pq.ParquetFile(fp).metadata.num_rows
+            except OSError:
+                pass
+        if n_bytes and n_rows:
+            cap = max(1, int(target_bytes * n_rows // n_bytes))
+    token = uuid.uuid4().hex[:12]
+    if groups is None:
+        new_files, new_values = _route_rewrite(
+            df, path, man, token, compression, mapping, cap
+        )
+        version = _commit_replace(
+            path, man, token, removed=picked, new_files=new_files,
+            new_values=new_values, stats_cols=stats_cols,
+        )
+        return _result(version, len(picked), new_files, new_values)
+    new_files, new_values = _write_delta_group_routed(
+        df, path, man, token, compression, cap
+    )
+    new_stats = _new_file_stats(path, man, new_files, mapping, stats_cols)
+    gone = set(picked)
+    left = [[rel for rel in grp if rel not in gone] for grp in chain]
+    if minor:  # a fully folded chain restarts with the fold's group
+        manifest = _chain_manifest(
+            man, man["files"],
+            (left if any(left) else []) + ([new_files] if new_files else []),
+            new_files, new_values, new_stats,
+        )
+    elif len(picked) == pool:
+        manifest = _replace_files(
+            {k: v for k, v in man.items() if k != "mor"}, picked,
+            new_files=new_files, new_values=new_values, new_stats=new_stats,
+        )
+    else:  # emptied groups stay: they hold commit ranks
+        manifest = _chain_manifest(
+            man, [rel for rel in man["files"] if rel not in gone] + new_files,
+            left, new_files, new_values, new_stats,
+        )
+
+    def _refuse(head_man: dict) -> dict:
+        raise ConcurrentCommitError(
+            "the MOR chain moved concurrently — this fold read the old "
+            "chain; re-run the verb"
+        )
+
+    version = _commit_manifest(path, manifest, token, rebase=_refuse)
+    return _result(version, len(picked), new_files, new_values)
+
+
 def optimize_snapshot(
     spark: SparkSession,
     path: str,
     cols: list[str],
     n_shards: int = 8,
 ) -> int:
-    """Table-format OPTIMIZE: rewrite the CURRENT snapshot version
-    Z-order-clustered on ``cols`` and commit the rewrite as a NEW version
-    with per-file min/max stats for those columns — same rows, better
-    layout, so :func:`read_snapshot_pruned` skips files for predicates on
-    any clustered column. Readers of every prior version are untouched
+    """Table-format OPTIMIZE: rewrite every live file of the CURRENT
+    snapshot version Z-order-clustered on ``cols`` and commit the
+    rewrite as a NEW version with per-file min/max stats for those
+    columns (plus the table's own stats columns) — same rows, better
+    layout, so :func:`read_snapshot_pruned` skips files for predicates
+    on any clustered column. Deletion vectors materialize, a MOR chain
+    resolves into plain base files, a hidden-partitioned table keeps its
+    spec (files come out with real tuples), and a column-mapped table
+    keeps its mapping. Readers of every prior version are untouched
     (snapshot isolation — the property an in-place re-layout cannot
     offer), time travel still reaches the pre-optimize layout, and a
     crash mid-rewrite leaves the table at the old version; superseded
-    data files are reclaimed by ``vacuum_snapshots``. Returns the new
-    version number.
+    data files are reclaimed by ``vacuum_snapshots``. A racing append
+    survives: the commit rebases onto it (a racing change to a rewritten
+    file refuses). Returns the new version number (the head when the
+    table has no file).
 
     An EMPTY current version (a delete-everything is legal) still
     commits — there is nothing to rank-quantize, so the empty frame is
-    committed directly; ``zorder_layout``'s all-null refusal stays
+    committed unclustered; ``zorder_layout``'s all-null refusal stays
     reserved for non-empty tables whose clustering column genuinely
     cannot rank (found by the r9 hypothesis model: overwrite →
     delete-all → optimize crashed)."""
-    cur = read_snapshot(spark, path)
-    if cur.isEmpty():
-        return write_snapshot(spark, cur, path, stats_cols=cols)
-    return write_snapshot(
-        spark, zorder_layout(cur, cols, n_shards), path, stats_cols=cols
-    )
+    man, head, _ = _dml_head(path, None)
+    mor = man.get("mor")
+    return _maintain(
+        spark, path, man, head, man["files"],
+        groups=mor["deltas"] if mor else None,
+        cluster=(cols, n_shards), stats_cols=cols,
+    )["version"]
 
 
 def optimize_snapshot_incremental(
@@ -308,26 +459,21 @@ def optimize_snapshot_incremental(
     and any prefix can serve as the clustered baseline.
 
     Returns ``{"version", "files_clustered", "files_kept",
-    "files_written"}``; no new version when nothing was added. Refuses
-    MOR tables (deltas aren't in the file list; compact first) and
-    DV-carrying new files (their reads need the anti-join; purge
+    "files_written"}``; no new version when nothing was added, or when
+    the added files hold no row. Refuses MOR tables (deltas aren't in
+    the file list; compact first) and DV-carrying new files (purge
     first)."""
-    import glob
-    import json
     import os
-    import uuid
 
+    import pyarrow.parquet as _pq
+
+    man, head, _ = _dml_head(path, None)
     versions = snapshot_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshots under {path!r}")
     if since_version not in versions:
         raise FileNotFoundError(
             f"baseline version {since_version} not committed "
             f"(have {versions}) — vacuumed?"
         )
-    with open(os.path.join(_manifest_dir(path), f"v{versions[-1]}.json")) as f:
-        man = json.load(f)
-    mapping = man.get("column_mapping") or {}  # cluster logical, write physical
     if man.get("mor"):
         raise ValueError(
             "incremental OPTIMIZE on a MOR table: a live chain's base "
@@ -336,65 +482,25 @@ def optimize_snapshot_incremental(
             "chain; optimize_partitions(where, minor=True|False) is "
             "the partition-scoped maintenance verb (r14)"
         )
-    with open(
-        os.path.join(_manifest_dir(path), f"v{since_version}.json")
-    ) as f:
-        base_files = set(json.load(f)["files"])
-    kept = [rel for rel in man["files"] if rel in base_files]
+    base_files = set(_load_manifest(path, since_version)["files"])
     new_rels = [rel for rel in man["files"] if rel not in base_files]
-    if not new_rels:
-        return {
-            "version": versions[-1],
-            "files_clustered": 0,
-            "files_kept": len(kept),
-            "files_written": 0,
-        }
-    dv_map = man.get("dv") or {}
-    if any(rel in dv_map for rel in new_rels):
+    if any(rel in (man.get("dv") or {}) for rel in new_rels):
         raise ValueError(
             "incremental OPTIMIZE over DV-carrying files: "
             "purge_deletion_vectors first"
         )
-    df = _apply_mapping(
-        # forced physical schema: the post-baseline files may span an
-        # additive schema boundary (see compact's note)
-        spark.read.schema(_schema_ddl(_phys_schema(man))).parquet(
-            *(os.path.join(path, rel) for rel in new_rels)
-        ),
-        mapping,
+    # added files holding zero rows (an empty append's schema-only part
+    # files) leave nothing to cluster, nothing worth rewriting
+    if not any(
+        _pq.ParquetFile(os.path.join(path, rel)).metadata.num_rows
+        for rel in new_rels
+    ):
+        new_rels = []
+    return _maintain(
+        spark, path, man, head, new_rels,
+        ("files_clustered", "files_written"), compression=compression,
+        cluster=(cols, n_shards), stats_cols=cols,
     )
-    if df.isEmpty():
-        # the added files hold zero rows (an empty append's schema-only
-        # part files) — nothing to cluster, nothing worth rewriting
-        return {
-            "version": versions[-1],
-            "files_clustered": 0,
-            "files_kept": len(kept),
-            "files_written": 0,
-        }
-    token = uuid.uuid4().hex[:12]
-    data_dir = os.path.join(path, "data", token)
-    clustered = zorder_layout(df, cols, n_shards)
-    if mapping:  # optimized files keep the table's ONE physical schema
-        clustered = clustered.withColumnsRenamed(mapping)
-    (clustered.write.mode("error")
-     .option("compression", compression).parquet(data_dir))
-    new_files = sorted(
-        os.path.relpath(p, path)
-        for p in glob.glob(os.path.join(data_dir, "*.parquet"))
-    )
-    # the clustering columns join the stats even on a stats-less table:
-    # per-file bounds are what read-side pruning consumes
-    version = _commit_replace(
-        path, man, token, removed=new_rels, new_files=new_files,
-        stats_cols=cols,
-    )
-    return {
-        "version": version,
-        "files_clustered": len(new_rels),
-        "files_kept": len(kept),
-        "files_written": len(new_files),
-    }
 
 
 def compact_small_files_snapshot(
@@ -408,92 +514,46 @@ def compact_small_files_snapshot(
     (:func:`optimize_snapshot` is the full Z-order rewrite; this is the
     cheap daily pass the snapshot-layer scale note prescribes so the
     live-file count tracks data size, not commit count): every file
-    smaller than ``min_file_bytes`` is read once and rewritten as a
-    handful of right-sized files; files already at size carry into the
-    new manifest untouched (copy-on-write, byte-identical — the
-    delete verb's discipline). Outputs aim at ``target_file_bytes``
-    (default 4× the threshold — the Delta/Iceberg OPTIMIZE convention of
-    a target well above the small-file cut), so one pass lands files
-    that do NOT re-qualify as small and the daily job converges in a
-    single step instead of asymptotically. Stats, when the table carries them, are
-    recomputed for the new files and carried for the rest; the txn
-    watermark map carries unchanged. Fewer than two small files → no-op,
-    no commit. Returns ``{"version", "files_compacted", "files_kept",
-    "files_written"}``."""
-    import glob
-    import json
+    smaller than ``min_file_bytes`` that carries no deletion vector is
+    read once and rewritten as a handful of right-sized files; files
+    already at size carry into the new manifest untouched (copy-on-write,
+    byte-identical — the delete verb's discipline). Outputs aim at
+    ``target_file_bytes`` (default 4× the threshold — the Delta/Iceberg
+    OPTIMIZE convention of a target well above the small-file cut), so
+    one pass lands files that do NOT re-qualify as small and the daily
+    job converges in a single step instead of asymptotically. Stats,
+    when the table carries them, are recomputed for the new files and
+    carried for the rest; the txn watermark map and a MOR chain carry
+    unchanged (base-file compaction is resolution-neutral). Fewer than
+    two small files → no-op, no commit. Returns ``{"version",
+    "files_compacted", "files_kept", "files_written"}``."""
     import os
-    import uuid
 
-    versions = snapshot_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshots under {path!r}")
-    with open(os.path.join(_manifest_dir(path), f"v{versions[-1]}.json")) as f:
-        man = json.load(f)
-    # column-mapped tables compact as-is: the raw concat reads and writes
-    # PHYSICAL names end-to-end, so the one-physical-schema invariant
-    # holds by construction; only the manifest's mapping must carry
-    # (_commit_replace carries it)
+    man, head, _ = _dml_head(path, None)
+    dv_map = man.get("dv") or {}
     sizes = {
         rel: os.path.getsize(os.path.join(path, rel))
         for rel in man["files"]
+        if rel not in dv_map
     }
-    # DV-carrying files stay out of the raw-concat compaction path (their
-    # reads need the anti-join); OPTIMIZE materializes them instead
-    dv_map = man.get("dv") or {}
-    small = [
-        rel for rel, n in sizes.items()
-        if n < min_file_bytes and rel not in dv_map
-    ]
-    # size the output fan-out against the TARGET (not the threshold), and
-    # compact only when that actually REDUCES the file count — otherwise
-    # overhead-dominated tiny outputs would re-qualify as "small" and a
-    # daily job would rewrite the same bytes forever
-    target = target_file_bytes or 4 * min_file_bytes
+    small = [rel for rel, n in sizes.items() if n < min_file_bytes]
     # estimate MERGED output bytes, not input-sum: each tiny parquet file
     # carries ~0.5 KB of header/footer/dictionary overhead that merging
-    # sheds (98 ten-row files measured 52 KB on disk but 12 KB merged) —
-    # sizing the fan-out on the raw sum leaves sub-threshold outputs
+    # sheds (98 ten-row files measured 52 KB on disk but 12 KB merged),
+    # and compact only when the fan-out to the TARGET actually REDUCES
+    # the file count — otherwise tiny outputs would re-qualify as
+    # "small" and a daily job would rewrite the same bytes forever
     est = sum(max(256, sizes[rel] - 512) for rel in small)
-    n_out = -(-est // target) or 1
+    n_out = -(-est // (target_file_bytes or 4 * min_file_bytes)) or 1
     if len(small) < 2 or len(small) <= n_out:
-        return {
-            "version": versions[-1],
-            "files_compacted": 0,
-            "files_kept": len(man["files"]),
-            "files_written": 0,
-        }
-    token = uuid.uuid4().hex[:12]
-    data_dir = os.path.join(path, "data", token)
+        small = []
     # round-robin repartition, not coalesce: coalesce glues INPUT
-    # partitions and leaves the size skew that made the files small in
-    # the first place; the shuffle moves only the small files' bytes
-    # force the PHYSICAL schema: the small files may span an additive
-    # schema boundary, and footer inference on a mixed set is
-    # nondeterministic — compacting against a stale sampled footer would
-    # silently drop the newer column's values (the same latent bug the
-    # forced _manifest_df read fixed)
-    (spark.read.schema(_schema_ddl(_phys_schema(man)))
-     .parquet(*(os.path.join(path, rel) for rel in small))
-     .repartition(int(n_out))
-     .write.mode("error").option("compression", compression)
-     .parquet(data_dir))
-    new_files = sorted(
-        os.path.relpath(p, path)
-        for p in glob.glob(os.path.join(data_dir, "*.parquet"))
+    # partitions and leaves the size skew that made the files small
+    return _maintain(
+        spark, path, man, head, small,
+        ("files_compacted", "files_written"), compression=compression,
+        n_out=int(n_out),
     )
-    # base-file compaction is resolution-neutral (deltas live in the mor
-    # chain, never in "files"): the chain and every DV (no DV-carrying
-    # file is small) carry verbatim
-    version = _commit_replace(
-        path, man, token, removed=small, new_files=new_files
-    )
-    return {
-        "version": version,
-        "files_compacted": len(small),
-        "files_kept": len(man["files"]) - len(small),
-        "files_written": len(new_files),
-    }
 
 
 def recover_swap(path: str) -> bool:
@@ -877,10 +937,12 @@ def _commit_write(
     txn: tuple | None = None,
     fresh: dict | None = None,
     new_values: dict | None = None,
+    rebase: bool = True,
 ) -> int:
     """Commit a write's ``new_files`` on the table head ``prev`` — the
-    commit shared by :func:`write_snapshot` and
-    :func:`write_snapshot_partitioned`. An append adds them to the
+    commit shared by :func:`write_snapshot`,
+    :func:`write_snapshot_partitioned` and
+    :func:`materialize_column_mapping`. An append adds them to the
     head's files (carried files keep their tuples, DVs and stats; on a
     hidden-partitioned table, new files without ``new_values`` tuples
     map to None — pruning degrades, never lies); an overwrite replaces
@@ -895,7 +957,8 @@ def _commit_write(
     and disjoint from the competing commit's, so the manifest is rebuilt
     on the new head unless the head turned MOR, committed this ``txn``
     batch, or moved a policy (:func:`_require_policies`; a racing table
-    creation must have created exactly this commit's table)."""
+    creation must have created exactly this commit's table). ``rebase``
+    False refuses every race: a rewrite of rows it read."""
     new_stats = None
     if stats_cols is not None:
         mapping = (prev.get("column_mapping") or {}) if append else {}
@@ -944,7 +1007,9 @@ def _commit_write(
             )
         return _build(head)
 
-    return _commit_manifest(path, _build(prev), token, rebase=_rebase)
+    return _commit_manifest(
+        path, _build(prev), token, rebase=_rebase if rebase else None
+    )
 
 
 def _require_key_disjoint(rels, stats, key_cols, src_bounds, what, path):
@@ -1083,8 +1148,9 @@ def _commit_manifest(path, manifest, token, rebase=None) -> int:
     (r11 verdict #3, the Iceberg/Delta optimistic-concurrency shape):
 
     * ``rebase=None`` (read-modify-write verbs: DELETE/UPDATE/MERGE,
-      optimize, metadata verbs) → raise :class:`ConcurrentCommitError`;
-      the verb's derivation is stale by definition and must re-run.
+      metadata verbs) → raise :class:`ConcurrentCommitError`; the
+      verb's derivation is stale by definition and must re-run (the MOR
+      chain folds pass a rebase that always refuses, naming the chain).
     * ``rebase=callable`` (append-shaped commits, which ARE disjoint
       from any racing commit unless the table's contracts moved) → the
       callable receives the competing head manifest, validates
@@ -1882,9 +1948,11 @@ def _scan_with_pos(
 # manifest builder carries them from the manifest it builds on
 # (_policies; partition tuples through _carry_partition /
 # _carry_partition_mor), every optimistic rebase refuses when one moved
-# (_require_policies), and every verb admits the rows it writes against
-# them (_admit). The commit itself (_commit_manifest and the branch claim)
-# knows nothing of policies, so no commit path can skip one.
+# (_require_policies), and every verb that writes new rows admits them
+# against the policies (_admit; maintenance rewrites re-lay rows that were
+# admitted when first committed). The commit itself (_commit_manifest and
+# the branch claim) knows nothing of policies, so no commit path can skip
+# one.
 # ---------------------------------------------------------------------------
 
 _POLICY_KEYS = (
@@ -2068,8 +2136,8 @@ def _commit_replace(
     expect_bv: int | None = None,
 ) -> int:
     """Commit a FILE-REPLACING change to ``man``: a COW delete/update, DV
-    delete/update, purge, compaction or incremental/partition-scoped
-    optimize replaces ``removed`` files (and/or attaches ``dv_set``
+    delete/update or maintenance base rewrite (:func:`_maintain`)
+    replaces ``removed`` files (and/or attaches ``dv_set``
     sidecars) with ``new_files``. The new files' stats are harvested
     once; both the first claim and the rebase build their manifest with
     :func:`_replace_files`. ``branch`` commits a single claim (no
@@ -3071,56 +3139,28 @@ def purge_deletion_vectors(
     counts deleted rows physically dropped. Prior versions stay
     readable; superseded files and sidecars are reclaimed by
     :func:`vacuum_snapshots`."""
-    import glob
-    import json
     import os
-    import uuid
 
     import pyarrow.parquet as pq
 
-    versions = snapshot_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshots under {path!r}")
-    with open(os.path.join(_manifest_dir(path), f"v{versions[-1]}.json")) as f:
-        man = json.load(f)
-    mapping = man.get("column_mapping") or {}  # scan logical, write physical
+    man, head, _ = _dml_head(path, None)
     dv_map = man.get("dv") or {}
     victims: list[str] = []
-    rows_materialized = 0
+    n_del = 0
     for rel, dv_rel in sorted(dv_map.items()):
-        n_del = _dv_count(os.path.join(path, dv_rel))
+        n = _dv_count(os.path.join(path, dv_rel))
         n_rows = pq.ParquetFile(os.path.join(path, rel)).metadata.num_rows
-        if n_rows == 0 or n_del / n_rows >= min_density:
+        if n_rows == 0 or n / n_rows >= min_density:
             victims.append(rel)
-            rows_materialized += n_del
-    if not victims:
-        return {
-            "version": versions[-1],
-            "files_purged": 0,
-            "files_kept": len(man["files"]),
-            "dvs_kept": len(dv_map),
-            "rows_materialized": 0,
-        }
-    token = uuid.uuid4().hex[:12]
-    sdata, scols = _scan_with_pos(
-        spark, path, victims, {rel: dv_map[rel] for rel in victims},
-        mapping, _phys_schema(man),
+            n_del += n
+    return _maintain(
+        spark, path, man, head, victims, ("files_purged", None),
+        compression=compression,
+        extra=lambda n, _: {
+            "dvs_kept": len(dv_map) - n,
+            "rows_materialized": n_del if n else 0,
+        },
     )
-    new_files, new_values = _route_rewrite(
-        sdata.select(*scols), path, man, token, compression, mapping
-    )
-    version = _commit_replace(
-        path, man, token, removed=victims, new_files=new_files,
-        new_values=new_values,
-    )
-    return {
-        "version": version,
-        "files_purged": len(victims),
-        # every victim is a live, DV-carrying file
-        "files_kept": len(man["files"]) - len(victims),
-        "dvs_kept": len(dv_map) - len(victims),
-        "rows_materialized": rows_materialized,
-    }
 
 
 # ---------------------------------------------------------------------------
@@ -3569,11 +3609,12 @@ def compact_mor(spark: SparkSession, path: str,
                 cluster_by: list[str] | None = None,
                 n_shards: int = 8) -> int:
     """COMPACTION of a MOR table. Default (major): resolve latest-wins
-    ONCE and commit the result as a plain manifest — the delta chain is
-    gone, reads are clean scans again, per-file stats are recomputed when
-    the table carries them. No-op (no new version) on a table without
-    deltas. Prior delta-chain versions stay time-travelable until
-    vacuumed.
+    ONCE over every base and delta file and commit the result as a plain
+    manifest — the delta chain is gone, reads are clean scans again,
+    per-file stats are recomputed when the table carries them, and a
+    hidden-partitioned table's files come out with real tuples. No-op
+    (no new version) on a table without deltas. Prior delta-chain
+    versions stay time-travelable until vacuumed.
 
     ``minor=True`` (r9, VERDICT r8 "Next round" #5): fold the DELTA CHAIN
     ONLY into a single delta group — latest-wins among deltas, one row
@@ -3584,86 +3625,35 @@ def compact_mor(spark: SparkSession, path: str,
     100 TB table whose base rewrite is a weekend job. Correctness is
     order-preserving: the fold ranks delta commits exactly as
     ``_resolve_mor`` does, and the folded group (one row per key) beats
-    base per key just as any delta row did. No-op when the chain is
-    already ≤ 1 group.
+    base per key just as any delta row did; a winning tombstone
+    survives the fold, since it still masks base rows the fold never
+    reads. No-op when the chain is already ≤ 1 group.
 
     ``cluster_by`` (r14, major only): the materialized base goes out
     Z-order-clustered on the given columns with per-file stats for
     them — the weekend major compaction is exactly when a 100 TB MOR
     table can afford to fix its layout, so the rewrite it already pays
-    buys read-side file skipping too (on a partitioned table each
-    partition's files are range-sharded by the Morton code — clustering
-    composes with the hidden layout). Minor refuses ``cluster_by``:
+    buys read-side file skipping too. Minor refuses ``cluster_by``:
     a chain fold rewrites no base file, so there is nothing to
-    cluster."""
-    import json
-    import os
-    import uuid
-
-    versions = snapshot_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshots under {path!r}")
-    with open(os.path.join(_manifest_dir(path), f"v{versions[-1]}.json")) as f:
-        man = json.load(f)
-    if "mor" not in man:
-        return versions[-1]
-    if minor and cluster_by:
+    cluster. Either fold refuses a racing commit (the MOR chain it read
+    moved)."""
+    man, head, _ = _dml_head(path, None)
+    mor = man.get("mor")
+    if mor and minor and cluster_by:
         raise ValueError(
             "cluster_by is a MAJOR compaction option — a minor fold "
             "rewrites no base file, so there is nothing to cluster"
         )
-    if minor:
-        deltas = man["mor"]["deltas"]
-        if len(deltas) <= 1:
-            return versions[-1]
-        # latest-wins among the CHAIN only: re-rank group 1 as the "base"
-        # of a synthetic manifest and groups 2..n as its deltas — the
-        # relative commit order (all that the window uses) is identical,
-        # so the fold IS _resolve_mor restricted to the chain.
-        # keep_tombstones: a winning op='D' row must SURVIVE the fold —
-        # it still masks base rows the minor compaction never reads
-        # (dropping it would resurrect the deleted key).
-        folded = _resolve_mor(
-            spark, path, _chain_manifest(man, deltas[0], deltas[1:]),
-            keep_tombstones=bool(man["mor"].get("op_col")),
-        )
-        token = uuid.uuid4().hex[:12]
-        # routed write (r14): on a partitioned MOR table the folded
-        # group keeps real tuples (mapping renamed physically inside)
-        new_files, new_values = _write_delta_group_routed(
-            folded, path, man, token, compression
-        )
-        manifest = _chain_manifest(
-            man, man["files"],  # base untouched, byte for byte
-            [new_files] if new_files else [], new_files, new_values,
-            _new_file_stats(path, man, new_files, man.get("column_mapping")),
-        )
-        return _commit_manifest(path, manifest, token)
-    stats_cols = None
-    if "stats" in man:
-        stats_cols = sorted(
-            {c for per_file in man["stats"].values() for c in per_file}
-        )
-    if cluster_by:
-        stats_cols = sorted(set(stats_cols or []) | set(cluster_by))
-    resolved = read_snapshot(spark, path)
-    if cluster_by and not resolved.isEmpty():
-        resolved = zorder_layout(resolved, cluster_by, n_shards)
-    part = man.get("partition")
-    if part and part.get("specs"):
-        # r14: a partitioned MOR table's major compaction keeps the
-        # hidden layout — the materialized base goes out through the
-        # partitioned writer (overwrite sheds the chain wholesale, the
-        # write_snapshot-on-MOR rule) with fresh tuples on every file.
-        return write_snapshot_partitioned(
-            spark, resolved, path, part["specs"][part["current"]],
-            mode="overwrite", compression=compression,
-            stats_cols=stats_cols,
-        )
-    return write_snapshot(
-        spark, resolved, path,
-        compression=compression, stats_cols=stats_cols,
-    )
+    if not mor or (minor and len(mor["deltas"]) <= 1):
+        base, groups = [], None
+    else:
+        base, groups = ([] if minor else man["files"]), mor["deltas"]
+    return _maintain(
+        spark, path, man, head, base, groups=groups, minor=minor,
+        compression=compression,
+        cluster=(cluster_by, n_shards) if cluster_by else None,
+        stats_cols=cluster_by or (),
+    )["version"]
 
 
 def _write_delta_group(
@@ -3711,8 +3701,8 @@ def _write_delta_group_routed(
     spec column absent from the frame (a legacy non-key spec) degrades
     to the plain untupled write — pruning degrades, never lies. A group
     with no surviving file leaves no directory behind.
-    ``max_records_per_file`` caps the hive writer's files (the
-    partition-scoped chain fold's target size)."""
+    ``max_records_per_file`` caps the hive writer's files (a
+    partition-scoped fold's target size)."""
     import os
 
     import pyarrow.parquet as _pq
@@ -3786,8 +3776,7 @@ def _chain_manifest(
     stats survive for live files only (``new_stats`` adds the new
     files'), and the txn watermarks carry over with ``txn`` advanced.
     Shared by the first claim and the rebase of :func:`_commit_group`,
-    by the chain folds (minor :func:`compact_mor`,
-    :func:`_optimize_partitions_mor`), and by every read of a pruned or
+    by the chain folds of :func:`_maintain`, and by every read of a pruned or
     re-ranked chain (the sub-manifest a resolve reads)."""
     m2 = {
         "files": list(files),
@@ -6640,13 +6629,14 @@ def _carry_partition(
     routed through the hive writer, r11 verdict #2) or map to None
     (= never pruned) when the rewrite didn't partition-cluster — pruning
     degrades on that fraction, never lies. Called by
-    :func:`_replace_files` for every file-replacing commit (DML, purge,
-    small-file compaction, incremental and partition-scoped optimize)
-    and every append (:func:`write_snapshot`,
+    :func:`_replace_files` for every file-replacing commit (DML and
+    every maintenance rewrite, :func:`optimize_snapshot` included) and
+    every append (:func:`write_snapshot`,
     :func:`write_snapshot_partitioned`, :func:`write_snapshot_to_branch`);
     the partition block is the one policy carried this way, because its
-    tuples follow the files. A full overwrite (e.g.
-    :func:`optimize_snapshot`) writes no block."""
+    tuples follow the files. An overwrite writes its own block: a fresh
+    one from :func:`write_snapshot_partitioned`, none from
+    :func:`write_snapshot`."""
     part = man.get("partition")
     if not part:
         return
@@ -6669,9 +6659,10 @@ def _route_rewrite(
     token: str,
     compression: str,
     mapping: dict | None = None,
+    max_records_per_file: int | None = None,
 ) -> tuple[list[str], dict | None]:
-    """Land a DML rewrite's surviving rows and return ``(new rel paths,
-    {rel: [sid, tuple]} | None)``. On a hidden-partitioned table the
+    """Land a DML or maintenance rewrite's rows and return ``(new rel
+    paths, {rel: [sid, tuple]} | None)``. On a hidden-partitioned table the
     rows route through the hive writer under the CURRENT spec, so the
     rewritten files come out with REAL partition tuples and pruning
     holds immediately after DML (r11 verdict #2 — the transforms are
@@ -6679,7 +6670,8 @@ def _route_rewrite(
     pre-r12 these files carried None tuples until an
     optimize_partitions repair pass). Unpartitioned tables take the
     plain single-directory write. ``df_logical`` speaks logical names;
-    ``mapping`` renames to the table's physical schema at write."""
+    ``mapping`` renames to the table's physical schema at write;
+    ``max_records_per_file`` caps the hive writer's files."""
     import glob
     import os
 
@@ -6691,7 +6683,7 @@ def _route_rewrite(
         }
         return _write_partitioned_files(
             df_logical, path, spec, part["current"], dtypes, compression,
-            mapping,
+            mapping, max_records_per_file,
         )
     out = (
         df_logical.withColumnsRenamed(mapping) if mapping else df_logical
@@ -6858,13 +6850,14 @@ def evolve_partition_spec(path: str, new_spec) -> int:
 # _scan_with_pos(mapping=...)) and rename logical->physical just before
 # the write; stats harvest physical and store logical (_stats_logical);
 # the mapping rides every commit (MERGE included — its r12 file-skipping
-# rewrite goes through the same logical-scan/physical-write path). Full
-# overwrites (write_snapshot overwrite, materialize_column_mapping) read
-# logical and write logical, which MATERIALIZES the rename and clears
-# the map. r13: MOR tables map natively too — base files and every
-# delta group share the table's ONE physical schema, deltas arrive
-# logical and write physical, _resolve_mor reads physical / emits
-# logical, and rename_column re-keys the mor block's key/seq names.
+# rewrite goes through the same logical-scan/physical-write path, and so
+# do the maintenance rewrites). Full overwrites (write_snapshot
+# overwrite, materialize_column_mapping) read logical and write logical,
+# which MATERIALIZES the rename and clears the map. r13: MOR tables map
+# natively too — base files and every delta group share the table's ONE
+# physical schema, deltas arrive logical and write physical, _resolve_mor
+# reads physical / emits logical, and rename_column re-keys the mor
+# block's key/seq names.
 # ---------------------------------------------------------------------------
 
 
@@ -6977,13 +6970,21 @@ def column_mapping(path: str) -> dict[str, str]:
 
 def materialize_column_mapping(spark: SparkSession, path: str) -> int:
     """Rewrite the table once with logical file names and clear the map
-    — the verb that re-admits the partial-rewrite DML suite. Plain
-    read-logical/write-overwrite, so it inherits the commit protocol
-    (and re-validates nothing: the rows are unchanged)."""
-    versions = snapshot_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshots under {path!r}")
-    return write_snapshot(spark, read_snapshot(spark, path), path)
+    — the verb that re-admits the partial-rewrite DML suite. A full
+    rewrite of the head it read (re-validating nothing: the rows are
+    unchanged); clearing the map changes every file's column names, so
+    no racing commit can be rebased onto it — a lost race raises
+    :class:`ConcurrentCommitError`."""
+    import uuid
+
+    man, _, _ = _dml_head(path, None)
+    df = _manifest_df(spark, path, man)
+    token = uuid.uuid4().hex[:12]
+    new_files, _ = _route_rewrite(df, path, {}, token, PARQUET_CODEC)
+    schema = {f.name: f.dataType.simpleString() for f in df.schema}
+    return _commit_write(
+        path, man, token, False, schema, new_files, rebase=False
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -7134,9 +7135,10 @@ def _write_partitioned_files(
     """Write ``df`` hive-laid-out under ``spec`` into a fresh
     ``data/<token>/`` and return ``(sorted new rel paths, {rel: [sid,
     tuple]})`` — the shared physical half of
-    :func:`write_snapshot_partitioned`, :func:`optimize_partitions` and
-    the DML rewrite router. Nothing is committed: the caller owns the
-    manifest. ``df`` and ``spec`` speak LOGICAL names; ``mapping``
+    :func:`write_snapshot_partitioned` and the rewrite routers
+    (:func:`_route_rewrite`, :func:`_write_delta_group_routed`). Nothing
+    is committed: the caller owns the manifest. ``df`` and ``spec``
+    speak LOGICAL names; ``mapping``
     (logical->physical) renames the data columns just before the write
     so a column-mapped table's files keep its one physical schema."""
     import glob
@@ -7246,245 +7248,84 @@ def optimize_partitions(
     instead of one monster a single reader must chew through at 100x
     scale (``None`` restores the one-file-per-tuple fold). Returns
     ``{"version", "files_rewritten", "files_kept",
-    "partitions_matched"}``; a no-match call commits nothing."""
-    versions = snapshot_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshots under {path!r}")
-    man = _load_manifest(path, versions[-1])
-    mapping = man.get("column_mapping") or {}  # scan logical, write physical
-    if man.get("mor"):
-        # r14 (r13 verdict #4): partition-scoped maintenance on MOR —
-        # fold only the matched partitions' chains
-        return _optimize_partitions_mor(
-            spark, path, man, where, compression, target_file_bytes,
-            minor,
-        )
-    if minor:
-        raise ValueError(
-            "minor=True folds a MOR delta chain — this table has none"
-        )
+    "partitions_matched"}``; a no-match call commits nothing.
+
+    On a MOR table (r14, r13 verdict #4: folding one hot partition of a
+    100 TB CDC table must not mean compacting everything) the matched
+    partitions' base and delta files fold: ``minor=False`` (default)
+    resolves latest-wins over exactly them, drops tombstones and writes
+    fresh BASE files; ``minor=True`` folds their DELTA files only into
+    one group appended at the chain's end, tombstones kept. Unmatched
+    files ride through byte-identical, and emptied groups keep their
+    commit ranks. SOUNDNESS: the fold's file set must be closed under
+    MOR keys — otherwise a loser row left in the chain would outrank the
+    folded winner. Spec sources are KEY columns (a key's tuple is
+    constant across its commits) and every live file must carry a REAL
+    tuple (refused otherwise; a full :func:`compact_mor` repairs
+    pre-partitioning history), so a key has all of its rows in
+    tuple-equal files and per-partition resolution equals global
+    resolution restricted to the partition."""
+    man, head, _ = _dml_head(path, None)
+    mor = man.get("mor")
     part = man.get("partition")
-    if not part:
-        raise ValueError(
-            "table has no partition spec — use optimize_snapshot / "
-            "compact_small_files_snapshot for unpartitioned layouts"
-        )
-    spec = part["specs"][part["current"]]
-    matched, total = partition_pruned_files(
-        path, where, versions[-1], spark
-    )
-    if not matched:
-        return {
-            "version": versions[-1],
-            "files_rewritten": 0,
-            "files_kept": total,
-            "partitions_matched": 0,
-        }
-    dv_map = man.get("dv") or {}
-    # DV-aware scan of the matched files: existing deletes materialize
-    # with the rewrite (the vector dies with the file it describes)
-    sdata, scols = _scan_with_pos(
-        spark, path, matched, {r: dv_map[r] for r in matched if r in dv_map},
-        mapping, _phys_schema(man),
-    )
-    dtypes = {
-        f.name: f.dataType.simpleString()
-        for f in sdata.select(*scols).schema
-    }
-    max_records = None
-    if target_file_bytes is not None:
-        # derive the row cap from the matched files' OWN bytes/row
-        # (footer metadata + stat calls only — these files are being
-        # rewritten anyway, and compressed bytes in approximate
-        # compressed bytes out)
-        import os as _os
-
-        import pyarrow.parquet as _pq
-
-        tot_bytes = tot_rows = 0
-        for rel in matched:
-            fp = _os.path.join(path, rel)
-            try:
-                tot_bytes += _os.path.getsize(fp)
-                tot_rows += _pq.ParquetFile(fp).metadata.num_rows
-            except OSError:
-                pass
-        if tot_bytes and tot_rows:
-            max_records = max(
-                1, int(target_file_bytes * tot_rows // tot_bytes)
+    if mor:
+        if not part or not part.get("specs"):
+            raise ValueError(
+                "MOR table has no partition spec — compact_mor folds the "
+                "whole chain"
             )
-    new_files, new_values = _write_partitioned_files(
-        sdata.select(*scols), path, spec, part["current"], dtypes,
-        compression, mapping, max_records_per_file=max_records,
-    )
-    import uuid
-
-    version = _commit_replace(
-        path, man, uuid.uuid4().hex[:12], removed=matched,
-        new_files=new_files, new_values=new_values,
-    )
-    return {
-        "version": version,
-        "files_rewritten": len(matched),
-        "files_kept": len(man["files"]) - len(matched),
-        "partitions_matched": len(
-            {tuple(v[1]) for v in new_values.values()}
-        ),
-    }
-
-
-def _optimize_partitions_mor(
-    spark: SparkSession,
-    path: str,
-    man: dict,
-    where: dict,
-    compression: str,
-    target_file_bytes: int | None,
-    minor: bool,
-) -> dict:
-    """Partition-scoped OPTIMIZE on a MOR table (r14, r13 verdict #4 —
-    previously the only maintenance verb was a whole-chain
-    :func:`compact_mor`, so folding one hot partition of a 100 TB CDC
-    table meant compacting everything):
-
-    * ``minor=False`` (major, default): MATERIALIZE the matched
-      partitions — resolve latest-wins over exactly their base + chain
-      files, drop tombstones, and write the result as fresh BASE files
-      through the hive writer (target-size fan-out); the matched files
-      leave the manifest, every unmatched partition's base and delta
-      files ride through byte-identical.
-    * ``minor=True``: fold the matched partitions' DELTA files into one
-      group appended at the chain's end (``keep_tombstones`` — they
-      still mask base rows the fold never reads); base files are
-      untouched everywhere.
-
-    SOUNDNESS: the fold's matched file set must be closed under MOR
-    keys — otherwise a loser row left in the chain at its old commit
-    rank would outrank the folded winner (or a folded winner would
-    shadow a newer unmatched row). Two table invariants provide the
-    closure: spec sources are KEY columns (a key's tuple is constant
-    across its commits) and every live file carries a REAL tuple (this
-    verb refuses when any doesn't — hive-routed writes always tuple, so
-    only pre-partitioning history can violate it, and a full
-    :func:`compact_mor` repairs that). A key therefore has ALL of its
-    rows in tuple-equal files: tuple-matched sets are key-closed, and
-    per-partition resolution equals global resolution restricted to the
-    partition."""
-    import os
-    import uuid
-
-    import pyarrow.parquet as _pq
-
-    versions = snapshot_versions(path)
-    mor = man["mor"]
-    part = man.get("partition")
-    if not part or not part.get("specs"):
-        raise ValueError(
-            "MOR table has no partition spec — compact_mor folds the "
-            "whole chain"
+        spec = part["specs"][part["current"]]
+        bad = sorted(
+            t["col"] for t in spec if t["col"] not in mor["key_cols"]
         )
-    spec = part["specs"][part["current"]]
-    bad = sorted(t["col"] for t in spec if t["col"] not in mor["key_cols"])
-    if bad:
-        raise ValueError(
-            f"partition-scoped MOR optimize needs a key-column spec — "
-            f"{bad} are not in {mor['key_cols']} (fold closure fails)"
-        )
-    vals = (part.get("values") or {})
-    live = list(man["files"]) + [
-        rel for grp in mor["deltas"] for rel in grp
-    ]
-    untupled = [rel for rel in live if vals.get(rel) is None]
-    if untupled:
-        raise ValueError(
-            f"partition-scoped MOR optimize needs a partition tuple on "
-            f"every live file — {len(untupled)} file(s) predate the "
-            "layout (the matched set must be key-closed to fold "
-            "soundly); run compact_mor (full) once to repair"
-        )
-    matched_base = set(_partition_keep(part, man["files"], where, spark))
-    matched_groups = [
-        set(_partition_keep(part, grp, where, spark))
-        for grp in mor["deltas"]
-    ]
-    matched = sorted(matched_base | set().union(*matched_groups, set()))
-    n_delta_matched = sum(len(g) for g in matched_groups)
-    no_op = {
-        "version": versions[-1],
-        "files_rewritten": 0,
-        "files_kept": len(live),
-        "partitions_matched": 0,
-    }
-    if minor and n_delta_matched == 0:
-        return no_op
-    if not matched:
-        return no_op
-    max_records = None
-    if target_file_bytes is not None:
-        fold_rels = (
-            [r for g in matched_groups for r in g] if minor else matched
-        )
-        tot_bytes = tot_rows = 0
-        for rel in fold_rels:
-            fp = os.path.join(path, rel)
-            try:
-                tot_bytes += os.path.getsize(fp)
-                tot_rows += _pq.ParquetFile(fp).metadata.num_rows
-            except OSError:
-                pass
-        if tot_bytes and tot_rows:
-            max_records = max(
-                1, int(target_file_bytes * tot_rows // tot_bytes)
+        if bad:
+            raise ValueError(
+                f"partition-scoped MOR optimize needs a key-column spec — "
+                f"{bad} are not in {mor['key_cols']} (fold closure fails)"
             )
-    token = uuid.uuid4().hex[:12]
-    if minor:
-        # fold matched DELTA files only, tombstones kept (they mask
-        # base rows this fold never reads)
-        groups_m = [sorted(g) for g in matched_groups]
-        folded = _resolve_mor(
-            spark, path, _chain_manifest(man, groups_m[0], groups_m[1:]),
-            keep_tombstones=bool(mor.get("op_col")),
-        )
-        new_files, new_values = _write_delta_group_routed(
-            folded, path, man, token, compression, max_records
-        )
-        new_deltas = [
-            [rel for rel in grp if rel not in mset]
-            for grp, mset in zip(mor["deltas"], matched_groups)
-        ] + ([new_files] if new_files else [])
-        base = man["files"]  # untouched, byte for byte
-        n_rewritten = n_delta_matched
-    else:
-        sub = _chain_manifest(
-            man, sorted(matched_base), [sorted(g) for g in matched_groups]
-        )
-        folded = _resolve_mor(spark, path, sub)  # tombstones shed
-        new_files, new_values = _write_delta_group_routed(
-            folded, path, man, token, compression, max_records
-        )
-        # emptied groups stay positionally: they hold commit ranks
-        new_deltas = [
-            [rel for rel in grp if rel not in mset]
-            for grp, mset in zip(mor["deltas"], matched_groups)
+        vals = part.get("values") or {}
+        live = man["files"] + [rel for grp in mor["deltas"] for rel in grp]
+        untupled = [rel for rel in live if vals.get(rel) is None]
+        if untupled:
+            raise ValueError(
+                f"partition-scoped MOR optimize needs a partition tuple on "
+                f"every live file — {len(untupled)} file(s) predate the "
+                "layout (the matched set must be key-closed to fold "
+                "soundly); run compact_mor (full) once to repair"
+            )
+        base = _partition_keep(part, man["files"], where, spark)
+        groups = [
+            _partition_keep(part, grp, where, spark) for grp in mor["deltas"]
         ]
-        base = [
-            rel for rel in man["files"] if rel not in matched_base
-        ] + new_files
-        n_rewritten = len(matched)
-    manifest = _chain_manifest(
-        man, base, new_deltas, new_files, new_values,
-        _new_file_stats(path, man, new_files, man.get("column_mapping")),
+        matched = base + [rel for grp in groups for rel in grp]
+        base = [] if minor else base
+
+        def tuples(n, _):
+            return {"partitions_matched": len(
+                {tuple(vals[rel][1]) for rel in matched}
+            ) if n else 0}
+    else:
+        if minor:
+            raise ValueError(
+                "minor=True folds a MOR delta chain — this table has none"
+            )
+        if not part:
+            raise ValueError(
+                "table has no partition spec — use optimize_snapshot / "
+                "compact_small_files_snapshot for unpartitioned layouts"
+            )
+        base, groups = _partition_keep(part, man["files"], where, spark), None
+
+        def tuples(_, new_values):
+            return {"partitions_matched": len(
+                {tuple(v[1]) for v in new_values.values()}
+            )}
+
+    return _maintain(
+        spark, path, man, head, base, groups=groups, minor=minor,
+        compression=compression, target_bytes=target_file_bytes,
+        extra=tuples,
     )
-    # read-modify-write: a concurrent commit invalidates the fold
-    version = _commit_manifest(path, manifest, token)
-    return {
-        "version": version,
-        "files_rewritten": n_rewritten,
-        "files_kept": len(live) - n_rewritten,
-        "partitions_matched": len(
-            {tuple(vals[rel][1]) for rel in matched}
-        ),
-    }
 
 
 # ---------------------------------------------------------------------------

@@ -807,6 +807,9 @@ def _maintenance_table(spark, path, verb):
         storage.delete_where_snapshot(spark, path, "k = 1", mode="dv")
         keys.remove(1)
     run = {
+        "optimize_snapshot": lambda: {
+            "version": storage.optimize_snapshot(spark, path, ["k"], 2)
+        },
         "compact_small_files_snapshot":
             lambda: storage.compact_small_files_snapshot(spark, path),
         "optimize_snapshot_incremental":
@@ -827,6 +830,7 @@ def _maintenance_table(spark, path, verb):
 
 
 @pytest.mark.parametrize("verb", [
+    "optimize_snapshot",
     "compact_small_files_snapshot",
     "optimize_snapshot_incremental",
     "purge_deletion_vectors",
@@ -1006,6 +1010,64 @@ def test_mor_minor_compaction_racing_upsert_refuses(spark, monkeypatch):
         man = storage._load_manifest(path, head + 2)
         assert len(man["mor"]["deltas"]) == 1
         assert _mor_world(spark, path) == want
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+
+
+def test_mor_major_compaction_racing_upsert_refuses(spark, monkeypatch):
+    """A major compaction resolves the chain it read; a racing upsert's
+    group is not in that resolve, so the compaction refuses naming the
+    moved chain, the group survives, and the retry folds it too."""
+    scratch, path = _mkpath()
+    try:
+        head = _mor_table(spark, path, [(1, 11.0, 1)])
+        _RaceOnce(
+            monkeypatch, f"v{head + 1}.json", _upsert_key_5(spark, path)
+        )
+        with pytest.raises(storage.ConcurrentCommitError, match="MOR chain"):
+            storage.compact_mor(spark, path)
+        want = {0: 0.0, 1: 11.0, 2: 2.0, 5: 5.0}
+        man = storage._load_manifest(path, head + 1)
+        assert len(man["mor"]["deltas"]) == 2
+        assert _mor_world(spark, path) == want
+        assert storage.compact_mor(spark, path) == head + 2
+        assert "mor" not in storage._load_manifest(path, head + 2)
+        assert _mor_world(spark, path) == want
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+
+
+def test_materialize_column_mapping_racing_append_refuses(
+    spark, monkeypatch
+):
+    """Materializing a rename rewrites every file under logical names and
+    clears the map, so a racing append cannot be rebased onto it: the
+    materialize refuses and the appended row survives."""
+    scratch, path = _mkpath()
+    try:
+        storage.write_snapshot(spark, _df(spark, [(0, 0.0), (1, 1.0)]), path)
+        storage.write_snapshot(
+            spark, _df(spark, [(2, 2.0), (3, 3.0)]), path, mode="append"
+        )
+        storage.rename_column(path, "v", "w")
+        head = storage.snapshot_versions(path)[-1]
+
+        def append():
+            storage.write_snapshot(
+                spark, _df(spark, [(100, 100.0)], "k bigint, w double"),
+                path, mode="append",
+            )
+
+        _RaceOnce(monkeypatch, f"v{head + 1}.json", append)
+        with pytest.raises(storage.ConcurrentCommitError):
+            storage.materialize_column_mapping(spark, path)
+        assert storage.snapshot_versions(path)[-1] == head + 1
+        got = {
+            r["k"]: r["w"]
+            for r in storage.read_snapshot(spark, path).collect()
+        }
+        assert got == {0: 0.0, 1: 1.0, 2: 2.0, 3: 3.0, 100: 100.0}
+        assert storage.column_mapping(path) == {"w": "v"}
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 

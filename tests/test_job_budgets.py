@@ -12,7 +12,13 @@ stats-carrying table turned MOR by its first upsert), the same DELETE and
 UPDATE on a plain stats-carrying table in copy-on-write and DV mode, a
 MERGE on a bloom-indexed copy-on-write table, a branch append, and a
 write that supplies a generated column on a constrained table: that
-write's admission checks both contracts in one aggregate job. Lower a budget in the change that earns the lower count."""
+write's admission checks both contracts in one aggregate job. The
+maintenance verbs each run once on a small table of their own: a
+three-file stats-carrying table (Z-order optimize, then an incremental
+optimize of two appended files, small-file compaction, a DV purge), a
+hidden-partitioned table, and MOR tables with several delta groups, one
+of them hidden-partitioned. Lower a budget in the change that earns the
+lower count."""
 
 from __future__ import annotations
 
@@ -49,6 +55,15 @@ BUDGETS = {
     # one admission job (generated values and CHECK constraints in one
     # aggregate) plus the write
     "admitted_write": 2,
+    # the maintenance verbs, each on a tiny table that gives it work
+    "optimize_snapshot": 4,
+    "optimize_incremental": 4,
+    "compact_small": 1,
+    "purge_dv": 2,
+    "optimize_partitions": 1,
+    # a minor fold, then a major one, of one partition's chain
+    "optimize_partitions_mor": 2,
+    "compact_mor_minor": 1,
 }
 
 
@@ -74,12 +89,107 @@ def _rows(spark, ks, tag, seq):
     )
 
 
+def _append(spark, path, ks, tag, seq=0):
+    storage.write_snapshot(
+        spark, _rows(spark, ks, tag, seq).coalesce(1), path,
+        mode="append" if storage.snapshot_versions(path) else "overwrite",
+        stats_cols=["k"],
+    )
+
+
+def _grouped(spark, ks, tag, seq):
+    return spark.createDataFrame(
+        [Row(k=k, g="a" if k % 2 else "b", val=f"{tag}{k}", seq=seq)
+         for k in ks],
+        "k bigint, g string, val string, seq bigint",
+    )
+
+
+def _committing_jobs(spark, path, fn) -> int:
+    """Jobs of ``fn``, a maintenance call that must commit: a verb that
+    found no work would measure a count that says nothing."""
+    head = storage.snapshot_versions(path)[-1]
+    n = _jobs(spark, fn)
+    assert storage.snapshot_versions(path)[-1] > head, "no commit"
+    return n
+
+
+def _maintenance_jobs(spark, opath, ppath, rpath) -> dict:
+    """Job counts of the maintenance verbs, each on a table it has work
+    on."""
+    measured = {}
+    for i in range(3):
+        _append(spark, opath, range(10 * i, 10 * i + 10), "o")
+    measured["optimize_snapshot"] = _committing_jobs(
+        spark, opath, lambda: storage.optimize_snapshot(spark, opath, ["k"], 2)
+    )
+    since = storage.snapshot_versions(opath)[-1]
+    for i in range(3, 5):
+        _append(spark, opath, range(10 * i, 10 * i + 10), "o")
+    measured["optimize_incremental"] = _committing_jobs(
+        spark, opath, lambda: storage.optimize_snapshot_incremental(
+            spark, opath, ["k"], since_version=since, n_shards=2,
+        ),
+    )
+    for i in range(5, 8):
+        _append(spark, opath, range(10 * i, 10 * i + 10), "o")
+    measured["compact_small"] = _committing_jobs(
+        spark, opath,
+        lambda: storage.compact_small_files_snapshot(spark, opath),
+    )
+    storage.delete_where_snapshot(spark, opath, F.col("k") < 5, mode="dv")
+    measured["purge_dv"] = _committing_jobs(
+        spark, opath, lambda: storage.purge_deletion_vectors(spark, opath)
+    )
+    spec = [("identity", "g")]
+    for i in range(2):
+        storage.write_snapshot_partitioned(
+            spark, _grouped(spark, range(10 * i, 10 * i + 10), "p", 0),
+            ppath, spec, mode="append" if i else "overwrite",
+        )
+    measured["optimize_partitions"] = _committing_jobs(
+        spark, ppath, lambda: storage.optimize_partitions(
+            spark, ppath, {"g": ("=", "a")},
+        ),
+    )
+    storage.write_snapshot_partitioned(
+        spark, _grouped(spark, range(20), "r", 0), rpath, spec
+    )
+    for seq in (1, 2):
+        storage.upsert_delta_snapshot(
+            spark, rpath, _grouped(spark, range(seq, 20, 3), "u", seq),
+            ["k", "g"], "seq",
+        )
+
+    def _fold_partition():
+        storage.optimize_partitions(
+            spark, rpath, {"g": ("=", "a")}, minor=True
+        )
+        storage.optimize_partitions(spark, rpath, {"g": ("=", "a")})
+
+    measured["optimize_partitions_mor"] = _committing_jobs(
+        spark, rpath, _fold_partition
+    )
+    for seq in (3, 4):
+        storage.upsert_delta_snapshot(
+            spark, rpath, _grouped(spark, range(seq, 20, 4), "v", seq),
+            ["k", "g"], "seq",
+        )
+    measured["compact_mor_minor"] = _committing_jobs(
+        spark, rpath, lambda: storage.compact_mor(spark, rpath, minor=True)
+    )
+    return measured
+
+
 def test_storage_verb_job_budgets(spark):
     scratch = tempfile.mkdtemp(prefix="budget_test_")
     path = os.path.join(scratch, "t")
     gpath = os.path.join(scratch, "g")
     cpath = os.path.join(scratch, "c")
     mpath = os.path.join(scratch, "m")
+    opath = os.path.join(scratch, "o")
+    ppath = os.path.join(scratch, "p")
+    rpath = os.path.join(scratch, "r")
     measured = {}
     try:
         storage.write_snapshot(
@@ -158,6 +268,7 @@ def test_storage_verb_job_budgets(spark):
                 gpath, mode="append",
             ),
         )
+        measured.update(_maintenance_jobs(spark, opath, ppath, rpath))
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
     print("measured job counts:", measured)

@@ -606,7 +606,8 @@ def test_compaction_verbs_carry_partition_block(spark):
         man = storage._load_manifest(
             path, storage.snapshot_versions(path)[-1]
         )
-        assert "partition" in man  # block survives (new files -> None)
+        assert "partition" in man  # block survives, new files tupled
+        assert all(v is not None for v in man["partition"]["values"].values())
         got = storage.read_snapshot_partitioned(
             spark, path,
             {"ts": ("between", D(2024, 3, 1), D(2024, 3, 1, 23, 59))},
@@ -615,6 +616,50 @@ def test_compaction_verbs_carry_partition_block(spark):
             F.col("ts").between(D(2024, 3, 1), D(2024, 3, 1, 23, 59))
         )
         assert _sorted(got) == _sorted(want)
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+
+
+def test_optimize_snapshot_keeps_partition_spec(spark):
+    """A whole-table Z-order OPTIMIZE of a hidden-partitioned table keeps
+    its spec: every rewritten file carries a real tuple, partitioned
+    reads stay exact, and partition-scoped maintenance still runs."""
+    scratch, path = _mkpath()
+    try:
+        def rows(keys):
+            return spark.createDataFrame(
+                [Row(k=k, g="a" if k % 3 else "b", v=float(k)) for k in keys],
+                "k bigint, g string, v double",
+            )
+
+        spec = [("identity", "g")]
+        storage.write_snapshot_partitioned(spark, rows(range(12)), path, spec)
+        storage.write_snapshot_partitioned(
+            spark, rows(range(12, 20)), path, spec, mode="append"
+        )
+        before = storage._load_manifest(
+            path, storage.snapshot_versions(path)[-1]
+        )
+        v = storage.optimize_snapshot(spark, path, ["k"], n_shards=2)
+        man = storage._load_manifest(path, v)
+        assert man.get("partition") is not None
+        assert man["partition"]["specs"] == before["partition"]["specs"]
+        vals = man["partition"]["values"]
+        assert set(vals) == set(man["files"])
+        assert all(
+            vals[rel] is not None and None not in vals[rel][1]
+            for rel in man["files"]
+        )
+        where = {"g": ("=", "a")}
+        got = storage.read_snapshot_partitioned(spark, path, where)
+        want = storage.read_snapshot(spark, path).filter(F.col("g") == "a")
+        assert _sorted(got) == _sorted(want)
+        assert len(_sorted(want)) == len([k for k in range(20) if k % 3])
+        res = storage.optimize_partitions(spark, path, where)
+        assert res["version"] == v + 1 and res["partitions_matched"] == 1
+        assert _sorted(storage.read_snapshot(spark, path)) == _sorted(
+            rows(range(20))
+        )
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
