@@ -460,9 +460,10 @@ def optimize_snapshot_incremental(
 
     Returns ``{"version", "files_clustered", "files_kept",
     "files_written"}``; no new version when nothing was added, or when
-    the added files hold no row. Refuses MOR tables (deltas aren't in
-    the file list; compact first) and DV-carrying new files (purge
-    first)."""
+    the added files hold no row. An added file's deletion vector
+    applies in the read, so the rewrite drops its deleted rows and the
+    commit drops the vector. Refuses MOR tables (deltas aren't in the
+    file list; compact first)."""
     import os
 
     import pyarrow.parquet as _pq
@@ -484,11 +485,6 @@ def optimize_snapshot_incremental(
         )
     base_files = set(_load_manifest(path, since_version)["files"])
     new_rels = [rel for rel in man["files"] if rel not in base_files]
-    if any(rel in (man.get("dv") or {}) for rel in new_rels):
-        raise ValueError(
-            "incremental OPTIMIZE over DV-carrying files: "
-            "purge_deletion_vectors first"
-        )
     # added files holding zero rows (an empty append's schema-only part
     # files) leave nothing to cluster, nothing worth rewriting
     if not any(
@@ -514,8 +510,8 @@ def compact_small_files_snapshot(
     (:func:`optimize_snapshot` is the full Z-order rewrite; this is the
     cheap daily pass the snapshot-layer scale note prescribes so the
     live-file count tracks data size, not commit count): every file
-    smaller than ``min_file_bytes`` that carries no deletion vector is
-    read once and rewritten as a handful of right-sized files; files
+    smaller than ``min_file_bytes`` is read once, its deletion vector
+    applied, and rewritten as a handful of right-sized files; files
     already at size carry into the new manifest untouched (copy-on-write,
     byte-identical — the delete verb's discipline). Outputs aim at
     ``target_file_bytes`` (default 4× the threshold — the Delta/Iceberg
@@ -530,11 +526,8 @@ def compact_small_files_snapshot(
     import os
 
     man, head, _ = _dml_head(path, None)
-    dv_map = man.get("dv") or {}
     sizes = {
-        rel: os.path.getsize(os.path.join(path, rel))
-        for rel in man["files"]
-        if rel not in dv_map
+        rel: os.path.getsize(os.path.join(path, rel)) for rel in man["files"]
     }
     small = [rel for rel, n in sizes.items() if n < min_file_bytes]
     # estimate MERGED output bytes, not input-sum: each tiny parquet file
@@ -3429,7 +3422,7 @@ def upsert_delta_snapshot(
 
 def _resolve_mor(
     spark: SparkSession, path: str, manifest: dict,
-    keep_tombstones: bool = False,
+    keep_tombstones: bool = False, base: DataFrame | None = None,
 ) -> DataFrame:
     """Latest-wins resolution of a MOR manifest: base rows rank commit 0,
     each delta group its commit index; one key-partitioned window picks
@@ -3446,7 +3439,13 @@ def _resolve_mor(
     tombstone is masked from the resolved view — unless
     ``keep_tombstones=True`` (the minor-compaction fold, which must
     keep tombstones masking base rows), where the op column stays in
-    the output."""
+    the output.
+
+    ``base`` is a resolved frame in logical names (an earlier version's
+    image of some keys) that ranks as commit 0 next to the manifest's
+    base files: resolving it under a manifest of only the delta groups
+    that followed gives those keys' image after the groups, under every
+    merge engine (:func:`version_delta`'s MOR kind)."""
     import os
 
     from pyspark.sql import Window as W
@@ -3469,15 +3468,15 @@ def _resolve_mor(
     if op:
         phys_of[op] = op  # internal column, never mapped
 
-    def _proj(df):
+    def _proj(df, name_of):
         # Additive schema evolution: a commit written before a column
         # existed (base or early delta) projects it as a typed NULL, the
         # same union contract snapshot_changes and q65 pin.
         have = set(df.columns)
         return df.select(
             *(
-                F.col(phys_of[c]).cast(proj_types[c]).alias(c)
-                if phys_of[c] in have
+                F.col(name_of[c]).cast(proj_types[c]).alias(c)
+                if name_of[c] in have
                 else F.lit(None).cast(proj_types[c]).alias(c)
                 for c in proj_cols
             )
@@ -3503,13 +3502,16 @@ def _resolve_mor(
     # job count of every MOR verb (measured: q86f 48 -> 29 jobs).
     group_ddl = _schema_ddl({phys_of[c]: proj_types[c] for c in proj_cols})
     u = None
+    if base is not None:
+        u = _proj(base, {c: c for c in proj_cols}).withColumn("_ci", F.lit(0))
     for i, grp in enumerate([manifest["files"]] + list(mor["deltas"])):
         if not grp:
             continue
         part = _proj(
             spark.read.schema(group_ddl).parquet(
                 *(os.path.join(path, rel) for rel in grp)
-            )
+            ),
+            phys_of,
         ).withColumn("_ci", F.lit(i))
         u = part if u is None else u.unionByName(part)
     if u is None:
@@ -3904,7 +3906,7 @@ def snapshot_changes(
     ``change_type`` ∈ insert / delete / update with the old and new
     non-key columns as structs (``_old`` / ``_new``, NULL on the absent
     side). Unchanged keys are filtered by a null-safe struct compare, so
-    the feed is exactly the delta.
+    the feed is exactly the delta (:func:`_changes`).
 
     Table formats with a retained commit log derive change feeds from
     the log; diff-of-snapshots is the generic fallback that works for
@@ -3912,53 +3914,77 @@ def snapshot_changes(
     of scanning both versions. The join is a key-partitioned full outer
     — on a layout bucketed by the key it plans with zero Exchange, and
     AQE broadcasts the small side when one version is a sliver of the
-    other (the common backfill-diff case)."""
+    other (the common backfill-diff case). A pair across a rename
+    refuses (:func:`_require_one_naming_era`)."""
+    old = read_snapshot(spark, path, version=v_from)
+    new = read_snapshot(spark, path, version=v_to)
+    _require_one_naming_era(path, v_from, v_to, "snapshot_changes")
+    return _changes(
+        old, new, key_cols, _union_val_schema(path, v_from, v_to, key_cols)
+    )
+
+
+def _require_one_naming_era(
+    path: str, v_from: int, v_to: int, what: str
+) -> None:
+    """Refuse a change diff whose versions name columns differently:
+    each side reads in ITS OWN era's logical names, so a value column
+    renamed between the endpoints would look like a drop+add and every
+    key would emit a spurious update. A rename commit itself is a data
+    noop, so diffing around it (or version by version) loses nothing."""
+    if v_from <= 0:
+        return
+    map_a = _load_manifest(path, v_from).get("column_mapping") or {}
+    map_b = _load_manifest(path, v_to).get("column_mapping") or {}
+    if map_a != map_b:
+        raise ValueError(
+            f"{what} across a rename boundary "
+            f"(v{v_from} mapping {map_a} != v{v_to} mapping {map_b}) "
+            "— diff within one naming era or "
+            "materialize_column_mapping first"
+        )
+
+
+def _val_struct(df: DataFrame, val_cols: list[tuple[str, str]]):
+    """The ``_old``/``_new`` struct of ``df``'s rows over ``val_cols``
+    (:func:`_union_val_schema`): a column ``df`` lacks is a typed NULL,
+    and every field takes the union type, so both sides compare as one
+    struct type."""
     from pyspark.sql import functions as F
 
-    if v_from > 0:
-        map_a = _load_manifest(path, v_from).get("column_mapping") or {}
-        map_b = _load_manifest(path, v_to).get("column_mapping") or {}
-        if map_a != map_b:
-            # each side reads in ITS OWN era's logical names, so a value
-            # column renamed between the endpoints would look like a
-            # drop+add and every key would emit a spurious update —
-            # refuse instead of lying (a rename commit itself is a data
-            # noop; diff around it, or materialize first)
-            raise ValueError(
-                f"snapshot_changes across a rename boundary "
-                f"(v{v_from} mapping {map_a} != v{v_to} mapping {map_b}) "
-                "— diff within one naming era or "
-                "materialize_column_mapping first"
-            )
-    a = read_snapshot(spark, path, version=v_from)
-    b = read_snapshot(spark, path, version=v_to)
-    missing = [c for c in key_cols if c not in a.columns or c not in b.columns]
+    have = set(df.columns)
+    return F.struct(
+        *(
+            (F.col(c) if c in have else F.lit(None)).cast(t).alias(c)
+            for c, t in val_cols
+        )
+    )
+
+
+def _changes(
+    old: DataFrame, new: DataFrame, key_cols: list[str],
+    val_cols: list[tuple[str, str]],
+) -> DataFrame:
+    """The change diff of two images of a table: full outer join on
+    ``key_cols``, drop the keys whose value structs are null-safe equal,
+    and label the rest insert (no old row), delete (no new row) or
+    update. Shared by :func:`snapshot_changes` and every
+    :func:`version_delta` kind that diffs images."""
+    from pyspark.sql import functions as F
+
+    missing = [
+        c for c in key_cols if c not in old.columns or c not in new.columns
+    ]
     if missing:
         raise ValueError(
-            f"snapshot_changes: key columns {missing} absent from "
-            f"v{v_from} or v{v_to} of {path!r}"
+            f"change diff: key columns {missing} absent from one of the "
+            "diffed versions"
         )
-    # ADVICE r5: write_snapshot supports additive schema evolution, so the
-    # value-struct must cover the UNION of both versions' columns — a
-    # column added (or dropped) between versions projects as a typed NULL
-    # on the side that lacks it. Deriving val_cols from v_from alone hid
-    # new columns from both the null-safe compare and the feed.
-    val_cols = [c for c in a.columns if c not in key_cols]
-    val_cols += [c for c in b.columns if c not in key_cols and c not in val_cols]
-    types = {f.name: f.dataType for f in a.schema.fields}
-    types.update({f.name: f.dataType for f in b.schema.fields})
-
-    def _side(df):
-        cols = [
-            F.col(c) if c in df.columns
-            else F.lit(None).cast(types[c]).alias(c)
-            for c in val_cols
-        ]
-        return df.select(*key_cols, F.struct(*cols).alias("_val"))
-
-    oa = _side(a).withColumnRenamed("_val", "_old")
-    ob = _side(b).withColumnRenamed("_val", "_new")
-    j = oa.join(ob, key_cols, "full_outer")
+    j = old.select(*key_cols, _val_struct(old, val_cols).alias("_old")).join(
+        new.select(*key_cols, _val_struct(new, val_cols).alias("_new")),
+        key_cols,
+        "full_outer",
+    )
     return j.filter(~F.col("_old").eqNullSafe(F.col("_new"))).select(
         *key_cols,
         F.when(F.col("_old").isNull(), F.lit("insert"))
@@ -4063,21 +4089,20 @@ def classify_transition(path: str, base_version: int, version: int) -> dict:
 def _union_val_schema(
     path: str, base_version: int, version: int, key_cols: list[str]
 ) -> list[tuple[str, str]]:
-    """[(col, simpleString type)] union of both versions' non-key
-    columns, base-version order first then additions — the same union
-    contract snapshot_changes pins for additive evolution."""
+    """The one column rule of every change diff: ``[(col, type)]`` over
+    the union of both versions' non-key columns, base-version order
+    first, then the columns ``version`` added. A column one version
+    lacks (added or dropped between them) is a typed NULL on that side
+    (additive evolution, ADVICE r5); a column in both takes
+    ``version``'s type, which a widening only ever grows. Base version
+    0 (the empty table) contributes nothing."""
     cur = _load_manifest(path, version)["schema"]
-    prev = (
-        _load_manifest(path, base_version)["schema"]
-        if base_version > 0
-        else {}
-    )
-    out: list[tuple[str, str]] = []
-    for src in (prev, cur):
-        for c, t in src.items():
-            if c not in key_cols and all(c != n for n, _ in out):
-                out.append((c, t))
-    return out
+    prev = _load_manifest(path, base_version)["schema"] if base_version else {}
+    return [
+        (c, cur.get(c, prev.get(c)))
+        for c in {**prev, **cur}
+        if c not in key_cols
+    ]
 
 
 def version_delta(
@@ -4093,16 +4118,21 @@ def version_delta(
     feed that took the table from ``base_version`` (default: the
     retained predecessor of ``version``; 0 = empty table) to
     ``version``, with :func:`snapshot_changes`' exact output contract
-    (``key_cols…, change_type, _old, _new``).
+    (``key_cols…, change_type, _old, _new``), its column union
+    (:func:`_union_val_schema`) and its refusal of a range across a
+    rename (a rename commit alone is an empty delta).
 
     The point is the COST MODEL, dispatched by
     :func:`classify_transition`:
 
     * append commits read ONLY the new files — O(new data);
-    * MOR delta commits read ONLY the new delta groups, then resolve
-      pre-images with one semi-join-pruned probe of the base version
-      (the sliver of changed keys broadcasts; the base scans once,
-      shuffles never) — O(changes) + one pruned scan;
+    * MOR delta commits, under every merge engine, read the new delta
+      groups' keys, probe the base version for those keys with one
+      broadcast semi-join (the base scans once, shuffles never), and
+      resolve that old image as commit 0 under the new groups
+      (:func:`_resolve_mor`'s ``base``), so the rank rule and the
+      engines' folds stay in one place; the two slivers are diffed
+      with :func:`_changes` — O(changes) + one pruned scan;
     * DV delete commits read ONLY the newly-deleted positions of the
       touched files — O(touched files);
     * everything else (COW rewrites, compaction, vacuumed-gap ranges
@@ -4117,7 +4147,6 @@ def version_delta(
     incremental consumer of upstream changes."""
     import os
 
-    from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
     versions = snapshot_versions(path)
@@ -4144,283 +4173,57 @@ def version_delta(
             f"v{version} of {path!r}"
         )
     val_cols = _union_val_schema(path, base_version, version, key_cols)
-    struct_ddl = "struct<" + ",".join(
-        f"{c}:{t}" for c, t in val_cols
-    ) + ">" if val_cols else "struct<>"
-
-    def _vstruct(df):
-        have = set(df.columns)
-        return F.struct(
-            *(
-                (F.col(c) if c in have else F.lit(None).cast(t)).alias(c)
-                for c, t in val_cols
-            )
-        )
-
-    def _null_struct():
-        return F.lit(None).cast(struct_ddl)
-
+    null_struct = F.lit(None).cast(
+        "struct<" + ",".join(f"{c}:{t}" for c, t in val_cols) + ">"
+    )
     if tr["kind"] == "noop":
         key_types = [(c, man["schema"][c]) for c in key_cols]
         return spark.range(0).select(
             *(F.lit(None).cast(t).alias(c) for c, t in key_types),
             F.lit(None).cast("string").alias("change_type"),
-            _null_struct().alias("_old"),
-            _null_struct().alias("_new"),
+            null_struct.alias("_old"),
+            null_struct.alias("_new"),
         )
+    _require_one_naming_era(path, base_version, version, "version_delta")
+    mapping = man.get("column_mapping")
     if tr["kind"] in ("initial", "append"):
         # schema from the transition's manifest, never footer inference
         # (guide §6): one less scheduler round-trip per diffed version,
         # and deterministic on mixed-era file sets
         df = _apply_mapping(
-            spark.read.schema(
-                _schema_ddl(_phys_schema(tr["manifest"]))
-            ).parquet(
+            spark.read.schema(_schema_ddl(_phys_schema(man))).parquet(
                 *(os.path.join(path, rel) for rel in tr["new_files"])
             ),
-            tr["manifest"].get("column_mapping"),
+            mapping,
         )
         return df.select(
             *key_cols,
             F.lit("insert").alias("change_type"),
-            _null_struct().alias("_old"),
-            _vstruct(df).alias("_new"),
+            null_struct.alias("_old"),
+            _val_struct(df, val_cols).alias("_new"),
         )
-    if (
-        tr["kind"] == "mor"
-        and (tr["manifest"].get("mor") or {}).get("merge")
-        in ("partial", "aggregate")
-    ):
-        # r14: LOG-LOCAL feed for the partial/aggregate merge engines —
-        # O(changes), same cost model as the latest-wins mor kind. The
-        # key argument is SUFFIX DECOMPOSABILITY of the fold: with no
-        # tombstone among the new rows, resolution over (old chain ∪
-        # new rows) equals the per-column combine of the base-version
-        # image with the new rows' fold (coalesce for last/partial,
-        # old+Σ for sum, greatest/least for max/min); with a tombstone,
-        # the key's image is the fold of the new rows' eligible suffix
-        # alone (old fully masked). So the feed folds ONLY the new
-        # groups, semi-joins the sliver of touched keys against the
-        # base image, and combines per column — the raw patch (whose
-        # NULLs mean "contributes nothing") is never emitted.
-        mor_blk = tr["manifest"]["mor"]
-        aggs = mor_blk.get("aggs") or {}
-        seq = tr["seq_col"]
-        files = [f for grp in tr["new_groups"] for f in grp]
-        gi = {
-            f: i for i, grp in enumerate(tr["new_groups"]) for f in grp
-        }
-        raw = spark.read.option("mergeSchema", "true").parquet(
-            *(os.path.join(path, rel) for rel in files)
-        )
-        raw = raw.withColumn("_fp", F.col("_metadata.file_path"))
-        raw = _apply_mapping(raw, man.get("column_mapping"))
-        tok = {
-            os.path.basename(os.path.dirname(f)): i for f, i in gi.items()
-        }
-        ci = F.create_map(
-            *(x for t_, i in tok.items() for x in (F.lit(t_), F.lit(i)))
-        )[F.element_at(F.split(F.col("_fp"), "/"), -2)]
-        raw = raw.withColumn("_vd_gi", ci)
-        op = mor_blk.get("op_col")
-        has_op = op is not None and op in raw.columns
-        is_tomb = (
-            F.col(op).eqNullSafe(MOR_DELETE_OP) if has_op else F.lit(False)
-        )
-        w_desc = W.partitionBy(*key_cols).orderBy(
-            F.col("_vd_gi").desc(), F.col(seq).desc()
-        )
-        flagged = raw.withColumn(
-            "_vd_el",
-            F.sum(is_tomb.cast("int")).over(
-                w_desc.rowsBetween(W.unboundedPreceding, W.currentRow)
-            ) == 0,
-        )
-        have = set(flagged.columns)
-
-        def _fold_agg(c, t):
-            v = (
-                F.when(F.col("_vd_el"), F.col(c).cast(t))
-                if c in have else F.lit(None).cast(t)
-            )
-            fn = aggs.get(c, "last")
-            if fn == "sum":
-                return F.sum(v).cast(t).alias(f"_p_{c}")
-            if fn == "max":
-                return F.max(v).alias(f"_p_{c}")
-            if fn == "min":
-                return F.min(v).alias(f"_p_{c}")
-            return F.max_by(
-                v,
-                F.when(
-                    F.col("_vd_el") & v.isNotNull(),
-                    F.struct(F.col("_vd_gi"), F.col(seq)),
-                ),
-            ).alias(f"_p_{c}")
-
-        folded = flagged.groupBy(*key_cols).agg(
-            F.max(is_tomb.cast("int")).alias("_ht"),
-            F.max(F.col("_vd_el").cast("int")).alias("_he"),
-            *(_fold_agg(c, t) for c, t in val_cols),
-        )
-        old = read_snapshot(spark, path, version=base_version)
-        old_small = old.join(
-            F.broadcast(folded.select(*key_cols).distinct()),
-            key_cols,
-            "left_semi",
-        )
-        old_have = set(old_small.columns)
-        o2 = old_small.select(
-            *key_cols,
-            *(
-                (
-                    F.col(c).cast(t) if c in old_have
-                    else F.lit(None).cast(t)
-                ).alias(f"_o_{c}")
-                for c, t in val_cols
-            ),
-            F.lit(True).alias("_has_old"),
-        )
-        j = folded.join(F.broadcast(o2), key_cols, "left_outer")
-        has_old = F.coalesce(F.col("_has_old"), F.lit(False))
-
-        def _img(c, t):
-            P, O = F.col(f"_p_{c}"), F.col(f"_o_{c}")
-            fn = aggs.get(c, "last")
-            if fn == "sum":
-                z = F.lit(0).cast(t)
-                comb = F.when(
-                    P.isNull() & O.isNull(), F.lit(None).cast(t)
-                ).otherwise((F.coalesce(P, z) + F.coalesce(O, z)).cast(t))
-            elif fn == "max":
-                comb = F.greatest(P, O)
-            elif fn == "min":
-                comb = F.least(P, O)
-            else:
-                comb = F.coalesce(P, O)
-            # a tombstone among the new rows masks the old image: the
-            # eligible suffix alone is the fresh value
-            return F.when(F.col("_ht") == 1, P).otherwise(comb).alias(c)
-
-        old_struct = F.when(
-            has_old,
-            F.struct(
-                *(F.col(f"_o_{c}").alias(c) for c, t in val_cols)
-            ),
-        ).otherwise(_null_struct())
-        staged = j.select(
-            *key_cols,
-            F.col("_ht"),
-            F.col("_he"),
-            has_old.alias("_ho"),
-            old_struct.alias("_old"),
-            F.struct(*(_img(c, t) for c, t in val_cols)).alias("_new"),
-        )
-        dead_mask = (F.col("_ht") == 1) & (F.col("_he") == 0)
-        dels = staged.filter(dead_mask & F.col("_ho")).select(
-            *key_cols,
-            F.lit("delete").alias("change_type"),
-            "_old",
-            _null_struct().alias("_new"),
-        )
-        ups = (
-            staged.filter(~dead_mask)
-            .filter(~F.col("_old").eqNullSafe(F.col("_new")))
-            .select(
-                *key_cols,
-                F.when(F.col("_ho"), F.lit("update"))
-                .otherwise(F.lit("insert"))
-                .alias("change_type"),
-                "_old",
-                "_new",
-            )
-        )
-        return ups.unionByName(dels)
     if tr["kind"] == "mor":
-        seq = tr["seq_col"]
-        files = [f for grp in tr["new_groups"] for f in grp]
-        gi = {  # commit order of the new groups, for latest-wins
-            f: i for i, grp in enumerate(tr["new_groups"]) for f in grp
-        }
-        raw = spark.read.option("mergeSchema", "true").parquet(
-            *(os.path.join(path, rel) for rel in files)
+        # the touched keys, tombstoned ones included, under the forced
+        # key schema (no inference job); the broadcast exchange is
+        # planned once and reused by both reads of the old image
+        phys = {(mapping or {}).get(c, c): man["schema"][c] for c in key_cols}
+        keys = _apply_mapping(
+            spark.read.schema(_schema_ddl(phys)).parquet(
+                *(
+                    os.path.join(path, rel)
+                    for grp in tr["new_groups"] for rel in grp
+                )
+            ),
+            mapping,
         )
-        # materialize the path BEFORE the mapping projection (a renamed
-        # frame can lose the scan's _metadata pseudo-column), then
-        # translate physical file names to the logical schema (r13:
-        # mapped MOR tables stream their delta log natively)
-        raw = raw.withColumn("_fp", F.col("_metadata.file_path"))
-        raw = _apply_mapping(raw, man.get("column_mapping"))
-        ci_expr = F.element_at(
-            F.split(F.col("_fp"), "/"), -2
-        )  # token dir identifies the group
-        tok = {os.path.basename(os.path.dirname(f)): i for f, i in gi.items()}
-        ci = F.create_map(
-            *(x for t, i in tok.items() for x in (F.lit(t), F.lit(i)))
-        )[ci_expr]
-        w = W.partitionBy(*key_cols).orderBy(
-            ci.desc(), F.col(seq).desc()
+        old = read_snapshot(spark, path, version=base_version).join(
+            F.broadcast(keys.distinct()), key_cols, "left_semi"
         )
-        latest = (
-            raw.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "_fp")
+        new = _resolve_mor(
+            spark, path, _chain_manifest(man, [], tr["new_groups"]),
+            base=old,
         )
-        # delete-capable chains (r13): a winning tombstone in the new
-        # groups is a DELETE of its key — pre-image from the base
-        # version, no _new side. Keys absent at base that were inserted
-        # AND tombstoned within the range net to nothing.
-        op = (man.get("mor") or {}).get("op_col")
-        has_op = op is not None and op in latest.columns
-        dead = None
-        if has_op:
-            del_mask = F.coalesce(
-                F.col(op) == F.lit(MOR_DELETE_OP), F.lit(False)
-            )
-            dead = latest.filter(del_mask).drop(op)
-            latest = latest.filter(~del_mask).drop(op)
-        old = read_snapshot(spark, path, version=base_version)
-        # prune the base to the changed keys with a broadcast semi-join
-        # (one base scan, no base shuffle), then look up pre-images from
-        # that sliver — the O(changes) exchange shape
-        changed_keys = latest.select(*key_cols)
-        if dead is not None:
-            changed_keys = changed_keys.unionByName(
-                dead.select(*key_cols)
-            )
-        old_small = old.join(
-            F.broadcast(changed_keys.distinct()),
-            key_cols,
-            "left_semi",
-        )
-        d = latest.select(
-            *key_cols, _vstruct(latest).alias("_new")
-        )
-        o = old_small.select(
-            *key_cols, _vstruct(old_small).alias("_old")
-        )
-        j = d.join(F.broadcast(o), key_cols, "left_outer")
-        ups = j.filter(~F.col("_old").eqNullSafe(F.col("_new"))).select(
-            *key_cols,
-            F.when(F.col("_old").isNull(), F.lit("insert"))
-            .otherwise(F.lit("update"))
-            .alias("change_type"),
-            "_old",
-            "_new",
-        )
-        if dead is None:
-            return ups
-        dels = (
-            dead.select(*key_cols)
-            .join(F.broadcast(o), key_cols, "inner")
-            .select(
-                *key_cols,
-                F.lit("delete").alias("change_type"),
-                "_old",
-                _null_struct().alias("_new"),
-            )
-        )
-        return ups.unionByName(dels)
+        return _changes(old, new, key_cols, val_cols)
     if tr["kind"] == "dv":
         old_rels = [o for o, _ in tr["dv_changed"].values() if o]
         new_rels = [n for _, n in tr["dv_changed"].values()]
@@ -4430,9 +4233,7 @@ def version_delta(
         touched = list(tr["dv_changed"])
         # forced manifest schema: deterministic on mixed-era file sets
         # (inference samples ONE footer) and no inference job
-        df = spark.read.schema(
-            _schema_ddl(_phys_schema(tr["manifest"]))
-        ).parquet(
+        df = spark.read.schema(_schema_ddl(_phys_schema(man))).parquet(
             *(os.path.join(path, rel) for rel in touched)
         )
         data = df.select(
@@ -4444,16 +4245,21 @@ def version_delta(
         hit = _apply_mapping(
             data.join(doomed, ["_fname", "_pos"], "left_semi")
             .drop("_fname", "_pos"),
-            tr["manifest"].get("column_mapping"),
+            mapping,
         )
         return hit.select(
             *key_cols,
             F.lit("delete").alias("change_type"),
-            _vstruct(hit).alias("_old"),
-            _null_struct().alias("_new"),
+            _val_struct(hit, val_cols).alias("_old"),
+            null_struct.alias("_new"),
         )
     # rewrite / mixed range: generic diff-of-snapshots fallback
-    return snapshot_changes(spark, path, base_version, version, key_cols)
+    return _changes(
+        read_snapshot(spark, path, version=base_version),
+        read_snapshot(spark, path, version=version),
+        key_cols,
+        val_cols,
+    )
 
 
 def restore_snapshot(path: str, version: int) -> int:

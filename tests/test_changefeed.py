@@ -493,6 +493,65 @@ def test_version_delta_dispatch_matches_snapshot_changes(spark):
                 for r in df.collect()
             )
             assert canon(fast) == canon(slow), f"v{v - 1}->v{v} mismatch"
+        # a MOR history on a bucket-partitioned table: every adjacent
+        # pair and every two-back range equals the snapshot diff
+        mpath = os.path.join(scratch, "mor")
+        ddl = "k bigint, val string, seq bigint, n int"
+        storage.write_snapshot_partitioned(
+            spark,
+            spark.createDataFrame(
+                [Row(k=k, val=f"v{k}", seq=0, n=k) for k in range(8)], ddl
+            ),
+            mpath, [("bucket", "k", 3)],
+        )  # v1
+        storage.upsert_delta_snapshot(
+            spark, mpath, spark.createDataFrame(
+                [Row(k=1, val="u1", seq=1, n=1)], ddl
+            ), ["k"], "seq",
+        )  # v2 turns MOR
+        storage.widen_column_type(mpath, "n", "bigint")  # v3
+        wide = "k bigint, val string, seq bigint, n bigint"
+        storage.upsert_delta_snapshot(
+            spark, mpath, spark.createDataFrame(
+                [Row(k=2, val="u2", seq=2, n=2**40)], wide
+            ), ["k"], "seq",
+        )  # v4 upsert after the widening
+        storage.upsert_delta_snapshot(
+            spark, mpath, spark.createDataFrame(
+                [Row(k=3, val="u3", seq=3, n=3, extra="x")],
+                wide + ", extra string",
+            ), ["k"], "seq",
+        )  # v5 adds a column
+        storage.delete_where_snapshot(spark, mpath, "k = 4")  # v6 MOR delete
+        storage.upsert_delta_snapshot(
+            spark, mpath, spark.createDataFrame(
+                [Row(k=20, val="tmp", seq=4, n=0, extra=None)],
+                wide + ", extra string",
+            ), ["k"], "seq",
+        )  # v7 inserts k=20 ...
+        storage.delete_where_snapshot(spark, mpath, "k = 20")  # v8 ... gone
+        storage.upsert_delta_snapshot(
+            spark, mpath, spark.createDataFrame(
+                [Row(k=5, val=None, seq=0, n=5, extra=None),
+                 Row(k=6, val="v6", seq=0, n=6, extra=None)],
+                wide + ", extra string",
+            ), ["k"], "seq",
+        )  # v9 a NULL overwrite and a same-value upsert
+        head = storage.snapshot_versions(mpath)[-1]
+        assert head == 9
+        for v in range(2, head + 1):
+            for base in {v - 1, max(v - 2, 1)}:
+                fast = storage.version_delta(
+                    spark, mpath, v, ["k"], base_version=base
+                )
+                slow = storage.snapshot_changes(spark, mpath, base, v, ["k"])
+                assert canon(fast) == canon(slow), f"v{base}->v{v} mismatch"
+        d = storage.version_delta(spark, mpath, 8, ["k"], base_version=6)
+        assert d.collect() == []  # k=20 inserted and deleted in range
+        d = storage.version_delta(spark, mpath, 9, ["k"])
+        assert [(r["k"], r["change_type"]) for r in d.collect()] == [
+            (5, "update")
+        ]
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 

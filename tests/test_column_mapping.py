@@ -427,5 +427,44 @@ def test_snapshot_changes_refuses_rename_boundary(spark):
         # within one naming era the diff is fine (v2 -> v3: same mapping)
         d = storage.snapshot_changes(spark, path, 2, 3, key_cols=["k"])
         assert [r["change_type"] for r in d.collect()] == ["insert"]
+        # version_delta keeps snapshot_changes' contract: an append range
+        # across the rename refuses instead of emitting both names
+        with pytest.raises(ValueError, match="rename boundary"):
+            storage.version_delta(spark, path, 3, ["k"], base_version=1)
+        # the rename commit alone is an empty delta, so stepping version
+        # by version still crosses the boundary
+        assert storage.version_delta(
+            spark, path, 2, ["k"], base_version=1
+        ).collect() == []
+        d = storage.version_delta(spark, path, 3, ["k"], base_version=2)
+        assert [(r["k"], tuple(r["_new"])) for r in d.collect()] == [
+            (2, (20.0,))
+        ]
+        # the same on a MOR chain: a delta group after the rename
+        path = os.path.join(scratch, "mor")
+        ddl = "k bigint, v double, seq bigint"
+        storage.write_snapshot(
+            spark, _df(spark, [(k, float(k), 0) for k in range(6)], ddl),
+            path,
+        )
+        storage.upsert_delta_snapshot(
+            spark, path, _df(spark, [(1, 10.0, 1)], ddl), ["k"], "seq"
+        )  # v2
+        storage.rename_column(path, "v", "w")  # v3
+        storage.upsert_delta_snapshot(
+            spark, path,
+            _df(spark, [(2, 20.0, 2)], "k bigint, w double, seq bigint"),
+            ["k"], "seq",
+        )  # v4
+        with pytest.raises(ValueError, match="rename boundary"):
+            storage.version_delta(spark, path, 4, ["k"], base_version=2)
+        assert storage.version_delta(
+            spark, path, 3, ["k"], base_version=2
+        ).collect() == []
+        d = storage.version_delta(spark, path, 4, ["k"], base_version=3)
+        assert [
+            (r["k"], r["change_type"], tuple(r["_old"]), tuple(r["_new"]))
+            for r in d.collect()
+        ] == [(2, "update", (2.0, 0), (20.0, 2))]
     finally:
         shutil.rmtree(scratch, ignore_errors=True)

@@ -834,22 +834,58 @@ class TestDeletionVectors:
         assert not glob.glob(os.path.join(path, "data", "*", "*.dv"))
         assert storage.read_snapshot(spark, path).count() == survivors
 
-    def test_compaction_skips_dv_carrying_files(self, spark, tmp_path):
+    def test_compaction_folds_dv_carrying_files(self, spark, tmp_path):
+        import json
+        import os
+
+        from dp_dimension_importer_spark.storage import _manifest_dir
+
         path, storage = self._table(spark, tmp_path, files=6)
         storage.delete_where_snapshot(spark, path, "id = 17", mode="dv")
         before = self._data_state(path)
         res = storage.compact_small_files_snapshot(
             spark, path, min_file_bytes=1 << 20
         )
-        # every file is tiny, but the DV-carrying one must not be
-        # raw-concatenated (its read needs the anti-join)
-        assert res["files_kept"] >= 1
+        # every file is tiny, the DV-carrying one included: the rewrite
+        # reads it through its vector, so the deleted row stays deleted
+        # and the commit carries no vector
+        assert res["files_compacted"] == len(before)
         out = storage.read_snapshot(spark, path)
         assert out.count() == 999 and out.filter("id = 17").count() == 0
-        # the kept file is byte-identical
-        after = self._data_state(path)
-        carried = set(before) & set(after)
-        assert carried and all(before[r] == after[r] for r in carried)
+        with open(
+            os.path.join(_manifest_dir(path), f"v{res['version']}.json")
+        ) as f:
+            assert "dv" not in json.load(f)
+
+    def test_incremental_optimize_folds_dv_carrying_files(
+        self, spark, tmp_path
+    ):
+        import json
+        import os
+
+        from dp_dimension_importer_spark.storage import _manifest_dir
+
+        path, storage = self._table(spark, tmp_path, n=100, files=2)
+        storage.write_snapshot(
+            spark,
+            spark.range(100, 200).select(
+                F.col("id"), (F.col("id") % 7).alias("grp")
+            ).repartition(2),
+            path, mode="append",
+        )
+        storage.delete_where_snapshot(spark, path, "id = 150", mode="dv")
+        want = sorted(
+            tuple(r) for r in storage.read_snapshot(spark, path).collect()
+        )
+        res = storage.optimize_snapshot_incremental(
+            spark, path, ["id"], since_version=1, n_shards=2
+        )
+        assert res["version"] == 4 and res["files_clustered"] >= 1
+        assert sorted(
+            tuple(r) for r in storage.read_snapshot(spark, path).collect()
+        ) == want
+        with open(os.path.join(_manifest_dir(path), "v4.json")) as f:
+            assert "dv" not in json.load(f)
 
     def test_purge_density_threshold(self, spark, tmp_path):
         """REORG APPLY (PURGE): only files whose vector density crosses

@@ -49,7 +49,13 @@ BUDGETS = {
     # MERGE on a bloom-indexed copy-on-write table: source pin and
     # profile, the bloom probe, the file probe, the rewrite
     "merge_cow": 8,
-    "version_delta": 4,
+    # the change feed of one MOR transition: the touched keys' broadcast,
+    # then the collect. "version_delta" is the worst of the upsert,
+    # MERGE, DELETE and UPDATE transitions; the partial and aggregate
+    # ones are a transition with a tombstone under those merge engines
+    "version_delta": 2,
+    "version_delta_partial": 2,
+    "version_delta_aggregate": 2,
     "compact_mor": 1,
     "branch_append": 1,
     # one admission job (generated values and CHECK constraints in one
@@ -181,6 +187,33 @@ def _maintenance_jobs(spark, opath, ppath, rpath) -> dict:
     return measured
 
 
+def _engine_feed_jobs(spark, scratch) -> dict:
+    """Job counts of version_delta over a transition with a tombstone on
+    a partial-update and on an aggregating MOR table."""
+    def rows(ks, seq):
+        return spark.createDataFrame(
+            [Row(k=k, n=k, seq=seq) for k in ks],
+            "k bigint, n bigint, seq bigint",
+        )
+
+    measured = {}
+    for engine, aggs in (("partial", None), ("aggregate", {"n": "sum"})):
+        epath = os.path.join(scratch, engine)
+        storage.write_snapshot(spark, rows(range(20), 0), epath)
+        storage.upsert_delta_snapshot(
+            spark, epath, rows(range(15, 25), 1), ["k"], "seq",
+            merge_mode=engine, agg_spec=aggs,
+        )
+        storage.delete_where_snapshot(spark, epath, F.col("k") < 3)
+        v = storage.snapshot_versions(epath)[-1]
+        measured[f"version_delta_{engine}"] = _jobs(
+            spark, lambda: storage.version_delta(
+                spark, epath, v, ["k"], base_version=v - 1,
+            ).collect(),
+        )
+    return measured
+
+
 def test_storage_verb_job_budgets(spark):
     scratch = tempfile.mkdtemp(prefix="budget_test_")
     path = os.path.join(scratch, "t")
@@ -212,10 +245,13 @@ def test_storage_verb_job_budgets(spark):
         measured["update"] = _jobs(spark, lambda: storage.update_where_snapshot(
             spark, path, {"val": F.lit("x")}, F.col("k") == 7,
         ))
-        v = storage.snapshot_versions(path)[-1]
-        measured["version_delta"] = _jobs(spark, lambda: storage.version_delta(
-            spark, path, v, ["k"], base_version=v - 1,
-        ).collect())
+        head = storage.snapshot_versions(path)[-1]
+        measured["version_delta"] = max(
+            _jobs(spark, lambda: storage.version_delta(
+                spark, path, v, ["k"], base_version=v - 1,
+            ).collect())
+            for v in range(head - 3, head + 1)
+        )
         measured["compact_mor"] = _jobs(
             spark, lambda: storage.compact_mor(spark, path)
         )
@@ -269,6 +305,7 @@ def test_storage_verb_job_budgets(spark):
             ),
         )
         measured.update(_maintenance_jobs(spark, opath, ppath, rpath))
+        measured.update(_engine_feed_jobs(spark, scratch))
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
     print("measured job counts:", measured)
