@@ -8,7 +8,7 @@ Two execution shapes, same semantics:
   keeps that split: the per-instance facts of a batch (its valid ids, which
   of them already exist, the new instances' rows) are bounded by the batch
   and resolved on the driver as set operations, and every dimension-row
-  step is a DataFrame transform: a literal ``isin`` filter to the new
+  step is a DataFrame transform: a literal ``isin`` filter to the wanted
   instances, validation filters, node/edge derivation, broadcast code-order
   join, null-aware patch filter. No shuffle decides an instance, and code
   orders cost zero shuffles (broadcast).
@@ -27,10 +27,13 @@ Two execution shapes, same semantics:
 from __future__ import annotations
 
 from collections.abc import Callable, Sequence
+from concurrent.futures import Future
 from dataclasses import dataclass, field
 
-import pandas as pd
+import pyarrow as pa
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from dp_dimension_importer_spark.pipeline.models import (
     INSTANCE_COMPLETED_SCHEMA,
@@ -188,21 +191,54 @@ def build_patch_set(enriched: DataFrame, enable_patch_node_id: bool = True) -> D
 # --------------------------------------------------------------------------
 
 def local_frame(spark: SparkSession, rows: Sequence, schema: T.StructType) -> DataFrame:
-    """A DataFrame of rows already on the driver. Built through pandas and
-    Arrow it is a ``LocalRelation``, which the JVM reads by itself; a frame
-    of a Python list is an RDD whose every read runs Python workers."""
-    frame = pd.DataFrame(list(rows), columns=schema.fieldNames())
-    return spark.createDataFrame(frame, schema)
+    """A DataFrame of rows already on the driver, empty or not. Built from
+    an Arrow table it is a ``LocalRelation``, which the JVM reads and
+    collects by itself; a frame of a Python list (or of an empty pandas
+    frame, which ``createDataFrame`` takes without Arrow) is an RDD whose
+    every read is a Spark job that runs Python workers."""
+    rows = list(rows)
+    arrow = to_arrow_schema(schema)
+    columns = [pa.array([r[i] for r in rows], f.type) for i, f in enumerate(arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow), schema)
+
+
+#: Stage name of the job that materializes ``run_import``'s dimension base.
+BASE_CALL_SITE = "dimension base at run_import"
+
+
+def _in_background(
+    spark: SparkSession, fn: Callable[[], object], call_site: str
+) -> Future:
+    """``fn()`` in an ``InheritableThread``, as a future. The thread takes
+    the caller's Spark local properties, its job group among them, so the
+    jobs it runs count where the caller's do; a plain thread would drop
+    them. Its stages are named ``call_site``: an action started from a
+    thread gets no Python call site of its own."""
+    done: Future = Future()
+
+    def target() -> None:
+        try:
+            spark.sparkContext.setLocalProperty("callSite.short", call_site)
+            done.set_result(fn())
+        except BaseException as e:  # handed to whoever waits on the future
+            done.set_exception(e)
+
+    InheritableThread(target=target, daemon=True).start()
+    return done
+
 
 @dataclass
 class ImportResult:
     """One batch's import: the instance-level facts, resolved on the driver,
-    and one base. ``enriched`` (the new instances' validated dimensions
-    joined to code orders) is the only plan that fetches dimensions, and
-    every dimension-row sink input is a cheap projection of it, so
-    persisting it makes every sink read the batch's dimensions once.
-    ``new_instances`` and ``completed`` are local frames of rows already
-    on the driver (``local_frame``)."""
+    and one persisted base. ``base`` (the wanted instances' validated
+    dimensions joined to code orders) is the only plan that fetches
+    dimensions; ``run_import`` materializes it, and ``enriched``, its rows
+    of the new instances, feeds every dimension-row sink input as a cheap
+    projection, so every sink reads the batch's dimensions from the cache.
+    The result owns the base: ``release`` unpersists it.
+    ``dimension_rows`` counts ``enriched``. ``new_instances`` and
+    ``completed`` are local frames of rows already on the driver
+    (``local_frame``)."""
 
     decoded: int  # decoded events, at most one per message
     new_ids: list[str]
@@ -210,8 +246,15 @@ class ImportResult:
     new_instances: DataFrame
     completed: DataFrame  # InstanceCompleted per new instance (R19)
     enriched: DataFrame
+    dimension_rows: int
     rejected_events: DataFrame
+    base: DataFrame | None = None  # persisted; None when nothing was wanted
     enable_patch_node_id: bool = True
+
+    def release(self) -> None:
+        """Unpersist the base; the result's frames stay readable, uncached."""
+        if self.base is not None:
+            self.base.unpersist()
 
     @property
     def skipped_instances(self) -> DataFrame:
@@ -238,7 +281,6 @@ class ImportResult:
         return build_patch_set(self.enriched, self.enable_patch_node_id)
 
 
-
 def run_import(
     events: DataFrame,
     instances: DataFrame,
@@ -248,23 +290,31 @@ def run_import(
     enable_patch_node_id: bool = True,
 ) -> ImportResult:
     """The reference handler for one batch. Its instance gate runs on the
-    driver over three bounded collects, in this order:
+    driver over bounded collects, in this order:
 
     1. the decoded events (at most one per message);
     2. the existing instance nodes among the valid ids. ``existing_nodes``
        is the graph's nodes, or a function from instance ids to their
        nodes (``ParquetGraphStore.nodes``) so that only the batch's
        partitions are read;
-    3. the fetched rows of the other valid ids. This is the instance
-       fetch: a failing instance endpoint raises here.
+    3. the fetched rows of the other valid ids, the wanted ones. This is
+       the instance fetch: a failing instance endpoint raises here.
+
+    While this thread runs the instance fetch, a second one materializes
+    the dimension base: the validated dimensions of the wanted ids, a
+    literal ``isin``, joined to code orders, persisted and counted. The
+    two fetches overlap, like the reference's in-process fetch with
+    bounded parallelism (client/dimensions_api.go:82-97), so the client's
+    peak concurrency is the sum of the two fetchers' bounds. A failing
+    dimension endpoint raises here too; when both fail, the instance
+    fetch's error is the one raised. On any failure the base is
+    unpersisted before the error leaves.
 
     Valid ids with an instance node are skipped without error (R9,
     handler test :939-968); the fetched ones are new, and each of their
     events is echoed as an InstanceCompleted event (R19,
-    event/events.go:10-13). The dimension rows stay lazy: ``enriched``
-    filters the validated dimensions to the new ids with a literal
-    ``isin`` and joins code orders, and its fetch runs when a sink first
-    reads it."""
+    event/events.go:10-13). ``enriched`` is the base's rows of the new
+    ids. The caller owns the returned base and calls ``release``."""
     spark = events.sparkSession
     decoded = events.select("file_url", "instance_id").collect()
     valid_ids = sorted({r.instance_id for r in decoded if r.instance_id})
@@ -283,30 +333,47 @@ def run_import(
             for r in nodes.filter(is_instance).select("instance_id").collect()
         }
     wanted = [i for i in valid_ids if i not in existing]
-    rows = (
-        instances.select("instance_id", "csv_header")
-        .filter(F.col("instance_id").isin(wanted))
-        .collect()
-        if wanted
-        else []
+    dims = validate_dimensions(dimensions).filter(F.col("instance_id").isin(wanted))
+    enriched = join_code_orders(dims, code_lists)
+    base = enriched.persist() if wanted else None
+    counted = (
+        _in_background(spark, base.count, BASE_CALL_SITE) if base is not None else None
     )
-    new = {r.instance_id for r in rows}
-    new_ids = sorted(new)
-    dims = validate_dimensions(dimensions).filter(F.col("instance_id").isin(new_ids))
-    return ImportResult(
-        decoded=len(decoded),
-        new_ids=new_ids,
-        skipped_ids=sorted(existing),
-        new_instances=local_frame(spark, rows, INSTANCE_SCHEMA),
-        completed=local_frame(
-            spark,
-            [r for r in decoded if r.instance_id in new],
-            INSTANCE_COMPLETED_SCHEMA,
-        ),
-        enriched=join_code_orders(dims, code_lists),
-        rejected_events=validate_events(events)[1],
-        enable_patch_node_id=enable_patch_node_id,
-    )
+    try:
+        rows = (
+            instances.select("instance_id", "csv_header")
+            .filter(F.col("instance_id").isin(wanted))
+            .collect()
+            if wanted
+            else []
+        )
+        dimension_rows = counted.result() if counted is not None else 0
+        new = {r.instance_id for r in rows}
+        new_ids = sorted(new)
+        if len(new_ids) < len(wanted):
+            enriched = enriched.filter(F.col("instance_id").isin(new_ids))
+            dimension_rows = enriched.count()
+        return ImportResult(
+            decoded=len(decoded),
+            new_ids=new_ids,
+            skipped_ids=sorted(existing),
+            new_instances=local_frame(spark, rows, INSTANCE_SCHEMA),
+            completed=local_frame(
+                spark,
+                [r for r in decoded if r.instance_id in new],
+                INSTANCE_COMPLETED_SCHEMA,
+            ),
+            enriched=enriched,
+            dimension_rows=dimension_rows,
+            rejected_events=validate_events(events)[1],
+            base=base,
+            enable_patch_node_id=enable_patch_node_id,
+        )
+    except BaseException:
+        if counted is not None:
+            counted.exception()  # never unpersist under a running fill
+            base.unpersist()
+        raise
 
 
 # --------------------------------------------------------------------------

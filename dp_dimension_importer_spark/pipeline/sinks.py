@@ -18,6 +18,7 @@ from collections.abc import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dp_dimension_importer_spark.pipeline.importer import local_frame
 from dp_dimension_importer_spark.pipeline.models import EDGE_SCHEMA, NODE_SCHEMA
 
 
@@ -76,9 +77,10 @@ class ParquetGraphStore:
         return [p for p in paths if os.path.exists(p)]
 
     def _read(self, path: str, schema, paths: list[str]) -> DataFrame:
-        """``paths`` of the table at ``path``; no path reads as empty."""
+        """``paths`` of the table at ``path``; no path reads as an empty
+        local frame, which collects without a Spark job."""
         if not paths:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         df = self.spark.read.schema(schema).option("basePath", path).parquet(*paths)
         return df.select([f.name for f in schema.fields])
 
@@ -176,8 +178,10 @@ def kafka_event_sink(
 
 
 def read_jsonl_events(spark: SparkSession, path: str, schema) -> DataFrame:
+    """The events under ``path``; a missing directory reads as an empty
+    local frame."""
     if not os.path.isdir(path):
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     return spark.read.schema(schema).json(path)
 
 

@@ -14,8 +14,9 @@ semantics: unknown/missing fields and unparseable bytes → dead letter).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from dp_dimension_importer_spark.pipeline.importer import local_frame
 from dp_dimension_importer_spark.pipeline.models import NEW_INSTANCE_SCHEMA
 
 
@@ -62,9 +63,12 @@ def read_event_stream(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def read_event_batch(spark: SparkSession, payloads: list[str]) -> DataFrame:
-    """Batch fixture source used by tests and the batch runner."""
-    return spark.createDataFrame([(p,) for p in payloads], "value string")
+def read_event_batch(spark: SparkSession, payloads: list[str | None]) -> DataFrame:
+    """A batch of raw payloads already on the driver, as a local frame
+    (``importer.local_frame``) with one ``value`` column: decoding it runs
+    no Spark job and no Python worker. The batch runner and tests use it."""
+    schema = T.StructType([T.StructField("value", T.StringType())])
+    return local_frame(spark, [(p,) for p in payloads], schema)
 
 
 def kafka_reader_options(

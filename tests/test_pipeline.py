@@ -509,12 +509,37 @@ def _seed_history(path: str, n: int) -> None:
         pq.write_to_dataset(table, f"{path}/{sub}", partition_cols=["instance_id"])
 
 
+def _run_in_group(spark, group: str, fn) -> list:
+    """Run ``fn`` with AQE off inside the Spark job group ``group``; return
+    the group's jobs as lists of stage names, read after the listener bus
+    has drained. (AQE submits query stages as jobs of their own,
+    concurrently, so with it on the count moves by a job or two with
+    timing; off, it is exact.)"""
+    sc = spark.sparkContext
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    tracker = sc.statusTracker()
+    return [
+        [st.name for st in map(tracker.getStageInfo, tracker.getJobInfo(j).stageIds)
+         if st is not None]
+        for j in sorted(tracker.getJobIdsForGroup(group))
+    ]
+
+
 def test_import_batch_job_count_independent_of_history(spark, tmp_path):
     """The same batch costs the same number of Spark jobs into a store
     holding 8 instance partitions as into one holding 40: the store reads
     list only the batch's own partitions (past 32 paths, listing the whole
-    table would be a Spark job of its own on every read)."""
-    sc = spark.sparkContext
+    table would be a Spark job of its own on every read). The dimension
+    base, materialized in a second thread, counts in the batch's job
+    group."""
     ids = ["new-1", "new-2", "hist-03"]  # two new, one redelivery
     instances = spark.createDataFrame([(i, ["h"]) for i in ids], INSTANCE_SCHEMA)
     dimensions = spark.createDataFrame(
@@ -523,31 +548,57 @@ def test_import_batch_job_count_independent_of_history(spark, tmp_path):
         DIMENSION_SCHEMA,
     )
     jobs = {}
-    # AQE submits query stages as jobs of their own, concurrently, so with
-    # it on the count moves by a job or two with timing; off, it is exact.
-    aqe = spark.conf.get("spark.sql.adaptive.enabled")
     for n in (8, 40):
         out = _Batch(spark, tmp_path / f"h{n}")
         _seed_history(f"{out.base}/graph", n)
         raw = _events(spark, ids)
-        group = f"import-batch-history-{n}"
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        sc.setLocalProperty("spark.jobGroup.id", group)
-        try:
-            out.run(raw, instances, dimensions, _geo_code_lists(spark))
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            spark.conf.set("spark.sql.adaptive.enabled", aqe)
-        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-        jobs[n] = len(sc.statusTracker().getJobIdsForGroup(group))
+        jobs[n] = _run_in_group(
+            spark, f"import-batch-history-{n}",
+            lambda: out.run(raw, instances, dimensions, _geo_code_lists(spark)),
+        )
         assert out.store.nodes().count() == 2 * n + 2 * (1 + 3)
         assert sorted(r["instance_id"] for r in out.jsonl("completed")) == [
             "new-1", "new-2"
         ]
-    assert jobs[8] == jobs[40], jobs
+    assert len(jobs[8]) == len(jobs[40]), jobs
     # the instance gate and the completion events are driver-side set
-    # operations, not Spark joins over batch-sized frames
-    assert jobs[8] <= 12, jobs
+    # operations, not Spark joins over batch-sized frames, and the raw
+    # payloads decode as a local frame
+    assert len(jobs[8]) <= 10, jobs
+    # a plain thread would drop the job group, and the base's jobs would
+    # vanish from this count and from the traced benchmark's spans
+    assert any(importer.BASE_CALL_SITE in stages for stages in jobs[8]), jobs
+
+
+def test_empty_reads_collect_without_a_job(spark, tmp_path):
+    """A graph store with no partition yet and a missing event directory
+    read as empty local frames, so a batch of only new instances pays no
+    Spark job for its instance-exists probe."""
+    from pyspark.sql import functions as F
+
+    from dp_dimension_importer_spark.pipeline.models import INSTANCE_COMPLETED_SCHEMA
+    from dp_dimension_importer_spark.pipeline.sinks import (
+        ParquetGraphStore,
+        read_jsonl_events,
+    )
+
+    store = ParquetGraphStore(spark, str(tmp_path / "graph"))
+    probe = store.nodes(["new-1"]).filter(
+        (F.col("node_kind") == "instance") & F.col("instance_id").isin(["new-1"])
+    )
+    frames = [
+        probe.select("instance_id"),
+        store.nodes(),
+        store.edges(),
+        read_jsonl_events(spark, str(tmp_path / "absent"), INSTANCE_COMPLETED_SCHEMA),
+        importer.local_frame(spark, [], NODE_SCHEMA),
+    ]
+    rows = []
+    jobs = _run_in_group(
+        spark, "empty-reads", lambda: rows.extend(f.collect() for f in frames)
+    )
+    assert rows == [[]] * len(frames)
+    assert jobs == []
 
 
 def test_partition_dir_matches_spark_escaping(spark):
@@ -609,12 +660,17 @@ def test_redelivery_with_escaped_partition_names_is_a_noop(spark, tmp_path):
     assert out.store.nodes().count() == len(ids) * 3 + 1
 
 
-def _fails_after_dead_letters_before_graph(spark, tmp_path, **failing) -> None:
-    """A batch whose fetch fails (``failing``: a ``_DatasetAPI`` flag)
-    raises after its dead letters are written and before any graph row,
-    patch or completion, and leaves no persisted RDD behind."""
+def _fails_after_dead_letters_before_graph(spark, tmp_path, monkeypatch,
+                                           **failing) -> None:
+    """A batch whose fetch fails (``failing``: ``_DatasetAPI`` flags) raises
+    one exception, and none escapes a thread, after its dead letters are
+    written and before any graph row, patch or completion, and leaves no
+    persisted RDD behind."""
     import os
+    import threading
 
+    escaped = []
+    monkeypatch.setattr(threading, "excepthook", escaped.append)
     api = _DatasetAPI({"i1": _api_instance("i1", 3)}, **failing)
     try:
         instances, dimensions = _http_frames(spark, api.url, ["i1"])
@@ -626,24 +682,44 @@ def _fails_after_dead_letters_before_graph(spark, tmp_path, **failing) -> None:
         assert not _persistent_rdds(spark) - before
     finally:
         api.close()
+    assert escaped == []
     assert [d["payload"] for d in out.jsonl("dead_letter")] == ["not json"]
     assert not os.path.exists(f"{out.base}/graph")
     assert out.sender.calls() == []
     assert out.jsonl("completed") == []
 
 
-def test_import_batch_fetch_failure_after_dead_letters_before_graph(spark, tmp_path):
+def test_import_batch_fetch_failure_after_dead_letters_before_graph(
+    spark, tmp_path, monkeypatch
+):
     """A failing dimension fetch raises after the batch's dead letters are
     written and before any graph row, patch or completion (fail-fast, sink
     order unchanged), and releases whatever the batch had materialized."""
-    _fails_after_dead_letters_before_graph(spark, tmp_path, fail_dimensions=True)
+    _fails_after_dead_letters_before_graph(
+        spark, tmp_path, monkeypatch, fail_dimensions=True
+    )
 
 
-def test_import_batch_instance_fetch_failure_keeps_stage_order(spark, tmp_path):
+def test_import_batch_instance_fetch_failure_keeps_stage_order(
+    spark, tmp_path, monkeypatch
+):
     """The instance fetch, a driver-side collect, keeps the same stage
     order: a failing instance endpoint raises after the dead letters and
-    before any graph row, patch or completion."""
-    _fails_after_dead_letters_before_graph(spark, tmp_path, fail_instances=True)
+    before any graph row, patch or completion, and the dimension base
+    filled beside it is released."""
+    _fails_after_dead_letters_before_graph(
+        spark, tmp_path, monkeypatch, fail_instances=True
+    )
+
+
+def test_import_batch_both_fetches_failing_raise_once(spark, tmp_path, monkeypatch):
+    """When the instance and the dimension endpoints fail at once, the two
+    overlapping fetches still end the batch with one exception, after the
+    dead letters and before any graph row, patch or completion, with the
+    base released."""
+    _fails_after_dead_letters_before_graph(
+        spark, tmp_path, monkeypatch, fail_instances=True, fail_dimensions=True
+    )
 
 
 def test_import_batch_logs_one_progress_record(spark, tmp_path, caplog):

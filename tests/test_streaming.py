@@ -235,6 +235,40 @@ def test_import_pipeline_streaming_idempotent(spark):
     assert store.edges().count() == edges1  # no duplicate edges
 
 
+def test_import_stream_progress_records_carry_batch_id(spark, caplog):
+    """Each micro-batch of the import stream logs one progress record that
+    carries the stream's batch id; a restart from the same checkpoint goes
+    on with the next id."""
+    import logging
+
+    out_dir = tempfile.mkdtemp(prefix="pipe_out_")
+    event_dir = tempfile.mkdtemp(prefix="pipe_events_")
+    ckpt = tempfile.mkdtemp(prefix="pipe_ckpt_")
+    instances = spark.createDataFrame([("b1", ["h"]), ("b2", ["h"])], INSTANCE_SCHEMA)
+    dimensions = spark.createDataFrame(
+        [("b1", "b1_Geo", "England", "1", "cl"), ("b2", "b2_Geo", "Wales", "2", "cl")],
+        DIMENSION_SCHEMA,
+    )
+    code_lists = spark.createDataFrame([("cl", "England", 1)], CODE_LIST_SCHEMA)
+    sender = RecordingPatchSender(os.path.join(out_dir, "patches.jsonl"))
+    progress = []
+    for k, iid in enumerate(["b1", "b2"]):
+        with open(os.path.join(event_dir, f"batch{k}.jsonl"), "w") as f:
+            f.write(json.dumps({"file_url": f"/{iid}", "instance_id": iid}) + "\n")
+        caplog.clear()
+        with caplog.at_level(logging.INFO, logger="dp_dimension_importer_spark"):
+            run_stream(
+                spark, event_dir, instances, dimensions, code_lists, out_dir,
+                sender, checkpoint_dir=ckpt,
+            ).awaitTermination(120)
+        progress += [
+            json.loads(r.getMessage()) for r in caplog.records
+            if r.name == "dp_dimension_importer_spark.pipeline.runner"
+        ]
+    got = [(p["batch_id"], p["new_instances"], p["dimension_rows"]) for p in progress]
+    assert got == [(0, 1, 1), (1, 1, 1)]
+
+
 def test_stream_stream_join_matches_batch(spark, duck):
     """Stream-stream inner join (click→purchase attribution, 1h bound,
     watermarks both sides) must emit exactly the batch join's pairs."""
