@@ -150,7 +150,6 @@ from dp_dimension_importer_spark.operators.dedup import (  # noqa: F401
 )
 from dp_dimension_importer_spark.storage import (  # noqa: F401
     abandon_staged,
-    build_bloom_index,
     index_bloom_snapshot,
     read_snapshot_point,
     refresh_bloom_indexes,
@@ -166,7 +165,6 @@ from dp_dimension_importer_spark.storage import (  # noqa: F401
     compact_small_files_snapshot,
     delete_where_snapshot,
     merge_apply_changes,
-    read_bloom_pruned,
     optimize_snapshot,
     read_snapshot,
     read_snapshot_pruned,
@@ -285,8 +283,6 @@ __all__ = [
     "build_inverted_index",
     "search_inverted_index",
     "prefix_filter_pairs",
-    "build_bloom_index",
-    "read_bloom_pruned",
     "index_bloom_snapshot",
     "read_snapshot_point",
     "refresh_bloom_indexes",

@@ -683,7 +683,7 @@ def run_bloom_runtime_join(spark, sf_dir):
     injection and return ``(rows, schema, executed_plan_text)``.
 
     Spark's InjectRuntimeFilter is the engine-native form of what
-    q68/read_bloom_pruned hand-build at the storage layer: when one join
+    q68/read_snapshot_point hand-build at the storage layer: when one join
     side carries a selective filter, the optimizer plants a
     ``bloom_filter_agg`` subquery on it and rewrites the OTHER side's
     scan with ``might_contain(xxhash64(key))`` — fact rows that cannot

@@ -324,15 +324,15 @@ def q65_schema_evolution(spark, sf_dir):
 )
 def q68_bloom_point_lookup(spark, sf_dir):
     """POINT LOOKUP through the file-level bloom sidecar: write lineitem
-    hash-sharded on l_orderkey (the layout where min/max range stats
-    prune NOTHING — every file spans the full key range), build the
-    per-file bloom index (:func:`storage.build_bloom_index`), then fetch
-    four keys via :func:`storage.read_bloom_pruned`, which opens only
-    the files whose filters fire. The oracle is the plain ``IN`` scan, so
-    a green row pins that bloom pruning loses no rows; the
-    "actually skips files" property is pinned by the layout test
-    (tests/test_dq_mv_prefix.py). Eagerly localCheckpoint-ed so the
-    scratch table can be removed before returning."""
+    as a snapshot hash-sharded on l_orderkey (the layout where min/max
+    range stats prune NOTHING — every file spans the full key range),
+    index it (:func:`storage.index_bloom_snapshot`), then fetch four keys
+    via :func:`storage.read_snapshot_point`, which opens only the files
+    whose filters fire. The oracle is the plain ``IN`` scan, so a green
+    row pins that bloom pruning loses no rows; the "actually skips
+    files" property is pinned by tests/test_bloom_snapshot.py. Eagerly
+    localCheckpoint-ed so the scratch table can be removed before
+    returning."""
     import shutil
     import tempfile
 
@@ -342,15 +342,15 @@ def q68_bloom_point_lookup(spark, sf_dir):
     path = tempfile.mkdtemp(prefix="bloom_lookup_")
     try:
         shutil.rmtree(path)
-        (
+        storage.write_snapshot(
+            spark,
             t.lineitem.select("l_orderkey", "l_linenumber", "l_quantity")
-            .repartition(8, "l_orderkey")
-            .write.option("compression", storage.PARQUET_CODEC)
-            .parquet(path)
+            .repartition(8, "l_orderkey"),
+            path,
         )
-        storage.build_bloom_index(spark, path, "l_orderkey")
+        storage.index_bloom_snapshot(spark, path, "l_orderkey")
         return (
-            storage.read_bloom_pruned(
+            storage.read_snapshot_point(
                 spark, path, "l_orderkey", [7, 777, 7777, 41999]
             )
             .orderBy("l_orderkey", "l_linenumber", "l_quantity")

@@ -30,15 +30,14 @@ from collections.abc import Callable, Sequence
 from concurrent.futures import Future
 from dataclasses import dataclass, field
 
-import pyarrow as pa
 from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
-from pyspark.sql.pandas.types import to_arrow_schema
 
 from dp_dimension_importer_spark.pipeline.models import (
     INSTANCE_COMPLETED_SCHEMA,
     INSTANCE_SCHEMA,
 )
+from dp_dimension_importer_spark.session import local_frame
 
 
 class ImportError_(Exception):
@@ -189,18 +188,6 @@ def build_patch_set(enriched: DataFrame, enable_patch_node_id: bool = True) -> D
 # --------------------------------------------------------------------------
 # set-based end-to-end batch
 # --------------------------------------------------------------------------
-
-def local_frame(spark: SparkSession, rows: Sequence, schema: T.StructType) -> DataFrame:
-    """A DataFrame of rows already on the driver, empty or not. Built from
-    an Arrow table it is a ``LocalRelation``, which the JVM reads and
-    collects by itself; a frame of a Python list (or of an empty pandas
-    frame, which ``createDataFrame`` takes without Arrow) is an RDD whose
-    every read is a Spark job that runs Python workers."""
-    rows = list(rows)
-    arrow = to_arrow_schema(schema)
-    columns = [pa.array([r[i] for r in rows], f.type) for i, f in enumerate(arrow)]
-    return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow), schema)
-
 
 #: Stage name of the job that materializes ``run_import``'s dimension base.
 BASE_CALL_SITE = "dimension base at run_import"

@@ -43,6 +43,7 @@ from dp_dimension_importer_spark.pipeline.sinks import (
     jsonl_event_sink,
     patch_sink,
 )
+from dp_dimension_importer_spark.session import local_frame
 
 log = logging.getLogger(__name__)
 
@@ -98,7 +99,7 @@ def import_batch(
     ).collect()
     if dead_rows:
         jsonl_event_sink(
-            importer.local_frame(events.sparkSession, dead_rows, DEAD_LETTER_SCHEMA),
+            local_frame(events.sparkSession, dead_rows, DEAD_LETTER_SCHEMA),
             dead_letter_dir,
         )
     result = importer.run_import(

@@ -4,22 +4,22 @@ topics (reference R10/R12/R16/R17/R19/R20).
 The reference's ``Storer`` (store/store.go:14-25) talks Gremlin/bolt; the
 Spark-native sink is a property graph as two tables (nodes, edges) written
 idempotently — the uniqueness constraint (R18) becomes dedup-on-write +
-anti-join against what exists. A real graph/HTTP writer plugs in behind the
-same functions via ``foreachPartition`` (buffered, one call per partition —
-the reference's mongo-lock amortization, handler:269-271); here the HTTP
-PATCH is a recording stub, the distributed buffering shape is real.
+anti-join against what exists. The patch-back collects a batch's few patch
+rows to the driver and sends one call per instance (the reference's
+mongo-lock amortization, handler:269-271); here the HTTP PATCH is a
+recording stub.
 """
 
 from __future__ import annotations
 
 import json
 import os
-from collections.abc import Callable, Iterable, Iterator
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from dp_dimension_importer_spark.pipeline.importer import local_frame
 from dp_dimension_importer_spark.pipeline.models import EDGE_SCHEMA, NODE_SCHEMA
+from dp_dimension_importer_spark.session import local_frame
 
 
 #: Characters Spark percent-escapes in a hive partition directory name
@@ -123,26 +123,20 @@ def patch_sink(
     patches: DataFrame,
     send: Callable[[str, list[dict]], None],
 ) -> None:
-    """Buffered patch-back: repartition by instance, ONE ``send`` call per
-    (partition, instance) — the Spark shape of 'one PATCH per batch so the
-    mongo lock is paid once' (handler:269-278). ``send`` is the pluggable
-    HTTP PATCH; per-partition session pooling happens inside it at
-    deployment."""
-
-    def _per_partition(rows: Iterator) -> Iterator:
-        by_instance: dict[str, list[dict]] = {}
-        for r in rows:
-            d = r.asDict()
-            by_instance.setdefault(d.pop("instance_id"), []).append(
-                {k: v for k, v in d.items() if v is not None}
-            )
-        for instance_id, updates in by_instance.items():
-            send(instance_id, updates)
-        return iter(())
-
-    patches.repartition("instance_id").foreachPartition(
-        lambda rows: list(_per_partition(rows))
-    )
+    """Buffered patch-back: ONE ``send`` call per instance — the shape of
+    'one PATCH per batch so the mongo lock is paid once'
+    (handler:269-278). A batch's patch rows are bounded by its instances,
+    so one collect brings them to the driver, where they are grouped by
+    instance; no Python worker starts. ``send`` is the pluggable HTTP
+    PATCH."""
+    by_instance: dict[str, list[dict]] = {}
+    for r in patches.collect():
+        d = r.asDict()
+        by_instance.setdefault(d.pop("instance_id"), []).append(
+            {k: v for k, v in d.items() if v is not None}
+        )
+    for instance_id, updates in by_instance.items():
+        send(instance_id, updates)
 
 
 def jsonl_event_sink(events: DataFrame, path: str) -> None:
@@ -186,9 +180,8 @@ def read_jsonl_events(spark: SparkSession, path: str, schema) -> DataFrame:
 
 
 class RecordingPatchSender:
-    """Test double for the Dataset-API PATCH endpoint — driver-side
-    recording via a local socketless accumulator file (foreachPartition
-    runs on executors; in local mode a temp file is shared)."""
+    """Test double for the Dataset-API PATCH endpoint: appends each call
+    as one JSON line to a file (``patch_sink`` sends from the driver)."""
 
     def __init__(self, path: str):
         self.path = path

@@ -16,8 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from dp_dimension_importer_spark.pipeline.importer import local_frame
 from dp_dimension_importer_spark.pipeline.models import NEW_INSTANCE_SCHEMA
+from dp_dimension_importer_spark.session import local_frame
 
 
 def decode_events(raw: DataFrame, value_col: str = "value") -> tuple[DataFrame, DataFrame]:
@@ -65,7 +65,7 @@ def read_event_stream(spark: SparkSession, path: str) -> DataFrame:
 
 def read_event_batch(spark: SparkSession, payloads: list[str | None]) -> DataFrame:
     """A batch of raw payloads already on the driver, as a local frame
-    (``importer.local_frame``) with one ``value`` column: decoding it runs
+    (``session.local_frame``) with one ``value`` column: decoding it runs
     no Spark job and no Python worker. The batch runner and tests use it."""
     schema = T.StructType([T.StructField("value", T.StringType())])
     return local_frame(spark, [(p,) for p in payloads], schema)

@@ -18,8 +18,11 @@ One place to pin every conf that correctness or scale depends on:
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 def get_spark(
@@ -91,3 +94,15 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: Sequence, schema: T.StructType) -> DataFrame:
+    """A DataFrame of rows already on the driver, empty or not. Built from
+    an Arrow table it is a ``LocalRelation``, which the JVM reads and
+    collects by itself; a frame of a Python list (or of an empty pandas
+    frame, which ``createDataFrame`` takes without Arrow) is an RDD whose
+    every read is a Spark job that runs Python workers."""
+    rows = list(rows)
+    arrow = to_arrow_schema(schema)
+    columns = [pa.array([r[i] for r in rows], f.type) for i, f in enumerate(arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow), schema)

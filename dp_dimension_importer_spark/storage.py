@@ -32,7 +32,9 @@ counts must MATCH across tables you intend to co-join).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
+from dp_dimension_importer_spark.session import local_frame
 
 #: default parquet codec for every writer here: zstd compresses the text-
 #: heavy tables ~30-40% smaller than snappy at similar CPU — at 100 TB
@@ -1066,12 +1068,8 @@ def _dml_head(path: str, branch: str | None):
     optimistic: a racing branch writer surfaces as
     :class:`ConcurrentCommitError`, never a silent lost update."""
     if branch is None:
-        versions = snapshot_versions(path)
-        if not versions:
-            raise FileNotFoundError(
-                f"no committed snapshots under {path!r}"
-            )
-        return _load_manifest(path, versions[-1]), versions[-1], None
+        head, man = _snapshot_manifest(path)
+        return man, head, None
     # numbers before the head read: a commit landing in between makes
     # the claim of head + 1 collide instead of renumbering a stale head
     bvs = branch_versions(path, branch)
@@ -1289,6 +1287,28 @@ def _resolve_selector(
     return version
 
 
+def _snapshot_manifest(
+    path: str,
+    version: int | None = None,
+    tag: str | None = None,
+    asof: float | None = None,
+) -> tuple[int, dict]:
+    """``(version, manifest)`` of the retained version the selector names
+    (the latest by default): the one version lookup of every reader and
+    every verb that starts from a committed version."""
+    version = _resolve_selector(path, version, tag, asof)
+    versions = snapshot_versions(path)
+    if not versions:
+        raise FileNotFoundError(f"no committed snapshots under {path!r}")
+    if version is None:
+        version = versions[-1]
+    elif version not in versions:
+        raise FileNotFoundError(
+            f"version {version} not committed (have {versions}) — vacuumed?"
+        )
+    return version, _load_manifest(path, version)
+
+
 def read_snapshot(
     spark: SparkSession,
     path: str,
@@ -1303,21 +1323,7 @@ def read_snapshot(
     immutable files it lists are read: concurrent commits are invisible,
     and a filter/projection on top prunes and pushes down exactly as on
     a plain parquet read."""
-    import json
-    import os
-
-    version = _resolve_selector(path, version, tag, asof)
-    versions = snapshot_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshots under {path!r}")
-    if version is None:
-        version = versions[-1]
-    elif version not in versions:
-        raise FileNotFoundError(
-            f"version {version} not committed (have {versions}) — vacuumed?"
-        )
-    with open(os.path.join(_manifest_dir(path), f"v{version}.json")) as f:
-        manifest = json.load(f)
+    _, manifest = _snapshot_manifest(path, version, tag, asof)
     return _manifest_df(spark, path, manifest)
 
 
@@ -1328,12 +1334,12 @@ def _manifest_df(spark: SparkSession, path: str, manifest: dict) -> DataFrame:
 
     if not manifest.get("files") and not manifest.get("mor"):
         # a legitimately EMPTY table (e.g. the corrective commit after a
-        # prev-less publish race): typed empty frame from the recorded
-        # schema, not a zero-path parquet read (which errors)
-        ddl = ", ".join(
-            f"`{c}` {t}" for c, t in (manifest.get("schema") or {}).items()
-        )
-        return spark.createDataFrame([], ddl or "dummy string")
+        # prev-less publish race) or a scoped read that kept no file:
+        # typed empty frame from the recorded schema, not a zero-path
+        # parquet read (which errors); a local relation collects with no
+        # job
+        ddl = _schema_ddl(manifest.get("schema") or {}) or "dummy string"
+        return local_frame(spark, [], StructType.fromDDL(ddl))
     if manifest.get("mor"):
         # merge-on-read upserts: latest-wins resolution of the delta
         # chain (see upsert_delta_snapshot); versions without deltas
@@ -4149,11 +4155,8 @@ def version_delta(
 
     from pyspark.sql import functions as F
 
+    version, man = _snapshot_manifest(path, version)
     versions = snapshot_versions(path)
-    if version not in versions:
-        raise FileNotFoundError(
-            f"version {version} not committed (have {versions}) — vacuumed?"
-        )
     if base_version is None:
         idx = versions.index(version)
         base_version = versions[idx - 1] if idx > 0 else 0
@@ -4165,7 +4168,6 @@ def version_delta(
     if base_version >= version:
         raise ValueError("base_version must be < version")
     tr = classify_transition(path, base_version, version)
-    man = tr["manifest"]
     missing = [c for c in key_cols if c not in man["schema"]]
     if missing:
         raise ValueError(
@@ -4271,17 +4273,9 @@ def restore_snapshot(path: str, version: int) -> int:
     ``vacuum_snapshots`` expires them, so a bad restore is itself
     restorable. Raises if ``version`` was never committed or already
     vacuumed. Returns the new version number."""
-    import json
-    import os
     import uuid
 
-    versions = snapshot_versions(path)
-    if version not in versions:
-        raise FileNotFoundError(
-            f"version {version} not committed (have {versions}) — vacuumed?"
-        )
-    with open(os.path.join(_manifest_dir(path), f"v{version}.json")) as f:
-        man = json.load(f)
+    _, man = _snapshot_manifest(path, version)
     man.pop("version", None)
     # ADVICE r11 (low): the restored version's OWN policies stand, never
     # the newest version's — its rows were never validated against newer
@@ -4294,8 +4288,7 @@ def restore_snapshot(path: str, version: int) -> int:
     man["generated"] = man.get("generated") or {}
     man["widened"] = man.get("widened") or {}
     man["dropped"] = man.get("dropped") or []
-    with open(os.path.join(_manifest_dir(path), f"v{versions[-1]}.json")) as f:
-        latest_txn = json.load(f).get("txn")
+    latest_txn = _snapshot_manifest(path)[1].get("txn")
     if latest_txn:
         # idempotence watermarks never regress: a restore that revived an
         # old txn map would let an at-least-once writer re-land a batch
@@ -4381,14 +4374,7 @@ def tag_snapshot(path: str, name: str, version: int | None = None) -> int:
     import uuid
 
     _check_tag_name(name)
-    versions = snapshot_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshots under {path!r}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise FileNotFoundError(
-            f"version {v} not committed (have {versions}) — vacuumed?"
-        )
+    v, _ = _snapshot_manifest(path, version)
     tags = list_tags(path)
     if name in tags:
         if tags[name] != v:
@@ -4550,14 +4536,7 @@ def create_branch(path: str, name: str, version: int | None = None) -> int:
     import os
     import uuid
 
-    versions = snapshot_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshots under {path!r}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise FileNotFoundError(
-            f"version {v} not committed (have {versions}) — vacuumed?"
-        )
+    v, _ = _snapshot_manifest(path, version)
     bdir = _branch_dir(path, name)
     os.makedirs(bdir, exist_ok=True)
     base = os.path.join(bdir, "base.json")
@@ -5011,218 +4990,62 @@ def read_snapshot_pruned(
 
     ``tag`` / ``asof`` select the version by name or commit instant,
     same contract as :func:`read_snapshot`."""
-    import json
-    import os
-
     from pyspark.sql import functions as F
 
-    version = _resolve_selector(path, version, tag, asof)
-    versions = snapshot_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshots under {path!r}")
-    if version is None:
-        version = versions[-1]
-    elif version not in versions:
-        raise FileNotFoundError(
-            f"version {version} not committed (have {versions}) — vacuumed?"
-        )
-    with open(os.path.join(_manifest_dir(path), f"v{version}.json")) as f:
-        manifest = json.load(f)
-    mor = manifest.get("mor")
-    if mor and (col not in mor["key_cols"] or not manifest.get("stats")):
-        # MOR file skipping is SOUND only on a KEY column (see
-        # _dml_scope): a NON-key column's value can change between
-        # commits of one key — skipping an old commit's file would
-        # resurrect a superseded row as the apparent winner — so those
-        # fall back to the resolved read + row filter (the contract's
-        # definition)
-        return read_snapshot(spark, path, version).filter(
-            F.col(col).between(lo, hi)
-        )
-    keep, n_kept = _dml_scope(
-        spark, path, manifest, "read", ranges=[(col, lo, hi)]
+    _, man = _snapshot_manifest(path, version, tag, asof)
+    return _scoped_read(spark, path, man, ranges=[(col, lo, hi)]).filter(
+        F.col(col).between(F.lit(lo), F.lit(hi))
     )
-    if not n_kept:  # nothing can match; keep the schema without touching IO
-        return read_snapshot(spark, path, version).filter(F.lit(False))
-    if mor:
-        return _resolve_mor(spark, path, keep).filter(
-            F.col(col).between(F.lit(lo), F.lit(hi))
-        )
-    # DV-aware over the surviving files (stats of a DV-carrying file are
-    # upper bounds, so the manifest pruning above stays conservative)
-    data, cols = _scan_with_pos(
-        spark, path, keep, manifest.get("dv") or {},
-        force_schema=_phys_schema(manifest),
-    )
-    # renamed tables: stats keys are already logical (rename_column
-    # re-keys them), the scanned frame is physical — translate before
-    # the row filter so `col` means the same name end to end
-    return _apply_mapping(
-        data.select(*cols), manifest.get("column_mapping")
-    ).filter(F.col(col).between(F.lit(lo), F.lit(hi)))
 
 
-# ---------------------------------------------------------------------------
-# File-level bloom index → point-lookup file skipping
-# ---------------------------------------------------------------------------
-
-#: bits / probes per FILE bloom (vs dedup's corpus-level 8 Mbit filter):
-#: 2^17 bits ≈ 16 KiB dense, stored sparse — sized for ~10k distinct keys
-#: per file at ~1% fpr; size up with file cardinality
-BLOOM_IDX_M = 1 << 17
-BLOOM_IDX_K = 5
-
-
-def _bloom_index_path(path: str, col: str) -> str:
-    import os
-
-    return os.path.join(path, f"_bloom_{col}.json")
-
-
-def build_bloom_index(
+def _scoped_read(
     spark: SparkSession,
     path: str,
-    col: str,
-    m_bits: int = BLOOM_IDX_M,
-    k: int = BLOOM_IDX_K,
-) -> int:
-    """Build a per-FILE bloom sidecar over ``col`` for the parquet table
-    at ``path`` — the min/max-stats complement for POINT lookups on
-    columns where range stats prune nothing (high-cardinality ids spread
-    across every file). Entirely distributed: each row explodes to its k
-    probe positions (same double-hash math as dedup's corpus bloom,
-    ``pos_i = (h1 + i*h2) mod m`` with pmod-before-combine so ANSI longs
-    never overflow), positions OR into 64-bit words with one map-side-
-    combinable bit_or keyed on (file, word) — the shuffle is bounded by
-    files × m/64 words, not by rows — and only the sparse non-zero words
-    reach the driver. Writes ``_bloom_<col>.json`` atomically
-    (tmp + rename); returns the number of files indexed.
-
-    At 100 TB: a 16 KiB-dense / sparser-in-practice bitmap per 128 MB
-    file is ~0.01% storage overhead, and a point lookup touches only the
-    files whose filter fires (expected 1 + fpr·files)."""
-    import json
-    import os
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    df = (
-        spark.read.parquet(path)
-        .select(F.input_file_name().alias("_file"), F.col(col).alias("_v"))
-        # null keys can't be point-looked-up (isin drops them) and would
-        # poison the word aggregate with null positions — exclude at build
-        .filter(F.col("_v").isNotNull())
-    )
-    h1, h2 = F.xxhash64("_v"), F.xxhash64(F.lit(1), F.col("_v"))
-    r1, r2 = F.pmod(h1, F.lit(m_bits)), F.pmod(h2, F.lit(m_bits))
-    pos = F.explode(
-        F.array(*[F.pmod(r1 + F.lit(i) * r2, F.lit(m_bits)) for i in range(k)])
-    ).alias("_p")
-    words = (
-        df.select("_file", pos)
-        .select(
-            "_file",
-            (F.col("_p") / 64).cast("long").alias("_w"),
-            F.expr("shiftleft(1L, CAST(pmod(_p, 64) AS INT))").alias("_b"),
-        )
-        .groupBy("_file", "_w")
-        .agg(F.bit_or("_b").alias("_word"))
-        .collect()
-    )
-    index: dict[str, dict[str, int]] = {}
-    for r in words:
-        rel = os.path.relpath(r["_file"].removeprefix("file://"), path)
-        index.setdefault(rel, {})[str(r["_w"])] = r["_word"]
-    meta = {"col": col, "m_bits": m_bits, "k": k, "files": index}
-    tmp = _bloom_index_path(path, col) + f".tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, _bloom_index_path(path, col))
-    return len(index)
-
-
-def read_bloom_pruned(
-    spark: SparkSession, path: str, col: str, values: list
+    man: dict,
+    *,
+    partition_where: dict | None = None,
+    ranges=(),
+    points=(),
 ) -> DataFrame:
-    """Point lookup through the bloom sidecar: read ONLY the files whose
-    filter fires for at least one of ``values``, then apply the exact
-    ``IN`` predicate (bloom positives are candidates, never answers).
-    Files missing from the sidecar are always read — the index is an
-    optimization, never a correctness dependency. A value the filter
-    rejects everywhere costs ZERO file reads.
-
-    Probe hashes come from a one-row Spark job over the SAME xxhash64
-    expressions the build used — the JVM is the single hashing authority,
-    so build and probe can never drift (the dedup bloom's lesson,
-    mirrored here)."""
-    import json
-    import os
-
-    from pyspark.sql import functions as F
-
-    with open(_bloom_index_path(path, col)) as f:
-        meta = json.load(f)
-    m_bits, k = meta["m_bits"], meta["k"]
-    values = [v for v in values if v is not None]
-    if not values:  # nothing matchable; keep the schema without IO
-        return spark.read.parquet(path).filter(F.lit(False))
-    probe = spark.createDataFrame([(v,) for v in values]).toDF("_v")
-    h1, h2 = F.xxhash64("_v"), F.xxhash64(F.lit(1), F.col("_v"))
-    r1, r2 = F.pmod(h1, F.lit(m_bits)), F.pmod(h2, F.lit(m_bits))
-    rows = probe.select(
-        F.array(
-            *[F.pmod(r1 + F.lit(i) * r2, F.lit(m_bits)) for i in range(k)]
-        ).alias("_ps")
-    ).collect()
-    all_files = sorted(meta["files"])
-    # r11 verdict #8: vectorize the files × values membership fold — at
-    # 10^6 files × many probe values the per-bit python loop was the
-    # slowest driver loop in the repo. One uint64 matrix per sidecar
-    # (files × words, sparse words densified once), one gather per probe.
-    import numpy as np
-
-    n_words = (m_bits + 63) // 64
-    mat = np.zeros((len(all_files), n_words), dtype=np.uint64)
-    for fi, rel in enumerate(all_files):
-        for w, bits in meta["files"][rel].items():
-            mat[fi, int(w)] = np.uint64(bits & ((1 << 64) - 1))
-    probes = np.array([r["_ps"] for r in rows], dtype=np.int64)  # v × k
-    word_idx = probes // 64                       # v × k
-    bit = np.uint64(1) << (probes % 64).astype(np.uint64)
-    # files × values × k: does every probe bit fire?
-    fired = (mat[:, word_idx] & bit) != 0
-    hit_any = fired.all(axis=2).any(axis=1)       # files: any value all-k
-    keep: set[str] = {
-        rel for fi, rel in enumerate(all_files) if hit_any[fi]
-    }
-    # files on disk but absent from the sidecar are unindexed: always read.
-    # The reverse skew — sidecar entries whose files were REWRITTEN AWAY
-    # (compaction/merge without an index rebuild) — must not crash the
-    # read: drop them; their rows live in the successor files, which are
-    # unindexed and therefore read. Either skew only costs pruning, never
-    # correctness; rebuild the sidecar after rewrites to get it back.
-    import glob
-
-    on_disk = {
-        os.path.relpath(p, path)
-        for p in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-    }
-    keep &= on_disk
-    keep |= on_disk - set(all_files)
-    if not keep:
-        return spark.read.parquet(path).filter(F.lit(False))
-    return (
-        spark.read.parquet(*(os.path.join(path, rel) for rel in sorted(keep)))
-        .filter(F.col(col).isin(values))
+    """The rows of ``man`` in the files :func:`_dml_scope` keeps — the one
+    body of the pruned reads, which add only their exact row filter. An
+    empty scope is a typed empty frame of the manifest schema; a MOR
+    scope resolves its pruned chain; a COW/DV scope reads ``man`` minus
+    the skipped files (:func:`_replace_files`: deletion vectors, column
+    mapping and the forced schema carry). On a MOR table a range or
+    partition column that is not a key column cannot skip a file
+    soundly (its value moves between commits of a key), so it scopes
+    nothing and the caller's row filter decides; a point column that is
+    not a key refuses (:func:`_bloom_live_rels`)."""
+    mor = man.get("mor")
+    if mor:
+        keys = set(mor["key_cols"])
+        ranges = [r for r in ranges if r[0] in keys]
+        spec_cols = {
+            t["col"]
+            for spec in (man.get("partition") or {}).get("specs") or []
+            for t in spec
+        }
+        if (spec_cols & set(partition_where or ())) - keys:
+            partition_where = None
+    scope, n_kept = _dml_scope(
+        spark, path, man, "read", partition_where, ranges, points
     )
+    if not n_kept:
+        return _manifest_df(spark, path, {"files": [], "schema": man["schema"]})
+    if mor:
+        return _resolve_mor(spark, path, scope)
+    keep = set(scope)
+    return _manifest_df(spark, path, _replace_files(
+        man, removed=[rel for rel in man["files"] if rel not in keep]
+    ))
 
 
 # ---------------------------------------------------------------------------
-# Snapshot-NATIVE bloom index: the q68 sidecar grown into a table-format
-# citizen. Per-file blooms keyed by MANIFEST rel paths, refreshed
-# incrementally (only live files missing from the sidecar are scanned),
-# and consulted by the DML probe planners — the high-cardinality
+# File-level bloom index → point-lookup file skipping. Per-file blooms
+# keyed by MANIFEST rel paths, refreshed incrementally (only live files
+# missing from the sidecar are scanned), and consulted by the pruned
+# reads and the DML probe planners — the high-cardinality
 # complement of min/max stats: on a hash-ordered key (UUIDs) every file
 # spans the whole key range and range stats prune NOTHING, while a bloom
 # proves "this file contains none of these keys" per file.
@@ -5239,6 +5062,12 @@ def read_bloom_pruned(
 # type — a type-widened table invalidates the sidecar wholesale (Spark
 # hashes int and bigint differently) until the next refresh rebuilds it.
 # ---------------------------------------------------------------------------
+
+#: bits / probes per FILE bloom (vs dedup's corpus-level 8 Mbit filter):
+#: 2^17 bits ≈ 16 KiB dense, stored sparse — sized for ~10k distinct keys
+#: per file at ~1% fpr; size up with file cardinality
+BLOOM_IDX_M = 1 << 17
+BLOOM_IDX_K = 5
 
 
 def _snap_bloom_dir(path: str, col: str) -> str:
@@ -5386,8 +5215,7 @@ def index_bloom_snapshot(
     k: int = BLOOM_IDX_K,
 ) -> dict:
     """Build or INCREMENTALLY refresh the file-level bloom sidecar for a
-    SNAPSHOT table column (:func:`build_bloom_index`'s raw-parquet shape
-    grown manifest-aware): index the LATEST manifest's live files — base
+    SNAPSHOT table column: index the LATEST manifest's live files — base
     and, for a key column, the MOR delta chain — scanning ONLY the live
     files missing from the existing sidecar; entries whose files left
     the manifest (compaction, COW rewrites, vacuumed versions) stop
@@ -5422,10 +5250,7 @@ def index_bloom_snapshot(
     import shutil
     import uuid
 
-    versions = snapshot_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshots under {path!r}")
-    man = _load_manifest(path, versions[-1])
+    head, man = _snapshot_manifest(path)
     schema = man.get("schema") or {}
     if col not in schema:
         raise ValueError(
@@ -5493,7 +5318,7 @@ def index_bloom_snapshot(
         "phys": (man.get("column_mapping") or {}).get(col, col),
         "m_bits": m_bits,
         "k": k,
-        "version": versions[-1],
+        "version": head,
         "words_dir": words_dir,
         "files": carried + missing,
     }
@@ -5513,7 +5338,7 @@ def index_bloom_snapshot(
         "carried": len(carried),
         "dropped": dropped,
         "files": len(live),
-        "version": versions[-1],
+        "version": head,
     }
 
 
@@ -5687,34 +5512,12 @@ def read_snapshot_point(
     commit of a key fires the same bloom). The sidecar is advice:
     absent, stale, or type-mismatched sidecars degrade to a full read
     with the exact filter, never to a wrong answer."""
-    import json
-    import os
-
     from pyspark.sql import functions as F
 
-    versions = snapshot_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshots under {path!r}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise FileNotFoundError(
-            f"version {v} not committed (have {versions}) — vacuumed?"
-        )
-    with open(os.path.join(_manifest_dir(path), f"v{v}.json")) as f:
-        man = json.load(f)
-    scope, n_kept = _dml_scope(
-        spark, path, man, "read", points=[(col, values)]
+    _, man = _snapshot_manifest(path, version)
+    return _scoped_read(spark, path, man, points=[(col, values)]).filter(
+        F.col(col).isin(values)
     )
-    if not n_kept:  # every file provably key-free: typed empty frame
-        pruned = {"files": [], "schema": man["schema"]}
-    elif man.get("mor"):
-        pruned = scope
-    else:
-        keep = set(scope)
-        pruned = _replace_files(
-            man, removed=[rel for rel in man["files"] if rel not in keep]
-        )
-    return _manifest_df(spark, path, pruned).filter(F.col(col).isin(values))
 
 
 # ---------------------------------------------------------------------------
@@ -6130,11 +5933,7 @@ def partition_pruned_files(
     bucket carries no order and prunes only ``=`` / ``in``. A file with
     no recorded tuple, or a None (null / unknown) transform value,
     always survives — pruning degrades, never lies."""
-    versions = snapshot_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshots under {path!r}")
-    v = versions[-1] if version is None else version
-    manifest = _load_manifest(path, v)
+    _, manifest = _snapshot_manifest(path, version)
     files = manifest.get("files", [])
     part = manifest.get("partition")
     if not part:
@@ -6241,76 +6040,14 @@ def read_snapshot_partitioned(
     On a table without a partition block (or with none matching the
     predicate columns) this degrades to read-then-filter. DV deletes on
     surviving files are honored (the pruned manifest keeps their
-    vectors). MOR tables only reach here chainless (a partitioned
-    OVERWRITE sheds the chain; partitioned append refuses upstream),
-    so no MOR dispatch is needed."""
-    from pyspark.sql import functions as F
-
-    version = _resolve_selector(path, version, tag, asof)
-    versions = snapshot_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshots under {path!r}")
-    if version is None:
-        version = versions[-1]
-    elif version not in versions:
-        raise FileNotFoundError(
-            f"version {version} not committed (have {versions}) — vacuumed?"
-        )
-    if not where:
-        return read_snapshot(spark, path, version)
-    manifest = _load_manifest(path, version)
-    if manifest.get("mor"):
-        # r14 (r13 verdict #2): partitioned MOR — prune base files AND
-        # every delta group by tuple BEFORE the latest-wins window.
-        # Sound because a MOR spec's sources are key columns (enforced
-        # at spec attach/delta write): every row of a predicate-
-        # satisfying key lives in tuple-matching or no-tuple files, so
-        # the winner over the survivors is the true winner; extraneous
-        # surviving keys fall to the row filter. Empty groups stay
-        # positionally (commit rank alignment, the _dml_scope rule).
-        part = manifest.get("partition")
-        mor = manifest["mor"]
-        spec_cols = {
-            t["col"]
-            for s in ((part or {}).get("specs") or [])
-            for t in s
-        }
-        unsound = (spec_cols & set(where)) - set(mor["key_cols"])
-        if not part or not part.get("specs") or unsound:
-            # no layout (or a legacy non-key spec): resolve-then-filter
-            return read_snapshot(spark, path, version).filter(
-                _where_expr(where)
-            )
-        keep_base = _partition_keep(part, manifest["files"], where, spark)
-        keep_groups = [
-            _partition_keep(part, grp, where, spark)
-            for grp in mor["deltas"]
-        ]
-        if not keep_base and not any(keep_groups):
-            return _manifest_df(
-                spark, path,
-                {"files": [], "schema": manifest.get("schema")},
-            ).filter(F.lit(False))
-        return _resolve_mor(
-            spark, path, _chain_manifest(manifest, keep_base, keep_groups)
-        ).filter(_where_expr(where))
-    keep, _total = partition_pruned_files(path, where, version, spark)
-    if not keep:
-        return _manifest_df(
-            spark, path, {"files": [], "schema": manifest.get("schema")}
-        ).filter(F.lit(False))
-    keep_set = set(keep)
-    pruned = {
-        "files": keep,
-        "schema": manifest.get("schema"),
-        **_policies(manifest),
-        "dv": {
-            rel: dv
-            for rel, dv in (manifest.get("dv") or {}).items()
-            if rel in keep_set
-        },
-    }
-    return _manifest_df(spark, path, pruned).filter(_where_expr(where))
+    vectors). On a MOR table base files and every delta group are
+    pruned by tuple before latest-wins resolution when the predicate's
+    spec sources are key columns, and resolve-then-filter otherwise
+    (:func:`_scoped_read`)."""
+    _, man = _snapshot_manifest(path, version, tag, asof)
+    return _scoped_read(spark, path, man, partition_where=where).filter(
+        _where_expr(where or {})
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -6384,15 +6121,7 @@ def table_files(
     import json
     import os
 
-    versions = snapshot_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshots under {path!r}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise FileNotFoundError(
-            f"version {v} not committed (have {versions}) — vacuumed?"
-        )
-    m = _load_manifest(path, v)
+    _, m = _snapshot_manifest(path, version)
     dv_map = m.get("dv") or {}
     stats = m.get("stats") or {}
     pvals = (m.get("partition") or {}).get("values") or {}
@@ -6537,10 +6266,7 @@ def add_check_constraint(
     otherwise, so the invariant 'committed data is valid' holds from the
     moment the constraint exists). Every subsequent row-writing verb
     enforces it on the rows it writes. Returns the new version."""
-    versions = snapshot_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshots under {path!r}")
-    man = _load_manifest(path, versions[-1])
+    _, man = _snapshot_manifest(path)
     cons = dict(man.get("constraints") or {})
     if name in cons:
         raise ValueError(
@@ -6563,10 +6289,7 @@ def drop_check_constraint(path: str, name: str) -> int:
     """Remove constraint ``name`` with a metadata-only commit; the map
     is recorded explicitly (empty included). Returns the new
     version."""
-    versions = snapshot_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshots under {path!r}")
-    man = _load_manifest(path, versions[-1])
+    _, man = _snapshot_manifest(path)
     cons = dict(man.get("constraints") or {})
     if name not in cons:
         raise ValueError(
@@ -6590,11 +6313,8 @@ def evolve_partition_spec(path: str, new_spec) -> int:
     reuses that spec's id. Also legal on an UNPARTITIONED table: existing
     files get no tuples (never pruned) and appends from then on are
     partitioned. Returns the new version."""
-    versions = snapshot_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshots under {path!r}")
+    head, man = _snapshot_manifest(path)
     new_spec = _normalize_spec(new_spec)
-    man = _load_manifest(path, versions[-1])
     if man.get("mor"):
         # r14 (r13 verdict #2): a MOR table takes a partition spec as
         # long as every source column is a MOR KEY column — a key's
@@ -6628,7 +6348,7 @@ def evolve_partition_spec(path: str, new_spec) -> int:
         specs.append(new_spec)
         cur = len(specs) - 1
     if part.get("current") == cur and part.get("specs"):
-        return versions[-1]  # already current: nothing to commit
+        return head  # already current: nothing to commit
     import uuid
 
     manifest = {k: v for k, v in man.items()}
@@ -6690,10 +6410,7 @@ def rename_column(path: str, old: str, new: str) -> int:
     import re as _re
     import uuid
 
-    versions = snapshot_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshots under {path!r}")
-    man = _load_manifest(path, versions[-1])
+    _, man = _snapshot_manifest(path)
     schema = dict(man.get("schema") or {})
     if old not in schema:
         raise ValueError(f"no column {old!r} (have {sorted(schema)})")
@@ -6824,16 +6541,13 @@ def widen_column_type(path: str, col: str, new_type: str) -> int:
     they would corrupt values silently. Returns the new version."""
     import uuid
 
-    versions = snapshot_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshots under {path!r}")
-    man = _load_manifest(path, versions[-1])
+    head, man = _snapshot_manifest(path)
     schema = dict(man.get("schema") or {})
     if col not in schema:
         raise ValueError(f"no column {col!r} (have {sorted(schema)})")
     cur = schema[col]
     if new_type == cur:
-        return versions[-1]  # already that type: nothing to commit
+        return head  # already that type: nothing to commit
     if new_type not in _WIDENINGS.get(cur, ()):
         lattice = ", ".join(
             "{}->{}".format(k, "/".join(v))
@@ -6872,10 +6586,7 @@ def drop_column(path: str, col: str) -> int:
     import re as _re
     import uuid
 
-    versions = snapshot_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshots under {path!r}")
-    man = _load_manifest(path, versions[-1])
+    _, man = _snapshot_manifest(path)
     if man.get("mor"):
         mor = man["mor"]
         if col in mor["key_cols"] or col == mor["seq_col"]:
@@ -7161,10 +6872,7 @@ def add_generated_column(
     discipline: the invariant holds from the moment it exists). Writers
     may then omit the column (computed) or supply it (validated).
     Returns the new version."""
-    versions = snapshot_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshots under {path!r}")
-    man = _load_manifest(path, versions[-1])
+    _, man = _snapshot_manifest(path)
     schema = man.get("schema") or {}
     if col not in schema:
         raise ValueError(
@@ -7200,10 +6908,7 @@ def drop_generated_column(path: str, col: str) -> int:
     """Remove the generated contract on ``col`` (the column stays) with
     a metadata-only commit; the map is recorded explicitly (empty
     included)."""
-    versions = snapshot_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshots under {path!r}")
-    man = _load_manifest(path, versions[-1])
+    _, man = _snapshot_manifest(path)
     gen = dict(man.get("generated") or {})
     if col not in gen:
         raise ValueError(f"no generated column {col!r} (have {sorted(gen)})")

@@ -262,23 +262,25 @@ class TestStatsPrunedSnapshot:
 
 
 class TestBloomFileIndex:
+    """Point lookups through the snapshot bloom sidecar
+    (``index_bloom_snapshot`` + ``read_snapshot_point``) on an 8-file
+    table: the files the read opens, not only its rows."""
+
     def _table(self, spark, tmp_path, name, localized=True):
-        import shutil
+        from dp_dimension_importer_spark import storage
 
         path = str(tmp_path / name)
-        shutil.rmtree(path, ignore_errors=True)
         df = spark.range(0, 8_000).select(F.col("id"), (F.col("id") * 3).alias("v"))
         part = df.repartitionByRange(8, "id") if localized else df.repartition(8, "v")
-        part.write.parquet(path)
+        storage.write_snapshot(spark, part, path)
+        storage.index_bloom_snapshot(spark, path, "id")
         return path
 
     def test_point_lookup_skips_files_and_is_exact(self, spark, tmp_path):
         from dp_dimension_importer_spark import storage
 
         path = self._table(spark, tmp_path, "t1", localized=True)
-        n = storage.build_bloom_index(spark, path, "id")
-        assert n == 8
-        out = storage.read_bloom_pruned(spark, path, "id", [42, 7999])
+        out = storage.read_snapshot_point(spark, path, "id", [42, 7999])
         # keys live in 2 known files; bloom may false-positive a few more
         # but must stay well under the full listing
         assert 0 < len(out.inputFiles()) <= 4
@@ -288,8 +290,8 @@ class TestBloomFileIndex:
         from dp_dimension_importer_spark import storage
 
         path = self._table(spark, tmp_path, "t2")
-        storage.build_bloom_index(spark, path, "id")
-        out = storage.read_bloom_pruned(spark, path, "id", [123_456_789])
+        out = storage.read_snapshot_point(spark, path, "id", [123_456_789])
+        assert out.inputFiles() == []
         assert out.count() == 0
 
     def test_never_skips_wrongly_on_any_layout(self, spark, tmp_path):
@@ -298,22 +300,9 @@ class TestBloomFileIndex:
         from dp_dimension_importer_spark import storage
 
         path = self._table(spark, tmp_path, "t3", localized=False)
-        storage.build_bloom_index(spark, path, "id")
         keys = [0, 1, 4_000, 7_999]
-        out = storage.read_bloom_pruned(spark, path, "id", keys)
+        out = storage.read_snapshot_point(spark, path, "id", keys)
         assert sorted(r.id for r in out.collect()) == keys
-
-    def test_unindexed_files_always_read(self, spark, tmp_path):
-        """A file written AFTER the index build must never be skipped."""
-        from dp_dimension_importer_spark import storage
-
-        path = self._table(spark, tmp_path, "t4")
-        storage.build_bloom_index(spark, path, "id")
-        spark.range(100_000, 100_001).select(
-            F.col("id"), (F.col("id") * 3).alias("v")
-        ).coalesce(1).write.mode("append").parquet(path)
-        out = storage.read_bloom_pruned(spark, path, "id", [100_000])
-        assert [r.id for r in out.collect()] == [100_000]
 
 
 class TestStreamAggExactlyOnce:

@@ -17,8 +17,9 @@ maintenance verbs each run once on a small table of their own: a
 three-file stats-carrying table (Z-order optimize, then an incremental
 optimize of two appended files, small-file compaction, a DV purge), a
 hidden-partitioned table, and MOR tables with several delta groups, one
-of them hidden-partitioned. Lower a budget in the change that earns the
-lower count."""
+of them hidden-partitioned. The scoped reads (range-pruned and
+partition-pruned) run on a copy-on-write and on a MOR table each. Lower
+a budget in the change that earns the lower count."""
 
 from __future__ import annotations
 
@@ -37,6 +38,14 @@ from dp_dimension_importer_spark import storage
 BUDGETS = {
     "upsert": 1,
     "read_point": 3,
+    # the latest MOR version, resolved; the pruned reads on the same MOR
+    # table and on a copy-on-write one; the partitioned reads on a
+    # hidden-partitioned table and on a MOR one
+    "read_snapshot": 1,
+    "read_pruned_mor": 1,
+    "read_pruned": 1,
+    "read_partitioned": 1,
+    "read_partitioned_mor": 1,
     "merge_into": 7,
     "delete": 1,
     "update": 1,
@@ -153,6 +162,11 @@ def _maintenance_jobs(spark, opath, ppath, rpath) -> dict:
             spark, _grouped(spark, range(10 * i, 10 * i + 10), "p", 0),
             ppath, spec, mode="append" if i else "overwrite",
         )
+    measured["read_partitioned"] = _jobs(
+        spark, lambda: storage.read_snapshot_partitioned(
+            spark, ppath, {"g": ("=", "a")},
+        ).collect(),
+    )
     measured["optimize_partitions"] = _committing_jobs(
         spark, ppath, lambda: storage.optimize_partitions(
             spark, ppath, {"g": ("=", "a")},
@@ -166,6 +180,12 @@ def _maintenance_jobs(spark, opath, ppath, rpath) -> dict:
             spark, rpath, _grouped(spark, range(seq, 20, 3), "u", seq),
             ["k", "g"], "seq",
         )
+
+    measured["read_partitioned_mor"] = _jobs(
+        spark, lambda: storage.read_snapshot_partitioned(
+            spark, rpath, {"g": ("=", "a")},
+        ).collect(),
+    )
 
     def _fold_partition():
         storage.optimize_partitions(
@@ -235,6 +255,14 @@ def test_storage_verb_job_budgets(spark):
         measured["read_point"] = _jobs(spark, lambda: storage.read_snapshot_point(
             spark, path, "k", [3, 31, 45],
         ).collect())
+        measured["read_snapshot"] = _jobs(
+            spark, lambda: storage.read_snapshot(spark, path).collect()
+        )
+        measured["read_pruned_mor"] = _jobs(
+            spark, lambda: storage.read_snapshot_pruned(
+                spark, path, "k", 10, 35,
+            ).collect(),
+        )
         measured["merge_into"] = _jobs(spark, lambda: storage.merge_into_snapshot(
             spark, path, _rows(spark, range(45, 55), "m", 2), ["k"],
             update_set={"val": "src_val", "seq": "src_seq"}, insert=True,
@@ -264,6 +292,11 @@ def test_storage_verb_job_budgets(spark):
         )
         storage.write_snapshot(
             spark, _rows(spark, range(40), "c", 0), cpath, stats_cols=["k"]
+        )
+        measured["read_pruned"] = _jobs(
+            spark, lambda: storage.read_snapshot_pruned(
+                spark, cpath, "k", 10, 35,
+            ).collect(),
         )
         measured["delete_cow"] = _jobs(spark, lambda: storage.delete_where_snapshot(
             spark, cpath, F.col("k") < 5,
@@ -314,3 +347,37 @@ def test_storage_verb_job_budgets(spark):
         for verb, n in measured.items() if n > BUDGETS[verb]
     }
     assert not over, f"verbs over their job budget (jobs, budget): {over}"
+
+
+def test_empty_scoped_reads_collect_without_a_job(spark):
+    """A scoped read that keeps no file is a typed local frame:
+    collecting it runs no Spark job, and it has the table's schema."""
+    scratch = tempfile.mkdtemp(prefix="budget_empty_")
+    cpath = os.path.join(scratch, "c")
+    ppath = os.path.join(scratch, "p")
+    try:
+        storage.write_snapshot(
+            spark, _rows(spark, range(40), "c", 0), cpath, stats_cols=["k"]
+        )
+        storage.index_bloom_snapshot(spark, cpath, "k")
+        storage.write_snapshot_partitioned(
+            spark, _grouped(spark, range(10), "p", 0), ppath,
+            [("identity", "g")],
+        )
+        reads = [
+            ("pruned", cpath,
+             storage.read_snapshot_pruned(spark, cpath, "k", 100, 200)),
+            ("point", cpath,
+             storage.read_snapshot_point(spark, cpath, "k", [999])),
+            ("partitioned", ppath,
+             storage.read_snapshot_partitioned(
+                 spark, ppath, {"g": ("=", "zz")}
+             )),
+        ]
+        for name, p, df in reads:
+            assert df.schema == storage.read_snapshot(spark, p).schema, name
+            rows = []
+            assert _jobs(spark, lambda: rows.extend(df.collect())) == 0, name
+            assert rows == [], name
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)

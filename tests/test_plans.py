@@ -1550,29 +1550,23 @@ def test_compact_small_files_is_copy_on_write_and_idempotent(spark, tmp_path):
 
 
 def test_bloom_pruned_read_survives_file_rewrites(spark, tmp_path):
-    """A bloom sidecar built before a file rewrite (compaction/merge
-    without an index rebuild) must degrade to less pruning, never to a
-    crash or a missed row: stale entries are dropped, unindexed
+    """A bloom sidecar built before a file rewrite (a compaction without
+    an index refresh) must degrade to less pruning, never to a crash or
+    a missed row: entries of rewritten-away files are ignored, unindexed
     successor files are always read."""
-    import os
-
     from dp_dimension_importer_spark import storage
 
     path = str(tmp_path / "tbl")
-    spark.range(1000).select(F.col("id").alias("k")).repartition(4) \
-        .write.parquet(path)
-    storage.build_bloom_index(spark, path, "k")
-    # simulate a rewrite: merge everything into one NEW file, drop old
-    df = spark.read.parquet(path)
-    tmp2 = str(tmp_path / "tmp2")
-    df.coalesce(1).write.parquet(tmp2)
-    for f in os.listdir(path):
-        if f.endswith(".parquet"):
-            os.remove(os.path.join(path, f))
-    for f in os.listdir(tmp2):
-        if f.endswith(".parquet"):
-            os.rename(os.path.join(tmp2, f), os.path.join(path, "merged.parquet"))
-    got = storage.read_bloom_pruned(spark, path, "k", [7, 999]).collect()
+    storage.write_snapshot(
+        spark, spark.range(1000).select(F.col("id").alias("k")).repartition(4),
+        path,
+    )
+    storage.index_bloom_snapshot(spark, path, "k")
+    indexed = set(storage.table_files(spark, path).toPandas()["file"])
+    storage.optimize_snapshot(spark, path, ["k"], 1)
+    live = set(storage.table_files(spark, path).toPandas()["file"])
+    assert not indexed & live  # every indexed file was rewritten away
+    got = storage.read_snapshot_point(spark, path, "k", [7, 999]).collect()
     assert sorted(r.k for r in got) == [7, 999]
 
 
