@@ -102,8 +102,6 @@ from dp_dimension_importer_spark.pipeline.importer import (  # noqa: F401
 )
 from dp_dimension_importer_spark.storage import (  # noqa: F401
     compact_latest,
-    compact_parquet,
-    merge_upsert,
     write_clustered,
     read_bucketed,
     read_partitioned,
@@ -165,6 +163,7 @@ from dp_dimension_importer_spark.storage import (  # noqa: F401
     compact_small_files_snapshot,
     delete_where_snapshot,
     merge_apply_changes,
+    merge_upsert_snapshot,
     optimize_snapshot,
     read_snapshot,
     read_snapshot_pruned,
@@ -191,7 +190,6 @@ from dp_dimension_importer_spark.operators.similarity import (  # noqa: F401
     probe_index_batch,
 )
 from dp_dimension_importer_spark.streaming.sink import (  # noqa: F401
-    compact_commit_log,
     make_snapshot_append_handler,
     run_stream_snapshot_append,
 )
@@ -265,8 +263,6 @@ __all__ = [
     "write_partitioned",
     "write_sharded",
     "write_clustered",
-    "compact_parquet",
-    "merge_upsert",
     "dedup_spans",
     "write_sketch_state",
     "read_sketch_state",
@@ -317,9 +313,9 @@ __all__ = [
     "zorder_layout",
     "delete_where_snapshot",
     "merge_apply_changes",
+    "merge_upsert_snapshot",
     "upsert_delta_snapshot",
     "compact_mor",
-    "compact_commit_log",
     "stage_snapshot",
     "read_staged",
     "publish_snapshot",

@@ -2148,61 +2148,42 @@ def dedup_minhash_keep(spark, sf_dir):
     )
 
 
+#: the band index's hidden-partition spec: one partition per band
+BAND_SPEC = [("identity", "band")]
+
+
 def append_band_index(new_bands: DataFrame, idx_path: str) -> None:
     """DAILY-INGEST append to the persisted LSH band index
-    (:func:`dedup_minhash_incremental`'s stored (band, bkey, doc_id)
-    table): today's kept docs' band rows land as new files under the
-    existing ``band=N/`` directories. Each append adds ≥1 small file per
-    band — :func:`compact_band_index` is the retention valve."""
+    (:func:`dedup_minhash_incremental`'s (band, bkey, doc_id) snapshot
+    table): today's kept docs' band rows land as one append commit, one
+    new file per touched band — :func:`compact_band_index` is the
+    retention valve."""
     from dp_dimension_importer_spark import storage
 
-    storage.write_partitioned(new_bands, idx_path, ["band"], mode="append")
-
-
-def compact_band_index(
-    spark, idx_path: str, files_per_band: int = 1
-) -> int:
-    """COMPACTION/RETENTION for the persisted MinHash band index (r10
-    verdict task #7: under daily ingest every append grows each
-    ``band=N/`` directory by one file — a year of ingests is 365 small
-    files per band, and probe-scan planning cost grows with file count,
-    not data size). Folds each band's files down to ``files_per_band``
-    and drops duplicate (band, bkey, doc_id) rows (a re-indexed doc's
-    rows collapse; probe results are unchanged because the candidate
-    join dropDuplicates downstream anyway — probe-equivalence is pinned
-    in tests/test_band_index.py).
-
-    Crash safety reuses the :func:`storage.compact_parquet` swap shape
-    (same ``__compact_tmp``/``__compact_old`` suffixes, so
-    :func:`storage.recover_swap` heals a crash between the two renames):
-    the rewrite goes to a temp dir, the live index is never in a
-    half-written state. ``repartition(files_per_band, "band")`` puts
-    each band's rows in exactly ``files_per_band`` tasks, and the
-    partitioned write emits one file per (task × band) — per-band file
-    count == files_per_band by construction. Returns the total file
-    count after compaction."""
-    import glob
-    import os
-    import shutil
-
-    from dp_dimension_importer_spark import storage
-
-    storage.recover_swap(idx_path)
-    df = storage.read_partitioned(spark, idx_path).dropDuplicates()
-    tmp = idx_path.rstrip("/") + "__compact_tmp"
-    old = idx_path.rstrip("/") + "__compact_old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-    (
-        df.repartition(files_per_band, "band")
-        .write.mode("error")
-        .partitionBy("band")
-        .parquet(tmp)
+    storage.write_snapshot_partitioned(
+        new_bands.sparkSession, new_bands, idx_path, BAND_SPEC,
+        mode="append",
     )
-    os.rename(idx_path, old)
-    os.rename(tmp, idx_path)
-    shutil.rmtree(old)
-    return len(glob.glob(os.path.join(idx_path, "band=*", "*.parquet")))
+
+
+def compact_band_index(spark, idx_path: str) -> int:
+    """COMPACTION/RETENTION for the persisted MinHash band index: under
+    daily ingest every append adds a file per band — a year of ingests
+    is 365 small files per band, and probe-scan planning cost grows with
+    file count, not data size. Commits the index's deduplicated
+    (band, bkey, doc_id) rows as one overwrite, which writes one file per
+    band (a re-indexed doc's rows collapse; probe results are unchanged
+    because the candidate join dropDuplicates downstream anyway —
+    probe-equivalence is pinned in tests/test_band_index.py). The
+    manifest hard-link is the commit: a failure before it leaves the
+    index at its previous version, and ``storage.vacuum_snapshots``
+    reclaims the superseded files. Returns the committed version."""
+    from dp_dimension_importer_spark import storage
+
+    return storage.write_snapshot_partitioned(
+        spark, storage.read_snapshot(spark, idx_path).dropDuplicates(),
+        idx_path, BAND_SPEC,
+    )
 
 
 @register("dedup_minhash_incremental")  # rows-only: LSH path, recall-gated
@@ -2211,7 +2192,7 @@ def dedup_minhash_incremental(spark, sf_dir):
     near-duplicate analog of dedup_bloom_incremental's exact router, and
     the daily-ingest form of :func:`dedup_minhash_keep`: history's
     signatures are computed ONCE and stored as a (band, bkey, doc_id)
-    band table (:func:`minhash_bands`, hive-partitioned by band); today's
+    band snapshot table (:func:`minhash_bands`, partitioned by band); today's
     job computes signatures for the NEW BATCH ONLY, probes the stored
     table with an equi-join on (band, bkey), adds the batch's internal
     LSH candidates, exact-verifies every candidate pair with shingle-set
@@ -2234,9 +2215,8 @@ def dedup_minhash_incremental(spark, sf_dir):
     service would partition by pmod(bkey, B) instead to prune the probe
     to one bucket — same table, different pruning axis. Retention: each
     daily :func:`append_band_index` adds one file per band;
-    :func:`compact_band_index` (r11) folds a band's files back to a
-    bounded count with probe-equivalence pinned in
-    tests/test_band_index.py."""
+    :func:`compact_band_index` folds a band's files back to one with
+    probe-equivalence pinned in tests/test_band_index.py."""
     import shutil
     import tempfile
 
@@ -2257,8 +2237,8 @@ def dedup_minhash_incremental(spark, sf_dir):
     try:
         # day-0 job: signatures of history, banded, persisted — after
         # this line history's text is only ever read for touched docs
-        storage.write_partitioned(
-            minhash_bands(minhash_signatures(corpus)), idx, ["band"]
+        storage.write_snapshot_partitioned(
+            spark, minhash_bands(minhash_signatures(corpus)), idx, BAND_SPEC
         )
 
         # day-1 job: batch signatures only. Pinned: the band table feeds
@@ -2268,11 +2248,9 @@ def dedup_minhash_incremental(spark, sf_dir):
         # one job tree (r14, guide §5 / §2.4)
         sigs_b = minhash_signatures(batch)
         bands_b = minhash_bands(sigs_b).localCheckpoint(eager=False)
-        # the band table layout is fixed by minhash_bands — pass its
-        # schema so the probe pays no footer-inference job (guide §6)
-        stored = storage.read_partitioned(
-            spark, idx, schema="`doc_id` bigint, `bkey` bigint, `band` int"
-        )
+        # the manifest's committed schema forces the scan: the probe
+        # pays no footer-inference job (guide §6)
+        stored = storage.read_snapshot(spark, idx)
         cross = (
             stored.alias("c")
             .join(

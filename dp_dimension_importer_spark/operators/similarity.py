@@ -1347,8 +1347,8 @@ def ann_sq_topk(spark, sf_dir):
 # append_band_index pattern — no refit, one new file per touched cell);
 # probe_index reads ONLY the probed cells' directories (PartitionFilters
 # — pinned by an inputFiles assertion in the registered query) and
-# reranks the SQ8 shortlist exactly. compact via storage.compact_parquet
-# per cell=N/ dir when daily appends accumulate.
+# reranks the SQ8 shortlist exactly. compact_ivf_index folds each cell's
+# files back to one when daily appends accumulate.
 # ---------------------------------------------------------------------------
 
 IVF_IDX_META = "_ivf_meta.json"

@@ -62,17 +62,18 @@ SCD2_ASOF_EPOCH = 1705363200
     """,
 )
 def cdc_merge_upsert(spark, sf_dir):
-    """CDC MERGE end-to-end THROUGH THE FILESYSTEM: materialize an
-    "existing" table (train-bucket orders, seq=1) as priority-partitioned
-    parquet, apply a change batch (buckets 5-9: 5-7 are updates with a
-    bumped price, 8-9 inserts; seq=2) via :func:`storage.merge_upsert`'s
-    partition-pruned dynamic-overwrite path, then READ THE TABLE BACK and
-    return it — so the driver's oracle row checks insert/update/untouched
-    semantics, latest-wins resolution, AND the on-disk round-trip in one
-    query (the reference's idempotent node-upsert R9/R10/R12 at table
-    scale). The oracle is the plain window-over-union formulation. The
-    byte-identity of untouched partitions is pinned separately by the
-    layout audit in tests/test_plans.py. The result is eagerly
+    """CDC MERGE end-to-end THROUGH THE FILESYSTEM: commit an "existing"
+    snapshot table (train-bucket orders, seq=1) hidden-partitioned by
+    priority (:func:`storage.write_snapshot_partitioned`, identity spec),
+    apply a change batch (buckets 5-9: 5-7 are updates with a bumped
+    price, 8-9 inserts; seq=2) via :func:`storage.merge_upsert_snapshot`,
+    which rewrites only the files holding a changed key, then READ THE
+    TABLE BACK and return it — so the driver's oracle row checks
+    insert/update/untouched semantics, latest-wins resolution, AND the
+    on-disk round-trip in one query (the reference's idempotent
+    node-upsert R9/R10/R12 at table scale). The oracle is the plain
+    window-over-union formulation. That untouched files carry is pinned
+    separately by tests/test_plans.py. The result is eagerly
     localCheckpoint-ed so the scratch directory can be removed before
     returning."""
     import shutil
@@ -94,16 +95,14 @@ def cdc_merge_upsert(spark, sf_dir):
     )
     path = tempfile.mkdtemp(prefix="cdc_merge_upsert_")
     try:
-        # write_partitioned pins its own value-keyed exchange width
-        # (one file per priority, parallel file creation)
-        storage.write_partitioned(existing, path, ["o_orderpriority"])
-        storage.merge_upsert(
-            spark, path, changes,
-            key_cols=["o_orderkey"], seq_col="seq",
-            partition_col="o_orderpriority", n_shards=5,
+        storage.write_snapshot_partitioned(
+            spark, existing, path, [("identity", "o_orderpriority")]
+        )
+        storage.merge_upsert_snapshot(
+            spark, path, changes, key_cols=["o_orderkey"], seq_col="seq"
         )
         return (
-            spark.read.parquet(path)
+            storage.read_snapshot(spark, path)
             .select(
                 "o_orderkey", "o_orderpriority",
                 F.col("o_totalprice").alias("price"), "seq",
@@ -113,8 +112,6 @@ def cdc_merge_upsert(spark, sf_dir):
         )
     finally:
         shutil.rmtree(path, ignore_errors=True)
-
-
 
 
 @register(
@@ -199,8 +196,7 @@ def scd2_asof_snapshot(spark, sf_dir):
 )
 def q66_snapshot_time_travel(spark, sf_dir):
     """TIME TRAVEL through the snapshot/manifest table layer
-    (:func:`storage.write_snapshot` — the transaction log
-    ``compact_parquet``'s docstring defers to): commit a base table as
+    (:func:`storage.write_snapshot`): commit a base table as
     version 1, apply a CDC batch via
     :func:`storage.merge_upsert_snapshot` (snapshot-isolated latest-wins
     → version 2), then read BOTH versions back — v1 via time travel, v2

@@ -594,9 +594,10 @@ def q52c_stream_stream_full_join(spark, sf_dir):
 def q60_stream_upsert_sink(spark, sf_dir):
     """End-to-end exactly-once streaming MERGE sink THROUGH THE
     FILESYSTEM: replay the events table as a CDC change stream (one file
-    per micro-batch), land each micro-batch in a parquet table via
-    ``foreachBatch`` → :func:`storage.merge_upsert` behind a batch-id
-    commit log (streaming/sink.py), then read the table back. Each event
+    per micro-batch), land each micro-batch in a snapshot table via
+    ``foreachBatch`` → :func:`storage.merge_upsert_snapshot` with the
+    batch id as the manifest ``txn`` mark (streaming/sink.py), then read
+    the table back. Each event
     row upserts its user's profile row; latest-wins on ``event_id``
     (unique, so deterministic), so the final table is exactly "the
     newest event per user" — the batch window-over-events oracle.
@@ -606,8 +607,8 @@ def q60_stream_upsert_sink(spark, sf_dir):
     micro-batch checkpoint in place of Kafka offsets. The crash/restart
     and redelivery guarantees are pinned in tests/test_streaming.py; the
     oracled run here proves the happy path lands batch-identical state.
-    The result is eagerly localCheckpoint-ed so the scratch table,
-    commit log, and checkpoint can be removed before returning."""
+    The result is eagerly localCheckpoint-ed so the scratch table and
+    checkpoint can be removed before returning."""
     import shutil
     import tempfile
 
@@ -622,7 +623,7 @@ def q60_stream_upsert_sink(spark, sf_dir):
     try:
         out = merge_sink.run_stream_merge(
             spark, replay_dir, events.schema, table_path,
-            key_cols=["user_id"], seq_col="event_id", n_shards=4,
+            key_cols=["user_id"], seq_col="event_id",
             checkpoint=scratch + "/ckpt",
         )
         return (
@@ -713,15 +714,15 @@ def q69_stream_mv_refresh(spark, sf_dir):
     state: replay events as 4 micro-batches through
     :func:`streaming.sink.run_stream_agg`, whose ``foreachBatch`` handler
     merges each batch's mergeable partials (merge_agg_state's prefix
-    contract) into an MVCC state table — new snapshot version per
-    refresh, atomic {batch_id, version} pointer swap as the commit point.
-    Sums are not idempotent under redelivery (unlike q60's latest-wins
-    upserts), which is exactly what the pointer protocol solves: a crash
-    between snapshot commit and pointer swap leaves an orphan version the
-    redelivered batch never sees. The oracle is the one-shot batch GROUP
-    BY over the full event table, so a green row pins stream-incremental
-    == batch recompute exactly; redelivery/crash mechanics are pinned in
-    tests/test_streaming.py. Eagerly localCheckpoint-ed so scratch state
+    contract) into a snapshot state table — one new version per refresh,
+    committed with the batch id as the manifest ``txn`` mark. Sums are
+    not idempotent under redelivery (unlike q60's latest-wins upserts),
+    which is exactly what the mark solves: the data and the mark land in
+    one hard-link, so a redelivered batch is skipped if it committed and
+    re-merged against the prior version if it did not. The oracle is the
+    one-shot batch GROUP BY over the full event table, so a green row
+    pins stream-incremental == batch recompute exactly; redelivery/crash
+    mechanics are pinned in tests/test_dq_mv_prefix.py. Eagerly localCheckpoint-ed so scratch state
     can be removed before returning."""
     import shutil
     import tempfile
@@ -1382,10 +1383,11 @@ def q90b_changefeed_mv_stream(spark, sf_dir):
     wiring). Events land in a source snapshot table as FOUR append
     commits; :func:`streaming.changefeed.read_changes_stream` streams
     the per-version deltas; a ``foreachBatch`` handler
-    (:func:`streaming.sink.make_agg_state_handler` — MVCC state
-    versions + atomic {batch_id, version} pointer swap) merges each
-    batch's mergeable partials into the MV. A hand-redelivered batch 0
-    must leave the pointer untouched (asserted). The oracle is the
+    (:func:`streaming.sink.make_agg_state_handler` — one state version
+    per batch, committed with the batch id as the manifest ``txn``
+    mark) merges each batch's mergeable partials into the MV. A
+    hand-redelivered batch 0 must commit no version (asserted). The
+    oracle is the
     one-shot GROUP BY over the full events table: feed-driven streaming
     MV == batch recompute exactly. Reference parity: the importer's
     patch-back loop (handler/incoming_instance_handler.go:217-280)
@@ -1435,13 +1437,13 @@ def q90b_changefeed_mv_stream(spark, sf_dir):
             .start()
         )
         q.awaitTermination()
-        meta = agg_sink.read_agg_state_pointer(state_path)
-        # hand-redelivery of an already-applied batch: pointer untouched
+        versions = storage.snapshot_versions(state_path)
+        # hand-redelivery of an already-applied batch: no new version
         handler(spark.range(0), 0)
-        assert agg_sink.read_agg_state_pointer(state_path) == meta, (
-            "redelivered batch moved the MV pointer"
+        assert storage.snapshot_versions(state_path) == versions, (
+            "redelivered batch committed an MV version"
         )
-        out = storage.read_snapshot(spark, state_path, meta["version"])
+        out = storage.read_snapshot(spark, state_path)
         return (
             out.select(
                 "event_type", "sum_micros", "cnt_rows", "max_ts_epoch"

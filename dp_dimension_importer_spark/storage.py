@@ -551,49 +551,6 @@ def compact_small_files_snapshot(
     )
 
 
-def recover_swap(path: str) -> bool:
-    """Recover a table whose rename-and-swap (``merge_upsert`` whole-table
-    path, :func:`compact_parquet`) crashed BETWEEN the two renames: the
-    data survives intact at ``<path>__merge_old`` / ``<path>__compact_old``
-    while ``path`` itself is missing. Rename the old directory back and
-    return True; return False if there was nothing to recover. Idempotent;
-    called automatically at the top of ``merge_upsert`` and
-    ``compact_parquet``.
-
-    Two hazards this function must not mishandle: a crash AFTER the
-    second rename but BEFORE the old-directory cleanup leaves a STALE
-    ``*_old`` next to a healthy table — when ``path`` exists those are
-    deleted here (they are by definition older than the live table), so
-    they can never shadow real data later. And if ``path`` is missing
-    with MORE THAN ONE candidate (a stale dir from one op plus the
-    genuine crash artifact of another), guessing could silently
-    time-travel the table — refuse loudly instead."""
-    import os
-    import shutil
-
-    candidates = [
-        path.rstrip("/") + s for s in ("__merge_old", "__compact_old")
-    ]
-    if os.path.exists(path):
-        # the table is live: any *_old sibling is debris from a swap that
-        # completed but crashed before cleanup — remove it NOW so it can
-        # never be mistaken for recovery data once path goes missing
-        for old in candidates:
-            shutil.rmtree(old, ignore_errors=True)
-        return False
-    present = [c for c in candidates if os.path.exists(c)]
-    if len(present) > 1:
-        raise RuntimeError(
-            f"recover_swap: {path!r} is missing but multiple crashed-swap "
-            f"directories exist ({present}); refusing to guess which holds "
-            "the current data — inspect and rename manually"
-        )
-    if present:
-        os.rename(present[0], path)
-        return True
-    return False
-
-
 def compact_latest(
     df: DataFrame, key_cols: list[str], seq_col: str
 ) -> DataFrame:
@@ -601,7 +558,7 @@ def compact_latest(
     with the greatest ``seq_col``. ``max_by(struct(row), seq)`` — a single
     hash aggregate with map-side partial max, so the exchange carries one
     row per surviving key, never the history (the win_latest_per_key
-    plan). Shared by :func:`merge_upsert` and the streaming merge sink."""
+    plan). :func:`merge_upsert_snapshot`'s per-key batch compaction."""
     from pyspark.sql import functions as F
 
     cols = df.columns
@@ -609,145 +566,9 @@ def compact_latest(
     return df.groupBy(*key_cols).agg(pick).select("m.*")
 
 
-def merge_upsert(
-    spark: SparkSession,
-    path: str,
-    changes: DataFrame,
-    key_cols: list[str],
-    seq_col: str,
-    partition_col: str | None = None,
-    n_shards: int | None = None,
-) -> None:
-    """CDC MERGE into an existing parquet table: apply a change batch
-    (inserts + latest-wins updates) to the table at ``path`` — the
-    reference's idempotent node-upsert (R9/R10/R12, `store/store.go:16-20`)
-    at table scale, and the table-maintenance counterpart of
-    ``win_latest_per_key``'s stream compaction.
-
-    Semantics: rows are identified by ``key_cols``; within a key the row
-    with the greatest ``seq_col`` wins (change rows must carry a seq
-    strictly greater than the stored row they replace; re-applying the
-    same batch is idempotent — at-least-once delivery safe). Unknown keys
-    insert, known keys update, absent keys are untouched.
-
-    The scale property is in WHAT gets rewritten:
-
-    * with ``partition_col``: only partitions the change batch actually
-      touches are read, merged, and rewritten (dynamic partition
-      overwrite) — untouched partitions' files are not opened, not
-      rewritten, byte-identical after the merge (layout-tested). A day's
-      CDC trickle against a 100 TB table costs the touched partitions,
-      not the table. PRECONDITION: ``partition_col`` must be STABLE per
-      key (a pure function of ``key_cols``, e.g. a key-hash bucket, or a
-      business attribute that never changes for a key). A change row that
-      moves a key to a new partition leaves the stored row in the old —
-      unread — partition in place, yielding two rows for that key; keys
-      whose partition can change belong on the whole-table path (every
-      table format's partition-pruned MERGE shares this contract).
-    * without: the whole table is merged and swapped through a scratch
-      directory (same single-writer/local-FS shape as
-      :func:`compact_parquet`; a cluster deployment hands this path to a
-      table format's transaction log).
-
-    The merge itself is ``max_by(struct(seq, row))`` per key — one hash
-    aggregate with map-side partial max (the win_latest_per_key plan), so
-    the shuffle carries one row per surviving key, never the history."""
-    from pyspark.sql import functions as F
-
-    def latest_wins(df: DataFrame) -> DataFrame:
-        return compact_latest(df, key_cols, seq_col)
-
-    recover_swap(path)  # heal a crash between a previous run's renames
-    existing = spark.read.parquet(path)
-    if set(existing.columns) != set(changes.columns):
-        raise ValueError(
-            f"schema mismatch: table {sorted(existing.columns)} vs "
-            f"changes {sorted(changes.columns)}"
-        )
-    changes = changes.select(*existing.columns)  # align column order
-    if partition_col is not None:
-        # Materialize the batch ONCE: the touched-partition collect and
-        # the merge below must see the same rows (an expensive or non-
-        # deterministic change lineage evaluated twice could overwrite a
-        # partition without having read its existing rows).
-        changes = changes.localCheckpoint(eager=True)
-        # bounded driver list: one value per TOUCHED partition (low-
-        # cardinality by the same rule as write_partitioned)
-        touched = [
-            r[0] for r in changes.select(partition_col).distinct().collect()
-        ]
-        # NULL-safe membership: isin([None]) is NULL (never true), which
-        # would EXCLUDE stored null-partition rows from the merge and let
-        # the dynamic overwrite delete them. Match nulls explicitly.
-        non_null = [t for t in touched if t is not None]
-        member = F.col(partition_col).isin(non_null) if non_null else F.lit(False)
-        if any(t is None for t in touched):
-            member = member | F.col(partition_col).isNull()
-        merged = latest_wins(
-            existing.filter(member).unionByName(changes)
-        )
-        if n_shards is not None:
-            merged = merged.repartition(n_shards, partition_col)
-        # localCheckpoint cuts the lineage so the write doesn't read its
-        # own output path; eager => materialized before any file is moved
-        (merged.localCheckpoint(eager=True)
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .option("compression", PARQUET_CODEC)
-         .partitionBy(partition_col).parquet(path))
-    else:
-        import os
-        import shutil
-
-        merged = latest_wins(existing.unionByName(changes))
-        tmp = path.rstrip("/") + "__merge_tmp"
-        old = path.rstrip("/") + "__merge_old"
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(old, ignore_errors=True)
-        write_sharded(merged, tmp, n_shards=n_shards or 8)
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old)
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_files: int,
-    order_col: str | None = None,
-) -> int:
-    """Compact a small-files parquet directory (the debris an incremental
-    append sink accumulates — one file per micro-batch per partition)
-    down to ``target_files``, optionally range-ordered. Rewrites through
-    a temp directory and swaps atomically-enough for a single writer
-    (cluster deployments do this under a table format's transaction log;
-    the rewrite-and-swap shape is the same). Returns the new file count."""
-    import glob
-    import os
-    import shutil
-
-    recover_swap(path)  # heal a crash between a previous run's renames
-    df = spark.read.parquet(path)
-    tmp = path.rstrip("/") + "__compact_tmp"
-    old = path.rstrip("/") + "__compact_old"
-    # A previous crashed run can leave either scratch directory behind;
-    # os.rename onto an existing dir errors, so clear them first (the data
-    # dir itself is untouched — a crash before the first rename loses
-    # nothing, a crash between renames leaves __compact_old recoverable).
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-    write_sharded(df, tmp, n_shards=target_files, order_col=order_col)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    return len(glob.glob(os.path.join(path, "*.parquet")))
-
-
 # ---------------------------------------------------------------------------
-# Snapshot / manifest table layer ("table-format-lite").
-#
-# compact_parquet's docstring defers cluster-safe swaps to "a table format's
-# transaction log" — this is that log, reduced to its load-bearing minimum:
+# Snapshot / manifest table layer ("table-format-lite"): the package's one
+# commit protocol, reduced to its load-bearing minimum:
 #
 #   <path>/data/<token>/part-*.parquet    immutable data files, one dir per
 #                                         producing write (never rewritten)
@@ -758,9 +579,11 @@ def compact_parquet(
 # EEXIST if another writer claimed the same version — optimistic
 # concurrency without any lock service. Readers resolve a manifest ONCE and
 # then read only immutable files, so a concurrent commit can never show a
-# reader a half-written table (the isolation ``compact_parquet``'s
-# rename-swap cannot give). On object stores, swap the hard-link claim for
-# the store's if-none-match put; the layout is unchanged.
+# reader a half-written table, and a crash before the hard-link leaves the
+# table at its previous version. The manifest's ``txn`` map ({app_id:
+# highest committed batch id}) is the one idempotence mark: data and mark
+# land in the same hard-link. On object stores, swap the hard-link claim
+# for the store's if-none-match put; the layout is unchanged.
 #
 # Scale bound: a manifest is one JSON holding every live file path (plus
 # optional per-file stats and the txn watermark map), so commit and read
@@ -1372,25 +1195,36 @@ def merge_upsert_snapshot(
     changes: DataFrame,
     key_cols: list[str],
     seq_col: str,
+    txn: tuple[str, int] | None = None,
 ) -> int:
-    """CDC MERGE with SNAPSHOT ISOLATION: latest-wins resolve the current
-    snapshot against ``changes`` (highest ``seq_col`` per key survives;
-    ties break to the change side arriving later in the union — pass
-    monotone seqs) and commit the result as a new version. Readers of any
-    prior version are untouched — the property ``merge_upsert``'s
-    in-place partition rewrite cannot offer. Returns the new version."""
-    from pyspark.sql import Window as W
+    """CDC upsert with SNAPSHOT ISOLATION — the reference's idempotent
+    node-upsert (`store/store.go:16-20`) at table scale: per ``key_cols``
+    the row with the greatest ``seq_col`` wins (the change row on a
+    tie), so unknown keys insert, absent keys are untouched and
+    re-applying a batch changes nothing. ``changes`` must carry exactly
+    the table's columns. The batch is compacted to its latest row per
+    key (:func:`compact_latest`) and lands through
+    :func:`merge_into_snapshot`: only files holding a changed key are
+    rewritten, and ``txn`` is that verb's idempotence watermark.
+    Returns the new version."""
     from pyspark.sql import functions as F
 
-    current = read_snapshot(spark, path)
-    unioned = current.unionByName(changes)
-    w = W.partitionBy(*key_cols).orderBy(F.col(seq_col).desc())
-    resolved = (
-        unioned.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
+    _, man = _snapshot_manifest(path)
+    cols = list(man.get("schema") or {})
+    if set(cols) != set(changes.columns):
+        raise ValueError(
+            f"schema mismatch: table {sorted(cols)} vs "
+            f"changes {sorted(changes.columns)}"
+        )
+    newer = F.col(f"src_{seq_col}") >= F.col(seq_col)
+    return merge_into_snapshot(
+        spark, path, compact_latest(changes, key_cols, seq_col), key_cols,
+        update_set={
+            c: F.when(newer, F.col(f"src_{c}")).otherwise(F.col(c))
+            for c in cols if c not in key_cols
+        },
+        insert=True, txn=txn,
     )
-    return write_snapshot(spark, resolved, path)
 
 
 def stage_snapshot(
@@ -2784,8 +2618,10 @@ def merge_into_snapshot(
     stats of the files it added, removed or masked; a racing MOR
     upsert's new groups), else :class:`ConcurrentCommitError`;
     ``branch`` stages the merge as the next branch commit, and a racing
-    branch writer refuses. Returns the new version (the branch-local
-    number on a branch)."""
+    branch writer refuses. :func:`merge_upsert_snapshot` (and through it
+    the streaming merge sink) is this verb with one latest-wins UPDATE
+    SET. Returns the new version (the branch-local number on a
+    branch)."""
     import os
     import uuid
 
@@ -2880,9 +2716,7 @@ def merge_into_snapshot(
         )
         tgt = tdata.select(*tcols)
     else:  # no file can hold a matched key
-        tgt = spark.createDataFrame(
-            [], ", ".join(f"`{c}` {t}" for c, t in schema.items())
-        )
+        tgt = local_frame(spark, [], StructType.fromDDL(_schema_ddl(schema)))
     src = source.withColumnsRenamed(
         {c: f"src_{c}" for c in source.columns if c not in key_cols}
     )
@@ -3193,8 +3027,10 @@ def upsert_delta_snapshot(
 ) -> int:
     """MERGE-ON-READ upsert: ``changes`` lands as DELTA FILES — no base
     file is read, let alone rewritten, so the write costs O(changes)
-    regardless of table size (vs :func:`merge_upsert_snapshot`'s
-    copy-on-write full resolve). The manifest accumulates the delta
+    regardless of table size (vs :func:`merge_upsert_snapshot`, which
+    reads the files holding a changed key and rewrites them — latest-wins
+    by seq, where this resolves by commit order). The manifest
+    accumulates the delta
     chain in commit order; every snapshot reader resolves LATEST-WINS
     per key at read time (newer delta commit beats older beats base;
     ``seq_col`` breaks ties within one commit — the caller contract is
@@ -5283,8 +5119,9 @@ def index_bloom_snapshot(
             old_words = spark.read.schema(_BLOOM_WORDS_DDL).parquet(
                 os.path.join(bdir, old["words_dir"])
             )
-            keep = spark.createDataFrame(
-                [(r,) for r in carried], "rel string"
+            keep = local_frame(
+                spark, [(r,) for r in carried],
+                StructType.fromDDL("rel string"),
             )
             parts.append(old_words.join(keep, "rel", "left_semi"))
         if parts:
@@ -5382,32 +5219,37 @@ def refresh_bloom_indexes(spark: SparkSession, path: str) -> dict:
     return out
 
 
+def _bloom_words(spark, path: str, meta: dict):
+    """The sidecar's (rel, w, word) table; None if it has no rows."""
+    import glob
+    import os
+
+    wdir = os.path.join(_snap_bloom_dir(path, meta["col"]), meta["words_dir"])
+    if not glob.glob(os.path.join(wdir, "*.parquet")):
+        return None
+    return spark.read.schema(_BLOOM_WORDS_DDL).parquet(wdir)
+
+
 def _bloom_admitted_files(
-    spark, path: str, col: str, meta: dict, keys_df, pin_masks: bool = True
+    spark, path: str, meta: dict, keys_df
 ) -> set:
     """DISTRIBUTED bloom membership: which indexed files admit at least
     one key in ``keys_df`` (single ``_v`` column, already cast to the
     sidecar's type). No key or word ever reaches the driver — keys
-    reduce to their two xxhash64 words, explode to k probe positions,
-    fold per (key, word) into needed-bit masks, and equi-join the
-    words PARQUET table on the word index; a (key, file) pair is
-    admitted when every probed word has all its needed bits
-    ((word & mask) = mask — an absent sparse word is simply no row and
-    rejects). Only the admitted rel list — bounded by |files|, never
-    |keys| — is collected. A CDC merge therefore probes with millions
-    of source keys: masks are |keys| × ≤k rows, the join shuffles on
-    the word index. Entries for files no longer indexed are harmless
-    (callers intersect with their own rel lists)."""
-    import glob
-    import os
-
+    reduce to their two xxhash64 words, explode to their k probe
+    (word, bit) pairs and equi-join the words PARQUET table on the word
+    index; a (key, file) pair is admitted when all k probed bits are set
+    (an absent sparse word is simply no row and rejects). Only the
+    admitted rel list — bounded by |files|, never |keys| — is collected,
+    so a CDC merge probes with millions of source keys in one job.
+    Entries for files no longer indexed are harmless (callers intersect
+    with their own rel lists)."""
     from pyspark.sql import functions as F
 
     m_bits, k = meta["m_bits"], meta["k"]
-    wdir = os.path.join(_snap_bloom_dir(path, meta["col"]), meta["words_dir"])
-    if not glob.glob(os.path.join(wdir, "*.parquet")):
-        return set()  # nothing indexed has any value (all-null files)
-    idx = spark.read.schema(_BLOOM_WORDS_DDL).parquet(wdir)
+    idx = _bloom_words(spark, path, meta)
+    if idx is None:
+        return set()
     base = (
         keys_df.filter(F.col("_v").isNotNull())
         .select(
@@ -5423,7 +5265,7 @@ def _bloom_admitted_files(
             *[F.pmod(r1 + F.lit(i) * r2, F.lit(m_bits)) for i in range(k)]
         )
     ).alias("_p")
-    masks = (
+    admitted = (
         base.select("_h1", "_h2", pos)
         .select(
             "_h1",
@@ -5431,26 +5273,11 @@ def _bloom_admitted_files(
             (F.col("_p") / 64).cast("long").alias("w"),
             F.expr("shiftleft(1L, CAST(pmod(_p, 64) AS INT))").alias("_b"),
         )
-        .groupBy("_h1", "_h2", "w")
-        .agg(F.bit_or("_b").alias("mask"))
-    )
-    if pin_masks:
-        # consumed TWICE (the need count and the words join): pin the
-        # |keys| × ≤k rows once so a million-key CDC batch's distinct +
-        # hash + explode never runs a second time. Point lookups
-        # (``pin_masks=False``: a handful of literal values in a local
-        # relation) skip the pin — recomputing the tiny local plan is
-        # free, and the eager checkpoint costs a whole extra
-        # driver-blocking job per probe (r14, guide §1.2)
-        masks = masks.localCheckpoint(eager=True)
-    need = masks.groupBy("_h1", "_h2").agg(F.count("*").alias("need"))
-    admitted = (
-        masks.join(idx, "w")
-        .where(F.expr("(word & mask) = mask"))
+        .join(idx, "w")
+        .where(F.expr("(word & _b) = _b"))
         .groupBy("_h1", "_h2", "rel")
-        .agg(F.count("*").alias("got"))
-        .join(need, ["_h1", "_h2"])
-        .where("got = need")
+        .count()
+        .where(F.col("count") == k)
         .select("rel")
         .distinct()
         .collect()
@@ -5458,37 +5285,69 @@ def _bloom_admitted_files(
     return {r["rel"] for r in admitted}
 
 
+def _bloom_literal_admitted(spark, path: str, meta: dict, vals: list) -> set:
+    """:func:`_bloom_admitted_files` for a point read's literal keys, on
+    the driver: the literals (createDataFrame's typing, cast to the
+    sidecar's type) hash in a local relation, which collects with no
+    job; one filtered scan collects only their probed words (at most
+    indexed files × k·|keys| rows)."""
+    from pyspark.sql import functions as F
+
+    m_bits, k = meta["m_bits"], meta["k"]
+    idx = _bloom_words(spark, path, meta)
+    if idx is None or not vals:
+        return set()
+    rows = [(v,) for v in vals]
+    v = F.col("_v").cast(meta["type"])
+    hashes = (
+        local_frame(spark, rows, spark._inferSchemaFromList(rows, ["_v"]))
+        .where(v.isNotNull())
+        .select(F.xxhash64(v), F.xxhash64(F.lit(1), v))
+        .collect()
+    )
+    needs = []
+    for h1, h2 in {tuple(h) for h in hashes}:
+        # Spark's pmod is Python's % for a positive modulus
+        r1, r2, need = h1 % m_bits, h2 % m_bits, {}
+        for i in range(k):
+            p = (r1 + i * r2) % m_bits
+            need[p // 64] = need.get(p // 64, 0) | (1 << (p % 64))
+        needs.append(need)
+    probed = idx.where(F.col("w").isin(*{w for n in needs for w in n}))
+    words: dict[str, dict] = {}  # (rel, w) is unique in the sidecar
+    for r in probed.collect():
+        words.setdefault(r["rel"], {})[r["w"]] = r["word"]
+    # a signed word & an unsigned 64-bit mask tests exactly those bits
+    return {
+        rel for rel, got in words.items()
+        if any(
+            all(got.get(w, 0) & m == m for w, m in need.items())
+            for need in needs
+        )
+    }
+
+
 def _bloom_point_keep(
     spark, path: str, man: dict, col: str, values, rels: list[str]
 ) -> list[str]:
     """Filter ``rels`` to the files that can contain ``col IN values``
     per the snapshot bloom sidecar: indexed files must be admitted,
-    unindexed files always survive (advice, not truth). No usable
-    sidecar → ``rels`` unchanged. ``values`` is a list of literals or a
-    frame holding ``col`` (MERGE's pinned source): a frame's keys feed
-    the probe as they are, with the masks pinned (a CDC batch may hold
-    millions); literals become a local relation whose tiny plan is free
-    to recompute, so they skip the pin's extra driver-blocking job."""
+    unindexed files always survive (advice, not truth). ``values`` is a
+    list of literals or a frame holding ``col`` (MERGE's source)."""
     from pyspark.sql import functions as F
 
     meta = _snap_bloom_meta(path, col, man)
     if meta is None:
         return list(rels)
-    pin = isinstance(values, DataFrame)
-    if pin:
-        keys = (
-            values.select(F.col(col).cast(meta["type"]).alias("_v"))
-            .where(F.col("_v").isNotNull())
-            .distinct()
+    if isinstance(values, DataFrame):
+        adm = _bloom_admitted_files(
+            spark, path, meta,
+            values.select(F.col(col).cast(meta["type"]).alias("_v")),
         )
     else:
-        vals = [v for v in values if v is not None]
-        if not vals:
-            return [rel for rel in rels if rel not in meta["files"]]
-        keys = spark.createDataFrame([(v,) for v in vals]).toDF("_v").select(
-            F.col("_v").cast(meta["type"]).alias("_v")
+        adm = _bloom_literal_admitted(
+            spark, path, meta, [v for v in values if v is not None]
         )
-    adm = _bloom_admitted_files(spark, path, col, meta, keys, pin_masks=pin)
     return [rel for rel in rels if rel not in meta["files"] or rel in adm]
 
 

@@ -1,28 +1,22 @@
-"""Exactly-once streaming MERGE sink: foreachBatch → ``merge_upsert``
-behind a batch-id commit log.
+"""Exactly-once streaming sinks: ``foreachBatch`` handlers that commit
+each micro-batch to a snapshot table with ``txn=(APP_ID, batch_id)``.
 
-This makes the engine's deployment story executable end-to-end: a CDC
-change stream lands in a parquet table with upsert semantics, and the
-table state is exactly-once OBSERVABLE across crashes and restarts.
 Structured Streaming's checkpoint gives at-least-once micro-batch
 delivery (a batch whose offsets were not committed is redelivered with
-the SAME batch_id after restart); the sink closes the gap with a
-per-batch commit marker written only AFTER the merge completes:
+the SAME batch_id after restart). Every sink here closes that gap the
+same way: the batch commits through the snapshot manifest
+(storage.py's one commit protocol), whose cumulative ``txn`` map
+({app_id: highest committed batch id}) is written by the same hard-link
+that publishes the batch's data. A redelivered batch is skipped before
+any data is written, and a crash before the hard-link leaves the table
+at its previous version: at-least-once delivery + transactional skip =
+exactly-once table state, with no side file beside the table.
 
-* marker present  → the batch already reached the table; skip it.
-* marker absent   → merge (idempotent latest-wins), then write the
-  marker atomically (tmp + ``os.replace``).
-
-At-least-once delivery + transactional skip = exactly-once table state.
-``merge_upsert``'s latest-wins seq makes re-merging a redelivered batch
-harmless anyway — the commit log is what makes the pattern safe for
-sinks WITHOUT that property, and it is exactly the shape a table
-format's transaction log (the "cluster deployment" caveat in
-storage.py) provides at scale: idempotent commits keyed by batch id.
-
-The commit log lives NEXT to the table (``<path>__commits``), not
-inside it — the whole-table merge path swaps the table directory via
-rename, which would otherwise carry the log away mid-swap.
+The family: :func:`make_merge_batch_handler` (latest-wins upserts,
+:func:`storage.merge_upsert_snapshot`), :func:`make_agg_state_handler`
+(mergeable aggregate state, one overwrite per batch),
+:func:`make_snapshot_append_handler`, :func:`make_mor_upsert_handler`
+(merge-on-read deltas) and :func:`make_cdc_apply_handler` (deletes).
 
 Reference parity: the reference consumes Kafka, upserts graph nodes
 idempotently, and only then commits the message offset
@@ -34,171 +28,72 @@ offsets, at table scale.
 
 from __future__ import annotations
 
-import json
-import os
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
 from dp_dimension_importer_spark import storage
 
-
-def commit_log_dir(table_path: str) -> str:
-    """The sink's commit-log directory for ``table_path`` (beside it)."""
-    return table_path.rstrip("/") + "__commits"
+#: the ``txn`` app id of every sink whose caller names none
+APP_ID = "stream"
 
 
-def _watermark_path(table_path: str) -> str:
-    return os.path.join(commit_log_dir(table_path), "_watermark.json")
-
-
-def commit_watermark(table_path: str) -> int:
-    """Highest batch id W such that ALL batches 0..W are committed — the
-    compacted prefix of the log (−1 before any compaction). Batches ≤ W
-    carry no marker file; the watermark testifies for them."""
-    p = _watermark_path(table_path)
-    if not os.path.exists(p):
-        return -1
-    with open(p) as f:
-        return json.load(f)["watermark"]
-
-
-def _marker_ids(table_path: str) -> set[int]:
-    d = commit_log_dir(table_path)
-    if not os.path.isdir(d):
-        return set()
-    return {
-        int(f[: -len(".json")])
-        for f in os.listdir(d)
-        if f.endswith(".json") and f[: -len(".json")].isdigit()
-    }
-
-
-def is_committed(table_path: str, batch_id: int) -> bool:
-    """O(1) commit check: the watermark testifies for the compacted
-    prefix; one stat() covers the tail. Never lists the directory — the
-    per-batch cost stays constant no matter how long the stream has run
-    (r9, VERDICT r8 "Next round" #4)."""
-    if batch_id <= commit_watermark(table_path):
-        return True
-    return os.path.exists(
-        os.path.join(commit_log_dir(table_path), f"{batch_id}.json")
+def _drive(spark: SparkSession, replay_dir: str, schema, handler,
+           checkpoint: str | None) -> None:
+    """Run a file-source stream (one file per micro-batch, see replay.py)
+    through ``handler`` with availableNow, under a pinned shuffle width
+    of 4 for the stream's lifetime (small replay tables; the same
+    rationale as replay.run_replay). Pass the same ``checkpoint`` across
+    calls to model a restart: Spark redelivers only uncommitted
+    batches."""
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(replay_dir)
     )
-
-
-def committed_batches(table_path: str) -> set[int]:
-    """Batch ids already merged into ``table_path`` (empty if none) —
-    the watermark-expanded view, for tests/diagnostics. The hot path
-    uses :func:`is_committed`, which never materializes this set."""
-    w = commit_watermark(table_path)
-    return set(range(w + 1)) | _marker_ids(table_path)
-
-
-def compact_commit_log(table_path: str, keep_tail: int = 8) -> dict:
-    """RETENTION for the merge sink's commit log (q79's manifest-``txn``
-    shape applied here): fold the CONTIGUOUS committed prefix into one
-    atomic watermark file and delete its marker files, keeping the
-    ``keep_tail`` newest covered markers for debuggability. A month of
-    1-minute triggers is ~43k marker files without this; with it the
-    directory holds the watermark + a bounded tail, and restart skip
-    checks stay O(1). Markers ABOVE a gap (a batch id missing because
-    Spark renumbered after a checkpoint wipe) are never folded — the
-    watermark only ever testifies for an airtight prefix. Crash-safe:
-    the watermark is written (tmp + ``os.replace``) BEFORE any marker is
-    unlinked, so every batch is witnessed by at least one of the two at
-    all times. Idempotent; returns {"watermark", "removed", "tail"}."""
-    ids = _marker_ids(table_path)
-    w = commit_watermark(table_path)
-    while w + 1 in ids:
-        w += 1
-    d = commit_log_dir(table_path)
-    if w >= 0:
-        os.makedirs(d, exist_ok=True)
-        tmp = _watermark_path(table_path) + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump({"watermark": w}, f)
-        os.replace(tmp, _watermark_path(table_path))
-    covered = sorted(i for i in ids if i <= w)
-    doomed = covered[:-keep_tail] if keep_tail > 0 else covered
-    for i in doomed:
-        try:
-            os.unlink(os.path.join(d, f"{i}.json"))
-        except OSError:
-            pass
-    return {
-        "watermark": w,
-        "removed": len(doomed),
-        "tail": len(_marker_ids(table_path)),
-    }
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try:
+        query = (
+            stream.writeStream.foreachBatch(handler)
+            .option(
+                "checkpointLocation",
+                checkpoint or tempfile.mkdtemp(prefix="ckpt_sink_"),
+            )
+            .trigger(availableNow=True)
+            .start()
+        )
+        query.awaitTermination()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def make_merge_batch_handler(
     table_path: str,
     key_cols: list[str],
     seq_col: str,
-    n_shards: int = 4,
-    transform=None,
-    compact_every: int | None = 64,
 ):
-    """Build a ``foreachBatch`` handler that merges each micro-batch into
-    the parquet table at ``table_path`` exactly once.
-
-    First batch against a non-existent table bootstraps it (latest-wins
-    compacted, sharded); subsequent batches go through
-    :func:`storage.merge_upsert`. ``transform`` (optional) maps the raw
-    micro-batch DataFrame to the change-row shape before merging.
-    ``compact_every``: fold the commit log's contiguous prefix into the
-    watermark every N batches (:func:`compact_commit_log`), so a
-    long-running stream's log stays bounded; ``None`` disables."""
+    """Build a ``foreachBatch`` handler that upserts each micro-batch
+    into the snapshot table at ``table_path`` exactly once, latest-wins
+    by ``seq_col`` (the greatest seq per key survives, whatever order
+    the batches arrive in). The first batch bootstraps the table with
+    its latest row per key (:func:`storage.compact_latest`); later
+    batches go through :func:`storage.merge_upsert_snapshot`, which
+    rewrites only the files holding a changed key. Both commit with
+    ``txn=(APP_ID, batch_id)``."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(commit_log_dir(table_path), f"{batch_id}.json")
-        if is_committed(table_path, batch_id):
-            return  # redelivered after a crash; already in the table
-        df = transform(batch_df) if transform is not None else batch_df
         spark = batch_df.sparkSession
-        if not os.path.exists(table_path):
-            # Distinguish "never bootstrapped" from "table vanished mid-
-            # swap": merge_upsert's whole-table path renames the old table
-            # away before renaming the merge result in, so a crash in that
-            # window leaves the commit log non-empty but the path missing —
-            # taking the bootstrap branch then would silently truncate the
-            # table to this one batch. Heal the swap instead; if nothing is
-            # recoverable the data is gone and failing loud is the only
-            # honest option. (A crash mid-BOOTSTRAP needs no special case:
-            # the partial table holds a subset of exactly this batch, and
-            # the redelivered batch re-supplies every row through the
-            # latest-wins merge.)
-            if committed_batches(table_path):
-                if not storage.recover_swap(table_path):
-                    raise RuntimeError(
-                        f"merge sink: table {table_path!r} is missing but "
-                        f"its commit log is non-empty and no crashed-swap "
-                        f"directory exists to recover from"
-                    )
-                storage.merge_upsert(
-                    spark, table_path, df,
-                    key_cols=key_cols, seq_col=seq_col, n_shards=n_shards,
-                )
-            else:
-                storage.write_sharded(
-                    storage.compact_latest(df, key_cols, seq_col),
-                    table_path,
-                    n_shards=n_shards,
-                )
-        else:
-            storage.merge_upsert(
-                spark, table_path, df,
-                key_cols=key_cols, seq_col=seq_col, n_shards=n_shards,
+        txn = (APP_ID, int(batch_id))
+        if not storage.snapshot_versions(table_path):
+            storage.write_snapshot(
+                spark, storage.compact_latest(batch_df, key_cols, seq_col),
+                table_path, txn=txn,
             )
-        os.makedirs(commit_log_dir(table_path), exist_ok=True)
-        tmp = marker + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": batch_id}, f)
-        os.replace(tmp, marker)  # commit point: atomic on POSIX
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_commit_log(table_path)
+        else:
+            storage.merge_upsert_snapshot(
+                spark, table_path, batch_df, key_cols, seq_col, txn=txn
+            )
 
     return handle
 
@@ -210,59 +105,20 @@ def run_stream_merge(
     table_path: str,
     key_cols: list[str],
     seq_col: str,
-    n_shards: int = 4,
     checkpoint: str | None = None,
-    transform=None,
 ) -> DataFrame:
-    """Drive a file-source stream (1 file per micro-batch, see
-    replay.py) through the exactly-once merge sink with availableNow,
-    then read the final table back. Pass the same ``checkpoint`` across
-    calls to model restart: already-committed batches are not redelivered
-    by Spark, and redelivered ones are skipped by the commit log."""
-    handler = make_merge_batch_handler(
-        table_path, key_cols, seq_col, n_shards=n_shards, transform=transform
+    """Drive a file-source stream through the exactly-once merge sink
+    (:func:`_drive`), then read the table's latest version back."""
+    _drive(
+        spark, replay_dir, schema,
+        make_merge_batch_handler(table_path, key_cols, seq_col), checkpoint,
     )
-    checkpoint = checkpoint or tempfile.mkdtemp(prefix="ckpt_sink_")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay_dir)
-    )
-    # small replay tables: pin a low shuffle-partition count for the
-    # stream's lifetime (same rationale as replay.run_replay)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        query = (
-            stream.writeStream.foreachBatch(handler)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.read.parquet(table_path)
+    return storage.read_snapshot(spark, table_path)
 
 
 # ---------------------------------------------------------------------------
 # Exactly-once streaming AGGREGATE-STATE maintenance (incremental MV)
 # ---------------------------------------------------------------------------
-
-def _agg_state_pointer(state_path: str) -> str:
-    """Sidecar holding {"batch_id", "version"} — the single atomic commit
-    point for the aggregate sink (beside the table, like the merge sink's
-    commit log)."""
-    return state_path.rstrip("/") + "__state.json"
-
-
-def read_agg_state_pointer(state_path: str) -> dict:
-    p = _agg_state_pointer(state_path)
-    if not os.path.exists(p):
-        return {"batch_id": -1, "version": None}
-    with open(p) as f:
-        return json.load(f)
-
 
 def make_agg_state_handler(state_path: str, keys: list[str], partial_fn):
     """Build a ``foreachBatch`` handler that maintains a MERGEABLE
@@ -270,15 +126,14 @@ def make_agg_state_handler(state_path: str, keys: list[str], partial_fn):
     with exactly-once state, even though sums — unlike the merge sink's
     latest-wins upserts — are NOT naturally idempotent under redelivery.
 
-    The trick is MVCC, not a separate commit log: every refresh commits
-    the merged state as a NEW snapshot version (storage.write_snapshot —
-    immutable, crash-invisible), and a pointer sidecar {batch_id,
-    version} is swapped in atomically (tmp + os.replace) only AFTER the
-    commit. Redelivered batch (id <= pointer's) → skip. Crash after
-    snapshot but before pointer swap → the orphan version is simply never
-    referenced; the redelivered batch re-merges against the version the
-    pointer still names, so nothing double-counts. Orphans are reclaimed
-    by vacuum_snapshots like any crashed commit.
+    Each batch merges its partial state into the latest state version
+    and commits the result as the next version
+    (``storage.write_snapshot`` with ``txn=(APP_ID, batch_id)``): the
+    data and the batch's mark land in one hard-link. A redelivered batch
+    (id at or below the state's mark) is skipped before its partial is
+    computed; a crash before the hard-link leaves the state at its
+    previous version, against which the redelivered batch re-merges, so
+    nothing double-counts.
 
     ``partial_fn(batch_df) -> DataFrame`` maps a micro-batch to its
     mergeable partial state (columns named by merge_agg_state's prefix
@@ -288,21 +143,20 @@ def make_agg_state_handler(state_path: str, keys: list[str], partial_fn):
     )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        meta = read_agg_state_pointer(state_path)
-        if batch_id <= meta["batch_id"]:
-            return  # redelivered after a crash; state already includes it
         spark = batch_df.sparkSession
-        part = partial_fn(batch_df)
-        if meta["version"] is None:
-            merged = part
+        if not storage.snapshot_versions(state_path):
+            merged = partial_fn(batch_df)
         else:
-            state = storage.read_snapshot(spark, state_path, meta["version"])
-            merged = merge_agg_state(state, part, keys)
-        version = storage.write_snapshot(spark, merged, state_path)
-        tmp = _agg_state_pointer(state_path) + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": batch_id, "version": version}, f)
-        os.replace(tmp, _agg_state_pointer(state_path))  # commit point
+            _, man = storage._snapshot_manifest(state_path)
+            if batch_id <= (man.get("txn") or {}).get(APP_ID, -1):
+                return  # redelivered after a crash; state already has it
+            merged = merge_agg_state(
+                storage._manifest_df(spark, state_path, man),
+                partial_fn(batch_df), keys,
+            )
+        storage.write_snapshot(
+            spark, merged, state_path, txn=(APP_ID, int(batch_id))
+        )
 
     return handle
 
@@ -317,49 +171,25 @@ def run_stream_agg(
     checkpoint: str | None = None,
 ) -> DataFrame:
     """Drive a file-source stream through the exactly-once aggregate
-    sink with availableNow, then read back the state version the pointer
-    names (NOT blindly the latest — an orphaned crashed commit may be
-    newer)."""
-    handler = make_agg_state_handler(state_path, keys, partial_fn)
-    checkpoint = checkpoint or tempfile.mkdtemp(prefix="ckpt_aggsink_")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay_dir)
+    sink (:func:`_drive`), then read the state's latest version back."""
+    _drive(
+        spark, replay_dir, schema,
+        make_agg_state_handler(state_path, keys, partial_fn), checkpoint,
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        query = (
-            stream.writeStream.foreachBatch(handler)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    meta = read_agg_state_pointer(state_path)
-    return storage.read_snapshot(spark, state_path, meta["version"])
+    return storage.read_snapshot(spark, state_path)
 
 
 # ---------------------------------------------------------------------------
 # Exactly-once streaming APPEND into the snapshot/manifest table layer
 # ---------------------------------------------------------------------------
 
-def make_snapshot_append_handler(table_path: str, app_id: str = "stream"):
+def make_snapshot_append_handler(table_path: str, app_id: str = APP_ID):
     """foreachBatch handler appending each micro-batch to a SNAPSHOT table
     (storage.write_snapshot ``mode='append'``) with ``txn=(app_id,
-    batch_id)``. Unlike :func:`make_merge_batch_handler`, there is no
-    sidecar commit log: the manifest's cumulative txn watermark map IS
-    the transaction log, so the idempotence marker and the data commit
-    are the SAME atomic hard-link — no window where the batch landed but
-    the marker didn't. A redelivered batch (same batch_id after restart)
-    is skipped inside write_snapshot before any data is written."""
+    batch_id)``. A redelivered batch (same batch_id after restart) is
+    skipped inside write_snapshot before any data is written."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        from dp_dimension_importer_spark import storage
-
         storage.write_snapshot(
             batch_df.sparkSession, batch_df, table_path,
             mode="append", txn=(app_id, int(batch_id)),
@@ -374,34 +204,15 @@ def run_stream_snapshot_append(
     schema,
     table_path: str,
     checkpoint: str | None = None,
-    app_id: str = "stream",
+    app_id: str = APP_ID,
 ) -> DataFrame:
     """Drive a file-source stream (1 file per micro-batch) through the
     snapshot-append sink with availableNow, then read the table's latest
     version back. Each micro-batch is one table version — time travel
     reaches any prefix of the stream, and `snapshot_changes` between two
     versions is exactly the micro-batches in between."""
-    from dp_dimension_importer_spark import storage
-
     handler = make_snapshot_append_handler(table_path, app_id=app_id)
-    checkpoint = checkpoint or tempfile.mkdtemp(prefix="ckpt_snap_")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay_dir)
-    )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        query = (
-            stream.writeStream.foreachBatch(handler)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _drive(spark, replay_dir, schema, handler, checkpoint)
     return storage.read_snapshot(spark, table_path)
 
 
@@ -409,7 +220,7 @@ def make_mor_upsert_handler(
     table_path: str,
     key_cols: list[str],
     seq_col: str,
-    app_id: str = "stream",
+    app_id: str = APP_ID,
     branch: str | None = None,
     merge_mode: str = "latest",
     agg_spec: dict | None = None,
@@ -450,8 +261,6 @@ def make_mor_upsert_handler(
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Window as W
         from pyspark.sql import functions as F
-
-        from dp_dimension_importer_spark import storage
 
         if merge_mode in ("partial", "aggregate"):
             aggs = agg_spec or {}
@@ -515,7 +324,7 @@ def run_stream_mor_upsert(
     key_cols: list[str],
     seq_col: str,
     checkpoint: str | None = None,
-    app_id: str = "stream",
+    app_id: str = APP_ID,
     branch: str | None = None,
     merge_mode: str = "latest",
     agg_spec: dict | None = None,
@@ -527,30 +336,11 @@ def run_stream_mor_upsert(
     travel reaches the upsert state after any stream prefix.
     ``merge_mode``/``agg_spec`` select the table's merge engine (see
     :func:`make_mor_upsert_handler` — the per-batch fold matches it)."""
-    from dp_dimension_importer_spark import storage
-
     handler = make_mor_upsert_handler(
         table_path, key_cols, seq_col, app_id=app_id, branch=branch,
         merge_mode=merge_mode, agg_spec=agg_spec,
     )
-    checkpoint = checkpoint or tempfile.mkdtemp(prefix="ckpt_mor_")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay_dir)
-    )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        query = (
-            stream.writeStream.foreachBatch(handler)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _drive(spark, replay_dir, schema, handler, checkpoint)
     if branch is not None:
         return storage.read_branch(spark, table_path, branch)
     return storage.read_snapshot(spark, table_path)
@@ -562,7 +352,7 @@ def make_cdc_apply_handler(
     seq_col: str,
     op_col: str = "op",
     delete_op: str = "D",
-    app_id: str = "stream",
+    app_id: str = APP_ID,
 ):
     """foreachBatch handler applying an insert/update/DELETE CDC feed to a
     snapshot table exactly once (:func:`storage.merge_apply_changes` with
@@ -577,8 +367,6 @@ def make_cdc_apply_handler(
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Window as W
         from pyspark.sql import functions as F
-
-        from dp_dimension_importer_spark import storage
 
         spark = batch_df.sparkSession
         if not storage.snapshot_versions(table_path):
@@ -611,34 +399,15 @@ def run_stream_cdc_apply(
     seq_col: str,
     op_col: str = "op",
     checkpoint: str | None = None,
-    app_id: str = "stream",
+    app_id: str = APP_ID,
 ) -> DataFrame:
     """Drive a file-source stream (1 file per micro-batch) through the
     CDC apply sink with availableNow, then read the final table back.
     With a seq that increases along the replay order, sequential
     per-batch application equals a one-shot global latest-wins-with-
     deletes — which is what the q88b oracle states."""
-    from dp_dimension_importer_spark import storage
-
     handler = make_cdc_apply_handler(
         table_path, key_cols, seq_col, op_col=op_col, app_id=app_id
     )
-    checkpoint = checkpoint or tempfile.mkdtemp(prefix="ckpt_cdc_")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay_dir)
-    )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        query = (
-            stream.writeStream.foreachBatch(handler)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _drive(spark, replay_dir, schema, handler, checkpoint)
     return storage.read_snapshot(spark, table_path)

@@ -1,20 +1,22 @@
 """Pins for the persisted MinHash band index's maintenance verbs
 (operators/dedup.py: append_band_index / compact_band_index — r10
 verdict task #7): bounded per-band file counts under simulated daily
-ingests, probe-equivalence across compaction, and crash recovery via
-the shared swap protocol."""
+ingests, probe-equivalence across compaction, and a failed compaction
+commit leaving the index as it was."""
 
 from __future__ import annotations
 
-import glob
 import os
 import shutil
 import tempfile
+from collections import Counter
 
+import pytest
 from pyspark.sql import Row
 
 from dp_dimension_importer_spark import storage
 from dp_dimension_importer_spark.operators.dedup import (
+    BAND_SPEC,
     append_band_index,
     compact_band_index,
     minhash_bands,
@@ -37,12 +39,19 @@ def _docs(spark, lo, hi):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
 
 
+def _files_per_band(idx):
+    """Live files per band in the index's latest manifest."""
+    man = storage._load_manifest(idx, storage.snapshot_versions(idx)[-1])
+    values = man["partition"]["values"]
+    return Counter(values[rel][1][0] for rel in man["files"])
+
+
 def _probe(spark, idx, bands_new):
     """The incremental job's candidate probe: stored × new on
     (band, bkey) — the exact join dedup_minhash_incremental runs."""
     from pyspark.sql import functions as F
 
-    stored = storage.read_partitioned(spark, idx)
+    stored = storage.read_snapshot(spark, idx)
     return sorted(
         (r["da"], r["db"])
         for r in (
@@ -65,9 +74,8 @@ def _probe(spark, idx, bands_new):
 def test_daily_appends_grow_then_compact_bounds_files(spark):
     idx = tempfile.mkdtemp(prefix="band_idx_")
     try:
-        shutil.rmtree(idx)
         day0 = minhash_bands(minhash_signatures(_docs(spark, 0, 30)))
-        storage.write_partitioned(day0, idx, ["band"])
+        storage.write_snapshot_partitioned(spark, day0, idx, BAND_SPEC)
         for day in range(1, 4):  # 3 simulated daily ingests
             new = minhash_bands(
                 minhash_signatures(
@@ -75,23 +83,18 @@ def test_daily_appends_grow_then_compact_bounds_files(spark):
                 )
             )
             append_band_index(new, idx)
-        per_band_before = [
-            len(glob.glob(os.path.join(d, "*.parquet")))
-            for d in glob.glob(os.path.join(idx, "band=*"))
-        ]
-        assert max(per_band_before) >= 4, per_band_before  # grew per ingest
+        per_band_before = _files_per_band(idx)
+        assert max(per_band_before.values()) >= 4, per_band_before
 
         probe_bands = minhash_bands(
             minhash_signatures(_docs(spark, 120, 140))
         ).localCheckpoint(eager=True)
         before = _probe(spark, idx, probe_bands)
 
-        compact_band_index(spark, idx, files_per_band=1)
-        per_band_after = [
-            len(glob.glob(os.path.join(d, "*.parquet")))
-            for d in glob.glob(os.path.join(idx, "band=*"))
-        ]
-        assert per_band_after and max(per_band_after) == 1, per_band_after
+        compact_band_index(spark, idx)
+        per_band_after = _files_per_band(idx)
+        assert set(per_band_after) == set(per_band_before)
+        assert max(per_band_after.values()) == 1, per_band_after
 
         after = _probe(spark, idx, probe_bands)
         assert before == after and before, (
@@ -99,25 +102,36 @@ def test_daily_appends_grow_then_compact_bounds_files(spark):
         )
     finally:
         shutil.rmtree(idx, ignore_errors=True)
-        shutil.rmtree(idx + "__compact_tmp", ignore_errors=True)
-        shutil.rmtree(idx + "__compact_old", ignore_errors=True)
 
 
-def test_compaction_crash_between_renames_recovers(spark):
+def test_failed_compaction_commit_leaves_index_readable(spark, monkeypatch):
     idx = tempfile.mkdtemp(prefix="band_idx_")
     try:
-        shutil.rmtree(idx)
         day0 = minhash_bands(minhash_signatures(_docs(spark, 0, 20)))
-        storage.write_partitioned(day0, idx, ["band"])
-        n_rows = storage.read_partitioned(spark, idx).count()
-        # simulate the crash window: old moved aside, new never renamed in
-        os.rename(idx, idx + "__compact_old")
-        assert storage.recover_swap(idx) is True
-        assert storage.read_partitioned(spark, idx).count() == n_rows
+        storage.write_snapshot_partitioned(spark, day0, idx, BAND_SPEC)
+        append_band_index(
+            minhash_bands(minhash_signatures(_docs(spark, 20, 30))), idx
+        )
+        rows = sorted(map(tuple, storage.read_snapshot(spark, idx).collect()))
+        versions = storage.snapshot_versions(idx)
+
+        def fail(*a, **kw):
+            raise RuntimeError("crash before the manifest commit")
+
+        # the compaction writes its files, then its commit fails
+        with monkeypatch.context() as m:
+            m.setattr(storage, "_commit_manifest", fail)
+            with pytest.raises(RuntimeError, match="manifest commit"):
+                compact_band_index(spark, idx)
+        assert storage.snapshot_versions(idx) == versions
+        assert sorted(
+            map(tuple, storage.read_snapshot(spark, idx).collect())
+        ) == rows
         # and the next compaction runs clean end-to-end
-        compact_band_index(spark, idx, files_per_band=1)
-        assert storage.read_partitioned(spark, idx).count() == n_rows
+        compact_band_index(spark, idx)
+        assert max(_files_per_band(idx).values()) == 1
+        assert sorted(
+            map(tuple, storage.read_snapshot(spark, idx).collect())
+        ) == rows
     finally:
         shutil.rmtree(idx, ignore_errors=True)
-        shutil.rmtree(idx + "__compact_tmp", ignore_errors=True)
-        shutil.rmtree(idx + "__compact_old", ignore_errors=True)

@@ -529,7 +529,7 @@ class TestAdmissionExactness:
             }
             for key in range(0, 3000, 97):
                 adm = storage._bloom_admitted_files(
-                    spark, path, "id", meta,
+                    spark, path, meta,
                     spark.createDataFrame([(key,)], "_v bigint"),
                 )
                 holders = {

@@ -306,7 +306,7 @@ class TestBloomFileIndex:
 
 
 class TestStreamAggExactlyOnce:
-    """The aggregate sink's MVCC pointer protocol — the part q69's green
+    """The aggregate sink's txn-mark protocol — the part q69's green
     oracle row can't see: sums are NOT redelivery-idempotent, so skip and
     crash-recovery semantics carry the exactly-once claim."""
 
@@ -325,23 +325,22 @@ class TestStreamAggExactlyOnce:
             (F.col("id") % 2).alias("k"), F.col("id").alias("v")
         )
         h(batch, 0)
+        versions = storage.snapshot_versions(state)
         h(batch, 0)  # redelivery after crash: same batch id
-        meta = sink.read_agg_state_pointer(state)
+        assert storage.snapshot_versions(state) == versions
         got = {
             (r.k, r.sum_v, r.cnt_v)
-            for r in storage.read_snapshot(
-                spark, state, meta["version"]
-            ).collect()
+            for r in storage.read_snapshot(spark, state).collect()
         }
         assert got == {(0, 20, 5), (1, 25, 5)}  # counted once, not twice
 
-    def test_crash_between_snapshot_and_pointer_never_double_counts(
-        self, spark, tmp_path
+    def test_failed_commit_never_double_counts(
+        self, spark, tmp_path, monkeypatch
     ):
-        """Simulate the worst crash window: the merged snapshot committed
-        but the pointer swap never happened. The redelivered batch must
-        re-merge against the version the pointer names and end exactly
-        once; the orphan version stays unreferenced."""
+        """The worst crash window: batch 1's merged state files are
+        written but its manifest commit fails. The state stays at batch
+        0's version, and the redelivered batch re-merges against it and
+        lands exactly once."""
         from dp_dimension_importer_spark import storage
         from dp_dimension_importer_spark.streaming import sink
 
@@ -354,21 +353,22 @@ class TestStreamAggExactlyOnce:
             (F.col("id") % 2).alias("k"), F.col("id").alias("v")
         )
         h(b0, 0)
-        meta0 = sink.read_agg_state_pointer(state)
-        # crash mid-handler for batch 1: snapshot written, pointer not
-        state0 = storage.read_snapshot(spark, state, meta0["version"])
-        orphan = storage.write_snapshot(
-            spark, merge_agg_state(state0, self._partial(b1), ["k"]), state
-        )
-        assert sink.read_agg_state_pointer(state) == meta0  # pointer intact
+        versions = storage.snapshot_versions(state)
+
+        def fail(*a, **kw):
+            raise RuntimeError("crash before the manifest commit")
+
+        with monkeypatch.context() as m:
+            m.setattr(storage, "_commit_manifest", fail)
+            with pytest.raises(RuntimeError, match="manifest commit"):
+                h(b1, 1)
+        assert storage.snapshot_versions(state) == versions
         h(b1, 1)  # redelivery
-        meta1 = sink.read_agg_state_pointer(state)
-        assert meta1["version"] not in (orphan, meta0["version"])
+        h(b1, 1)  # and once more, after it landed
+        assert len(storage.snapshot_versions(state)) == len(versions) + 1
         got = {
             (r.k, r.sum_v, r.cnt_v)
-            for r in storage.read_snapshot(
-                spark, state, meta1["version"]
-            ).collect()
+            for r in storage.read_snapshot(spark, state).collect()
         }
         # 0..19: evens sum 90 count 10, odds sum 100 count 10
         assert got == {(0, 90, 10), (1, 100, 10)}

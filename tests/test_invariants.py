@@ -935,9 +935,11 @@ def test_fold_cos_udf_bit_identical_to_expression_fold(spark):
 
 
 def test_bloom_point_probe_unpinned_matches_pinned(spark):
-    """r14: point lookups skip _bloom_admitted_files' masks pin
-    (pin_masks=False) — the admitted file set must be identical to the
-    pinned (CDC-batch) path's on the same sidecar and keys."""
+    """A point read's literal keys are probed on the driver
+    (_bloom_literal_admitted: driver-side probe positions, no masks pin)
+    — the admitted file set must be identical to the pinned, distributed
+    path's (_bloom_admitted_files, a CDC batch's frame of keys) on the
+    same sidecar and keys, present and absent ones alike."""
     import shutil
     import tempfile
 
@@ -961,16 +963,15 @@ def test_bloom_point_probe_unpinned_matches_pinned(spark):
         )
         meta = storage._snap_bloom_meta(path, "l_orderkey", man)
         assert meta is not None
-        keys = spark.createDataFrame(
-            [(7,), (42,), (999999,)], "_v long"
-        ).select(F.col("_v").cast(meta["type"]).alias("_v"))
-        pinned = storage._bloom_admitted_files(
-            spark, path, "l_orderkey", meta, keys, pin_masks=True
-        )
-        unpinned = storage._bloom_admitted_files(
-            spark, path, "l_orderkey", meta, keys, pin_masks=False
-        )
-        assert pinned == unpinned
+        for vals in ([7], [42, 999999], list(range(-40, 6000, 97))):
+            keys = spark.createDataFrame(
+                [(v,) for v in vals], "_v long"
+            ).select(F.col("_v").cast(meta["type"]).alias("_v"))
+            pinned = storage._bloom_admitted_files(spark, path, meta, keys)
+            unpinned = storage._bloom_literal_admitted(
+                spark, path, meta, vals
+            )
+            assert pinned == unpinned, vals
     finally:
         shutil.rmtree(path, ignore_errors=True)
 

@@ -10,7 +10,8 @@ tasks, so they do not depend on the core count.
 The verbs follow the ``table`` benchmark workload's cycle (a bloom-indexed,
 stats-carrying table turned MOR by its first upsert), the same DELETE and
 UPDATE on a plain stats-carrying table in copy-on-write and DV mode, a
-MERGE on a bloom-indexed copy-on-write table, a branch append, and a
+MERGE on a bloom-indexed copy-on-write table and a latest-wins upsert
+and a streaming merge sink batch on the same table, a branch append, and a
 write that supplies a generated column on a constrained table: that
 write's admission checks both contracts in one aggregate job. The
 maintenance verbs each run once on a small table of their own: a
@@ -33,11 +34,13 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from dp_dimension_importer_spark import storage
+from dp_dimension_importer_spark.streaming.sink import make_merge_batch_handler
 
 #: verb -> the most Spark jobs one call may run (reads include the collect)
 BUDGETS = {
     "upsert": 1,
-    "read_point": 3,
+    # the words of the probed positions (one filtered scan), then the read
+    "read_point": 2,
     # the latest MOR version, resolved; the pruned reads on the same MOR
     # table and on a copy-on-write one; the partitioned reads on a
     # hidden-partitioned table and on a MOR one
@@ -46,7 +49,7 @@ BUDGETS = {
     "read_pruned": 1,
     "read_partitioned": 1,
     "read_partitioned_mor": 1,
-    "merge_into": 7,
+    "merge_into": 6,
     "delete": 1,
     "update": 1,
     # the same DML on a plain stats-carrying table: a copy-on-write
@@ -56,8 +59,14 @@ BUDGETS = {
     "delete_dv": 1,
     "update_dv": 4,
     # MERGE on a bloom-indexed copy-on-write table: source pin and
-    # profile, the bloom probe, the file probe, the rewrite
-    "merge_cow": 8,
+    # profile, the bloom probe (one job: the probe positions are no
+    # longer pinned), the file probe, the rewrite
+    "merge_cow": 7,
+    # the latest-wins upsert on the same kind of table: the batch's
+    # per-key compaction runs inside MERGE's source pin, so it costs
+    # what merge_cow does; a streaming merge sink batch is that call
+    "merge_upsert_snapshot": 7,
+    "merge_sink_batch": 7,
     # the change feed of one MOR transition: the touched keys' broadcast,
     # then the collect. "version_delta" is the worst of the upsert,
     # MERGE, DELETE and UPDATE transitions; the partial and aggregate
@@ -318,6 +327,19 @@ def test_storage_verb_job_budgets(spark):
             spark, mpath, _rows(spark, range(35, 45), "m", 2), ["k"],
             update_set={"val": "src_val", "seq": "src_seq"}, insert=True,
         ))
+        measured["merge_upsert_snapshot"] = _jobs(
+            spark, lambda: storage.merge_upsert_snapshot(
+                spark, mpath, _rows(spark, range(40, 50), "n", 3), ["k"],
+                "seq",
+            ),
+        )
+        handler = make_merge_batch_handler(mpath, ["k"], "seq")
+        measured["merge_sink_batch"] = _jobs(
+            spark, lambda: handler(_rows(spark, range(45, 55), "s", 4), 0)
+        )
+        assert storage.read_snapshot(spark, mpath).filter(
+            "seq = 4"
+        ).count() == 10, "the sink batch did not land"
         storage.write_snapshot(
             spark,
             spark.createDataFrame(
@@ -379,5 +401,33 @@ def test_empty_scoped_reads_collect_without_a_job(spark):
             rows = []
             assert _jobs(spark, lambda: rows.extend(df.collect())) == 0, name
             assert rows == [], name
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+
+
+def test_point_reads_type_their_literals(spark):
+    """A point read's literal keys take createDataFrame's typing (Python
+    ints as bigint, strs as string), cast to the sidecar's type: int
+    literals on a bigint column and str literals on a string column each
+    find their rows within the point-read budget."""
+    scratch = tempfile.mkdtemp(prefix="budget_point_")
+    path = os.path.join(scratch, "t")
+    try:
+        storage.write_snapshot(
+            spark, _rows(spark, range(40), "c", 0).repartition(4), path,
+            stats_cols=["k"],
+        )
+        storage.index_bloom_snapshot(spark, path, "k")
+        storage.index_bloom_snapshot(spark, path, "val")
+        for col, values, want in (
+            ("k", [3, 31], {3, 31}),
+            ("val", ["c7", "c22", "zz"], {7, 22}),
+        ):
+            rows = []
+            n = _jobs(spark, lambda: rows.extend(
+                storage.read_snapshot_point(spark, path, col, values).collect()
+            ))
+            assert {r.k for r in rows} == want, col
+            assert n <= BUDGETS["read_point"], (col, n)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)

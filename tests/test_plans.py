@@ -413,26 +413,6 @@ def test_write_sharded_controls_file_counts(spark, warehouse):
     assert back.count() == n
 
 
-def test_compact_parquet_reduces_file_count(spark, warehouse):
-    """An append-accumulated directory of many small files compacts to
-    the target fan-out with identical content."""
-    from dp_dimension_importer_spark.storage import compact_parquet
-
-    t = load_tables(spark, SF_SMOKE)
-    path = os.path.join(warehouse, "smallfiles")
-    # simulate an incremental sink: 6 tiny appends, several files each
-    for i in range(6):
-        (t.orders.filter(F.col("o_orderkey") % 6 == i)
-         .repartition(3).write.mode("append").parquet(path))
-    import glob
-    before = len(glob.glob(os.path.join(path, "*.parquet")))
-    assert before >= 12
-    n_rows = spark.read.parquet(path).count()
-    after = compact_parquet(spark, path, target_files=2)
-    assert after == 2
-    assert spark.read.parquet(path).count() == n_rows
-
-
 def test_interval_join_is_hash_not_nested_loop(spark):
     """join_interval_bucketed must plan as a HASH equi-join on the bucket
     id with the BETWEEN as a residual — never a BroadcastNestedLoopJoin /
@@ -469,16 +449,15 @@ def test_gram_128bit_shuffles_ids_and_hashes_only(spark):
 
 
 def test_merge_upsert_rewrites_only_touched_partitions(spark, tmp_path):
-    """merge_upsert's partition-pruned path: after merging a change batch
-    that touches 2 of 5 priority partitions, the other 3 partitions'
-    files are BYTE-IDENTICAL (same names, same content — never opened,
-    never rewritten: the property that makes a CDC trickle affordable
-    against a 100 TB table), the touched partitions are rewritten, and
-    the merged table holds latest-wins rows. Re-applying the same batch
-    is a no-op on row content (at-least-once safe)."""
-    import hashlib
-    import os
-
+    """merge_upsert_snapshot rewrites only the files that hold a changed
+    key: after merging a change batch that touches 2 of 5 priority
+    partitions, the other 3 partitions' manifest entries (file and
+    partition tuple) carry into the new version unchanged — their files
+    are never rewritten, the property that makes a CDC trickle
+    affordable against a 100 TB table — the touched partitions' files
+    are replaced, and the table holds latest-wins rows. Re-applying the
+    same batch changes no row, and re-applying it under a committed
+    ``txn`` commits nothing."""
     from dp_dimension_importer_spark import storage
 
     docs = load_tables(spark, SF_SMOKE).orders.select(
@@ -486,20 +465,17 @@ def test_merge_upsert_rewrites_only_touched_partitions(spark, tmp_path):
         F.lit(1).cast("long").alias("seq"),
     )
     path = str(tmp_path / "cdc_table")
-    storage.write_partitioned(docs, path, ["o_orderpriority"])
+    storage.write_snapshot_partitioned(
+        spark, docs, path, [("identity", "o_orderpriority")]
+    )
 
-    def snapshot():
-        out = {}
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                if f.endswith(".parquet"):
-                    p = os.path.join(root, f)
-                    out[os.path.relpath(p, path)] = hashlib.sha256(
-                        open(p, "rb").read()
-                    ).hexdigest()
-        return out
+    def entries():
+        v = storage.snapshot_versions(path)[-1]
+        man = storage._load_manifest(path, v)
+        vals = man["partition"]["values"]
+        return {rel: vals[rel][1][0] for rel in man["files"]}
 
-    before = snapshot()
+    before = entries()
     touched = {"1-URGENT", "2-HIGH"}
     changes = (
         docs.filter(F.col("o_orderpriority").isin(*touched))
@@ -511,38 +487,38 @@ def test_merge_upsert_rewrites_only_touched_partitions(spark, tmp_path):
         )
     )
     changes.cache().count()  # pin the nondeterministic limit
-    storage.merge_upsert(
+    storage.merge_upsert_snapshot(
         spark, path, changes, key_cols=["o_orderkey"], seq_col="seq",
-        partition_col="o_orderpriority",
+        txn=("cdc", 1),
     )
-    after = snapshot()
+    after = entries()
+    untouched = {r: p for r, p in before.items() if p not in touched}
+    assert untouched and all(
+        after.get(r) == p for r, p in untouched.items()
+    ), (untouched, after)
+    # touched partitions were rewritten (none of their files carried)
+    assert not any(r in after for r, p in before.items() if p in touched)
+    assert {p for p in after.values()} == set(before.values())
 
-    def part_of(rel):
-        return rel.split(os.sep)[0].split("=", 1)[1]
-
-    untouched_before = {k: v for k, v in before.items()
-                        if part_of(k) not in touched}
-    untouched_after = {k: v for k, v in after.items()
-                       if part_of(k) not in touched}
-    assert untouched_before == untouched_after and untouched_before
-    # touched partitions were rewritten (different file set)
-    assert {k for k in before if part_of(k) in touched}.isdisjoint(
-        {k for k in after if part_of(k) in touched}
-    )
-
-    merged = spark.read.parquet(path)
+    merged = storage.read_snapshot(spark, path)
     n_changed = changes.count()
     assert merged.filter("seq = 2").count() == n_changed
     assert merged.count() == docs.count()  # updates only, no inserts
 
-    # idempotent re-apply: same rows survive
+    # idempotent re-apply: same rows survive; a redelivered txn is a no-op
     rows1 = sorted(map(tuple, merged.collect()))
-    storage.merge_upsert(
+    storage.merge_upsert_snapshot(
         spark, path, changes, key_cols=["o_orderkey"], seq_col="seq",
-        partition_col="o_orderpriority",
+        txn=("cdc", 2),
     )
-    rows2 = sorted(map(tuple, spark.read.parquet(path).collect()))
+    rows2 = sorted(map(tuple, storage.read_snapshot(spark, path).collect()))
     assert rows1 == rows2
+    versions = storage.snapshot_versions(path)
+    storage.merge_upsert_snapshot(
+        spark, path, changes, key_cols=["o_orderkey"], seq_col="seq",
+        txn=("cdc", 2),
+    )
+    assert storage.snapshot_versions(path) == versions
     changes.unpersist()
 
 
@@ -695,31 +671,39 @@ def test_runtime_bloom_filter_injected_for_selective_shuffle_join(spark):
 
 def test_merge_upsert_preserves_null_partition_rows(spark, warehouse):
     """Review-pinned data-loss edge: a change batch touching the NULL
-    partition must merge against the stored null-partition rows —
-    ``isin([None])`` is NULL (never true), which would exclude them and
-    let the dynamic overwrite delete every untouched key in
-    __HIVE_DEFAULT_PARTITION__."""
-    from dp_dimension_importer_spark.storage import merge_upsert
+    partition must merge against the stored null-partition rows and
+    keep every untouched key there (``isin([None])`` is NULL, never
+    true — a membership test written that way would drop them). A
+    change batch whose columns differ from the table's is refused."""
+    from dp_dimension_importer_spark import storage
 
     path = os.path.join(warehouse, "merge_null_part")
     existing = spark.createDataFrame(
         [(1, None, 10.0, 1), (2, None, 20.0, 1), (3, "x", 30.0, 1)],
         "k long, part string, v double, seq long",
     )
-    existing.write.partitionBy("part").parquet(path)
+    storage.write_snapshot_partitioned(
+        spark, existing, path, [("identity", "part")]
+    )
     changes = spark.createDataFrame(
         [(1, None, 11.0, 2)], "k long, part string, v double, seq long"
     )
-    merge_upsert(
-        spark, path, changes,
-        key_cols=["k"], seq_col="seq", partition_col="part",
+    storage.merge_upsert_snapshot(
+        spark, path, changes, key_cols=["k"], seq_col="seq",
     )
-    got = {r.k: (r.part, r.v, r.seq) for r in spark.read.parquet(path).collect()}
+    got = {
+        r.k: (r.part, r.v, r.seq)
+        for r in storage.read_snapshot(spark, path).collect()
+    }
     assert got == {
         1: (None, 11.0, 2),   # updated
         2: (None, 20.0, 1),   # untouched key in the SAME null partition
         3: ("x", 30.0, 1),    # untouched partition
     }
+    with pytest.raises(ValueError, match="schema mismatch"):
+        storage.merge_upsert_snapshot(
+            spark, path, changes.drop("v"), key_cols=["k"], seq_col="seq",
+        )
 
 
 def test_sketch_state_rerun_replaces_only_its_partition(spark, warehouse):

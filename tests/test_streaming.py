@@ -524,12 +524,22 @@ def _latest_per_user(events):
     }
 
 
+def _txn_marks(tbl):
+    from dp_dimension_importer_spark import storage
+
+    head = storage.snapshot_versions(tbl)[-1]
+    return storage._load_manifest(tbl, head).get("txn")
+
+
 def test_stream_merge_sink_matches_batch_and_restart_is_noop(spark):
-    """Happy path == batch latest-wins compaction, and re-running the
-    drained stream against the SAME checkpoint redelivers nothing (Spark
-    has committed every offset): table bytes and commit log unchanged."""
+    """Happy path == batch latest-wins compaction, one snapshot version
+    per micro-batch, and re-running the drained stream against the SAME
+    checkpoint redelivers nothing (Spark has committed every offset):
+    no version is committed and the manifest's txn marks are
+    unchanged."""
     import shutil
 
+    from dp_dimension_importer_spark import storage
     from dp_dimension_importer_spark.streaming import sink as merge_sink
 
     events = _sink_events(spark)
@@ -544,32 +554,27 @@ def test_stream_merge_sink_matches_batch_and_restart_is_noop(spark):
         )
         got = {r.user_id: (r.event_id, r.event_type) for r in out.collect()}
         assert got == _latest_per_user(events)
-        commits1 = merge_sink.committed_batches(tbl)
-        assert commits1 == {0, 1, 2}
-        files1 = {
-            f: os.path.getmtime(os.path.join(tbl, f))
-            for f in os.listdir(tbl)
-        }
+        versions1 = storage.snapshot_versions(tbl)
+        assert versions1 == [1, 2, 3]
+        assert _txn_marks(tbl) == {merge_sink.APP_ID: 2}
         # restart against the drained checkpoint: nothing redelivered
         merge_sink.run_stream_merge(
             spark, replay_dir, events.schema, tbl,
             key_cols=["user_id"], seq_col="event_id", checkpoint=ckpt,
         )
-        assert merge_sink.committed_batches(tbl) == commits1
-        files2 = {
-            f: os.path.getmtime(os.path.join(tbl, f))
-            for f in os.listdir(tbl)
-        }
-        assert files2 == files1  # table untouched, not rewritten
+        assert storage.snapshot_versions(tbl) == versions1
+        assert _txn_marks(tbl) == {merge_sink.APP_ID: 2}
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
         shutil.rmtree(replay_dir, ignore_errors=True)
 
 
-def test_stream_merge_sink_commit_log_skips_redelivered_batch(spark, monkeypatch):
+def test_stream_merge_sink_commit_log_skips_redelivered_batch(spark):
     """A redelivered (df, batch_id) pair — Spark's at-least-once contract
-    after a crash between merge and offset commit — must NOT reach
-    merge_upsert a second time: the commit marker short-circuits it."""
+    after a crash between the table commit and the offset commit — must
+    not land a second time: the manifest's txn mark skips it before any
+    data file is written. Even event ids arrive before odd ones, so the
+    table is latest-wins by seq, not by commit order."""
     import shutil
 
     from dp_dimension_importer_spark import storage
@@ -580,26 +585,20 @@ def test_stream_merge_sink_commit_log_skips_redelivered_batch(spark, monkeypatch
     rest = events.filter("event_id % 2 = 1")
     scratch = tempfile.mkdtemp(prefix="sink_t2_")
     tbl = os.path.join(scratch, "table")
-    calls = []
-    real = storage.merge_upsert
-
-    def counting(*a, **kw):
-        calls.append(1)
-        return real(*a, **kw)
-
-    monkeypatch.setattr(storage, "merge_upsert", counting)
     try:
         handler = merge_sink.make_merge_batch_handler(
             tbl, key_cols=["user_id"], seq_col="event_id"
         )
-        handler(half, 0)   # bootstrap write, no merge call
+        handler(half, 0)   # bootstrap write
         handler(rest, 1)   # merge
-        assert len(calls) == 1
-        handler(rest, 1)   # redelivery: marker present -> skipped
-        assert len(calls) == 1
+        versions = storage.snapshot_versions(tbl)
+        data_dirs = sorted(os.listdir(os.path.join(tbl, "data")))
+        handler(rest, 1)   # redelivery: txn mark present -> skipped
+        assert storage.snapshot_versions(tbl) == versions
+        assert sorted(os.listdir(os.path.join(tbl, "data"))) == data_dirs
         got = {
             r.user_id: r.event_id
-            for r in spark.read.parquet(tbl).collect()
+            for r in storage.read_snapshot(spark, tbl).collect()
         }
         exp = {u: e for u, (e, _) in _latest_per_user(events).items()}
         assert got == exp
@@ -607,15 +606,17 @@ def test_stream_merge_sink_commit_log_skips_redelivered_batch(spark, monkeypatch
         shutil.rmtree(scratch, ignore_errors=True)
 
 
-def test_stream_merge_sink_crash_between_merge_and_marker_recovers(spark):
-    """The hard crash window: the merge COMPLETED but the process died
-    before the commit marker was written. On restart Spark redelivers the
-    batch (offset never committed); the sink re-merges it — harmless,
-    latest-wins is idempotent — and the final table equals a never-crashed
-    run. This is at-least-once + idempotent = exactly-once OBSERVABLE,
-    the same argument as the pipeline's graph-store test above."""
+def test_stream_merge_sink_failed_commit_recovers(spark, monkeypatch):
+    """The hard crash window: batch 1's merge wrote its data files but
+    the manifest commit failed, killing the query. The table stays at
+    its prior version (the failed batch is invisible, its txn mark
+    absent); on restart Spark redelivers the batch (offset never
+    committed), it lands exactly once, and the final table equals a
+    never-crashed run. At-least-once + transactional skip =
+    exactly-once observable."""
     import shutil
 
+    from dp_dimension_importer_spark import storage
     from dp_dimension_importer_spark.streaming import sink as merge_sink
 
     events = _sink_events(spark)
@@ -627,92 +628,39 @@ def test_stream_merge_sink_crash_between_merge_and_marker_recovers(spark):
     class Boom(RuntimeError):
         pass
 
-    real_handler = merge_sink.make_merge_batch_handler(
-        tbl, key_cols=["user_id"], seq_col="event_id"
-    )
-    crashed = []
+    real = storage._commit_manifest
+    calls = []
 
-    def crashing(batch_df, batch_id):
-        real_handler(batch_df, batch_id)
-        if batch_id == 1 and not crashed:
-            # simulate dying AFTER the merge: delete the marker the real
-            # handler just wrote, then kill the query
-            crashed.append(batch_id)
-            marker = os.path.join(
-                merge_sink.commit_log_dir(tbl), "1.json"
-            )
-            os.remove(marker)
-            raise Boom("crash after merge, before commit marker")
+    def failing_once(*a, **kw):
+        calls.append(1)
+        if len(calls) == 2:  # batch 1's commit
+            raise Boom("crash before the manifest commit")
+        return real(*a, **kw)
 
+    monkeypatch.setattr(storage, "_commit_manifest", failing_once)
     try:
-        stream = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(replay_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(crashing)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
         try:
-            q.awaitTermination()
+            merge_sink.run_stream_merge(
+                spark, replay_dir, events.schema, tbl,
+                key_cols=["user_id"], seq_col="event_id", checkpoint=ckpt,
+            )
             raise AssertionError("expected the injected crash to surface")
         except Exception as e:  # StreamingQueryException wrapping Boom
-            assert "crash after merge" in str(e)
-        assert merge_sink.committed_batches(tbl) == {0}
-        # restart from the same checkpoint with the REAL handler
+            assert "crash before the manifest commit" in str(e)
+        assert storage.snapshot_versions(tbl) == [1]
+        assert _txn_marks(tbl) == {merge_sink.APP_ID: 0}
+        # restart from the same checkpoint
         out = merge_sink.run_stream_merge(
             spark, replay_dir, events.schema, tbl,
             key_cols=["user_id"], seq_col="event_id", checkpoint=ckpt,
         )
-        assert merge_sink.committed_batches(tbl) == {0, 1, 2}
+        assert storage.snapshot_versions(tbl) == [1, 2, 3]
+        assert _txn_marks(tbl) == {merge_sink.APP_ID: 2}
         got = {r.user_id: (r.event_id, r.event_type) for r in out.collect()}
         assert got == _latest_per_user(events)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
         shutil.rmtree(replay_dir, ignore_errors=True)
-
-
-def test_stream_merge_sink_heals_crashed_table_swap(spark):
-    """Crash INSIDE merge_upsert's whole-table rename-and-swap: the table
-    path is missing but the data survives at ``<path>__merge_old`` and
-    the commit log is non-empty. The next handled batch must recover the
-    old directory (never bootstrap-truncate to the current batch), and if
-    nothing is recoverable it must fail loud."""
-    import shutil
-
-    from dp_dimension_importer_spark.streaming import sink as merge_sink
-
-    events = _sink_events(spark)
-    half = events.filter("event_id % 2 = 0")
-    rest = events.filter("event_id % 2 = 1")
-    scratch = tempfile.mkdtemp(prefix="sink_t4_")
-    tbl = os.path.join(scratch, "table")
-    try:
-        handler = merge_sink.make_merge_batch_handler(
-            tbl, key_cols=["user_id"], seq_col="event_id"
-        )
-        handler(half, 0)
-        # simulate the crash window: old table renamed away, swap not done
-        os.rename(tbl, tbl + "__merge_old")
-        handler(rest, 1)  # must recover + merge, not truncate
-        got = {
-            r.user_id: r.event_id
-            for r in spark.read.parquet(tbl).collect()
-        }
-        exp = {u: e for u, (e, _) in _latest_per_user(events).items()}
-        assert got == exp
-        # unrecoverable: table AND old dir gone but commits exist
-        shutil.rmtree(tbl)
-        try:
-            handler(rest, 2)
-            raise AssertionError("expected loud failure, not truncation")
-        except RuntimeError as e:
-            assert "commit log is non-empty" in str(e)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 def test_session_flush_timeout_flushes_global_last_session(spark):
@@ -1024,74 +972,37 @@ def test_ewma_stream_floor_semantics_on_negative_values(spark, tmp_path):
     assert got == exp, (got, exp)
 
 
-def test_stream_merge_sink_commit_log_retention(spark, monkeypatch):
-    """r9 (VERDICT r8 "Next round" #4): compact_commit_log folds the
-    contiguous committed prefix into ONE watermark file with a bounded
-    marker tail — after compaction a redelivered old batch is still
-    skipped (the watermark testifies), a gap above the watermark is
-    never folded over, and the hot-path skip check touches no listing."""
+def test_stream_merge_sink_commit_log_retention(spark):
+    """The merge sink's commit log is the manifest's txn map: after 9
+    batches it holds ONE entry (the app's highest committed batch id),
+    nothing but the table is written beside it, and a redelivered old
+    batch is still skipped — the log's size never grows with the
+    stream's length."""
     import shutil
 
     from dp_dimension_importer_spark import storage
     from dp_dimension_importer_spark.streaming import sink as merge_sink
 
     events = _sink_events(spark)
-    batches = [events.filter(f"event_id % 4 = {i}") for i in range(4)]
+    batches = [events.filter(f"event_id % 9 = {i}") for i in range(9)]
     scratch = tempfile.mkdtemp(prefix="sink_t5_")
     tbl = os.path.join(scratch, "table")
-    calls = []
-    real = storage.merge_upsert
-
-    def counting(*a, **kw):
-        calls.append(1)
-        return real(*a, **kw)
-
-    monkeypatch.setattr(storage, "merge_upsert", counting)
     try:
         handler = merge_sink.make_merge_batch_handler(
-            tbl, key_cols=["user_id"], seq_col="event_id",
-            compact_every=None,  # compaction driven explicitly below
+            tbl, key_cols=["user_id"], seq_col="event_id"
         )
         for i, b in enumerate(batches):
             handler(b, i)
-        n_merges = len(calls)
-        assert merge_sink.committed_batches(tbl) == {0, 1, 2, 3}
-        res = merge_sink.compact_commit_log(tbl, keep_tail=2)
-        assert res["watermark"] == 3
-        assert res["tail"] == 2  # bounded tail survives
-        d = merge_sink.commit_log_dir(tbl)
-        markers = [f for f in os.listdir(d) if f[0].isdigit()]
-        assert len(markers) == 2, markers
-        # logical commit set unchanged; skip path intact for folded ids
-        assert merge_sink.committed_batches(tbl) == {0, 1, 2, 3}
-        assert all(merge_sink.is_committed(tbl, i) for i in range(4))
-        assert not merge_sink.is_committed(tbl, 4)
-        # restart no-op AFTER compaction: batch 0's marker is gone but the
-        # watermark testifies — no re-merge, table untouched
-        handler(batches[0], 0)
-        assert len(calls) == n_merges
-        # idempotent re-compaction
-        assert merge_sink.compact_commit_log(tbl, keep_tail=2) == {
-            "watermark": 3, "removed": 0, "tail": 2,
+        assert _txn_marks(tbl) == {merge_sink.APP_ID: 8}
+        assert os.listdir(scratch) == ["table"]
+        versions = storage.snapshot_versions(tbl)
+        handler(batches[0], 0)  # an old batch redelivered
+        assert storage.snapshot_versions(tbl) == versions
+        got = {
+            r.user_id: r.event_id
+            for r in storage.read_snapshot(spark, tbl).collect()
         }
-        # a GAP above the watermark is never folded over: commit batch 6
-        # (5 missing) — the watermark stays at 4 after batch 4 lands
-        handler(batches[1], 4)
-        handler(batches[2], 6)
-        res2 = merge_sink.compact_commit_log(tbl, keep_tail=0)
-        assert res2["watermark"] == 4
-        assert merge_sink.is_committed(tbl, 6)       # marker still there
-        assert not merge_sink.is_committed(tbl, 5)   # the gap is honest
-        assert merge_sink.committed_batches(tbl) == {0, 1, 2, 3, 4, 6}
-        # auto-compaction wiring: a handler with compact_every folds as
-        # it goes (batch 8 triggers: 8 % 4 == 0)
-        auto = merge_sink.make_merge_batch_handler(
-            tbl, key_cols=["user_id"], seq_col="event_id", compact_every=4,
-        )
-        auto(batches[3], 5)   # fills the gap
-        auto(batches[0], 7)
-        auto(batches[1], 8)   # triggers compaction through batch 8
-        assert merge_sink.commit_watermark(tbl) == 8
-        assert merge_sink.committed_batches(tbl) == set(range(9))
+        exp = {u: e for u, (e, _) in _latest_per_user(events).items()}
+        assert got == exp
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
