@@ -2176,14 +2176,26 @@ def compact_band_index(spark, idx_path: str) -> int:
     because the candidate join dropDuplicates downstream anyway —
     probe-equivalence is pinned in tests/test_band_index.py). The
     manifest hard-link is the commit: a failure before it leaves the
-    index at its previous version, and ``storage.vacuum_snapshots``
-    reclaims the superseded files. Returns the committed version."""
+    index at its previous version. Only after the commit are the
+    superseded files unlinked (the compact_ivf_index discipline), so the
+    index's disk use stays bounded and it keeps no readable history.
+    Returns the committed version."""
+    import os
+
     from dp_dimension_importer_spark import storage
 
-    return storage.write_snapshot_partitioned(
-        spark, storage.read_snapshot(spark, idx_path).dropDuplicates(),
+    head = storage.snapshot_versions(idx_path)[-1]
+    old = storage._load_manifest(idx_path, head)["files"]
+    version = storage.write_snapshot_partitioned(
+        spark, storage.read_snapshot(spark, idx_path, head).dropDuplicates(),
         idx_path, BAND_SPEC,
     )
+    for rel in old:
+        try:
+            os.unlink(os.path.join(idx_path, rel))
+        except OSError:
+            pass
+    return version
 
 
 @register("dedup_minhash_incremental")  # rows-only: LSH path, recall-gated

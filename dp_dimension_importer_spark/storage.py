@@ -1202,11 +1202,13 @@ def merge_upsert_snapshot(
     the row with the greatest ``seq_col`` wins (the change row on a
     tie), so unknown keys insert, absent keys are untouched and
     re-applying a batch changes nothing. ``changes`` must carry exactly
-    the table's columns. The batch is compacted to its latest row per
-    key (:func:`compact_latest`) and lands through
-    :func:`merge_into_snapshot`: only files holding a changed key are
-    rewritten, and ``txn`` is that verb's idempotence watermark.
-    Returns the new version."""
+    the table's columns, and a change row with a NULL key fails the
+    batch before anything is written: MERGE matches no NULL key, so
+    every redelivery would insert that row again. The batch is
+    compacted to its latest row per key (:func:`compact_latest`) and
+    lands through :func:`merge_into_snapshot`: only files holding a
+    changed key are rewritten, and ``txn`` is that verb's idempotence
+    watermark. Returns the new version."""
     from pyspark.sql import functions as F
 
     _, man = _snapshot_manifest(path)
@@ -1216,6 +1218,14 @@ def merge_upsert_snapshot(
             f"schema mismatch: table {sorted(cols)} vs "
             f"changes {sorted(changes.columns)}"
         )
+    # checked in the source's first pass: no extra job
+    changes = changes.withColumns({
+        k: F.when(
+            F.col(k).isNull(),
+            F.raise_error(F.lit(f"merge_upsert_snapshot: NULL key {k!r}")),
+        ).otherwise(F.col(k))
+        for k in key_cols
+    })
     newer = F.col(f"src_{seq_col}") >= F.col(seq_col)
     return merge_into_snapshot(
         spark, path, compact_latest(changes, key_cols, seq_col), key_cols,
@@ -5285,69 +5295,31 @@ def _bloom_admitted_files(
     return {r["rel"] for r in admitted}
 
 
-def _bloom_literal_admitted(spark, path: str, meta: dict, vals: list) -> set:
-    """:func:`_bloom_admitted_files` for a point read's literal keys, on
-    the driver: the literals (createDataFrame's typing, cast to the
-    sidecar's type) hash in a local relation, which collects with no
-    job; one filtered scan collects only their probed words (at most
-    indexed files × k·|keys| rows)."""
-    from pyspark.sql import functions as F
-
-    m_bits, k = meta["m_bits"], meta["k"]
-    idx = _bloom_words(spark, path, meta)
-    if idx is None or not vals:
-        return set()
-    rows = [(v,) for v in vals]
-    v = F.col("_v").cast(meta["type"])
-    hashes = (
-        local_frame(spark, rows, spark._inferSchemaFromList(rows, ["_v"]))
-        .where(v.isNotNull())
-        .select(F.xxhash64(v), F.xxhash64(F.lit(1), v))
-        .collect()
-    )
-    needs = []
-    for h1, h2 in {tuple(h) for h in hashes}:
-        # Spark's pmod is Python's % for a positive modulus
-        r1, r2, need = h1 % m_bits, h2 % m_bits, {}
-        for i in range(k):
-            p = (r1 + i * r2) % m_bits
-            need[p // 64] = need.get(p // 64, 0) | (1 << (p % 64))
-        needs.append(need)
-    probed = idx.where(F.col("w").isin(*{w for n in needs for w in n}))
-    words: dict[str, dict] = {}  # (rel, w) is unique in the sidecar
-    for r in probed.collect():
-        words.setdefault(r["rel"], {})[r["w"]] = r["word"]
-    # a signed word & an unsigned 64-bit mask tests exactly those bits
-    return {
-        rel for rel, got in words.items()
-        if any(
-            all(got.get(w, 0) & m == m for w, m in need.items())
-            for need in needs
-        )
-    }
-
-
 def _bloom_point_keep(
     spark, path: str, man: dict, col: str, values, rels: list[str]
 ) -> list[str]:
     """Filter ``rels`` to the files that can contain ``col IN values``
     per the snapshot bloom sidecar: indexed files must be admitted,
     unindexed files always survive (advice, not truth). ``values`` is a
-    list of literals or a frame holding ``col`` (MERGE's source)."""
+    list of literals or a frame holding ``col`` (MERGE's source); either
+    feeds the one distributed probe, literals as a local relation."""
     from pyspark.sql import functions as F
 
     meta = _snap_bloom_meta(path, col, man)
     if meta is None:
         return list(rels)
-    if isinstance(values, DataFrame):
-        adm = _bloom_admitted_files(
-            spark, path, meta,
-            values.select(F.col(col).cast(meta["type"]).alias("_v")),
+    if not isinstance(values, DataFrame):
+        # literals take createDataFrame's typing, in a local relation
+        rows = [(v,) for v in values if v is not None]
+        if not rows:
+            return [rel for rel in rels if rel not in meta["files"]]
+        values = local_frame(
+            spark, rows, spark._inferSchemaFromList(rows, [col])
         )
-    else:
-        adm = _bloom_literal_admitted(
-            spark, path, meta, [v for v in values if v is not None]
-        )
+    adm = _bloom_admitted_files(
+        spark, path, meta,
+        values.select(F.col(col).cast(meta["type"]).alias("_v")),
+    )
     return [rel for rel in rels if rel not in meta["files"] or rel in adm]
 
 

@@ -130,8 +130,8 @@ def make_agg_state_handler(state_path: str, keys: list[str], partial_fn):
     and commits the result as the next version
     (``storage.write_snapshot`` with ``txn=(APP_ID, batch_id)``): the
     data and the batch's mark land in one hard-link. A redelivered batch
-    (id at or below the state's mark) is skipped before its partial is
-    computed; a crash before the hard-link leaves the state at its
+    (id at or below the state's mark) is skipped before anything is
+    written; a crash before the hard-link leaves the state at its
     previous version, against which the redelivered batch re-merges, so
     nothing double-counts.
 
@@ -144,15 +144,10 @@ def make_agg_state_handler(state_path: str, keys: list[str], partial_fn):
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if not storage.snapshot_versions(state_path):
-            merged = partial_fn(batch_df)
-        else:
-            _, man = storage._snapshot_manifest(state_path)
-            if batch_id <= (man.get("txn") or {}).get(APP_ID, -1):
-                return  # redelivered after a crash; state already has it
+        merged = partial_fn(batch_df)
+        if storage.snapshot_versions(state_path):
             merged = merge_agg_state(
-                storage._manifest_df(spark, state_path, man),
-                partial_fn(batch_df), keys,
+                storage.read_snapshot(spark, state_path), merged, keys
             )
         storage.write_snapshot(
             spark, merged, state_path, txn=(APP_ID, int(batch_id))

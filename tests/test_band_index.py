@@ -1,8 +1,8 @@
 """Pins for the persisted MinHash band index's maintenance verbs
 (operators/dedup.py: append_band_index / compact_band_index — r10
-verdict task #7): bounded per-band file counts under simulated daily
-ingests, probe-equivalence across compaction, and a failed compaction
-commit leaving the index as it was."""
+verdict task #7): bounded per-band file counts and disk use under
+simulated daily ingests, probe-equivalence across compaction, and a
+failed compaction commit leaving the index as it was."""
 
 from __future__ import annotations
 
@@ -100,6 +100,14 @@ def test_daily_appends_grow_then_compact_bounds_files(spark):
         assert before == after and before, (
             f"probe changed across compaction: {len(before)} vs {len(after)}"
         )
+        # the superseded files are gone: only the live ones stay on disk
+        man = storage._load_manifest(idx, storage.snapshot_versions(idx)[-1])
+        on_disk = {
+            os.path.relpath(os.path.join(d, f), idx)
+            for d, _, fs in os.walk(os.path.join(idx, "data"))
+            for f in fs if f.endswith(".parquet")
+        }
+        assert on_disk == set(man["files"]), on_disk ^ set(man["files"])
     finally:
         shutil.rmtree(idx, ignore_errors=True)
 

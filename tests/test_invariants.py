@@ -935,15 +935,12 @@ def test_fold_cos_udf_bit_identical_to_expression_fold(spark):
 
 
 def test_bloom_point_probe_unpinned_matches_pinned(spark):
-    """A point read's literal keys are probed on the driver
-    (_bloom_literal_admitted: driver-side probe positions, no masks pin)
-    — the admitted file set must be identical to the pinned, distributed
-    path's (_bloom_admitted_files, a CDC batch's frame of keys) on the
-    same sidecar and keys, present and absent ones alike."""
+    """A point read's literal keys (a local relation) and a CDC batch's
+    frame of the same keys feed the one distributed probe
+    (_bloom_admitted_files, which pins nothing): both must keep the same
+    files on the same sidecar, present and absent keys alike."""
     import shutil
     import tempfile
-
-    from pyspark.sql import functions as F
 
     from dp_dimension_importer_spark import storage
     from dp_dimension_importer_spark.catalog import load_tables
@@ -963,15 +960,22 @@ def test_bloom_point_probe_unpinned_matches_pinned(spark):
         )
         meta = storage._snap_bloom_meta(path, "l_orderkey", man)
         assert meta is not None
+        rels = storage._bloom_live_rels(man, "l_orderkey")
+        assert storage._bloom_point_keep(
+            spark, path, man, "l_orderkey", [7], rels
+        ), "order 7 is in lineitem"
         for vals in ([7], [42, 999999], list(range(-40, 6000, 97))):
-            keys = spark.createDataFrame(
-                [(v,) for v in vals], "_v long"
-            ).select(F.col("_v").cast(meta["type"]).alias("_v"))
-            pinned = storage._bloom_admitted_files(spark, path, meta, keys)
-            unpinned = storage._bloom_literal_admitted(
-                spark, path, meta, vals
+            literal = storage._bloom_point_keep(
+                spark, path, man, "l_orderkey", vals, rels
             )
-            assert pinned == unpinned, vals
+            frame = storage._bloom_point_keep(
+                spark, path, man, "l_orderkey",
+                spark.createDataFrame(
+                    [(v,) for v in vals], "l_orderkey long"
+                ),
+                rels,
+            )
+            assert literal == frame, vals
     finally:
         shutil.rmtree(path, ignore_errors=True)
 

@@ -39,8 +39,8 @@ from dp_dimension_importer_spark.streaming.sink import make_merge_batch_handler
 #: verb -> the most Spark jobs one call may run (reads include the collect)
 BUDGETS = {
     "upsert": 1,
-    # the words of the probed positions (one filtered scan), then the read
-    "read_point": 2,
+    # the probe's broadcast of the literal keys, the probe, the read
+    "read_point": 3,
     # the latest MOR version, resolved; the pruned reads on the same MOR
     # table and on a copy-on-write one; the partitioned reads on a
     # hidden-partitioned table and on a MOR one
@@ -407,9 +407,9 @@ def test_empty_scoped_reads_collect_without_a_job(spark):
 
 def test_point_reads_type_their_literals(spark):
     """A point read's literal keys take createDataFrame's typing (Python
-    ints as bigint, strs as string), cast to the sidecar's type: int
-    literals on a bigint column and str literals on a string column each
-    find their rows within the point-read budget."""
+    ints as bigint, strs as string) in a local relation, cast to the
+    sidecar's type: int literals on a bigint column and str literals on
+    a string column each find their rows within the point-read budget."""
     scratch = tempfile.mkdtemp(prefix="budget_point_")
     path = os.path.join(scratch, "t")
     try:

@@ -522,6 +522,31 @@ def test_merge_upsert_rewrites_only_touched_partitions(spark, tmp_path):
     changes.unpersist()
 
 
+def test_merge_upsert_refuses_null_keys(spark, tmp_path):
+    """MERGE matches no NULL key, so a NULL-key change row would be
+    inserted beside the stored NULL-key row on every redelivery:
+    merge_upsert_snapshot fails such a batch and commits nothing, and
+    the table keeps its single NULL-key row."""
+    from dp_dimension_importer_spark import storage
+
+    ddl = "k bigint, val string, seq bigint"
+    path = str(tmp_path / "t")
+    storage.write_snapshot(
+        spark, spark.createDataFrame([(None, "a", 1), (1, "b", 1)], ddl),
+        path,
+    )
+    versions = storage.snapshot_versions(path)
+    with pytest.raises(Exception, match="NULL key 'k'"):
+        storage.merge_upsert_snapshot(
+            spark, path,
+            spark.createDataFrame([(None, "c", 2), (2, "d", 2)], ddl),
+            key_cols=["k"], seq_col="seq", txn=("cdc", 1),
+        )
+    assert storage.snapshot_versions(path) == versions
+    rows = storage.read_snapshot(spark, path).where("k IS NULL").collect()
+    assert [r.val for r in rows] == ["a"]
+
+
 def test_zorder_clustered_write_prunes_files_on_two_columns(spark, tmp_path):
     """write_clustered's data-skipping contract, measured on disk: after
     Z-order clustering orders by (o_custkey, o_totalprice) into 16 files,
