@@ -20,10 +20,14 @@ dimension rows stay in Spark, and they are not lazy: their one base is
 persisted and counted in a second thread while the instance fetch runs,
 so the two fetches overlap (the client's peak concurrency is the sum of
 the two fetchers' bounds), the dimension fetch runs one time, and every
-sink reads the cached rows. A failing fetch raises after the dead letters
-and before any graph row, and the base is unpersisted when the batch
-ends, on failure too, so a long stream holds no earlier batch's rows.
-Each batch logs one JSON progress record (``import_batch``)."""
+sink reads the cached rows. The sinks write from the driver (``sinks``):
+each collects its batch-bounded frame and writes its files with pyarrow
+or ``json``, so only the dimension nodes and the edges, computed from the
+base, cost a Spark job; the instance nodes, completions and dead letters
+are local frames and cost none. A failing fetch raises after the dead
+letters and before any graph row, and the base is unpersisted when the
+batch ends, on failure too, so a long stream holds no earlier batch's
+rows. Each batch logs one JSON progress record (``import_batch``)."""
 
 from __future__ import annotations
 

@@ -96,13 +96,21 @@ def get_spark(
     return spark
 
 
+def arrow_table(rows: Sequence, schema: T.StructType) -> pa.Table:
+    """Rows already on the driver (tuples or ``Row``s, in ``schema``'s
+    column order) as an Arrow table of ``schema``'s Arrow types. The
+    fields keep ``schema``'s nullability without checking it, so a
+    non-nullable column may still hold a NULL, as in Spark."""
+    rows = list(rows)
+    arrow = to_arrow_schema(schema)
+    columns = [pa.array([r[i] for r in rows], f.type) for i, f in enumerate(arrow)]
+    return pa.Table.from_arrays(columns, schema=arrow)
+
+
 def local_frame(spark: SparkSession, rows: Sequence, schema: T.StructType) -> DataFrame:
     """A DataFrame of rows already on the driver, empty or not. Built from
     an Arrow table it is a ``LocalRelation``, which the JVM reads and
     collects by itself; a frame of a Python list (or of an empty pandas
     frame, which ``createDataFrame`` takes without Arrow) is an RDD whose
     every read is a Spark job that runs Python workers."""
-    rows = list(rows)
-    arrow = to_arrow_schema(schema)
-    columns = [pa.array([r[i] for r in rows], f.type) for i, f in enumerate(arrow)]
-    return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow), schema)
+    return spark.createDataFrame(arrow_table(rows, schema), schema)

@@ -1189,6 +1189,25 @@ def _manifest_df(spark: SparkSession, path: str, manifest: dict) -> DataFrame:
     return _apply_mapping(data.select(*cols), mapping)
 
 
+def _upsert_rows(
+    changes: DataFrame, key_cols: list[str], seq_col: str
+) -> DataFrame:
+    """The rows an upsert of ``changes`` lands: the latest per key
+    (:func:`compact_latest`), with a NULL key failing the batch in the
+    source's first pass (no extra job). MERGE matches no NULL key, so a
+    stored NULL-key row would be inserted again by every later batch."""
+    from pyspark.sql import functions as F
+
+    changes = changes.withColumns({
+        k: F.when(
+            F.col(k).isNull(),
+            F.raise_error(F.lit(f"merge_upsert_snapshot: NULL key {k!r}")),
+        ).otherwise(F.col(k))
+        for k in key_cols
+    })
+    return compact_latest(changes, key_cols, seq_col)
+
+
 def merge_upsert_snapshot(
     spark: SparkSession,
     path: str,
@@ -1218,17 +1237,9 @@ def merge_upsert_snapshot(
             f"schema mismatch: table {sorted(cols)} vs "
             f"changes {sorted(changes.columns)}"
         )
-    # checked in the source's first pass: no extra job
-    changes = changes.withColumns({
-        k: F.when(
-            F.col(k).isNull(),
-            F.raise_error(F.lit(f"merge_upsert_snapshot: NULL key {k!r}")),
-        ).otherwise(F.col(k))
-        for k in key_cols
-    })
     newer = F.col(f"src_{seq_col}") >= F.col(seq_col)
     return merge_into_snapshot(
-        spark, path, compact_latest(changes, key_cols, seq_col), key_cols,
+        spark, path, _upsert_rows(changes, key_cols, seq_col), key_cols,
         update_set={
             c: F.when(newer, F.col(f"src_{c}")).otherwise(F.col(c))
             for c in cols if c not in key_cols

@@ -77,17 +77,18 @@ def make_merge_batch_handler(
     into the snapshot table at ``table_path`` exactly once, latest-wins
     by ``seq_col`` (the greatest seq per key survives, whatever order
     the batches arrive in). The first batch bootstraps the table with
-    its latest row per key (:func:`storage.compact_latest`); later
-    batches go through :func:`storage.merge_upsert_snapshot`, which
-    rewrites only the files holding a changed key. Both commit with
-    ``txn=(APP_ID, batch_id)``."""
+    its latest row per key; later batches go through
+    :func:`storage.merge_upsert_snapshot`, which rewrites only the files
+    holding a changed key. Both take the batch's rows the same way, so
+    a NULL key fails any batch, the first included, and both commit
+    with ``txn=(APP_ID, batch_id)``."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         txn = (APP_ID, int(batch_id))
         if not storage.snapshot_versions(table_path):
             storage.write_snapshot(
-                spark, storage.compact_latest(batch_df, key_cols, seq_col),
+                spark, storage._upsert_rows(batch_df, key_cols, seq_col),
                 table_path, txn=txn,
             )
         else:

@@ -31,10 +31,12 @@ from dp_dimension_importer_spark.pipeline.importer import (
 )
 from dp_dimension_importer_spark.pipeline.models import (
     CODE_LIST_SCHEMA,
+    DEAD_LETTER_SCHEMA,
     DIMENSION_SCHEMA,
     INSTANCE_SCHEMA,
     NODE_SCHEMA,
 )
+from dp_dimension_importer_spark.pipeline.sinks import jsonl_event_sink
 from dp_dimension_importer_spark.session import local_frame
 
 INSTANCE_ID = "1234567890"
@@ -548,14 +550,16 @@ def test_import_batch_job_count_independent_of_history(spark, tmp_path):
          for i in ids for k in range(3)],
         DIMENSION_SCHEMA,
     )
-    jobs = {}
+    jobs, results = {}, {}
     for n in (8, 40):
         out = _Batch(spark, tmp_path / f"h{n}")
         _seed_history(f"{out.base}/graph", n)
         raw = _events(spark, ids)
         jobs[n] = _run_in_group(
             spark, f"import-batch-history-{n}",
-            lambda: out.run(raw, instances, dimensions, _geo_code_lists(spark)),
+            lambda: results.setdefault(
+                n, out.run(raw, instances, dimensions, _geo_code_lists(spark))
+            ),
         )
         assert out.store.nodes().count() == 2 * n + 2 * (1 + 3)
         assert sorted(r["instance_id"] for r in out.jsonl("completed")) == [
@@ -563,15 +567,28 @@ def test_import_batch_job_count_independent_of_history(spark, tmp_path):
         ]
     assert len(jobs[8]) == len(jobs[40]), jobs
     # the instance gate and the completion events are driver-side set
-    # operations, not Spark joins over batch-sized frames, and the raw
-    # payloads decode as a local frame
-    assert len(jobs[8]) <= 10, jobs
+    # operations, not Spark joins over batch-sized frames, the raw
+    # payloads decode as a local frame, and the sinks write from the
+    # driver: only computing the dimension nodes and the edges is a job
+    assert len(jobs[8]) <= 7, jobs
     # the patch-back is one collect on the driver, not a shuffle into
-    # Python workers: 13 stages where a foreachPartition sink made 14
-    assert sum(map(len, jobs[8])) <= 13, jobs
+    # Python workers
+    assert sum(map(len, jobs[8])) <= 10, jobs
     # a plain thread would drop the job group, and the base's jobs would
     # vanish from this count and from the traced benchmark's spans
     assert any(importer.BASE_CALL_SITE in stages for stages in jobs[8]), jobs
+    # the instance nodes, the completions and the dead letters are local
+    # frames: writing them collects without a job
+    r = results[40]
+    assert _run_in_group(spark, "import-batch-local-writes", lambda: (
+        out.store.write_nodes(r.instance_nodes, r.new_ids),
+        jsonl_event_sink(r.completed, f"{out.base}/completed-again"),
+        jsonl_event_sink(
+            local_frame(spark, [("not json", "undecodable")], DEAD_LETTER_SCHEMA),
+            f"{out.base}/dead-again",
+        ),
+    )) == []
+    assert out.store.nodes().count() == 2 * 40 + 2 * (1 + 3)
 
 
 def test_empty_reads_collect_without_a_job(spark, tmp_path):
@@ -758,3 +775,236 @@ def test_import_batch_logs_one_progress_record(spark, tmp_path, caplog):
         "skipped_instances": 1,
         "dimension_rows": 3,
     }
+
+
+# --------------------------------------------------------------------------
+# the driver-side graph and event writers
+# --------------------------------------------------------------------------
+
+#: ids Spark escapes in directory names, plain non-ASCII, NULL and empty
+_ODD_IDS = ["a/b", "x=y", "100%", "a b", "é €", None, ""]
+
+
+def _odd_rows(spark):
+    """Nodes and edges of every id in ``_ODD_IDS``: instance nodes with a
+    NULL, an empty and a filled ``csv_header``, and edges with NULL
+    fields."""
+    from dp_dimension_importer_spark.pipeline.models import EDGE_SCHEMA
+
+    headers = [None, [], ["V4_0", "Geography"]]
+    nodes = [("instance", i, None, None, headers[k % 3])
+             for k, i in enumerate(_ODD_IDS)]
+    nodes += [("dimension", i, "Geography", "G00", None) for i in _ODD_IDS]
+    edges = [(i, cl, code) for i in _ODD_IDS
+             for cl, code in (("geo", "G00"), (None, "G01"), ("geo", None))]
+    return (
+        spark.createDataFrame(nodes, NODE_SCHEMA.simpleString()),
+        spark.createDataFrame(edges, EDGE_SCHEMA.simpleString()),
+    )
+
+
+def _canon(rows) -> list[tuple]:
+    """Rows as sortable tuples: lists become tuples, NULL sorts first."""
+    out = [tuple(tuple(v) if isinstance(v, list) else v for v in r) for r in rows]
+    return sorted(out, key=lambda r: [(v is not None, repr(v)) for v in r])
+
+
+def _as_stored(rows, schema) -> list[tuple]:
+    """What a hive-partitioned store reads back: an empty ``instance_id``
+    lands in the default partition and reads as NULL."""
+    at = schema.fieldNames().index("instance_id")
+    return _canon(tuple(v or None if k == at else v for k, v in enumerate(r))
+                  for r in rows)
+
+
+def _hive_rows(path: str, schema) -> list[tuple]:
+    """The table at ``path`` read by pyarrow as a hive dataset, in
+    ``schema``'s column order."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    part = ds.partitioning(pa.schema([("instance_id", pa.string())]), flavor="hive")
+    table = ds.dataset(path, format="parquet", partitioning=part).to_table()
+    return _canon(tuple(d[c] for c in schema.fieldNames()) for d in table.to_pylist())
+
+
+def _files(path: str) -> list[str]:
+    import os
+
+    return sorted(
+        os.path.relpath(os.path.join(d, n), path)
+        for d, _, names in os.walk(path) for n in names
+    )
+
+
+def test_driver_writer_round_trips_odd_ids(spark, tmp_path):
+    """Rows written by the driver-side writer read back unchanged through
+    the store (Spark) and through a pyarrow hive dataset, in the same
+    partition directories and with the same rows as Spark's
+    ``partitionBy`` writer; a redelivery adds nothing, and no temporary
+    file remains."""
+    import os
+
+    from dp_dimension_importer_spark.pipeline.models import EDGE_SCHEMA
+    from dp_dimension_importer_spark.pipeline.sinks import ParquetGraphStore
+
+    nodes, edges = _odd_rows(spark)
+    expected_nodes = _as_stored(nodes.collect(), NODE_SCHEMA)
+    expected_edges = _as_stored(edges.collect(), EDGE_SCHEMA)
+    store = ParquetGraphStore(spark, str(tmp_path / "graph"))
+    for _ in range(2):
+        store.write_nodes(nodes, _ODD_IDS)
+        store.write_edges(edges, _ODD_IDS)
+    assert _canon(store.nodes().collect()) == expected_nodes
+    assert _canon(store.edges().collect()) == expected_edges
+    assert _hive_rows(store.nodes_dir, NODE_SCHEMA) == expected_nodes
+    assert _hive_rows(store.edges_dir, EDGE_SCHEMA) == expected_edges
+    assert not [f for f in _files(store.nodes_dir) + _files(store.edges_dir)
+                if os.path.basename(f).startswith(".")]
+
+    by_spark = ParquetGraphStore(spark, str(tmp_path / "spark"))
+    nodes.write.partitionBy("instance_id").parquet(by_spark.nodes_dir)
+    assert _canon(by_spark.nodes().collect()) == expected_nodes
+    assert sorted(os.listdir(store.nodes_dir)) == sorted(
+        d for d in os.listdir(by_spark.nodes_dir) if not d.startswith(("_", "."))
+    )
+
+
+def test_redelivery_into_spark_written_partitions_is_a_noop(spark, tmp_path):
+    """A store written by Spark's ``partitionBy`` writer (every store made
+    before the driver-side writer) keeps working: redelivering its rows
+    adds no file, and a batch with one more row appends only that row."""
+    from pyspark.sql import functions as F
+
+    from dp_dimension_importer_spark.pipeline.sinks import ParquetGraphStore
+
+    nodes, edges = _odd_rows(spark)
+    store = ParquetGraphStore(spark, str(tmp_path / "graph"))
+    nodes.write.partitionBy("instance_id").parquet(store.nodes_dir)
+    edges.write.partitionBy("instance_id").parquet(store.edges_dir)
+    before = _files(str(tmp_path))
+    n_nodes, n_edges = store.nodes().count(), store.edges().count()
+    store.write_nodes(nodes, _ODD_IDS)
+    store.write_edges(edges, _ODD_IDS)
+    assert _files(str(tmp_path)) == before
+    extra = nodes.filter(F.col("node_kind") == "dimension").withColumn(
+        "option", F.lit("G99")
+    ).filter(F.col("instance_id") == "a/b")
+    store.write_nodes(nodes.unionByName(extra), _ODD_IDS)
+    assert store.nodes().count() == n_nodes + 1
+    assert store.edges().count() == n_edges
+
+
+def _failing_replace(monkeypatch, fail_on):
+    """Make ``os.replace`` tear the temporary file and raise on the
+    renames whose destination ``fail_on`` selects; every other rename
+    goes through."""
+    import os
+
+    real = os.replace
+
+    def replace(src, dst):
+        if fail_on(str(dst)):
+            size = os.path.getsize(src)
+            with open(src, "r+b") as f:
+                f.truncate(size // 2)
+            raise OSError("simulated crash mid-write")
+        return real(src, dst)
+
+    monkeypatch.setattr(os, "replace", replace)
+
+
+def _crash_then_redeliver(
+    spark, tmp_path, monkeypatch, fail_on, edges_before: int
+) -> None:
+    """A batch whose ``fail_on``-selected file write fails leaves no
+    visible partial file (``edges_before`` whole edges) and no instance
+    node; redelivered, it lands every node, edge and completion exactly
+    once."""
+    import os
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    ids = ["c1", "c2"]
+    instances = spark.createDataFrame([(i, ["h"]) for i in ids], INSTANCE_SCHEMA)
+    dimensions = spark.createDataFrame(
+        [(i, f"{i}_Geography", f"G{k:02d}", f"n{k}", "geo")
+         for i in ids for k in range(3)],
+        DIMENSION_SCHEMA,
+    )
+    out = _Batch(spark, tmp_path)
+    with monkeypatch.context() as m:
+        _failing_replace(m, fail_on)
+        with pytest.raises(OSError, match="simulated crash"):
+            out.run(_events(spark, ids), instances, dimensions,
+                    _geo_code_lists(spark))
+    files = _files(out.base)
+    assert not [f for f in files if os.path.basename(f).startswith(".")], files
+    # every visible file is whole: Spark and pyarrow read them all
+    nodes = out.store.nodes()
+    assert nodes.filter(F.col("node_kind") == "instance").count() == 0
+    assert out.store.edges().count() == edges_before
+    assert out.jsonl("completed") == []
+
+    out.run(_events(spark, ids), instances, dimensions, _geo_code_lists(spark))
+    nodes = out.store.nodes()
+    assert nodes.count() == len(ids) * (1 + 3)
+    assert nodes.distinct().count() == nodes.count()
+    edges = out.store.edges()
+    assert edges.count() == len(ids) * 3
+    assert edges.distinct().count() == edges.count()
+    assert Counter(r["instance_id"] for r in out.jsonl("completed")) == {
+        "c1": 1, "c2": 1
+    }
+
+
+def test_graph_write_failing_after_first_partition_redelivers_once(
+    spark, tmp_path, monkeypatch
+):
+    """``write_edges`` failing after its first partition's file fails the
+    batch before any instance node is written; the first partition's file
+    is whole, the torn one invisible, and the redelivery's anti-join
+    swallows the edges already written."""
+    _crash_then_redeliver(
+        spark, tmp_path, monkeypatch,
+        lambda dst: "/edges/" in dst and "instance_id=c2" in dst,
+        edges_before=3,
+    )
+
+
+def test_event_write_failing_redelivers_once(spark, tmp_path, monkeypatch):
+    """A completion file whose write fails is never visible, the instance
+    nodes are not written, and the redelivered batch completes each
+    instance once."""
+    _crash_then_redeliver(
+        spark, tmp_path, monkeypatch,
+        lambda dst: "/completed/" in dst,
+        edges_before=6,
+    )
+
+
+def test_torn_temporary_file_is_invisible(spark, tmp_path):
+    """A process killed mid-write leaves its ``.``-prefixed temporary
+    file behind: the store's reads, a pyarrow hive read and the next
+    write's anti-join all skip it."""
+    import os
+
+    from dp_dimension_importer_spark.pipeline.models import EDGE_SCHEMA
+    from dp_dimension_importer_spark.pipeline.sinks import ParquetGraphStore
+
+    _, edges = _odd_rows(spark)
+    store = ParquetGraphStore(spark, str(tmp_path / "graph"))
+    store.write_edges(edges, _ODD_IDS)
+    expected = _canon(store.edges().collect())
+    for d in os.listdir(store.edges_dir):
+        torn = os.path.join(store.edges_dir, d, ".part-torn.parquet.tmp")
+        with open(torn, "wb") as f:
+            f.write(b"PAR1 torn")
+    empty = os.path.join(store.edges_dir, "instance_id=fresh")
+    os.makedirs(empty)
+    with open(os.path.join(empty, ".part-torn.parquet.tmp"), "wb") as f:
+        f.write(b"PAR1")
+    store.write_edges(edges, _ODD_IDS + ["fresh"])
+    assert _canon(store.edges().collect()) == expected
+    assert _hive_rows(store.edges_dir, EDGE_SCHEMA) == expected

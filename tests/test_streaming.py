@@ -606,6 +606,25 @@ def test_stream_merge_sink_commit_log_skips_redelivered_batch(spark):
         shutil.rmtree(scratch, ignore_errors=True)
 
 
+def test_stream_merge_sink_refuses_null_key_in_first_batch(spark, tmp_path):
+    """The bootstrap batch takes its rows the way every later batch does:
+    a NULL key fails it and no version is committed. (Stored, a NULL-key
+    row would be refused by every later batch carrying that key again.)"""
+    import pytest
+
+    from dp_dimension_importer_spark import storage
+    from dp_dimension_importer_spark.streaming import sink as merge_sink
+
+    tbl = str(tmp_path / "table")
+    handler = merge_sink.make_merge_batch_handler(tbl, key_cols=["k"], seq_col="seq")
+    batch = spark.createDataFrame(
+        [(None, "a", 1), (1, "b", 1)], "k bigint, val string, seq bigint"
+    )
+    with pytest.raises(Exception, match="NULL key 'k'"):
+        handler(batch, 0)
+    assert storage.snapshot_versions(tbl) == []
+
+
 def test_stream_merge_sink_failed_commit_recovers(spark, monkeypatch):
     """The hard crash window: batch 1's merge wrote its data files but
     the manifest commit failed, killing the query. The table stays at
