@@ -1072,10 +1072,13 @@ def q88_merge_delete_feed(spark, sf_dir):
     updates replace, deletes REMOVE the key, a delete for an absent key
     is a no-op, and an insert arriving after a delete in the SAME feed
     wins on seq (the k % 90 cohort carries both, pinning intra-feed
-    compaction order). Snapshot isolation: the merge commits a new
-    version (asserted), the pre-merge world stays time-travelable
-    (asserted). The oracle replays compaction + anti-join + union
-    logically, so a green row pins every op path in one hash."""
+    compaction order). The verb is the feed's per-key compaction plus
+    one MERGE (DELETE on 'D', UPDATE, INSERT only a non-delete), so
+    only files holding a changed key are rewritten. Snapshot isolation:
+    the merge commits a new version (asserted), the pre-merge world
+    stays time-travelable (asserted). The oracle replays compaction +
+    anti-join + union logically, so a green row pins every op path in
+    one hash."""
     import shutil
     import tempfile
 
@@ -1117,9 +1120,7 @@ def q88_merge_delete_feed(spark, sf_dir):
     try:
         shutil.rmtree(path)
         storage.write_snapshot(spark, base, path)
-        v = storage.merge_apply_changes(
-            spark, path, feed, ["k"], "seq", op_col="op"
-        )
+        v = storage.merge_apply_changes(spark, path, feed, ["k"], "seq")
         assert v == 2, "merge must commit a new version"
         assert storage.read_snapshot(spark, path, version=1).count() == (
             t.orders.count()

@@ -1174,9 +1174,10 @@ def q88b_stream_cdc_apply(spark, sf_dir):
     a CDC consumer maintains when the feed carries tombstones. The
     replay is event-time-ordered (seq = ms·2^20 + event_id increases
     along it), so sequential per-batch application equals the one-shot
-    oracle; the txn watermark in the manifest is the single commit
-    point, and a hand-redelivered batch is asserted to commit
-    nothing."""
+    oracle. Batch 0 bootstraps the table from the verb's own compacted
+    rows, its non-deletes; every later batch is one MERGE. The txn
+    watermark in the manifest is the single commit point, and a
+    hand-redelivered batch is asserted to commit nothing."""
     import shutil
     import tempfile
 

@@ -31,7 +31,7 @@ counts must MATCH across tables you intend to co-join).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from dp_dimension_importer_spark.session import local_frame
@@ -558,7 +558,7 @@ def compact_latest(
     with the greatest ``seq_col``. ``max_by(struct(row), seq)`` — a single
     hash aggregate with map-side partial max, so the exchange carries one
     row per surviving key, never the history (the win_latest_per_key
-    plan). :func:`merge_upsert_snapshot`'s per-key batch compaction."""
+    plan). The CDC verbs' per-key batch compaction (:func:`_upsert_rows`)."""
     from pyspark.sql import functions as F
 
     cols = df.columns
@@ -1190,20 +1190,26 @@ def _manifest_df(spark: SparkSession, path: str, manifest: dict) -> DataFrame:
 
 
 def _upsert_rows(
-    changes: DataFrame, key_cols: list[str], seq_col: str
+    changes: DataFrame, key_cols: list[str], seq_col: str,
+    not_null: tuple[str, ...] = (),
 ) -> DataFrame:
     """The rows an upsert of ``changes`` lands: the latest per key
-    (:func:`compact_latest`), with a NULL key failing the batch in the
-    source's first pass (no extra job). MERGE matches no NULL key, so a
-    stored NULL-key row would be inserted again by every later batch."""
+    (:func:`compact_latest`), with a NULL key, seq or ``not_null``
+    column failing the batch in the source's first pass (no extra job).
+    MERGE matches no NULL key, so a stored NULL-key row would be
+    inserted again by every later batch; a key whose rows all carry a
+    NULL seq would compact to an all-NULL row."""
     from pyspark.sql import functions as F
 
     changes = changes.withColumns({
-        k: F.when(
-            F.col(k).isNull(),
-            F.raise_error(F.lit(f"merge_upsert_snapshot: NULL key {k!r}")),
-        ).otherwise(F.col(k))
-        for k in key_cols
+        c: F.when(
+            F.col(c).isNull(),
+            F.raise_error(F.lit(
+                f"change row has a NULL {'key ' if c in key_cols else ''}"
+                f"{c!r}"
+            )),
+        ).otherwise(F.col(c))
+        for c in [*key_cols, seq_col, *not_null]
     })
     return compact_latest(changes, key_cols, seq_col)
 
@@ -1469,16 +1475,13 @@ def merge_apply_changes(
     changes: DataFrame,
     key_cols: list[str],
     seq_col: str,
-    op_col: str = "op",
-    delete_op: str = "D",
     txn: tuple[str, int] | None = None,
-    valid_ops: list[str] | None = None,
 ) -> int:
     """Full MERGE with DELETE markers — the verb a real CDC feed needs
     that :func:`merge_upsert_snapshot` (upsert-only) cannot express:
-    ``changes`` rows carry ``op_col`` ∈ {insert/update/…, ``delete_op``},
-    and per key the HIGHEST-``seq_col`` change decides — a delete removes
-    the key, anything else replaces (or inserts) the row. Applied with
+    ``changes`` carries the table's columns plus ``op``, and per key
+    the HIGHEST-``seq_col`` change decides — ``op = 'D'`` removes the
+    key, any other op replaces (or inserts) the row. Applied with
     snapshot isolation: the result commits as a NEW version, prior
     versions stay readable. Returns the new version.
 
@@ -1486,77 +1489,35 @@ def merge_apply_changes(
     no-op; an insert arriving after a delete IN THE SAME feed wins if its
     seq is higher (per-key compaction happens before the merge, so intra-
     feed ordering is by seq alone); ties within a feed are a caller
-    contract violation, as in every other (key, seq) verb here.
+    contract violation, as in every other (key, seq) verb here. A NULL
+    key, seq or ``op`` fails the batch before anything is written: a
+    NULL op would neither delete nor insert its key.
 
-    Scale shape: the feed compacts to one row per touched key (a window
-    over the FEED, never the table), then ONE key-partitioned left-anti
-    join carries every untouched table row and the surviving changes
-    union in. On a layout bucketed by the key the anti-join plans with
-    zero table-side Exchange; AQE broadcasts the compacted feed when it
-    is a sliver of the table — the common nightly-CDC case — so the cost
-    is O(table scan + |feed|), not a table shuffle.
-
-    ``txn=(app_id, batch_id)``: the same manifest idempotence watermark
-    as :func:`write_snapshot` — a redelivered at-least-once micro-batch
-    is skipped before any file is written, making the streaming CDC
-    apply sink exactly-once."""
-    from pyspark.sql import Window as W
+    The feed is compacted to its latest row per key
+    (:func:`_upsert_rows`) and lands through ONE
+    :func:`merge_into_snapshot`: DELETE when the op is ``'D'``, UPDATE
+    SET every non-key column from the source, INSERT only a non-delete.
+    Only files holding a changed key are rewritten, a racing commit
+    rebases or refuses under MERGE's key-range gates, and ``txn`` is
+    that verb's idempotence watermark (a redelivered batch is skipped
+    before any file is written)."""
     from pyspark.sql import functions as F
 
-    if txn is not None:
-        versions = snapshot_versions(path)
-        if versions:
-            import json
-            import os
-
-            with open(
-                os.path.join(_manifest_dir(path), f"v{versions[-1]}.json")
-            ) as f:
-                prev_txn = json.load(f).get("txn") or {}
-            if txn[1] <= prev_txn.get(txn[0], -1):
-                return versions[-1]  # redelivered batch: skip the compute
-    current = read_snapshot(spark, path)
-    data_cols = [c for c in current.columns]
-    missing = [c for c in data_cols + [op_col] if c not in changes.columns]
+    _, man = _snapshot_manifest(path)
+    cols = list(man.get("schema") or {})
+    missing = [c for c in cols + ["op"] if c not in changes.columns]
     if missing:
         raise ValueError(
             f"merge_apply_changes: feed lacks column(s) {missing} "
-            f"(needs the table schema plus {op_col!r})"
+            "(needs the table schema plus 'op')"
         )
-    # ADVICE r9: a NULL op would make `op != delete_op` evaluate to NULL,
-    # silently DELETING the key (dropped from keep, still anti-joined
-    # away); an unrecognized op string would silently upsert. A malformed
-    # CDC feed must fail loud, not corrupt the table — one O(|feed|)
-    # aggregate over the sliver-sized feed buys the guarantee.
-    bad_pred = F.col(op_col).isNull()
-    if valid_ops is not None:
-        domain = sorted(set(valid_ops) | {delete_op})
-        bad_pred = bad_pred | ~F.col(op_col).isin(domain)
-    n_bad = changes.filter(bad_pred).limit(1).count()
-    if n_bad:
-        sample = [
-            r[op_col] for r in
-            changes.filter(bad_pred).select(op_col).limit(5).collect()
-        ]
-        raise ValueError(
-            f"merge_apply_changes: feed has rows with NULL or "
-            f"unrecognized {op_col!r} (e.g. {sample}); refusing to apply "
-            "— a NULL/unknown op would silently delete or upsert its key"
-        )
-    w = W.partitionBy(*key_cols).orderBy(F.col(seq_col).desc())
-    latest = (
-        changes.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    keep = (
-        latest.filter(F.col(op_col) != delete_op).select(*data_cols)
-    )
-    untouched = current.join(
-        latest.select(*key_cols), key_cols, "left_anti"
-    )
-    return write_snapshot(
-        spark, untouched.unionByName(keep), path, txn=txn
+    delete = F.col("src_op") == "D"
+    return merge_into_snapshot(
+        spark, path,
+        _upsert_rows(changes, key_cols, seq_col, not_null=("op",)),
+        key_cols,
+        update_set={c: F.col(f"src_{c}") for c in cols if c not in key_cols},
+        delete_condition=delete, insert=~delete, txn=txn,
     )
 
 
@@ -2571,7 +2532,7 @@ def merge_into_snapshot(
     key_cols: list[str],
     update_set: dict | None = None,
     delete_condition=None,
-    insert: bool = True,
+    insert=True,
     insert_values: dict | None = None,
     compression: str = PARQUET_CODEC,
     txn: tuple[str, int] | None = None,
@@ -2580,18 +2541,19 @@ def merge_into_snapshot(
     branch: str | None = None,
 ) -> int:
     """SQL-style conditional MERGE INTO (Delta/Iceberg's most-used DML
-    verb — the clause-driven twin of :func:`merge_apply_changes`'s
-    op-column feed):
+    verb; :func:`merge_apply_changes`, its caller, maps an op-column
+    feed onto these clauses):
 
     * WHEN MATCHED [AND ``delete_condition``] THEN DELETE — the
       condition may reference target columns by name and source columns
       as ``src_<col>``;
     * WHEN MATCHED THEN UPDATE SET ``update_set`` (``{target col:
       expr}``, same name scoping; omitted target columns carry);
-    * WHEN NOT MATCHED THEN INSERT (``insert=True``; values from the
-      source's same-named columns, overridable per column via
-      ``insert_values``; absent columns NULL, absent generated columns
-      computed from the inserted row).
+    * WHEN NOT MATCHED [AND ``insert``] THEN INSERT (``insert=True``,
+      or a condition with the same name scoping: a source row failing
+      it is not inserted; values from the source's same-named columns,
+      overridable per column via ``insert_values``; absent columns
+      NULL, absent generated columns computed from the inserted row).
 
     Clause order matches the SQL standard: a matched row tests DELETE
     first, then UPDATE. Source rows must be key-unique — duplicate
@@ -2641,8 +2603,9 @@ def merge_into_snapshot(
     ``branch`` stages the merge as the next branch commit, and a racing
     branch writer refuses. :func:`merge_upsert_snapshot` (and through it
     the streaming merge sink) is this verb with one latest-wins UPDATE
-    SET. Returns the new version (the branch-local number on a
-    branch)."""
+    SET; :func:`merge_apply_changes` adds a DELETE clause and an
+    ``insert`` condition. Returns the new version (the branch-local
+    number on a branch)."""
     import os
     import uuid
 
@@ -2667,6 +2630,9 @@ def merge_into_snapshot(
                 f"{mor['key_cols']} (got {list(key_cols)}) — tombstones and "
                 "images resolve per MOR key"
             )
+    # WHEN NOT MATCHED AND <insert>: a condition (a Column or SQL text)
+    insert_when = insert if isinstance(insert, (str, Column)) else None
+    insert = insert_when is not None or bool(insert)
     if update_set is None and delete_condition is None and not insert:
         raise ValueError("MERGE INTO with no clauses is a no-op — pass "
                          "update_set, delete_condition, and/or insert")
@@ -2745,12 +2711,17 @@ def merge_into_snapshot(
         tgt.withColumn("_t", F.lit(True))
         .join(src.withColumn("_s", F.lit(True)), key_cols, "full_outer")
     )
-    matched = F.col("_t").isNotNull() & F.col("_s").isNotNull()
-    s_only = F.col("_t").isNull() & F.col("_s").isNotNull()
 
     def _expr(v):
         return F.expr(v) if isinstance(v, str) else v
 
+    if insert_when is not None:  # a source-only row failing it is dropped
+        j = j.filter(
+            F.col("_t").isNotNull()
+            | F.coalesce(_expr(insert_when), F.lit(False))
+        )
+    matched = F.col("_t").isNotNull() & F.col("_s").isNotNull()
+    s_only = F.col("_t").isNull() & F.col("_s").isNotNull()
     doomed = F.lit(False)
     if delete_condition is not None:
         doomed = matched & F.coalesce(_expr(delete_condition), F.lit(False))

@@ -346,41 +346,32 @@ def make_cdc_apply_handler(
     table_path: str,
     key_cols: list[str],
     seq_col: str,
-    op_col: str = "op",
-    delete_op: str = "D",
-    app_id: str = APP_ID,
 ):
-    """foreachBatch handler applying an insert/update/DELETE CDC feed to a
-    snapshot table exactly once (:func:`storage.merge_apply_changes` with
-    ``txn=(app_id, batch_id)`` — the delete-capable member of the sink
-    family: q60 merges latest-wins upserts, q87 lands MOR deltas, this
-    one honors delete markers). The manifest hard-link is the single
-    commit point; a redelivered batch is skipped inside the verb before
-    any compute. The FIRST batch bootstraps the table from its compacted
-    non-delete rows (applying a feed to an empty table), with the same
-    txn watermark."""
+    """foreachBatch handler applying an insert/update/DELETE CDC feed
+    (an ``op`` column, ``'D'`` deletes) to a snapshot table exactly once
+    (:func:`storage.merge_apply_changes` with ``txn=(APP_ID,
+    batch_id)`` — the delete-capable member of the sink family: q60
+    merges latest-wins upserts, q87 lands MOR deltas, this one honors
+    delete markers). The manifest hard-link is the single commit point;
+    a redelivered batch is skipped inside the verb before any compute.
+    The FIRST batch bootstraps the table from the verb's own rows, its
+    non-deletes, with the same txn watermark: a NULL key or op fails
+    any batch, the first included."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Window as W
-        from pyspark.sql import functions as F
-
         spark = batch_df.sparkSession
+        txn = (APP_ID, int(batch_id))
         if not storage.snapshot_versions(table_path):
-            w = W.partitionBy(*key_cols).orderBy(F.col(seq_col).desc())
-            boot = (
-                batch_df.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .filter(F.col(op_col) != delete_op)
-                .drop("_rn", op_col)
+            rows = storage._upsert_rows(
+                batch_df, key_cols, seq_col, not_null=("op",)
             )
             storage.write_snapshot(
-                spark, boot, table_path, txn=(app_id, int(batch_id))
+                spark, rows.filter("op != 'D'").drop("op"), table_path,
+                txn=txn,
             )
         else:
             storage.merge_apply_changes(
-                spark, table_path, batch_df, key_cols, seq_col,
-                op_col=op_col, delete_op=delete_op,
-                txn=(app_id, int(batch_id)),
+                spark, table_path, batch_df, key_cols, seq_col, txn=txn
             )
 
     return handle
@@ -393,17 +384,13 @@ def run_stream_cdc_apply(
     table_path: str,
     key_cols: list[str],
     seq_col: str,
-    op_col: str = "op",
     checkpoint: str | None = None,
-    app_id: str = APP_ID,
 ) -> DataFrame:
     """Drive a file-source stream (1 file per micro-batch) through the
     CDC apply sink with availableNow, then read the final table back.
     With a seq that increases along the replay order, sequential
     per-batch application equals a one-shot global latest-wins-with-
     deletes — which is what the q88b oracle states."""
-    handler = make_cdc_apply_handler(
-        table_path, key_cols, seq_col, op_col=op_col, app_id=app_id
-    )
+    handler = make_cdc_apply_handler(table_path, key_cols, seq_col)
     _drive(spark, replay_dir, schema, handler, checkpoint)
     return storage.read_snapshot(spark, table_path)

@@ -517,6 +517,83 @@ def test_merge_racing_disjoint_key_append_both_succeed(spark, monkeypatch):
         shutil.rmtree(scratch, ignore_errors=True)
 
 
+def _feed(spark, rows):
+    return spark.createDataFrame(
+        [Row(*r) for r in rows], "k bigint, v double, seq bigint, op string"
+    )
+
+
+def test_apply_changes_racing_disjoint_key_append_both_succeed(
+    spark, monkeypatch
+):
+    """merge_apply_changes lands as one MERGE, so an append racing it
+    whose key-range stats hold no feed key rebases like any MERGE race:
+    the update, the delete, the insert and the appended rows all
+    survive."""
+    scratch, path = _mkpath()
+    try:
+        storage.write_snapshot(
+            spark, _df(spark, [(i, float(i)) for i in range(10)]), path,
+            stats_cols=["k"],
+        )
+        feed = _feed(spark, [(3, 33.0, 1, "U"), (4, 0.0, 1, "D"),
+                             (42, 42.0, 1, "I")])
+
+        def competitor():  # appends keys 100..104: disjoint from [3, 42]
+            storage.write_snapshot(
+                spark, _df(spark, [(i, 0.0) for i in range(100, 105)]),
+                path, mode="append", stats_cols=["k"],
+            )
+
+        _RaceOnce(monkeypatch, "v2.json", competitor)
+        v = storage.merge_apply_changes(spark, path, feed, ["k"], "seq")
+        assert v == 3  # rebased onto the append's v2
+        got = {
+            r["k"]: r["v"]
+            for r in storage.read_snapshot(spark, path).collect()
+        }
+        assert got[3] == 33.0 and 4 not in got and got[42] == 42.0
+        assert all(got[i] == 0.0 for i in range(100, 105))  # append kept
+        assert len(got) == 15
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+
+
+def test_apply_changes_racing_overlapping_append_refuses(
+    spark, monkeypatch
+):
+    """An append racing merge_apply_changes with a feed key in its key
+    range refuses instead of losing the append or inserting the key
+    twice."""
+    scratch, path = _mkpath()
+    try:
+        storage.write_snapshot(
+            spark, _df(spark, [(i, float(i)) for i in range(10)]), path,
+            stats_cols=["k"],
+        )
+
+        def competitor():
+            storage.write_snapshot(
+                spark, _df(spark, [(42, 0.0)]), path,
+                mode="append", stats_cols=["k"],
+            )
+
+        _RaceOnce(monkeypatch, "v2.json", competitor)
+        with pytest.raises(
+            storage.ConcurrentCommitError, match="source keys"
+        ):
+            storage.merge_apply_changes(
+                spark, path, _feed(spark, [(42, 42.0, 1, "I")]),
+                ["k"], "seq",
+            )
+        assert storage.snapshot_versions(path) == [1, 2]
+        assert storage.read_snapshot(spark, path).filter(
+            "k = 42"
+        ).collect() == [Row(k=42, v=0.0)]
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+
+
 def test_merge_racing_overlapping_append_refuses(spark, monkeypatch):
     """The appended file's key range OVERLAPS the source's — its rows
     may contain a source key, so a rebased NOT-MATCHED insert would

@@ -67,6 +67,9 @@ BUDGETS = {
     # what merge_cow does; a streaming merge sink batch is that call
     "merge_upsert_snapshot": 7,
     "merge_sink_batch": 7,
+    # the CDC apply verb is that upsert's MERGE with a DELETE clause and
+    # a conditional INSERT: the same pin, profile, probes and rewrite
+    "merge_apply_changes": 7,
     # the change feed of one MOR transition: the touched keys' broadcast,
     # then the collect. "version_delta" is the worst of the upsert,
     # MERGE, DELETE and UPDATE transitions; the partial and aggregate
@@ -340,6 +343,18 @@ def test_storage_verb_job_budgets(spark):
         assert storage.read_snapshot(spark, mpath).filter(
             "seq = 4"
         ).count() == 10, "the sink batch did not land"
+        feed = _rows(spark, range(50, 60), "d", 5).withColumn(
+            "op", F.when(F.col("k") % 2 == 0, "D").otherwise("U")
+        )
+        measured["merge_apply_changes"] = _jobs(
+            spark, lambda: storage.merge_apply_changes(
+                spark, mpath, feed, ["k"], "seq",
+            ),
+        )
+        assert sorted(
+            r.k for r in storage.read_snapshot(spark, mpath).collect()
+            if r.k >= 50
+        ) == [51, 53, 55, 57, 59], "the CDC feed did not land"
         storage.write_snapshot(
             spark,
             spark.createDataFrame(
@@ -369,6 +384,29 @@ def test_storage_verb_job_budgets(spark):
         for verb, n in measured.items() if n > BUDGETS[verb]
     }
     assert not over, f"verbs over their job budget (jobs, budget): {over}"
+
+
+def test_null_op_refusal_runs_no_job_of_its_own(spark):
+    """A CDC feed row with a NULL op would neither delete nor insert its
+    key: merge_apply_changes fails the batch in the source's first pass
+    (the MERGE source pin, its only job here) and commits nothing."""
+    scratch = tempfile.mkdtemp(prefix="budget_nullop_")
+    path = os.path.join(scratch, "t")
+    try:
+        _append(spark, path, range(10), "c")
+        versions = storage.snapshot_versions(path)
+        feed = _rows(spark, [3, 4], "n", 1).withColumn(
+            "op", F.when(F.col("k") == 3, "U")
+        )
+
+        def apply():
+            with pytest.raises(Exception, match="NULL 'op'"):
+                storage.merge_apply_changes(spark, path, feed, ["k"], "seq")
+
+        assert _jobs(spark, apply) == 1
+        assert storage.snapshot_versions(path) == versions
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
 
 
 def test_empty_scoped_reads_collect_without_a_job(spark):

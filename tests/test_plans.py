@@ -522,11 +522,14 @@ def test_merge_upsert_rewrites_only_touched_partitions(spark, tmp_path):
     changes.unpersist()
 
 
-def test_merge_upsert_refuses_null_keys(spark, tmp_path):
+@pytest.mark.parametrize(
+    "verb", ["merge_upsert_snapshot", "merge_apply_changes"]
+)
+def test_merge_upsert_refuses_null_keys(spark, tmp_path, verb):
     """MERGE matches no NULL key, so a NULL-key change row would be
-    inserted beside the stored NULL-key row on every redelivery:
-    merge_upsert_snapshot fails such a batch and commits nothing, and
-    the table keeps its single NULL-key row."""
+    inserted beside the stored NULL-key row on every redelivery: both
+    CDC verbs fail such a batch and commit nothing, and the table keeps
+    its single NULL-key row."""
     from dp_dimension_importer_spark import storage
 
     ddl = "k bigint, val string, seq bigint"
@@ -536,11 +539,13 @@ def test_merge_upsert_refuses_null_keys(spark, tmp_path):
         path,
     )
     versions = storage.snapshot_versions(path)
+    changes = spark.createDataFrame([(None, "c", 2), (2, "d", 2)], ddl)
+    if verb == "merge_apply_changes":
+        changes = changes.withColumn("op", F.lit("U"))
     with pytest.raises(Exception, match="NULL key 'k'"):
-        storage.merge_upsert_snapshot(
-            spark, path,
-            spark.createDataFrame([(None, "c", 2), (2, "d", 2)], ddl),
-            key_cols=["k"], seq_col="seq", txn=("cdc", 1),
+        getattr(storage, verb)(
+            spark, path, changes, key_cols=["k"], seq_col="seq",
+            txn=("cdc", 1),
         )
     assert storage.snapshot_versions(path) == versions
     rows = storage.read_snapshot(spark, path).where("k IS NULL").collect()
@@ -1905,6 +1910,70 @@ def test_merge_apply_changes_guards_and_noop_paths(spark, tmp_path):
     storage.merge_apply_changes(spark, path, flip, ["k"], "seq")
     got = {r.k: r.v for r in storage.read_snapshot(spark, path).collect()}
     assert got[3] == 999 and 4 not in got and len(got) == 9
+
+
+def test_merge_upsert_refuses_null_seq(spark, tmp_path):
+    """A key whose change rows all carry a NULL seq has no latest row:
+    compacted, it would land as an all-NULL row. The upsert fails such a
+    batch in its first pass and commits nothing."""
+    from dp_dimension_importer_spark import storage
+
+    ddl = "k bigint, val string, seq bigint"
+    path = str(tmp_path / "t")
+    storage.write_snapshot(
+        spark, spark.createDataFrame([(1, "a", 0)], ddl), path
+    )
+    with pytest.raises(Exception, match="NULL 'seq'"):
+        storage.merge_upsert_snapshot(
+            spark, path, spark.createDataFrame([(2, "b", None)], ddl),
+            key_cols=["k"], seq_col="seq",
+        )
+    assert storage.snapshot_versions(path) == [1]
+    assert [tuple(r) for r in storage.read_snapshot(spark, path).collect()] \
+        == [(1, "a", 0)]
+
+
+def test_merge_apply_changes_rewrites_only_the_touched_file(
+    spark, tmp_path
+):
+    """A one-key change is one MERGE: of a four-file table only the file
+    holding the key is replaced, and the new manifest keeps per-file
+    stats for every live file."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    from dp_dimension_importer_spark import storage
+
+    path = str(tmp_path / "t")
+    ddl = "k bigint, val string, seq bigint"
+    storage.write_snapshot(
+        spark,
+        spark.createDataFrame(
+            [(k, f"c{k}", 0) for k in range(40)], ddl
+        ).repartitionByRange(4, "k"),
+        path, stats_cols=["k"],
+    )
+
+    def manifest(v):
+        with open(os.path.join(path, "_manifests", f"v{v}.json")) as f:
+            return json.load(f)
+
+    before = manifest(1)
+    assert len(before["files"]) == 4
+    v = storage.merge_apply_changes(
+        spark, path,
+        spark.createDataFrame([(5, "u", 1, "U")], ddl + ", op string"),
+        ["k"], "seq",
+    )
+    after = manifest(v)
+    removed = set(before["files"]) - set(after["files"])
+    assert len(removed) == 1
+    (gone,) = removed
+    assert 5 in pq.read_table(os.path.join(path, gone)).column("k").to_pylist()
+    assert set(after["stats"]) == set(after["files"])
+    got = {r.k: r.val for r in storage.read_snapshot(spark, path).collect()}
+    assert got == {**{k: f"c{k}" for k in range(40)}, 5: "u"}
 
 
 def test_wap_staging_invisible_vacuumable_and_publish_checks(

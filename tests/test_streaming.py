@@ -13,6 +13,7 @@ import json
 import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from dp_dimension_importer_spark.catalog import table
@@ -606,20 +607,28 @@ def test_stream_merge_sink_commit_log_skips_redelivered_batch(spark):
         shutil.rmtree(scratch, ignore_errors=True)
 
 
-def test_stream_merge_sink_refuses_null_key_in_first_batch(spark, tmp_path):
+@pytest.mark.parametrize(
+    "make_handler", ["make_merge_batch_handler", "make_cdc_apply_handler"]
+)
+def test_stream_merge_sink_refuses_null_key_in_first_batch(
+    spark, tmp_path, make_handler
+):
     """The bootstrap batch takes its rows the way every later batch does:
-    a NULL key fails it and no version is committed. (Stored, a NULL-key
-    row would be refused by every later batch carrying that key again.)"""
-    import pytest
-
+    a NULL key fails it and no version is committed, in the upsert sink
+    and in the CDC apply sink. (Stored, a NULL-key row would be refused
+    by every later batch carrying that key again.)"""
     from dp_dimension_importer_spark import storage
     from dp_dimension_importer_spark.streaming import sink as merge_sink
 
     tbl = str(tmp_path / "table")
-    handler = merge_sink.make_merge_batch_handler(tbl, key_cols=["k"], seq_col="seq")
+    handler = getattr(merge_sink, make_handler)(
+        tbl, key_cols=["k"], seq_col="seq"
+    )
     batch = spark.createDataFrame(
         [(None, "a", 1), (1, "b", 1)], "k bigint, val string, seq bigint"
     )
+    if make_handler == "make_cdc_apply_handler":
+        batch = batch.withColumn("op", F.lit("U"))
     with pytest.raises(Exception, match="NULL key 'k'"):
         handler(batch, 0)
     assert storage.snapshot_versions(tbl) == []
